@@ -27,29 +27,21 @@ case class Analyzer(stop: Boolean = false, stem: Boolean = false) extends Serial
   def docLength(text: String): Int =
     if (!stop && !stem) Tokenizer.docLength(text) else tokenize(text).length
 
-  def termFreqs(text: String): collection.Map[String, Int] =
-    if (!stop && !stem) Tokenizer.termFreqs(text)
-    else {
-      val m = collection.mutable.HashMap.empty[String, Int]
-      tokenize(text).foreach(t => m.update(t, m.getOrElse(t, 0) + 1))
-      m
-    }
+  def termFreqs(text: String): collection.Map[String, Int] = {
+    val m = collection.mutable.HashMap.empty[String, Int]
+    tokenize(text).foreach(t => m.update(t, m.getOrElse(t, 0) + 1))
+    m
+  }
 
   /** Per-doc term → positions in the ANALYZED stream (stopword chains
     * renumber — position = index among surviving tokens, matching the
     * query-side tokenization of the same chain). tf = position count. */
-  def termPositions(text: String): collection.Map[String, Tokenizer.IntBuf] =
-    if (!stop && !stem) Tokenizer.termPositions(text)
-    else {
-      val m = collection.mutable.HashMap.empty[String, Tokenizer.IntBuf]
-      val toks = tokenize(text)
-      var i = 0
-      while (i < toks.length) {
-        m.getOrElseUpdate(toks(i), new Tokenizer.IntBuf).add(i)
-        i += 1
-      }
-      m
-    }
+  def termPositions(text: String): collection.Map[String, Tokenizer.IntBuf] = {
+    val m = collection.mutable.HashMap.empty[String, Tokenizer.IntBuf]
+    tokenize(text).iterator.zipWithIndex.foreach { case (t, i) =>
+      m.getOrElseUpdate(t, new Tokenizer.IntBuf).add(i) }
+    m
+  }
 }
 
 object Analyzer {

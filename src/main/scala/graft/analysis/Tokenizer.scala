@@ -1,5 +1,9 @@
 package graft.analysis
 
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+
+import org.apache.spark.unsafe.types.UTF8String
+
 /**
  * Versioned text-analysis chain.
  *
@@ -12,10 +16,19 @@ package graft.analysis
  *
  * Our engine defines the chain once, versioned, golden-tested:
  *
- *  - V1 (default, and what the DuckDB oracle mirrors as
- *    `regexp_extract_all(lower(text), '[a-z0-9]+')`): lowercase + maximal
- *    runs of ASCII `[a-z0-9]`. Implemented as a hand-rolled scanner (no
- *    regex allocation per call) so the `flatMap` hot path stays cheap.
+ *  - V1 (default): maximal runs of ASCII `[A-Za-z0-9]`, ASCII case
+ *    folded. [[Runs]] is its one scanner: the index build, the query
+ *    side and every native text kernel loop over it. It reads UTF-8
+ *    bytes, and every byte of a multi-byte character is ≥ 0x80, so byte
+ *    runs are char runs.
+ *
+ *    V1 is NOT exactly `regexp_extract_all(lower(text), '[a-z0-9]+')`,
+ *    the form the DuckDB oracles and the `lower(text)`-fed kernels
+ *    compute. Spark's `lower` maps two non-ASCII code points to ASCII:
+ *    U+212A (Kelvin sign) to `k` and U+0130 to `i` + U+0307. V1 folds
+ *    ASCII only, so the index analyzer treats them as separators where
+ *    the kernels see letters (TokenizerSpec pins this). That is why the
+ *    index side never reads `lower(text)`.
  *  - Optional stages (off by default, unit-tested): English stopword
  *    removal and Porter stemming, mirroring the reference's `text_en`
  *    chain.
@@ -36,26 +49,11 @@ object Tokenizer extends Serializable {
     "that", "the", "their", "then", "there", "these", "they", "this",
     "to", "was", "will", "with")
 
-  /** V1 chain: lowercase + `[a-z0-9]+` runs. Equivalent to
-    * `regexp_extract_all(lower(text), '[a-z0-9]+')` but ~5x faster. */
+  /** V1 chain: maximal `[A-Za-z0-9]` runs, ASCII case folded. */
   def tokenize(text: String): IndexedSeq[String] = {
-    if (text == null || text.isEmpty) return Vector.empty
     val out = Vector.newBuilder[String]
-    val n = text.length
-    var i = 0
-    val sb = new java.lang.StringBuilder(16)
-    while (i < n) {
-      val c = text.charAt(i)
-      val lc =
-        if (c >= 'a' && c <= 'z') c
-        else if (c >= 'A' && c <= 'Z') (c + 32).toChar
-        else if (c >= '0' && c <= '9') c
-        else 0.toChar
-      if (lc != 0) sb.append(lc)
-      else if (sb.length > 0) { out += sb.toString; sb.setLength(0) }
-      i += 1
-    }
-    if (sb.length > 0) out += sb.toString
+    val r = Runs(text)
+    while (r.next()) out += r.term
     out.result()
   }
 
@@ -71,74 +69,26 @@ object Tokenizer extends Serializable {
   }
 
   /** Per-document term frequencies in one pass; insertion order is not
-    * meaningful — callers needing determinism sort by term. Scans the
-    * text directly (no intermediate token collection — this sits on
-    * the index build's hottest path). */
+    * meaningful — callers needing determinism sort by term. */
   def termFreqs(text: String): collection.Map[String, Int] = {
     val m = collection.mutable.HashMap.empty[String, Int]
-    if (text == null || text.isEmpty) return m
-    val n = text.length
-    var i = 0
-    val sb = new java.lang.StringBuilder(16)
-    while (i < n) {
-      val c = text.charAt(i)
-      val lc =
-        if (c >= 'a' && c <= 'z') c
-        else if (c >= 'A' && c <= 'Z') (c + 32).toChar
-        else if (c >= '0' && c <= '9') c
-        else 0.toChar
-      if (lc != 0) sb.append(lc)
-      else if (sb.length > 0) {
-        val t = sb.toString
-        m.update(t, m.getOrElse(t, 0) + 1)
-        sb.setLength(0)
-      }
-      i += 1
-    }
-    if (sb.length > 0) { val t = sb.toString; m.update(t, m.getOrElse(t, 0) + 1) }
+    val r = Runs(text)
+    while (r.next()) { val t = r.term; m.update(t, m.getOrElse(t, 0) + 1) }
     m
   }
 
-  /** Document length = token count under the V1 chain. Counts maximal
-    * alnum runs directly — `tokenize(text).length` built (and
-    * discarded) a full token Vector per document, which profiled as a
-    * top allocation site of the index build's phase A. */
-  def docLength(text: String): Int = {
-    if (text == null || text.isEmpty) return 0
-    val n = text.length
-    var i = 0
-    var cnt = 0
-    var inRun = false
-    while (i < n) {
-      val c = text.charAt(i)
-      val alnum = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-        (c >= '0' && c <= '9')
-      if (alnum) { if (!inRun) { cnt += 1; inRun = true } }
-      else inRun = false
-      i += 1
-    }
-    cnt
-  }
+  /** Document length = token count under the V1 chain, with no token
+    * built. */
+  def docLength(text: String): Int = count(Runs(text))
 
-  /** [[docLength]] over a raw UTF8String view (no String decode):
-    * ASCII alnum BYTE runs equal alnum CHAR runs — every byte of a
-    * multi-byte UTF-8 char is ≥ 0x80, i.e. a separator in both views
-    * (the same equivalence the native shingles/simhash kernels use). */
-  def docLengthU8(s: org.apache.spark.unsafe.types.UTF8String): Int = {
-    if (s == null) return 0
-    val bytes = s.getBytes
-    var i = 0
-    var cnt = 0
-    var inRun = false
-    while (i < bytes.length) {
-      val b = bytes(i)
-      val alnum = (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') ||
-        (b >= '0' && b <= '9')
-      if (alnum) { if (!inRun) { cnt += 1; inRun = true } }
-      else inRun = false
-      i += 1
-    }
-    cnt
+  /** [[docLength]] over a raw UTF8String view (no String decode). */
+  def docLengthU8(s: UTF8String): Int =
+    if (s == null) 0 else count(new Runs(s.getBytes))
+
+  private def count(r: Runs): Int = {
+    var n = 0
+    while (r.next()) n += 1
+    n
   }
 
   /** Growable position list (per-term, per-doc — typically 1-2 long). */
@@ -152,37 +102,6 @@ object Tokenizer extends Serializable {
     def toArray: Array[Int] = java.util.Arrays.copyOf(a, n)
   }
 
-  /** Per-document term → token positions (indices in the analyzed
-    * stream) in one pass — the index build's hot path for format v3
-    * positional postings. tf = position count. */
-  def termPositions(text: String): collection.mutable.HashMap[String, IntBuf] = {
-    val m = collection.mutable.HashMap.empty[String, IntBuf]
-    if (text == null || text.isEmpty) return m
-    val n = text.length
-    var i = 0
-    var p = 0
-    val sb = new java.lang.StringBuilder(16)
-    def emit(): Unit = {
-      val t = sb.toString
-      m.getOrElseUpdate(t, new IntBuf).add(p)
-      p += 1
-      sb.setLength(0)
-    }
-    while (i < n) {
-      val c = text.charAt(i)
-      val lc =
-        if (c >= 'a' && c <= 'z') c
-        else if (c >= 'A' && c <= 'Z') (c + 32).toChar
-        else if (c >= '0' && c <= '9') c
-        else 0.toChar
-      if (lc != 0) sb.append(lc)
-      else if (sb.length > 0) emit()
-      i += 1
-    }
-    if (sb.length > 0) emit()
-    m
-  }
-
   /** One analyzed token with character offsets and position increment
     * — the attributes the reference extracts from the Lucene token
     * stream for Solr PreAnalyzed JSON (`{t, s, e, i}`;
@@ -193,26 +112,87 @@ object Tokenizer extends Serializable {
     * run in the ORIGINAL text; `i` is the position increment (always
     * 1 in V1 — no stopword holes). */
   def tokenizeWithOffsets(text: String): IndexedSeq[OffsetToken] = {
-    if (text == null || text.isEmpty) return Vector.empty
     val out = Vector.newBuilder[OffsetToken]
-    val n = text.length
-    var i = 0
-    var start = -1
-    val sb = new java.lang.StringBuilder(16)
-    while (i <= n) {
-      val c = if (i < n) text.charAt(i) else 0.toChar
-      val lc =
-        if (c >= 'a' && c <= 'z') c
-        else if (c >= 'A' && c <= 'Z') (c + 32).toChar
-        else if (c >= '0' && c <= '9') c
-        else 0.toChar
-      if (lc != 0) { if (start < 0) start = i; sb.append(lc) }
-      else if (sb.length > 0) {
-        out += OffsetToken(sb.toString, start, i, 1)
-        sb.setLength(0); start = -1
+    val r = Runs(text)
+    // UTF-16 index of byte `b`: a byte that is not a continuation byte
+    // (10xxxxxx) starts a char, and a 4-byte lead (11110xxx) starts a
+    // surrogate pair
+    var b = 0
+    var c = 0
+    while (r.next()) {
+      while (b < r.start) {
+        val x = r.bytes(b)
+        if ((x & 0xC0) != 0x80) c += (if ((x & 0xF8) == 0xF0) 2 else 1)
+        b += 1
       }
-      i += 1
+      out += OffsetToken(r.term, c, c + r.length, 1)
+      b = r.end; c += r.length
     }
     out.result()
+  }
+
+  /**
+   * The V1 scanner: a zero-copy cursor over UTF-8 bytes. Each [[next]]
+   * moves `[start, end)` to the next maximal run of ASCII `[A-Za-z0-9]`
+   * bytes. Case folding is the caller's: [[term]] and [[hash]] fold
+   * ASCII, while the native kernels, fed `lower(text)`, read the bytes
+   * as they are. Every call site loops `while (r.next())` over this one
+   * class, so the JIT inlines it everywhere (a shared callback would go
+   * megamorphic).
+   */
+  final class Runs(val bytes: Array[Byte]) {
+    var start = 0
+    var end = 0
+
+    def next(): Boolean = {
+      var i = end
+      while (i < bytes.length && !Runs.alnum(bytes(i))) i += 1
+      if (i == bytes.length) { start = i; end = i; return false }
+      start = i
+      while (i < bytes.length && Runs.alnum(bytes(i))) i += 1
+      end = i
+      true
+    }
+
+    def length: Int = end - start
+
+    /** The current run as a String, ASCII case folded. */
+    def term: String = {
+      var i = start
+      while (i < end && !Runs.upper(bytes(i))) i += 1
+      if (i == end) return new String(bytes, start, end - start, ISO_8859_1)
+      val a = java.util.Arrays.copyOfRange(bytes, start, end)
+      while (i < end) { a(i - start) = Runs.fold(bytes(i)).toByte; i += 1 }
+      new String(a, ISO_8859_1)
+    }
+
+    /** `term.hashCode`, without building the String. */
+    def hash: Int = {
+      var h = 0
+      var i = start
+      while (i < end) { h = 31 * h + Runs.fold(bytes(i)); i += 1 }
+      h
+    }
+
+    /** `term == t`, without building the String. */
+    def termEquals(t: String): Boolean = {
+      val n = end - start
+      if (t.length != n) return false
+      var i = 0
+      while (i < n && t.charAt(i) == Runs.fold(bytes(start + i))) i += 1
+      i == n
+    }
+  }
+
+  object Runs {
+    /** Runs of a String's UTF-8 bytes. An unpaired surrogate encodes as
+      * `?`, a separator, just as the char itself is. */
+    def apply(text: String): Runs =
+      new Runs(if (text == null) Array.emptyByteArray else text.getBytes(UTF_8))
+
+    @inline private def upper(b: Byte): Boolean = b >= 'A' && b <= 'Z'
+    @inline private def alnum(b: Byte): Boolean =
+      (b >= 'a' && b <= 'z') || upper(b) || (b >= '0' && b <= '9')
+    @inline private def fold(b: Byte): Int = if (upper(b)) b + 32 else b
   }
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.analysis.Tokenizer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -9,14 +10,15 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import scala.collection.mutable.ArrayBuffer
+
 /**
- * Native fixed-width token chunks over LOWERCASED text: tokenize
- * (maximal ASCII [a-z0-9] byte runs, the [[ShinglesExpr]] /
- * [[SimHashTextExpr]] scan) and emit consecutive NON-overlapping
- * `width`-token runs joined by a single space, ragged tail kept, in
- * document order (NOT deduplicated — chunk dedup elects winners
- * globally, so position identity matters). Parity-spec'd against the
- * declarative `transform(sequence(1, ceil(n/width)), i →
+ * Native fixed-width token chunks over LOWERCASED text: tokenize (the
+ * [[graft.analysis.Tokenizer.Runs]] byte runs) and emit consecutive
+ * NON-overlapping `width`-token runs joined by a single space, ragged
+ * tail kept, in document order (NOT deduplicated — chunk dedup elects
+ * winners globally, so position identity matters). Parity-spec'd
+ * against the declarative `transform(sequence(1, ceil(n/width)), i →
  * array_join(slice(toks, (i−1)·width+1, width), " "))` chain it
  * replaces — the chunk stream is corpus-wide and the interpreted
  * chain dominated [[graft.operators.Dedup.chunkDedup]]'s real
@@ -50,28 +52,10 @@ case class ChunksExpr(child: Expression, width: Int) extends UnaryExpression {
 object ChunksExpr {
 
   def compute(s: UTF8String, width: Int): GenericArrayData = {
-    val bytes = s.getBytes
-    val n = bytes.length
-    var nTok = 0
-    var starts = new Array[Int](16)
-    var ends = new Array[Int](16)
-    var i = 0
-    var runStart = -1
-    def push(end: Int): Unit = {
-      if (nTok == starts.length) {
-        starts = java.util.Arrays.copyOf(starts, nTok * 2)
-        ends = java.util.Arrays.copyOf(ends, nTok * 2)
-      }
-      starts(nTok) = runStart; ends(nTok) = end; nTok += 1; runStart = -1
-    }
-    while (i < n) {
-      val b = bytes(i)
-      val alnum = (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
-      if (alnum) { if (runStart < 0) runStart = i }
-      else if (runStart >= 0) push(i)
-      i += 1
-    }
-    if (runStart >= 0) push(n)
+    val r = new Tokenizer.Runs(s.getBytes)
+    val toks = new ArrayBuffer[String](16)
+    while (r.next()) toks += r.term
+    val nTok = toks.length
     if (nTok == 0) return new GenericArrayData(Array.empty[Any])
     val nChunks = (nTok + width - 1) / width
     val out = new Array[Any](nChunks)
@@ -83,8 +67,7 @@ object ChunksExpr {
       val end = math.min(j + width, nTok)
       while (j < end) {
         if (sb.length > 0) sb.append(' ')
-        sb.append(new String(bytes, starts(j), ends(j) - starts(j),
-          java.nio.charset.StandardCharsets.US_ASCII))
+        sb.append(toks(j))
         j += 1
       }
       out(c) = UTF8String.fromString(sb.toString)

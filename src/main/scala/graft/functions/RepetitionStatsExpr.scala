@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.analysis.Tokenizer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -57,33 +58,20 @@ case class RepetitionStatsExpr(child: Expression) extends UnaryExpression {
 object RepetitionStatsExpr {
 
   def compute(s: UTF8String): InternalRow = {
-    val bytes = s.getBytes
-    val n = bytes.length
+    val r = new Tokenizer.Runs(s.getBytes)
     val counts = new java.util.HashMap[String, Integer]()
     val bigrams = new java.util.HashSet[String]()
     var nTok = 0L
     var maxTf = 0L
     var prev: String = null
-    var i = 0
-    var runStart = -1
-    def close(end: Int): Unit = {
-      val tok = new String(bytes, runStart, end - runStart,
-        java.nio.charset.StandardCharsets.US_ASCII)
+    while (r.next()) {
+      val tok = r.term
       val c = counts.merge(tok, 1, (a, b) => a + b)
       if (c > maxTf) maxTf = c.toLong
       if (prev != null) bigrams.add(prev + " " + tok)
       prev = tok
       nTok += 1
-      runStart = -1
     }
-    while (i < n) {
-      val b = bytes(i)
-      val alnum = (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
-      if (alnum) { if (runStart < 0) runStart = i }
-      else if (runStart >= 0) close(i)
-      i += 1
-    }
-    if (runStart >= 0) close(n)
     new GenericInternalRow(Array[Any](nTok, counts.size.toLong, maxTf,
       if (nTok >= 2) nTok - 1 else 0L, bigrams.size.toLong))
   }

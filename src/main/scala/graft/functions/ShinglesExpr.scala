@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.analysis.Tokenizer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -9,15 +10,16 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import scala.collection.mutable.ArrayBuffer
+
 /**
  * Native distinct word-k-shingle array over LOWERCASED text: tokenize
- * (maximal ASCII [a-z0-9] byte runs — the same byte-scan as
- * [[SimHashTextExpr]], gate-proven equivalent to the V1 analyzer
- * chain) and emit each k-token window joined by a single space,
+ * (the [[graft.analysis.Tokenizer.Runs]] byte runs, the V1 analyzer's
+ * scanner) and emit each k-token window joined by a single space,
  * first-occurrence-deduplicated, in ONE pass per row.
  *
  * Semantically identical (ShinglesSpec pins the parity) to the
- * declarative [[graft.operators.Dedup.shinglesDecl]] chain
+ * declarative `DeclOracles.shinglesDecl` chain
  * `array_distinct(filter(transform(sequence(...), i →
  * array_join(slice(toks, i+1, k), " ")), s → len(s) > 0))` — but that
  * chain is four interpreted higher-order functions allocating a
@@ -56,29 +58,10 @@ object ShinglesExpr {
   /** One scan: tokenize byte runs → k-window join → first-occurrence
     * dedup. Returns an empty array (never null) for token-less text. */
   def compute(s: UTF8String, k: Int): GenericArrayData = {
-    val bytes = s.getBytes
-    val n = bytes.length
-    // token run boundaries
-    var nTok = 0
-    var starts = new Array[Int](16)
-    var ends = new Array[Int](16)
-    var i = 0
-    var runStart = -1
-    def push(end: Int): Unit = {
-      if (nTok == starts.length) {
-        starts = java.util.Arrays.copyOf(starts, nTok * 2)
-        ends = java.util.Arrays.copyOf(ends, nTok * 2)
-      }
-      starts(nTok) = runStart; ends(nTok) = end; nTok += 1; runStart = -1
-    }
-    while (i < n) {
-      val b = bytes(i)
-      val alnum = (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
-      if (alnum) { if (runStart < 0) runStart = i }
-      else if (runStart >= 0) push(i)
-      i += 1
-    }
-    if (runStart >= 0) push(n)
+    val r = new Tokenizer.Runs(s.getBytes)
+    val toks = new ArrayBuffer[String](16)
+    while (r.next()) toks += r.term
+    val nTok = toks.length
     if (nTok == 0) return new GenericArrayData(Array.empty[Any])
     val lastStart = math.max(nTok - k, 0)
     val seen = new java.util.LinkedHashSet[String](math.max(16, lastStart + 1))
@@ -90,8 +73,7 @@ object ShinglesExpr {
       val end = math.min(t + k, nTok)
       while (j < end) {
         if (j > t) sb.append(' ')
-        sb.append(new String(bytes, starts(j), ends(j) - starts(j),
-          java.nio.charset.StandardCharsets.US_ASCII))
+        sb.append(toks(j))
         j += 1
       }
       seen.add(sb.toString)

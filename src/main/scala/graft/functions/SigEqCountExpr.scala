@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
  * eq_count / numHashes (Broder '97: the fraction of agreeing minwise
  * positions estimates resemblance). Bit-identical to the declarative
  * `size(filter(zip_with(a, b, (x,y) → (x=y)::int), v → v=1))` form
- * ([[graft.operators.Dedup.sigEqCountDecl]], parity spec'd): the
+ * (`DeclOracles.sigEqCountDecl`, parity spec'd): the
  * shorter array's tail and null elements never count, a null array
  * nulls the result. One fused loop in whole-stage codegen instead of
  * an interpreted zip_with + filter that allocates two arrays per

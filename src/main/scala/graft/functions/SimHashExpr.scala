@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
  * Σ_tokens (bit j of hash set ? +1 : −1).
  *
  * Replaces the declarative per-bit form
- * ([[graft.operators.Dedup.simHashDecl]]): that form builds one
+ * (`DeclOracles.simHashDecl`): that form builds one
  * `aggregate` fold sub-tree PER BIT — 64 interpreted traversals of
  * the token-hash array per document on the production near-dup path.
  * Here all `bits` vote counters advance in ONE pass over the hashes

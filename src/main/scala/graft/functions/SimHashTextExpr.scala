@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.analysis.Tokenizer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
@@ -10,9 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Fully fused SimHash over an ALREADY-LOWERCASED string: tokenize
- * (maximal `[a-z0-9]` runs — the engine V1 analyzer), dedupe tokens,
- * hash each distinct token, and advance every bit's vote counter, all
- * in ONE scan with no intermediate token array.
+ * ([[graft.analysis.Tokenizer.Runs]], the V1 analyzer's scanner),
+ * dedupe tokens, hash each distinct token, and advance every bit's
+ * vote counter, all in ONE scan with no intermediate token array.
  *
  * Equals `simHashBits(transform(array_distinct(tokens(text)), hash),
  * bits)` bit-for-bit (spec-pinned): dedupe is by token STRING (as
@@ -60,42 +61,27 @@ object SimHashTextExpr {
 
   /** One scan: tokenize → string-dedupe → hash → vote. */
   def fingerprint(s: UTF8String, bits: Int, poly: Boolean): Long = {
-    val bytes = s.getBytes
-    val n = bytes.length
+    val r = new Tokenizer.Runs(s.getBytes)
     val votes = new Array[Int](bits)
     val seen = new java.util.HashSet[String]()
-    var i = 0
-    var runStart = -1
-    def closeRun(end: Int): Unit = {
-      val len = end - runStart
-      val tok = new String(bytes, runStart, len,
-        java.nio.charset.StandardCharsets.US_ASCII)
-      if (seen.add(tok)) {
+    while (r.next()) {
+      if (seen.add(r.term)) {
         val h =
           if (poly) {
             // pure-ASCII byte fold == PolyHashExpr's code-point fold
             var hp = 0L
-            var p = runStart
-            while (p < end) { hp = (hp * 257L + bytes(p)) % 1000000007L; p += 1 }
+            var p = r.start
+            while (p < r.end) { hp = (hp * 257L + r.bytes(p)) % 1000000007L; p += 1 }
             hp
           } else XxHash64Function.hash(
-            UTF8String.fromBytes(bytes, runStart, len), StringType, 42L)
+            UTF8String.fromBytes(r.bytes, r.start, r.length), StringType, 42L)
         var j = 0
         while (j < bits) {
           votes(j) += (if (((h >>> j) & 1L) == 1L) 1 else -1)
           j += 1
         }
       }
-      runStart = -1
     }
-    while (i < n) {
-      val b = bytes(i)
-      val alnum = (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
-      if (alnum) { if (runStart < 0) runStart = i }
-      else if (runStart >= 0) closeRun(i)
-      i += 1
-    }
-    if (runStart >= 0) closeRun(n)
     var acc = 0L
     var j = 0
     while (j < bits) {

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
  * on every executor and in the cross-engine SQL oracle.
  *
  * Replaces the declarative per-plane form
- * ([[graft.operators.Similarity.hyperplaneBucketDecl]]): that form
+ * (`DeclOracles.hyperplaneBucketDecl`): that form
  * builds one `zip_with` + `aggregate` sub-tree PER PLANE — interpreted
  * (non-codegen) higher-order functions evaluated per row per plane
  * over the whole corpus on every index build. Here the planes count is

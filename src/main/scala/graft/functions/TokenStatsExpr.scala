@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.analysis.Tokenizer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -12,10 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Native one-pass token statistics over an ALREADY-LOWERCASED string:
- * `struct(n_tokens, len_sum, hits)` where tokens are maximal
- * `[a-z0-9]` runs (the engine V1 analyzer), `len_sum` is the summed
- * token length, and `hits(i)` counts tokens contained in the i-th
- * stopword list (shipped as plan data).
+ * `struct(n_tokens, len_sum, hits)` where tokens are the
+ * [[graft.analysis.Tokenizer.Runs]] runs (the engine V1 analyzer),
+ * `len_sum` is the summed token length, and `hits(i)` counts tokens
+ * contained in the i-th stopword list (shipped as plan data).
  *
  * Replaces the interpreted higher-order pipeline
  * `filter(split(regexp_replace(...)))` that language-ID and quality
@@ -78,35 +79,22 @@ object TokenStatsExpr {
     * materialized only for runs short enough to be stopwords. */
   def stats(s: UTF8String, sets: Array[java.util.HashSet[String]],
             maxStop: Int): InternalRow = {
-    val bytes = s.getBytes
-    val n = bytes.length
+    val r = new Tokenizer.Runs(s.getBytes)
     val hits = new Array[Int](sets.length)
     var nTok = 0
     var lenSum = 0L
-    var i = 0
-    var runStart = -1
-    def closeRun(end: Int): Unit = {
-      val len = end - runStart
+    while (r.next()) {
       nTok += 1
-      lenSum += len
-      if (len <= maxStop && sets.length > 0) {
-        val tok = new String(bytes, runStart, len, java.nio.charset.StandardCharsets.US_ASCII)
+      lenSum += r.length
+      if (r.length <= maxStop && sets.length > 0) {
+        val tok = r.term
         var j = 0
         while (j < sets.length) {
           if (sets(j).contains(tok)) hits(j) += 1
           j += 1
         }
       }
-      runStart = -1
     }
-    while (i < n) {
-      val b = bytes(i)
-      val alnum = (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
-      if (alnum) { if (runStart < 0) runStart = i }
-      else if (runStart >= 0) closeRun(i)
-      i += 1
-    }
-    if (runStart >= 0) closeRun(n)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](nTok, lenSum, new GenericArrayData(hits)))
   }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.analysis.Tokenizer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -9,18 +10,20 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import scala.collection.mutable.ArrayBuffer
+
 /**
- * Native V1 token array over LOWERCASED text: maximal ASCII [a-z0-9]
- * byte runs, in order, NOT deduplicated — the engine-analyzer token
- * stream as one fused scan. Replaces the declarative
- * `filter(split(regexp_replace(lower(text), "[^a-z0-9]+", " "), " "),
- * len > 0)` chain (regexp + split are codegen'd but the trailing
- * `filter` higher-order function is interpreted and copies the array
- * per row). Parity-spec'd against the declarative twin
- * ([[graft.operators.Dedup.tokensDecl]]); null text → null (the
- * declarative chain's null propagation), token-less text → empty
- * array. Token substrings are zero-copy views into the input's
- * bytes (`UTF8String.fromBytes` aliases the backing array, which is
+ * Native V1 token array over LOWERCASED text: the
+ * [[graft.analysis.Tokenizer.Runs]] byte runs, in order, NOT
+ * deduplicated — the engine-analyzer token stream as one fused scan.
+ * Replaces the declarative `filter(split(regexp_replace(lower(text),
+ * "[^a-z0-9]+", " "), " "), len > 0)` chain (regexp + split are
+ * codegen'd but the trailing `filter` higher-order function is
+ * interpreted and copies the array per row). Parity-spec'd against
+ * the declarative twin (`DeclOracles.tokensDecl`); null text → null
+ * (the declarative chain's null propagation), token-less text → empty
+ * array. Token substrings are zero-copy views into the input's bytes
+ * (`UTF8String.fromBytes` aliases the backing array, which is
  * immutable for the duration of the row).
  */
 case class TokensExpr(child: Expression) extends UnaryExpression {
@@ -48,27 +51,10 @@ case class TokensExpr(child: Expression) extends UnaryExpression {
 object TokensExpr {
 
   def compute(s: UTF8String): GenericArrayData = {
-    val bytes = s.getBytes
-    val n = bytes.length
-    var out = new Array[Any](8)
-    var nTok = 0
-    var i = 0
-    var runStart = -1
-    def push(end: Int): Unit = {
-      if (nTok == out.length) out = java.util.Arrays.copyOf(out.asInstanceOf[Array[AnyRef]], nTok * 2).asInstanceOf[Array[Any]]
-      out(nTok) = UTF8String.fromBytes(bytes, runStart, end - runStart)
-      nTok += 1; runStart = -1
-    }
-    while (i < n) {
-      val b = bytes(i)
-      val alnum = (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
-      if (alnum) { if (runStart < 0) runStart = i }
-      else if (runStart >= 0) push(i)
-      i += 1
-    }
-    if (runStart >= 0) push(n)
-    new GenericArrayData(
-      if (nTok == out.length) out else java.util.Arrays.copyOf(out.asInstanceOf[Array[AnyRef]], nTok).asInstanceOf[Array[Any]])
+    val r = new Tokenizer.Runs(s.getBytes)
+    val out = new ArrayBuffer[Any](8)
+    while (r.next()) out += UTF8String.fromBytes(r.bytes, r.start, r.length)
+    new GenericArrayData(out.toArray)
   }
 
   /** `compute(lower(text))` as a column. */

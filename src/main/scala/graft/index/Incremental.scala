@@ -94,10 +94,11 @@ object Incremental {
     * are pinned by the checkpoint.
     *
     * Duplicate patch keys previously fanned out the join and silently
-    * indexed duplicated documents; patches are now deduplicated
-    * per-key first (deterministic max-struct pick — Solr applies
-    * repeated atomic updates last-wins, and a patch batch carries no
-    * arrival order, so the reduction just has to be deterministic).
+    * indexed duplicated documents; patches are now merged per key and
+    * per field first, as Solr merges atomic updates field by field. Two
+    * patches that set the same field keep the max value (a patch batch
+    * carries no arrival order, so the pick just has to be
+    * deterministic).
     * Patches addressed to keys absent from the corpus drop, as
     * before. */
   private[index] def patchedCorpus(spark: SparkSession, cfg: BuildConfig,
@@ -110,11 +111,10 @@ object Incremental {
     val renamed = provided.foldLeft(
       sets.select(("conv_id" +: "turn_idx" +: provided).map(col): _*))(
       (d, c) => d.withColumnRenamed(c, s"__set_$c"))
-    // per-key dedup: one deterministic patch row per (conv_id, turn_idx)
-    val oneSet = renamed.groupBy("conv_id", "turn_idx")
-      .agg(max(struct(provided.map(c => col(s"__set_$c")): _*)).as("__s"))
-      .select(col("conv_id") +: col("turn_idx") +:
-        provided.map(c => col(s"__s.__set_$c").as(s"__set_$c")): _*)
+    // per-key, per-field merge: `max` skips nulls, so patches to one
+    // key that set different fields all survive
+    val merged = provided.map(c => max(col(s"__set_$c")).as(s"__set_$c"))
+    val oneSet = renamed.groupBy("conv_id", "turn_idx").agg(merged.head, merged.tail: _*)
     // the staging view does not store ts (the content hash covers only
     // role/text/tool, so a synthetic constant cannot dirty a document)
     val cur0 = IndexBuilder.readDocs(spark, cfg.outDir)

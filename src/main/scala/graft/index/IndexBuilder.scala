@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 
@@ -654,10 +655,10 @@ object IndexBuilder {
     // exactly one segment per partition; equal keys never split, which
     // is the encoder's only requirement.
     val encoded: Dataset[PostingBlockRow] = staging
-      .select($"doc_id", $"segment", $"text", $"dl")
+      .select($"doc_id", $"segment", $"text".cast("binary"), $"dl")
       .repartitionByRange(wave.size, col("segment"))
       .sortWithinPartitions("segment", "doc_id")
-      .as[(Long, Int, String, Int)]
+      .as[(Long, Int, Array[Byte], Int)]
       .mapPartitions { docs =>
         val counted = docs.map { d =>
           if (poison.contains(d._2))
@@ -748,12 +749,12 @@ object IndexBuilder {
   }
 
   /** Open-addressing term → [[TermBuf]] table for one segment, probed
-    * by token CONTENT (builder chars + an incrementally-computed
-    * String-compatible hash): the `sb.toString` per token OCCURRENCE
-    * the previous per-doc HashMap path paid — ~10⁹ transient strings
-    * per bench build, the top allocation site of the encode profile —
-    * now happens once per DISTINCT term per segment, at insertion.
-    * Linear probing at ≤ 0.5 load; the key lives in `TermBuf.term`. */
+    * by token CONTENT (the run's byte range + a String-compatible folded
+    * hash): the String per token OCCURRENCE the previous per-doc
+    * HashMap path paid — ~10⁹ transient strings per bench build, the
+    * top allocation site of the encode profile — now happens once per
+    * DISTINCT term per segment, at insertion. Linear probing at ≤ 0.5
+    * load; the key lives in `TermBuf.term`. */
   private final class TermTable {
     private var tab = new Array[TermBuf](1 << 12)
     var size = 0
@@ -773,21 +774,20 @@ object IndexBuilder {
         i += 1
       }
     }
-    /** Probe by builder content; `h` must equal what String.hashCode
-      * yields for the builder's chars. */
-    def probe(sb: java.lang.StringBuilder, h: Int): TermBuf = {
+    /** Probe by the cursor's current run. */
+    def probe(r: Tokenizer.Runs): TermBuf = {
       if ((size + 1) * 2 > tab.length) growTable()
       val mask = tab.length - 1
-      var j = spread(h) & mask
+      var j = spread(r.hash) & mask
       while (true) {
         val b = tab(j)
         if (b == null) {
           val nb = new TermBuf
-          nb.term = sb.toString
+          nb.term = r.term
           tab(j) = nb; size += 1
           return nb
         }
-        if (b.term.length == sb.length && b.term.contentEquals(sb)) return b
+        if (r.termEquals(b.term)) return b
         j = (j + 1) & mask
       }
       throw new IllegalStateException("unreachable")
@@ -845,7 +845,7 @@ object IndexBuilder {
    * per flush. Worst-case task memory ≈ maxBufferedPostings × 16 B
    * (default ~64 MB) regardless of corpus or vocabulary shape.
    */
-  private[index] def encodeDocs(docs: Iterator[(Long, Int, String, Int)],
+  private[index] def encodeDocs(docs: Iterator[(Long, Int, Array[Byte], Int)],
                                 az: Analyzer = Analyzer.V1,
                                 maxOpenTerms: Int = 1 << 19,
                                 maxBufferedPostings: Long = 1L << 22,
@@ -860,10 +860,9 @@ object IndexBuilder {
       private var nBuffered = 0L
       private var nBufferedPos = 0L
       private var curSeg = Int.MinValue
-      private var pending: (Long, Int, String, Int) = _
+      private var pending: (Long, Int, Array[Byte], Int) = _
       private var segFlush: Iterator[PostingBlockRow] = Iterator.empty
       private val ready = new java.util.ArrayDeque[PostingBlockRow]()
-      private val sb = new java.lang.StringBuilder(16)
 
       private def encodeBlock(term: String, seg: Int, b: TermBuf): PostingBlockRow = {
         val ids = java.util.Arrays.copyOf(b.ids, b.n)
@@ -945,42 +944,28 @@ object IndexBuilder {
         }
       }
 
-      private def process(row: (Long, Int, String, Int)): Unit = {
+      private def process(row: (Long, Int, Array[Byte], Int)): Unit = {
         val (docId, seg, text, dl) = row
         if (inlineV1) {
-          // one fused scan: classify chars, build the token in `sb`
-          // with a String-compatible incremental hash, stream each
-          // occurrence into the table. Positions are indices in the
-          // analyzed stream, ascending per doc by construction.
-          if (text != null && !text.isEmpty) {
-            val n = text.length
-            var i = 0
+          // stream each occurrence of the UTF-8 bytes' runs into the
+          // table. Positions are indices in the analyzed stream,
+          // ascending per doc by construction.
+          if (text != null) {
+            val r = new Tokenizer.Runs(text)
             var p = 0
-            var h = 0
-            sb.setLength(0)
-            while (i <= n) {
-              val c = if (i < n) text.charAt(i) else 0.toChar
-              val lc =
-                if (c >= 'a' && c <= 'z') c
-                else if (c >= 'A' && c <= 'Z') (c + 32).toChar
-                else if (c >= '0' && c <= '9') c
-                else 0.toChar
-              if (lc != 0) { sb.append(lc); h = h * 31 + lc }
-              else if (sb.length > 0) {
-                val b = table.probe(sb, h)
-                if (b.n > 0 && b.ids(b.n - 1) == docId) b.tfs(b.n - 1) += 1
-                else openPosting(b, docId, dl, seg)
-                if (storePositions) { b.addPos(p); nBufferedPos += 1 }
-                p += 1; sb.setLength(0); h = 0
-              }
-              i += 1
+            while (r.next()) {
+              val b = table.probe(r)
+              if (b.n > 0 && b.ids(b.n - 1) == docId) b.tfs(b.n - 1) += 1
+              else openPosting(b, docId, dl, seg)
+              if (storePositions) { b.addPos(p); nBufferedPos += 1 }
+              p += 1
             }
           }
-        } else if (storePositions) {
-          az.termPositions(text).foreach { case (t, pb) =>
-            addWhole(table.probeString(t), pb.n, pb, docId, dl, seg) }
         } else {
-          az.termFreqs(text).foreach { case (t, tf) =>
+          val s = if (text == null) null else new String(text, StandardCharsets.UTF_8)
+          if (storePositions) az.termPositions(s).foreach { case (t, pb) =>
+            addWhole(table.probeString(t), pb.n, pb, docId, dl, seg) }
+          else az.termFreqs(s).foreach { case (t, tf) =>
             addWhole(table.probeString(t), tf, null, docId, dl, seg) }
         }
         // memory cap: pathological vocabulary (open-term count) OR raw

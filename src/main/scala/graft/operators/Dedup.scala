@@ -55,23 +55,17 @@ object Dedup {
   /** Engine-analyzer token array (mirrors graft.analysis.Tokenizer V1:
     * lowercase + maximal [a-z0-9] runs) as a column expression —
     * ONE native scan ([[graft.functions.TokensExpr]]; the declarative
-    * twin [[tokensDecl]] is kept as the spec'd parity reference: its
+    * twin `DeclOracles.tokensDecl` is kept as the spec'd parity reference: its
     * trailing `filter` HOF was interpreted per row). */
   def tokens(textCol: Column): Column =
     graft.functions.TokensExpr(lower(textCol))
-
-  /** Declarative (pure functions._) twin of [[tokens]], kept only as
-    * the spec'd parity reference. */
-  def tokensDecl(textCol: Column): Column =
-    filter(split(regexp_replace(lower(textCol), "[^a-z0-9]+", " "), " "),
-      t => length(t) > lit(0))
 
   /** Word k-shingles as a distinct array (engine-analyzer tokens, so
     * dedup and the fulltext index agree on what a "word" is).
     * Tokenize → window → join → first-occurrence dedup run in ONE
     * native pass ([[graft.functions.ShinglesExpr]]); null and
     * token-less text both degrade to an EMPTY array, exactly like the
-    * declarative [[shinglesDecl]] twin it replaced (whose greatest()
+    * declarative `DeclOracles.shinglesDecl` twin it replaced (whose greatest()
     * skips the null size, so even null text folds to []) — the
     * shingle stream is corpus × tokens wide, and the interpreted
     * transform/slice/array_join/array_distinct chain dominated the
@@ -79,17 +73,6 @@ object Dedup {
   def shingles(textCol: Column, k: Int): Column =
     coalesce(graft.functions.ShinglesExpr(lower(textCol), k),
       array().cast("array<string>"))
-
-  /** Declarative (pure functions._) twin, kept only as the spec'd
-    * parity reference for the native kernel (OperatorsSpec). */
-  def shinglesDecl(textCol: Column, k: Int): Column = {
-    val toks = tokens(textCol)
-    // sliding k-grams via transform over indices; filter out ragged tail
-    array_distinct(filter(
-      transform(sequence(lit(0), greatest(size(toks) - k, lit(0))),
-        i => array_join(slice(toks, i + lit(1), lit(k)), " ")),
-      s => length(s) > lit(0)))
-  }
 
   /**
    * Oracle-checkable MinHash signatures: shingle hashes are the
@@ -113,23 +96,10 @@ object Dedup {
   /** SimHash fingerprint of a token-hash array: all bit votes in one
     * native pass ([[graft.functions.SimHashExpr]]); null input (null
     * text → null token array) degrades to fingerprint 0, exactly like
-    * the declarative form it replaced ([[simHashDecl]], kept as the
+    * the declarative form it replaced (`DeclOracles.simHashDecl`, kept as the
     * spec'd parity reference). */
   def simHashBits(tokenHashes: Column, bits: Int): Column =
     coalesce(graft.functions.SimHashExpr(tokenHashes, bits), lit(0L))
-
-  /** Declarative (pure functions._) reference implementation: one
-    * interpreted `aggregate` fold per bit — kept only as the parity
-    * oracle for the native kernel (OperatorsSpec pins the equality). */
-  def simHashDecl(tokenHashes: Column, bits: Int): Column = {
-    val bitCols = (0 until bits).map { j =>
-      val votes = aggregate(tokenHashes, lit(0L), (acc, h) =>
-        acc + when(shiftright(h, j).bitwiseAND(lit(1L)) === 1L, lit(1L))
-          .otherwise(lit(-1L)))
-      when(votes > 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bitCols.reduce((a: Column, b: Column) => a.bitwiseOR(b))
-  }
 
   /** Fully fused SimHash over raw text: tokenize → dedupe → hash →
     * vote in one scan ([[graft.functions.SimHashTextExpr]]); null
@@ -177,7 +147,7 @@ object Dedup {
       .filter(col("sig").isNotNull)
     // band key = hash of the band's slice of the signature, all bands
     // in ONE native loop ([[graft.functions.BandHashExpr]]; the
-    // declarative transform/slice/array_join twin is [[bandHashDecl]],
+    // declarative transform/slice/array_join twin is `DeclOracles.bandHashDecl`,
     // parity spec'd)
     val banded = sig.select(col("id"), col("sig"),
       posexplode(graft.functions.BandHashExpr(col("sig"), bands, rowsPerBand,
@@ -196,7 +166,7 @@ object Dedup {
     // pairs (i < j over the id-sorted member list ⇒ id_a < id_b);
     // est_jaccard = fraction of matching signature positions, counted
     // by the fused native kernel (one loop per pair; the declarative
-    // zip_with + filter twin is [[sigEqCountDecl]], parity spec'd) —
+    // zip_with + filter twin is `DeclOracles.sigEqCountDecl`, parity spec'd) —
     // the compare runs maxBucketSize²/2 times per hot bucket, the LSH
     // stage's hottest loop
     val pairs = flatten(transform(sequence(lit(0), size(col("m")) - 2), i =>
@@ -211,25 +181,6 @@ object Dedup {
       .select(col("p.id_a"), col("p.id_b"), col("p.est_jaccard"))
       .distinct()
   }
-
-  /** Declarative (pure functions._) twin of the native band hash
-    * ([[graft.functions.BandHashExpr]]), kept only as the spec'd
-    * parity reference. */
-  def bandHashDecl(sig: Column, bands: Int, rowsPerBand: Int,
-                   crossEngine: Boolean): Column = {
-    val bandHash: Column => Column =
-      if (crossEngine) Hashing.polyHash else xxhash64(_)
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => bandHash(array_join(
-        slice(sig, b * lit(rowsPerBand) + lit(1), lit(rowsPerBand)), ",")))
-  }
-
-  /** Declarative (pure functions._) twin of the native signature
-    * compare ([[graft.functions.SigEqCountExpr]]), kept only as the
-    * spec'd parity reference: count of positions where both arrays
-    * hold equal non-null values. */
-  def sigEqCountDecl(a: Column, b: Column): Column =
-    size(filter(zip_with(a, b, (x, y) => (x === y).cast("int")), v => v === 1))
 
   /** MinHash-LSH near-dup pairs above a similarity threshold. */
   def minHashNearDups(df: DataFrame, idCol: String, textCol: String,
@@ -457,7 +408,7 @@ object Dedup {
                  chunkTokens: Int = 8): DataFrame = {
     require(chunkTokens > 0, "chunkTokens must be positive")
     // tokenize + fixed-width windowing in ONE native pass
-    // ([[graft.functions.ChunksExpr]]; declarative twin [[chunksDecl]]
+    // ([[graft.functions.ChunksExpr]]; declarative twin `DeclOracles.chunksDecl`
     // parity spec'd — the interpreted transform/slice/array_join chain
     // dominated this operator's noop-isolated compute)
     val withChunks = df
@@ -484,19 +435,6 @@ object Dedup {
       .select(col("doc_id"), col("n_units"),
         (col("n_units") - coalesce(col("n_kept"), lit(0L))).as("n_dropped"),
         coalesce(col("text_dedup"), lit("")).as("text_dedup"))
-  }
-
-  /** Declarative (pure functions._) twin of the native chunk builder
-    * ([[graft.functions.ChunksExpr]]), kept only as the spec'd parity
-    * reference. */
-  def chunksDecl(textCol: Column, chunkTokens: Int): Column = {
-    val ts = tokens(textCol)
-    val nCh = ceil(size(ts).cast("double") / chunkTokens).cast("int")
-    when(size(ts) > 0,
-      transform(sequence(lit(1), nCh), i =>
-        array_join(slice(ts, (i - lit(1)) * lit(chunkTokens) + lit(1),
-          lit(chunkTokens)), " ")))
-      .otherwise(array().cast("array<string>"))
   }
 
   /** Embedding near-dup: cosine ≥ threshold among LSH-bucketed

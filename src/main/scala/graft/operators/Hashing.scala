@@ -31,14 +31,9 @@ object Hashing {
   /** Rolling polynomial hash over the string's characters:
     * fold h ← (h*257 + ascii(c)) mod P, h₀ = 0. Evaluates via the
     * native codegen'd expression ([[graft.functions.PolyHashExpr]]);
-    * [[polyHashDecl]] is the declarative reference form it must match
+    * `DeclOracles.polyHashDecl` is the declarative reference form it must match
     * (PolyHashSpec pins the equivalence). */
   def polyHash(s: Column): Column = graft.functions.PolyHashExpr(s)
-
-  /** Declarative (pure functions._) reference implementation. */
-  def polyHashDecl(s: Column): Column =
-    aggregate(transform(split(s, ""), c => ascii(c).cast("long")),
-      lit(0L), (h, c) => pmod(h * lit(257L) + c, lit(P)))
 
   /** Affine rehash (h*a + b) mod P — the "i-th permutation" for
     * MinHash signatures. Requires a, b < 1e6 (overflow bound). */

@@ -27,16 +27,11 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Σ a_i·b_i with double accumulation (deterministic fold order).
-    * Native codegen'd loop ([[graft.functions.DotExpr]]); [[dotDecl]]
+    * Native codegen'd loop ([[graft.functions.DotExpr]]); `DeclOracles.dotDecl`
     * is the declarative reference form it must match bit-for-bit
     * (DotExprSpec pins the equivalence; every cosine oracle proves it
     * cross-engine). */
   def dot(a: Column, b: Column): Column = graft.functions.DotExpr(a, b)
-
-  /** Declarative (pure functions._) reference implementation. */
-  def dotDecl(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -91,24 +86,10 @@ object Similarity {
     * from (j, dim) by arithmetic — no stored plane matrix, identical
     * on every executor (and in the cross-engine oracle). Native
     * one-fused-loop kernel ([[graft.functions.SrpBucketExpr]]);
-    * [[hyperplaneBucketDecl]] is the declarative reference form it
+    * `DeclOracles.hyperplaneBucketDecl` is the declarative reference form it
     * must match bit-for-bit (SimilarityIndexSpec pins the parity). */
   def hyperplaneBucket(v: Column, planes: Int): Column =
     graft.functions.SrpBucketExpr(v, planes)
-
-  /** Declarative (pure functions._) reference implementation of
-    * [[hyperplaneBucket]]: one `zip_with`+`aggregate` sub-tree per
-    * plane — interpreted HOFs, kept only as the spec'd parity oracle
-    * for the native kernel. */
-  def hyperplaneBucketDecl(v: Column, planes: Int): Column = {
-    val bits = (0 until planes).map { j =>
-      val prods = zip_with(v, sequence(lit(0), size(v) - 1),
-        (x, i) => x.cast("double") * planeComponent(j, i))
-      val s = aggregate(prods, lit(0.0), (acc, p) => acc + p)
-      when(s > 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bits.reduce((a: Column, b: Column) => a.bitwiseOR(b))
-  }
 
   /** Fail fast on degenerate vectors (zero vector, NaN element,
     * dimension mismatch): [[graft.functions.ArgMaxCosExpr]] returns

@@ -15,7 +15,7 @@ object TextAnalysis {
   /** Tokens under the engine's V1 analysis chain, as a column
     * expression mirroring graft.analysis.Tokenizer.tokenize — the
     * native fused scan ([[graft.functions.TokensExpr]]; parity with
-    * the declarative chain pinned via [[Dedup.tokensDecl]]). */
+    * the declarative chain pinned via `DeclOracles.tokensDecl`). */
   def tokensCol(text: Column): Column =
     graft.functions.TokensExpr(lower(text))
 
@@ -91,7 +91,7 @@ object TextAnalysis {
   /** Token counts: whitespace-split words and a BPE-ish count (letter
     * runs + single digits + punctuation marks as single tokens) — the
     * usual cheap proxy for tokenizer budget accounting. Semantics are
-    * defined by (and [[tokenCountsDecl]] still implements) the regexes
+    * defined by (and `DeclOracles.tokenCountsDecl` still implements) the regexes
     * `\s+`-split and `[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]`, reproducible by
     * any PCRE engine; the production path is one native code-point
     * scan ([[graft.functions.TokenCountsExpr]], parity spec'd). */
@@ -101,16 +101,6 @@ object TextAnalysis {
       .withColumn("ws_tokens", col(tmp)("ws_tokens"))
       .withColumn("bpeish_tokens", col(tmp)("bpeish_tokens"))
       .drop(tmp)
-  }
-
-  /** Declarative regex reference form of [[tokenCounts]], kept as the
-    * spec'd parity oracle for the native scan. */
-  def tokenCountsDecl(df: DataFrame, textCol: String): DataFrame = {
-    val t = col(textCol)
-    val ws = size(filter(split(t, "\\s+"), x => length(x) > 0)).cast("long")
-    val bpeish = size(regexp_extract_all(t,
-      lit("[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\\s]"), lit(0))).cast("long")
-    df.withColumn("ws_tokens", ws).withColumn("bpeish_tokens", bpeish)
   }
 
   /** Gopher-style repetition signals (Rae et al. '21, §A1.1 — the
@@ -131,7 +121,7 @@ object TextAnalysis {
     // integer stats in ONE native pass
     // ([[graft.functions.RepetitionStatsExpr]]); the fractions stay
     // declarative over those ints, so the doubles are bit-identical to
-    // the [[repetitionSignalsDecl]] chain it replaced (parity spec'd).
+    // the `DeclOracles.repetitionSignalsDecl` chain it replaced (parity spec'd).
     // Null text → zero-token row, like the declarative when(n > 0).
     val tmp = "__graft_rep"
     val st = col(tmp)
@@ -157,49 +147,6 @@ object TextAnalysis {
           col("top_token_frac") <= maxTopTokenFrac &&
           col("dup_bigram_frac") <= maxDupBigramFrac)
       .drop(tmp)
-  }
-
-  /** Declarative (pure functions._) twin of [[repetitionSignals]],
-    * kept only as the spec'd parity reference. */
-  def repetitionSignalsDecl(df: DataFrame, textCol: String,
-                            maxDupTokenFrac: Double = 0.95,
-                            maxTopTokenFrac: Double = 0.20,
-                            maxDupBigramFrac: Double = 0.90): DataFrame = {
-    val tmp = "__graft_toks"
-    val toks = col(tmp)
-    val n = size(toks)
-    val dupTok = when(n > 0,
-      (n - size(array_distinct(toks))).cast("double") / n).otherwise(lit(0.0))
-    // dominant-token count: run-length fold over the sorted array
-    val best = aggregate(sort_array(toks),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, t) => {
-        val run = when(t === acc.getField("prev"), acc.getField("run") + lit(1L))
-          .otherwise(lit(1L))
-        struct(t.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
-    val topTok = when(n > 0, best.cast("double") / n).otherwise(lit(0.0))
-    val bigrams = when(n >= 2,
-      transform(sequence(lit(1), n - 1), i =>
-        concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
-      .otherwise(array().cast("array<string>"))
-    val tmpB = "__graft_bigrams"
-    val bg = col(tmpB)
-    val nb = size(bg)
-    val dupBi = when(nb > 0,
-      (nb - size(array_distinct(bg))).cast("double") / nb).otherwise(lit(0.0))
-    df.withColumn(tmp, tokensCol(col(textCol)))
-      .withColumn(tmpB, bigrams)
-      .withColumn("dup_token_frac", dupTok)
-      .withColumn("top_token_frac", topTok)
-      .withColumn("dup_bigram_frac", dupBi)
-      .withColumn("repetition_ok",
-        col("dup_token_frac") <= maxDupTokenFrac &&
-          col("top_token_frac") <= maxTopTokenFrac &&
-          col("dup_bigram_frac") <= maxDupBigramFrac)
-      .drop(tmp, tmpB)
   }
 
   /** RE2-safe public PII patterns (no backreferences/lookaround, so

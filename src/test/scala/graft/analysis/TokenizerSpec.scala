@@ -1,5 +1,6 @@
 package graft.analysis
 
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden tests pinning the V1 analysis chain — the engine's
@@ -29,6 +30,17 @@ class TokenizerSpec extends AnyFunSuite {
       assert(Tokenizer.tokenize(s) == re.findAllIn(s.toLowerCase).toVector,
         s"mismatch on: $s")
     }
+  }
+
+  test("V1 folds ASCII only: code points Spark lowercases to ASCII are separators") {
+    // Spark's lower() maps U+212A (Kelvin sign) to "k" and U+0130 to
+    // "i" + U+0307, so regexp_extract_all(lower(x), '[a-z0-9]+') sees
+    // letters there; the index analyzer does not
+    assert(UTF8String.fromString("\u212A").toLowerCase.toString == "k")
+    assert(UTF8String.fromString("\u0130").toLowerCase.toString == "i\u0307")
+    assert(Tokenizer.tokenize("\u212A") == Vector.empty)
+    assert(Tokenizer.tokenize("\u0130") == Vector.empty)
+    assert(Tokenizer.tokenize("o\u212Aay \u0130stanbul") == Vector("o", "ay", "stanbul"))
   }
 
   test("termFreqs counts and docLength") {

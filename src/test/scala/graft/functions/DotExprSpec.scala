@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkFunSuite
-import graft.operators.Similarity
+import graft.operators.{DeclOracles, Similarity}
 import org.apache.spark.sql.functions._
 
 /** The native DotExpr must be bit-identical to the declarative
@@ -20,7 +20,7 @@ class DotExprSpec extends SparkFunSuite {
       ((Seq(-0.0f, 1.5f), Seq(0.0f, -2.5f)))
     val out = rows.toDF("a", "b")
       .select(Similarity.dot(col("a"), col("b")).as("fast"),
-        Similarity.dotDecl(col("a"), col("b")).as("decl"))
+        DeclOracles.dotDecl(col("a"), col("b")).as("decl"))
       .collect()
     out.foreach { r =>
       // compare raw bits: NaN-safe, -0.0 vs 0.0 sensitive
@@ -32,7 +32,7 @@ class DotExprSpec extends SparkFunSuite {
   test("length mismatch yields null (zip_with padding semantics)") {
     val r = Seq((Seq(1f, 2f), Seq(1f))).toDF("a", "b")
       .select(Similarity.dot(col("a"), col("b")).as("fast"),
-        Similarity.dotDecl(col("a"), col("b")).as("decl"))
+        DeclOracles.dotDecl(col("a"), col("b")).as("decl"))
       .head()
     assert(r.isNullAt(0) && r.isNullAt(1))
   }
@@ -41,7 +41,7 @@ class DotExprSpec extends SparkFunSuite {
     val r = Seq((Seq(Option(1f), None, Option(2f)), Seq(Option(1f), Option(1f), Option(1f))))
       .toDF("a", "b")
       .select(Similarity.dot(col("a"), col("b")).as("fast"),
-        Similarity.dotDecl(col("a"), col("b")).as("decl"))
+        DeclOracles.dotDecl(col("a"), col("b")).as("decl"))
       .head()
     assert(r.isNullAt(0) && r.isNullAt(1))
   }

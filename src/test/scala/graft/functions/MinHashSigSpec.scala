@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkFunSuite
-import graft.operators.{Dedup, Hashing}
+import graft.operators.{DeclOracles, Dedup, Hashing}
 import org.apache.spark.sql.functions._
 
 /** The native MinHashSigExpr must equal the declarative pipeline
@@ -26,7 +26,7 @@ class MinHashSigSpec extends SparkFunSuite {
     val sh = df.select(col("id"), Dedup.shingles(col("text"), k).as("sh"))
       .filter(size(col("sh")) > 0)
     val hash: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      if (crossEngine) Hashing.polyHashDecl
+      if (crossEngine) DeclOracles.polyHashDecl
       else s => pmod(xxhash64(s), lit(Hashing.P))
     sh.select(col("id"), Hashing.minHashSig(
       transform(col("sh"), hash), n).as("sig"))

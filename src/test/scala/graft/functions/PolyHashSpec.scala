@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkFunSuite
-import graft.operators.Hashing
+import graft.operators.{DeclOracles, Hashing}
 import org.apache.spark.sql.functions._
 
 /** The native codegen'd PolyHashExpr must be bit-identical to the
@@ -17,7 +17,7 @@ class PolyHashSpec extends SparkFunSuite {
       "punct!@#$%^&*()", "0123456789" * 20)
     val df = rows.toDF("s")
       .select(Hashing.polyHash(col("s")).as("fast"),
-        Hashing.polyHashDecl(col("s")).as("decl"))
+        DeclOracles.polyHashDecl(col("s")).as("decl"))
     val got = df.collect()
     got.foreach(r => assert(r.getLong(0) == r.getLong(1), s"mismatch for ${r}"))
   }

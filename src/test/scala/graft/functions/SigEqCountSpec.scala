@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkFunSuite
-import graft.operators.Dedup
+import graft.operators.DeclOracles
 import org.apache.spark.sql.functions._
 
 /** The native SigEqCountExpr must match the declarative
@@ -23,7 +23,7 @@ class SigEqCountSpec extends SparkFunSuite {
         (Seq[java.lang.Long](1L, null, 3L), Seq[java.lang.Long](1L, null, 3L))) // null elements
     val out = rows.toDF("a", "b")
       .select(SigEqCountExpr(col("a"), col("b")).as("fast"),
-        Dedup.sigEqCountDecl(col("a"), col("b")).cast("long").as("decl"))
+        DeclOracles.sigEqCountDecl(col("a"), col("b")).cast("long").as("decl"))
       .collect()
     out.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
     // identical signatures count every position
@@ -34,7 +34,7 @@ class SigEqCountSpec extends SparkFunSuite {
     val r = Seq((null.asInstanceOf[Seq[Long]], Seq(1L, 2L)))
       .toDF("a", "b")
       .select(SigEqCountExpr(col("a"), col("b")).as("fast"),
-        Dedup.sigEqCountDecl(col("a"), col("b")).as("decl"))
+        DeclOracles.sigEqCountDecl(col("a"), col("b")).as("decl"))
       .head()
     assert(r.isNullAt(0) && r.isNullAt(1))
   }

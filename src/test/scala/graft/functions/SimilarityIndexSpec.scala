@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkFunSuite
-import graft.operators.Similarity
+import graft.operators.{DeclOracles, Similarity}
 import org.apache.spark.sql.functions._
 
 /**
@@ -230,7 +230,7 @@ class SimilarityIndexSpec extends SparkFunSuite {
     for (planes <- Seq(1, 6, 12)) {
       val native = df.select($"id", Similarity.hyperplaneBucket($"v", planes).as("b"))
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
-      val decl = df.select($"id", Similarity.hyperplaneBucketDecl($"v", planes).as("b"))
+      val decl = df.select($"id", DeclOracles.hyperplaneBucketDecl($"v", planes).as("b"))
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
       assert(native == decl, s"planes=$planes")
       // non-degenerate: the hash genuinely spreads the corpus (the

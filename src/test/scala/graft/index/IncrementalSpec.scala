@@ -117,6 +117,22 @@ class IncrementalSpec extends SparkFunSuite {
     assert(turns.filter(col("text").startsWith("opatch")).count() == 2)
   }
 
+  test("atomicSet merges patches to one key field by field (disjoint fields both survive)") {
+    val dir = tmpDir("atom-fields")
+    val cfg = BuildConfig(dir, nSegments = 4, waveSize = 4, autoCompactFraction = 0)
+    IndexBuilder.build(spark, v1, cfg)
+    val key = col("conv_id") === "conv-000010" && col("turn_idx") === 0
+    val Array(role) = v1.filter(key).select("role").as[String].collect()
+    val sets = Seq(
+      ("conv-000010", 0, "field merged text", null: String),
+      ("conv-000010", 0, null: String, "field_merged_tool")
+    ).toDF("conv_id", "turn_idx", "text", "tool")
+    Incremental.atomicSet(spark, cfg, sets)
+    val got = IndexBuilder.readDocs(spark, dir).filter(key)
+      .select("text", "tool", "role").as[(String, String, String)].collect()
+    assert(got.toSeq == Seq(("field merged text", "field_merged_tool", role)))
+  }
+
   test("delta: update+delete+append rebuilds only touched segments; equals full rebuild") {
     val incDir = tmpDir("inc-idx"); val fullDir = tmpDir("inc-full")
     val cfgInc = BuildConfig(incDir, nSegments = 8, waveSize = 8)

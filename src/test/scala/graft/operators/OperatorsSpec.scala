@@ -342,7 +342,7 @@ class OperatorsSpec extends SparkFunSuite {
         all.select($"doc_id", c.as("s")).orderBy("doc_id").collect()
           .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[String](1)))
       val got = rows(Dedup.shingles($"text", k))
-      val want = rows(Dedup.shinglesDecl($"text", k))
+      val want = rows(DeclOracles.shinglesDecl($"text", k))
       assert(got.sameElements(want), s"k=$k")
     }
   }
@@ -356,7 +356,7 @@ class OperatorsSpec extends SparkFunSuite {
     def rows(c: org.apache.spark.sql.Column) =
       all.select($"doc_id", c.as("s")).orderBy("doc_id").collect()
         .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[String](1)))
-    assert(rows(Dedup.tokens($"text")).sameElements(rows(Dedup.tokensDecl($"text"))))
+    assert(rows(Dedup.tokens($"text")).sameElements(rows(DeclOracles.tokensDecl($"text"))))
   }
 
   test("ChunksExpr: parity with the declarative windowing chain (several widths; edges)") {
@@ -371,7 +371,7 @@ class OperatorsSpec extends SparkFunSuite {
           .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[String](1)))
       val got = rows(coalesce(graft.functions.ChunksExpr(lower($"text"), w),
         array().cast("array<string>")))
-      val want = rows(Dedup.chunksDecl($"text", w))
+      val want = rows(DeclOracles.chunksDecl($"text", w))
       assert(got.sameElements(want), s"w=$w")
     }
   }
@@ -385,7 +385,7 @@ class OperatorsSpec extends SparkFunSuite {
         sigs.select($"doc_id", c.as("bh")).orderBy("doc_id").collect()
           .map(r => (r.getLong(0), r.getSeq[Long](1)))
       val got = rows(graft.functions.BandHashExpr($"sig", 16, 4, crossEngine))
-      val want = rows(Dedup.bandHashDecl($"sig", 16, 4, crossEngine))
+      val want = rows(DeclOracles.bandHashDecl($"sig", 16, 4, crossEngine))
       assert(got.sameElements(want), s"crossEngine=$crossEngine")
     }
   }
@@ -399,7 +399,7 @@ class OperatorsSpec extends SparkFunSuite {
         t => if (poly) graft.operators.Hashing.polyHash(t) else xxhash64(t))
       val native = withNull.select($"doc_id", Dedup.simHashBits(th, bits).as("h"))
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
-      val decl = withNull.select($"doc_id", Dedup.simHashDecl(th, bits).as("h"))
+      val decl = withNull.select($"doc_id", DeclOracles.simHashDecl(th, bits).as("h"))
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
       assert(native == decl, s"bits=$bits")
       // the FULLY fused text-level form (tokenize → dedupe → hash →
@@ -543,7 +543,7 @@ class OperatorsSpec extends SparkFunSuite {
         .map(r => r.getLong(0) ->
           (if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2))))).toMap
     val native = shape(TextAnalysis.tokenCounts(df, "text"))
-    val decl = shape(TextAnalysis.tokenCountsDecl(df, "text"))
+    val decl = shape(DeclOracles.tokenCountsDecl(df, "text"))
     rows.foreach { case (id, text) =>
       assert(native(id) == decl(id), s"id=$id text='$text'")
     }
@@ -590,7 +590,7 @@ class OperatorsSpec extends SparkFunSuite {
       d.select(cols.head, cols.tail: _*)
         .as[(Long, Double, Double, Double, Boolean)].collect().sortBy(_._1).toSeq
     assert(vals(TextAnalysis.repetitionSignals(edge, "text")) ==
-      vals(TextAnalysis.repetitionSignalsDecl(edge, "text")))
+      vals(DeclOracles.repetitionSignalsDecl(edge, "text")))
   }
 
   test("fingerprint is whitespace/case-insensitive") {

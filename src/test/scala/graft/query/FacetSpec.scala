@@ -281,13 +281,12 @@ class FacetSpec extends SparkFunSuite {
     spark.sparkContext.setJobGroup(group, "collate suggestion batching")
     try rdr.bestSuggestions(Seq("usr", "laq", "mb", "user", "la"), 2)
     finally spark.sparkContext.clearJobGroup()
-    // the status store is fed asynchronously; wait for it to settle
-    def jobs() = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    val deadline = System.nanoTime() + 10_000_000_000L
-    while (jobs() < 1 && System.nanoTime() < deadline) Thread.sleep(50)
-    Thread.sleep(500) // catch any straggler jobs beyond the first
-    assert(jobs() == 1,
-      s"batched suggestion phase must run exactly one dictionary job, ran ${jobs()}")
+    // the status store is fed from the listener bus: drain it so every
+    // job the call started is counted
+    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    assert(jobs == 1,
+      s"batched suggestion phase must run exactly one dictionary job, ran $jobs")
   }
 
   test("facetQueries: named subquery counts == brute-force boolean counts") {
