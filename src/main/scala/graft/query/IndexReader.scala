@@ -3,16 +3,19 @@ package graft.query
 import graft.analysis.Analyzer
 import graft.index.IndexBuilder
 import graft.model.{CorpusStats, PostingBlockRow, QueryHit, RankedTurn}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
  * Distributed BM25 top-k retrieval over a built index (SURVEY.md
- * §2.7): query terms → dictionary lookup (df → idf) → postings scan
- * pruned to the query terms (Parquet row-group stats: postings files
- * are term-sorted within each segment) → per-segment block-max WAND
- * with a bounded min-heap (one `flatMapGroups` task per segment) →
- * driver k-way merge under the total order (score desc, docId asc).
+ * §2.7): every top-k method builds a query [[Shape]], the shared
+ * [[Lowering]] turns it into a [[Plan]] (dictionary expansions, df →
+ * idf), and ONE executor runs any batch of plans: a postings scan
+ * pruned to the plans' terms (Parquet row-group stats: postings files
+ * are term-sorted within each segment) → per-segment-range tasks
+ * running each plan's block-max WAND kernel with a bounded min-heap →
+ * driver k-way merge per query under the total order (score desc,
+ * docId asc). A single query is a batch of one.
  *
  * The per-segment shuffle moves only the query terms' posting BLOCKS
  * (compressed), never documents.
@@ -34,12 +37,7 @@ class IndexReader(spark: SparkSession, dir: String,
                   queryTasks: Int = 0) extends Serializable {
   import spark.implicits._
 
-  lazy val stats: CorpusStats = {
-    val s = IndexReader.readStatsDirect(dir).getOrElse(
-      spark.read.parquet(IndexBuilder.corpusStatsDir(dir)).as[CorpusStats].head())
-    graft.model.IndexFormat.check(s, dir)
-    s
-  }
+  lazy val stats: CorpusStats = IndexReader.readStats(spark, dir)
 
   /** Query-side chain = the chain the index was built with. */
   lazy val analyzer: Analyzer = Analyzer.parse(stats.analyzer)
@@ -48,23 +46,21 @@ class IndexReader(spark: SparkSession, dir: String,
   private lazy val dictionary = spark.read.parquet(IndexBuilder.dictionaryDir(dir))
 
   /** Dedicated session for the fixed-shape top-k collect paths (same
-    * SparkContext, isolated SQLConf) with ADAPTIVE EXECUTION OFF: the
-    * WAND serving jobs are one postings scan + one groupByKey whose
-    * task count the reader already right-sizes ([[groupSize]] targets
-    * 2x parallelism), so AQE's per-exchange stage materialization adds
-    * a scheduling round-trip per query without adding information —
+    * SparkContext, isolated SQLConf): every runtime-modifiable SQL conf
+    * of the caller's session, with ADAPTIVE EXECUTION OFF. The WAND
+    * serving jobs are one postings scan + one groupByKey whose task
+    * count the reader already right-sizes ([[groupSize]] targets 2x
+    * parallelism), so AQE's per-exchange stage materialization adds a
+    * scheduling round-trip per query without adding information —
     * measured ~40% of a warm top-10 search's latency (median 111 ms ->
     * 68 ms on the 5.28 M-doc bench index). Relational compositions
     * (matchingDocs / scoredDocs / facets), whose join sizes DO vary
     * with the match set, stay on the caller's session with AQE as
     * configured. */
-  private lazy val serveSession: SparkSession = {
+  private[query] lazy val serveSession: SparkSession = {
     val s2 = spark.newSession()
-    Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone").foreach { k =>
-      spark.conf.getOption(k).foreach(s2.conf.set(k, _))
-    }
-    s2.conf.set("spark.sql.adaptive.enabled",
-      sys.env.getOrElse("GRAFT_SERVE_AQE", "false")) // A/B escape hatch
+    spark.conf.getAll.foreach { case (k, v) => if (spark.conf.isModifiable(k)) s2.conf.set(k, v) }
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
     s2
   }
   private lazy val postingsServe =
@@ -84,9 +80,7 @@ class IndexReader(spark: SparkSession, dir: String,
   /** Whether the index stored per-posting position lists
     * (BuildConfig.storePositions; missing manifest key = older
     * positional build → true). Phrase queries require them. */
-  lazy val positionsStored: Boolean = graft.store.Manifest
-    .read(graft.store.Manifest.phaseAPath(IndexBuilder.manifestDir(dir)))
-    .flatMap(_.get("store_positions")).forall(_ == "true")
+  lazy val positionsStored: Boolean = IndexReader.positionsStored(dir)
 
   /** Global document frequencies for a term set (small collect). */
   def docFreqs(terms: Seq[String]): Map[String, Long] =
@@ -105,58 +99,79 @@ class IndexReader(spark: SparkSession, dir: String,
   lazy val totalTokens: Long =
     dictionary.agg(coalesce(sum(col("cf")), lit(0L))).as[Long].head()
 
-  private def mergeDriver(perTask: Array[QueryHit], k: Int): Vector[QueryHit] =
-    perTask.sorted(new Ordering[QueryHit] {
-      override def compare(a: QueryHit, b: QueryHit): Int =
-        BM25.hitOrdering.compare((a.doc_id, a.score), (b.doc_id, b.score))
-    }).take(k).toVector
+  /** The lowering over this index's dictionary: df lookups and one
+    * range-pruned dictionary scan per expansion family — postings are
+    * never read to expand a query. */
+  private lazy val lowering = new Lowering(analyzer, stats, new TermSource {
+    def docFreqs(terms: Seq[String]): Map[String, Long] = IndexReader.this.docFreqs(terms)
+    def expand(es: Seq[Shape.Expansion]): Seq[String] =
+      dictionary.filter(es.map(_.column).reduce(_ || _))
+        .select("term").as[String].collect().sorted.toSeq
+  }, positionsStored)
+
+  /** The posting blocks of `terms` in `src`, grouped by segment range. */
+  private def bySegmentRange(src: DataFrame,
+                             terms: Seq[String]): KeyValueGroupedDataset[Int, PostingBlockRow] = {
+    val g = groupSize
+    src.filter(col("term").isInCollection(terms)).as[PostingBlockRow].groupByKey(_.segment / g)
+  }
+
+  /** The top-k executor: ONE postings job on the serving session for
+    * any batch of plans — each task runs every plan over its segments
+    * in docId order, one [[Wand.TopKMerger]] per query id carrying θ
+    * across them — returning the pre-merge (id, doc, score) rows,
+    * O(k · tasks) per id. The plans ride in the task closure. */
+  private def collectPlans(plans: Seq[(String, Plan)], k: Int): Array[(String, Long, Double)] = {
+    if (plans.isEmpty) return Array.empty
+    val avgdl = stats.avgdl
+    bySegmentRange(postingsServe, plans.flatMap(_._2.terms).distinct.sorted)
+      .flatMapGroups { (_, rows) =>
+        val mergers = scala.collection.mutable.LinkedHashMap.empty[String, Wand.TopKMerger]
+        Wand.bySegment(rows).foreach { case (_, byTerm) =>
+          plans.foreach { case (id, p) =>
+            val m = mergers.getOrElseUpdate(id, new Wand.TopKMerger(k))
+            m.offerAll(p.run(byTerm, avgdl, k, m.threshold))
+          }
+        }
+        mergers.iterator.flatMap { case (id, m) => m.result.iterator.map(h => (id, h.doc_id, h.score)) }
+      }
+      .collect()
+  }
+
+  private def best(hits: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] =
+    hits.sorted(BM25.hitOrdering).take(k)
+
+  /** Lowers a batch of shapes and serves it in one postings job:
+    * (query id, rank 1..k, doc, score) rows. */
+  private def serve(shapes: Seq[(String, Shape)], k: Int): Seq[(String, Int, Long, Double)] = {
+    val plans = shapes.map(_._1).zip(lowering.lower(shapes.map(_._2)))
+      .collect { case (id, Some(p)) => id -> p }
+    collectPlans(plans, k).toSeq.groupBy(_._1).toSeq.flatMap { case (id, rows) =>
+      best(rows.map(r => (r._2, r._3)), k).zipWithIndex
+        .map { case ((doc, score), i) => (id, i + 1, doc, score) }
+    }
+  }
+
+  private def serve1(shape: Shape, k: Int): Vector[QueryHit] =
+    serve(Seq("" -> shape), k).map(r => QueryHit(r._3, r._4)).toVector
 
   /** Top-k hits for a free-text query. Deterministic: tie-break
     * (score desc, docId asc); summation in ascending term order. */
   def search(query: String, k: Int = 10): Vector[QueryHit] =
-    mergeDriver(searchCollect(query, k), k)
+    serve1(lowering.free(query), k)
 
   /** The pre-driver-merge collected rows — package-visible so specs
     * can pin the O(k · tasks) collect bound. */
   private[query] def searchCollect(query: String, k: Int): Array[QueryHit] =
-    searchTermsCollect(analyzer.tokenize(query).distinct.sorted, k)
-
-  /** [[searchCollect]] for an explicit ALREADY-ANALYZED term set — the
-    * shared disjunctive core that prefix/wildcard rewrites feed their
-    * expanded terms into. `boost` scales a term's idf BEFORE it enters
-    * the WAND core, so score contributions and pruning bounds scale
-    * together and the pruning stays lossless (boost ≥ 0). */
-  private def searchTermsCollect(terms: Seq[String], k: Int,
-                                 boost: String => Double = _ => 1.0): Array[QueryHit] = {
-    if (terms.isEmpty || stats.n_docs == 0) return Array.empty
-    val dfs = docFreqs(terms)
-    if (dfs.isEmpty) return Array.empty
-    val idfs = dfs.map { case (t, df) => t -> boost(t) * BM25.idf(df, stats.n_docs) }
-    val avgdl = stats.avgdl
-    val kk = k
-    val g = groupSize
-
-    postingsServe
-      .filter(col("term").isInCollection(terms))
-      .as[PostingBlockRow]
-      .groupByKey(_.segment / g)
-      .flatMapGroups { (_, rows) =>
-        val merger = new Wand.TopKMerger(kk)
-        Wand.bySegment(rows).foreach { case (_, byTerm) =>
-          merger.offerAll(Wand.topK(byTerm, idfs, avgdl, kk,
-            initialThreshold = merger.threshold))
-        }
-        merger.result.iterator
-      }
-      .collect()
-  }
+    collectPlans(lowering.lower(Seq(lowering.free(query))).flatten.map("" -> _), k)
+      .map(r => QueryHit(r._2, r._3))
 
   /**
    * Prefix (trailing-wildcard) top-k — Lucene PrefixQuery under its
    * SCORING_BOOLEAN rewrite: the prefix expands against the dictionary
    * to its matching terms (a Parquet-pushdown `startsWith` range scan,
-   * never a postings read), and the expansion runs through the shared
-   * disjunctive WAND core with each expanded term keeping its own idf.
+   * never a postings read), and the expansion lowers to one disjunction
+   * with each expanded term keeping its own idf.
    * The prefix is lowercased but NOT analyzed (Lucene wildcard-term
    * semantics — stemming a partial term would corrupt it); a trailing
    * `*` is accepted and stripped. More than `maxExpansions` matching
@@ -164,60 +179,15 @@ class IndexReader(spark: SparkSession, dir: String,
    * lengthen the prefix or raise the cap.
    */
   def searchPrefix(prefix: String, k: Int = 10,
-                   maxExpansions: Int = 1024): Vector[QueryHit] = {
-    val p = prefix.toLowerCase(java.util.Locale.ROOT).stripSuffix("*")
-    require(p.nonEmpty, "empty prefix")
-    if (stats.n_docs == 0) return Vector.empty
-    val expanded = dictionary.filter(col("term").startsWith(p))
-      .select("term").as[String].collect().sorted.toSeq
-    require(expanded.length <= maxExpansions,
-      s"prefix '$p*' expands to ${expanded.length} terms (> $maxExpansions) — " +
-        "use a longer prefix or raise maxExpansions")
-    if (expanded.isEmpty) Vector.empty
-    else mergeDriver(searchTermsCollect(expanded, k), k)
-  }
-
-  /** The wildcard dictionary expansion ([[searchWildcard]]'s scan),
-    * shared with the query-string parser. */
-  private def expandWildcard(pattern: String, maxExpansions: Int): Seq[String] = {
-    val p = pattern.toLowerCase(java.util.Locale.ROOT)
-    require(p.exists(c => c != '*' && c != '?'),
-      s"wildcard pattern '$pattern' has no literal characters")
-    val litPrefix = p.takeWhile(c => c != '*' && c != '?')
-    val base =
-      if (litPrefix.nonEmpty) dictionary.filter(col("term").startsWith(litPrefix))
-      else dictionary
-    val expanded = base.filter(col("term").rlike(Wand.globToRegex(p)))
-      .select("term").as[String].collect().sorted.toSeq
-    require(expanded.length <= maxExpansions,
-      s"wildcard '$p' expands to ${expanded.length} terms (> $maxExpansions) — " +
-        "tighten the pattern or raise maxExpansions")
-    expanded
-  }
-
-  /** The fuzzy dictionary expansion ([[searchFuzzy]]'s banded scan),
-    * shared with the query-string parser. */
-  private def expandFuzzy(term: String, maxEdits: Int,
-                          maxExpansions: Int): Seq[String] = {
-    require(maxEdits >= 0 && maxEdits <= 2, s"maxEdits $maxEdits not in 0..2")
-    val q = term.toLowerCase(java.util.Locale.ROOT)
-    require(q.nonEmpty, "empty fuzzy term")
-    val expanded = dictionary
-      .filter(length(col("term")).between(q.length - maxEdits, q.length + maxEdits))
-      .filter(levenshtein(col("term"), lit(q)) <= maxEdits)
-      .select("term").as[String].collect().sorted.toSeq
-    require(expanded.length <= maxExpansions,
-      s"'$q'~$maxEdits expands to ${expanded.length} terms (> $maxExpansions) — " +
-        "lower maxEdits or raise maxExpansions")
-    expanded
-  }
+                   maxExpansions: Int = 1024): Vector[QueryHit] =
+    serve1(Shape.Or(Seq(Shape.prefix(prefix, maxExpansions))), k)
 
   /**
    * Fuzzy top-k — Lucene FuzzyQuery under the same scoring-boolean
    * rewrite as [[searchPrefix]]: the term expands against the
    * dictionary to every vocabulary term within `maxEdits` Levenshtein
-   * edits, and the expansion runs through the shared disjunctive WAND
-   * core with each expanded term keeping its own idf. The distance
+   * edits, and the expansion lowers to one disjunction with each
+   * expanded term keeping its own idf. The distance
    * scan prunes first with a length band (|len(t) − len(q)| ≤
    * maxEdits, a necessary condition for the edit distance, and a
    * plain comparison Parquet can evaluate cheaply) so the full
@@ -235,21 +205,15 @@ class IndexReader(spark: SparkSession, dir: String,
    * bound — beyond 2 edits the expansion stops meaning "typo".
    */
   def searchFuzzy(term: String, maxEdits: Int = 2, k: Int = 10,
-                  maxExpansions: Int = 1024): Vector[QueryHit] = {
-    require(maxEdits >= 0 && maxEdits <= 2, s"maxEdits $maxEdits not in 0..2")
-    require(term.nonEmpty, "empty fuzzy term")
-    if (stats.n_docs == 0) return Vector.empty
-    val expanded = expandFuzzy(term, maxEdits, maxExpansions)
-    if (expanded.isEmpty) Vector.empty
-    else mergeDriver(searchTermsCollect(expanded, k), k)
-  }
+                  maxExpansions: Int = 1024): Vector[QueryHit] =
+    serve1(Shape.Or(Seq(Shape.fuzzy(term, maxEdits, maxExpansions))), k)
 
   /**
    * Wildcard top-k — Lucene WildcardQuery under the same
    * scoring-boolean rewrite as [[searchPrefix]]: the glob pattern
    * (`*` = any run, `?` = one character) expands against the
-   * dictionary and the expansion runs through the shared disjunctive
-   * WAND core with each expanded term keeping its own idf. The
+   * dictionary and the expansion lowers to one disjunction with each
+   * expanded term keeping its own idf. The
    * pattern's literal prefix (the characters before the first
    * wildcard) pushes to Parquet as a `startsWith` range scan — the
    * columnar analog of Lucene seeking the term enum to the common
@@ -262,21 +226,13 @@ class IndexReader(spark: SparkSession, dir: String,
    * silently truncating the match set.
    */
   def searchWildcard(pattern: String, k: Int = 10,
-                     maxExpansions: Int = 1024): Vector[QueryHit] = {
-    if (stats.n_docs == 0) {
-      require(pattern.exists(c => c != '*' && c != '?'),
-        s"wildcard pattern '$pattern' has no literal characters")
-      return Vector.empty
-    }
-    val expanded = expandWildcard(pattern, maxExpansions)
-    if (expanded.isEmpty) Vector.empty
-    else mergeDriver(searchTermsCollect(expanded, k), k)
-  }
+                     maxExpansions: Int = 1024): Vector[QueryHit] =
+    serve1(Shape.Or(Seq(Shape.wildcard(pattern, maxExpansions))), k)
 
   /**
    * Query-time term boosting (Lucene's `term^boost` syntax): each
    * term's score contribution scales by its boost, implemented by
-   * scaling the term's idf before it enters the shared WAND core — so
+   * scaling the term's idf before it enters the WAND kernel — so
    * every upper bound scales with the contribution and the pruning
    * stays lossless (boosts must be ≥ 0; a 0 boost keeps the term
    * matching at zero score, Lucene's behavior). A boost of 1.0 on
@@ -285,18 +241,8 @@ class IndexReader(spark: SparkSession, dir: String,
    * analyzes to more or fewer than one token throws (boost a phrase
    * by boosting its terms).
    */
-  def searchBoosted(boosts: Seq[(String, Double)], k: Int = 10): Vector[QueryHit] = {
-    require(boosts.forall(_._2 >= 0), "boosts must be >= 0")
-    val termBoosts = boosts.map { case (raw, b) =>
-      val ts = analyzer.tokenize(raw)
-      require(ts.length == 1, s"boosted term '$raw' analyzed to ${ts.length} tokens")
-      ts.head -> b
-    }
-    require(termBoosts.map(_._1).distinct.length == termBoosts.length,
-      "duplicate boosted term")
-    val bm = termBoosts.toMap
-    mergeDriver(searchTermsCollect(bm.keys.toSeq.sorted, k, bm), k)
-  }
+  def searchBoosted(boosts: Seq[(String, Double)], k: Int = 10): Vector[QueryHit] =
+    serve1(lowering.boosted(boosts), k)
 
   /**
    * Spellcheck / suggest (the Solr spellcheck component): the closest
@@ -324,10 +270,10 @@ class IndexReader(spark: SparkSession, dir: String,
 
   /**
    * Query-STRING entry point: parse Lucene classic syntax
-   * ([[QueryParser]]) and dispatch to the matching execution path.
-   * Supported shapes (the engine's executors are per-shape, so the
-   * parser enforces the combinations that have exact semantics
-   * rather than silently approximating Lucene's free mixing):
+   * ([[QueryParser]]) and lower it to one shape ([[Lowering.parsed]]).
+   * Supported shapes (the parser enforces the combinations that have
+   * exact semantics rather than silently approximating Lucene's free
+   * mixing):
    *
    *  - any `+term` / `-term` present → boolean query: `+` terms AND
    *    plain terms are all required, `-` terms exclude
@@ -339,45 +285,11 @@ class IndexReader(spark: SparkSession, dir: String,
    *    dictionary, and per-term boosts SUM across clauses — exactly
    *    Lucene's additive clause scoring, since two SHOULD clauses on
    *    the same term contribute (b₁+b₂)·idf·tfNorm — then everything
-   *    runs through the shared WAND core with boost-scaled idfs.
+   *    runs through the WAND kernel with boost-scaled idfs.
    */
   def searchParsed(q: String, k: Int = 10,
-                   maxExpansions: Int = 1024): Vector[QueryHit] = {
-    import QueryParser._
-    val clauses = parse(q)
-    require(clauses.nonEmpty, "empty query string")
-    val musts = clauses.collect { case Must(t) => t }
-    val nots = clauses.collect { case Not(t) => t }
-    val phrases = clauses.collect { case p: Phrase => p }
-    if (musts.nonEmpty || nots.nonEmpty) {
-      require(clauses.forall {
-        case _: Must | _: Not | _: Bare => true
-        case _ => false
-      }, "+/- (boolean) queries combine only with plain terms in this engine")
-      val bares = clauses.collect { case Bare(t) => t }
-      searchBoolean((musts ++ bares).mkString(" "), nots.mkString(" "), k)
-    } else if (phrases.nonEmpty) {
-      require(clauses.size == 1, "a phrase clause must stand alone")
-      searchNear(phrases.head.text, phrases.head.slop, k)
-    } else {
-      val acc = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-      def add(t: String, b: Double): Unit =
-        acc.update(t, acc.getOrElse(t, 0.0) + b)
-      clauses.foreach {
-        case Bare(t) => analyzer.tokenize(t).distinct.foreach(add(_, 1.0))
-        case Boosted(t, b) =>
-          val ts = analyzer.tokenize(t)
-          require(ts.length == 1, s"boosted term '$t' analyzed to ${ts.length} tokens")
-          add(ts.head, b)
-        case Wild(p) => expandWildcard(p, maxExpansions).foreach(add(_, 1.0))
-        case Fuzzy(t, me) => expandFuzzy(t, me, maxExpansions).foreach(add(_, 1.0))
-        case _ => ()
-      }
-      if (acc.isEmpty || stats.n_docs == 0) return Vector.empty
-      val bm = acc.toMap
-      mergeDriver(searchTermsCollect(bm.keys.toSeq.sorted, k, bm), k)
-    }
-  }
+                   maxExpansions: Int = 1024): Vector[QueryHit] =
+    serve1(lowering.parsed(q, maxExpansions), k)
 
   /** Term enumeration (the Solr terms component / Lucene TermsEnum):
     * dictionary terms matching an optional prefix, with their
@@ -446,13 +358,14 @@ class IndexReader(spark: SparkSession, dir: String,
     }.toMap
   }
 
+
   /**
    * More-like-this (the Lucene/Solr MLT component): find documents
    * similar to a SEED document by (1) selecting the seed's most
    * "interesting" terms — highest tf·idf within the seed, Lucene's
    * MLT heuristic, subject to `minTermFreq`/`minDocFreq` floors and a
-   * `maxQueryTerms` cap — and (2) running the selected terms through
-   * the shared disjunctive WAND core, excluding the seed itself from
+   * `maxQueryTerms` cap — and (2) running the selected terms as one
+   * disjunction, excluding the seed itself from
    * the results. The seed's text is ONE row fetched from the doc
    * store and its term stats ONE dictionary lookup — O(1) driver
    * work; the search is the ordinary distributed top-k (collected at
@@ -487,8 +400,7 @@ class IndexReader(spark: SparkSession, dir: String,
       .sortBy { case (t, sc) => (-sc, t) }
       .take(maxQueryTerms).map(_._1).sorted
     if (chosen.isEmpty) return Vector.empty
-    mergeDriver(searchTermsCollect(chosen, k + 1), k + 1)
-      .filter(_.doc_id != docId).take(k)
+    serve1(Shape.Or(chosen.map(Shape.Term(_))), k + 1).filter(_.doc_id != docId).take(k)
   }
 
   /**
@@ -497,42 +409,16 @@ class IndexReader(spark: SparkSession, dir: String,
    * terms, scored over the matching terms only — the middle ground
    * between the pure disjunction ([[search]], mm = 1) and the full
    * conjunction ([[searchBoolean]], mm = n, whose scores it
-   * reproduces exactly). Same pruned postings scan, per-segment WAND
-   * with the mm-extended pivot rule ([[Wand.topK]] `minMatch`),
-   * θ-shared task merge, driver k-way merge.
+   * reproduces exactly). Lowers to the disjunction with the
+   * mm-extended pivot rule ([[Wand.topK]] `minMatch`).
    *
    * Terms absent from the corpus cannot match and do not count
    * toward `minMatch` (Lucene semantics); if fewer than `minMatch`
    * query terms exist in the corpus the result is empty.
    */
   def searchMinShouldMatch(query: String, minMatch: Int,
-                           k: Int = 10): Vector[QueryHit] = {
-    val mm = math.max(1, minMatch)
-    val terms = analyzer.tokenize(query).distinct.sorted
-    if (terms.isEmpty || stats.n_docs == 0) return Vector.empty
-    val dfs = docFreqs(terms)
-    if (dfs.size < mm) return Vector.empty
-    val idfs = dfs.map { case (t, df) => t -> BM25.idf(df, stats.n_docs) }
-    val avgdl = stats.avgdl
-    val kk = k
-    val g = groupSize
-
-    val perTask = postingsServe
-      .filter(col("term").isInCollection(terms))
-      .as[PostingBlockRow]
-      .groupByKey(_.segment / g)
-      .flatMapGroups { (_, rows) =>
-        val merger = new Wand.TopKMerger(kk)
-        Wand.bySegment(rows).foreach { case (_, byTerm) =>
-          merger.offerAll(Wand.topK(byTerm, idfs, avgdl, kk,
-            initialThreshold = merger.threshold, minMatch = mm))
-        }
-        merger.result.iterator
-      }
-      .collect()
-
-    mergeDriver(perTask, k)
-  }
+                           k: Int = 10): Vector[QueryHit] =
+    serve1(lowering.free(query, minMatch), k)
 
   /**
    * Batched top-k: MANY queries against the index in ONE Spark job —
@@ -540,62 +426,14 @@ class IndexReader(spark: SparkSession, dir: String,
    * a batch amortizes the postings scan across queries). One postings
    * scan pruned to the UNION of all query terms; each segment task
    * runs WAND per query over its term subset; the driver merges
-   * per-segment winners per query. Results are identical to calling
+   * per-task winners per query. Results are identical to calling
    * [[search]] per query (same summation order, same tie-break).
    *
    * @param queries (query_id, query text)
    * @return (query_id, rank, doc_id, score) rows, rank 1..k
    */
-  def searchMany(queries: Seq[(String, String)], k: Int = 10): Seq[(String, Int, Long, Double)] = {
-    val parsed = queries.map { case (id, q) =>
-      id -> analyzer.tokenize(q).distinct.sorted
-    }
-    val allTerms = parsed.flatMap(_._2).distinct.sorted
-    if (allTerms.isEmpty || stats.n_docs == 0) return Seq.empty
-    val dfs = docFreqs(allTerms)
-    val idfs = dfs.map { case (t, df) => t -> BM25.idf(df, stats.n_docs) }
-    val avgdl = stats.avgdl
-    val kk = k
-    val queriesB = spark.sparkContext.broadcast(parsed)
-
-    val g = groupSize
-    val perTask =
-      try {
-        postingsServe
-          .filter(col("term").isInCollection(allTerms))
-          .as[PostingBlockRow]
-          .groupByKey(_.segment / g)
-          .flatMapGroups { (_, rows) =>
-            // one merger per query, θ carried across the task's segments
-            val mergers = scala.collection.mutable.LinkedHashMap
-              .empty[String, Wand.TopKMerger]
-            Wand.bySegment(rows).foreach { case (_, byTerm) =>
-              queriesB.value.foreach { case (qid, terms) =>
-                val qBlocks = terms.iterator.flatMap(t => byTerm.get(t).map(t -> _)).toMap
-                if (qBlocks.nonEmpty) {
-                  val m = mergers.getOrElseUpdate(qid, new Wand.TopKMerger(kk))
-                  m.offerAll(Wand.topK(qBlocks, idfs, avgdl, kk,
-                    initialThreshold = m.threshold))
-                }
-              }
-            }
-            mergers.iterator.flatMap { case (qid, m) =>
-              m.result.iterator.map(h => (qid, h.doc_id, h.score))
-            }
-          }
-          .collect()
-      } finally queriesB.unpersist(blocking = false) // async: frees executor copies without stalling the serving path (destroy() blocks)
-
-    perTask.groupBy(_._1).toSeq.flatMap { case (qid, hits) =>
-      hits.map(h => (h._2, h._3))
-        .sorted(new Ordering[(Long, Double)] {
-          override def compare(a: (Long, Double), b: (Long, Double)): Int =
-            BM25.hitOrdering.compare(a, b)
-        })
-        .take(k).zipWithIndex
-        .map { case ((doc, score), i) => (qid, i + 1, doc, score) }
-    }
-  }
+  def searchMany(queries: Seq[(String, String)], k: Int = 10): Seq[(String, Int, Long, Double)] =
+    serve(queries.map { case (id, q) => id -> lowering.free(q) }, k)
 
   /**
    * Mixed-shape batched serving: free-text, boolean (AND/NOT),
@@ -603,194 +441,19 @@ class IndexReader(spark: SparkSession, dir: String,
    * together in ONE Spark job — one postings scan pruned to the union
    * of every query's terms (prefix/fuzzy expansions included, each
    * family resolved by ONE batch-wide dictionary scan), per-task
-   * θ-shared evaluation per query, driver merge per query. Results
+   * θ-shared evaluation per query, driver merge per query. Every
+   * shape lowers exactly as its single-query method does, so results
    * are identical to calling [[search]]/[[searchBoolean]]/
    * [[searchPhrase]]/[[searchMinShouldMatch]]/[[searchPrefix]]/
-   * [[searchFuzzy]] per query (same summation order, tie-break, and
-   * θ semantics — the SearchManySpec mixed test pins the parity).
+   * [[searchFuzzy]] per query, argument checks included (the
+   * SearchManySpec mixed test pins the parity).
    *
    * @param queries (query_id, spec)
    * @return (query_id, rank, doc_id, score), rank 1..k
    */
   def searchManyMixed(queries: Seq[(String, QuerySpec)],
-                      k: Int = 10): Seq[(String, Int, Long, Double)] = {
-    if (stats.n_docs == 0) return Seq.empty
-    // only multi-token phrases read positions — the compile step below
-    // downgrades a 1-term phrase to a plain term query, so a
-    // positions-free index can still serve it
-    val needPos = queries.exists {
-      case (_, QuerySpec.Phrase(t)) => analyzer.tokenize(t).length >= 2
-      case _ => false
-    }
-    require(!needPos || positionsStored,
-      s"index at $dir was built with storePositions=false — phrase " +
-        "queries need position lists; rebuild with storePositions=true")
-    // compile each query driver-side: the terms whose blocks it needs
-    // plus its scoring constants (idfs / idf sum). Prefix queries
-    // expand FIRST — one dictionary scan for the whole batch (the OR
-    // of every prefix's startsWith, still Parquet-pushable), terms
-    // assigned back per prefix driver-side — so the expansions join
-    // allTerms before dfs are fetched; mm and prefix then both compile
-    // to the disjunctive shape (a prefix is a disjunction of its
-    // expanded terms with per-term idfs, mm a disjunction evaluated at
-    // minMatch).
-    sealed trait C extends Serializable { def id: String }
-    case class CFree(id: String, terms: Seq[String],
-                     idfs: Map[String, Double], mm: Int = 1) extends C
-    case class CBool(id: String, must: Seq[String], not: Seq[String],
-                     idfs: Map[String, Double]) extends C
-    case class CPhrase(id: String, seq: IndexedSeq[String],
-                       idfSum: Double) extends C
-
-    val prefixes = queries.collect {
-      case (_, QuerySpec.Prefix(p, _)) =>
-        p.toLowerCase(java.util.Locale.ROOT).stripSuffix("*")
-    }.distinct.filter(_.nonEmpty)
-    val expansions: Map[String, Seq[String]] =
-      if (prefixes.isEmpty) Map.empty
-      else {
-        val matched = dictionary
-          .filter(prefixes.map(p => col("term").startsWith(p)).reduce(_ || _))
-          .select("term").as[String].collect().sorted.toSeq
-        prefixes.map(p => p -> matched.filter(_.startsWith(p))).toMap
-      }
-
-    // fuzzy expansion: ONE banded-levenshtein dictionary scan covering
-    // every fuzzy term in the batch, matches assigned back per query
-    // driver-side with the same classic unit-cost edit distance the
-    // scan used (Spark's levenshtein — the two must agree exactly)
-    val fuzzies = queries.collect {
-      case (_, QuerySpec.Fuzzy(t, me, _)) =>
-        (t.toLowerCase(java.util.Locale.ROOT), math.min(math.max(me, 0), 2))
-    }.distinct.filter(_._1.nonEmpty)
-    val fuzzyExpansions: Map[(String, Int), Seq[String]] =
-      if (fuzzies.isEmpty) Map.empty
-      else {
-        val matched = dictionary
-          .filter(fuzzies.map { case (t, me) =>
-            length(col("term")).between(t.length - me, t.length + me) &&
-              levenshtein(col("term"), lit(t)) <= me
-          }.reduce(_ || _))
-          .select("term").as[String].collect().sorted.toSeq
-        fuzzies.map { case (t, me) =>
-          (t, me) -> matched.filter(Wand.editDistanceWithin(_, t, me))
-        }.toMap
-      }
-
-    val allTerms = queries.flatMap { case (_, q) => q match {
-      case QuerySpec.Free(t) => analyzer.tokenize(t)
-      case QuerySpec.Boolean(m, n) => analyzer.tokenize(m) ++ analyzer.tokenize(n)
-      case QuerySpec.Phrase(t) => analyzer.tokenize(t)
-      case QuerySpec.MinMatch(t, _) => analyzer.tokenize(t)
-      case QuerySpec.Prefix(p, _) =>
-        expansions.getOrElse(
-          p.toLowerCase(java.util.Locale.ROOT).stripSuffix("*"), Nil)
-      case QuerySpec.Fuzzy(t, me, _) =>
-        fuzzyExpansions.getOrElse(
-          (t.toLowerCase(java.util.Locale.ROOT),
-            math.min(math.max(me, 0), 2)), Nil)
-    }}.distinct.sorted
-    if (allTerms.isEmpty) return Seq.empty
-    val dfs = docFreqs(allTerms)
-    def idfOf(ts: Seq[String]) =
-      ts.flatMap(t => dfs.get(t).map(df => t -> BM25.idf(df, stats.n_docs))).toMap
-
-    val compiled: Seq[C] = queries.flatMap { case (id, q) => q match {
-      case QuerySpec.Free(t) =>
-        val terms = analyzer.tokenize(t).distinct.sorted
-        val idfs = idfOf(terms)
-        if (idfs.isEmpty) None else Some(CFree(id, terms, idfs))
-      case QuerySpec.MinMatch(t, m) =>
-        val mm = math.max(1, m)
-        val terms = analyzer.tokenize(t).distinct.sorted
-        val idfs = idfOf(terms)
-        if (idfs.size < mm) None else Some(CFree(id, terms, idfs, mm))
-      case QuerySpec.Prefix(p, maxExp) =>
-        val terms = expansions.getOrElse(
-          p.toLowerCase(java.util.Locale.ROOT).stripSuffix("*"), Nil)
-        require(terms.length <= maxExp,
-          s"prefix '$p' expands to ${terms.length} terms (> $maxExp)")
-        if (terms.isEmpty) None else Some(CFree(id, terms, idfOf(terms)))
-      case QuerySpec.Fuzzy(t, me, maxExp) =>
-        val terms = fuzzyExpansions.getOrElse(
-          (t.toLowerCase(java.util.Locale.ROOT),
-            math.min(math.max(me, 0), 2)), Nil)
-        require(terms.length <= maxExp,
-          s"fuzzy '$t'~$me expands to ${terms.length} terms (> $maxExp)")
-        if (terms.isEmpty) None else Some(CFree(id, terms, idfOf(terms)))
-      case QuerySpec.Boolean(m, n) =>
-        val must = analyzer.tokenize(m).distinct.sorted
-        val not = analyzer.tokenize(n).distinct.sorted.filterNot(must.contains)
-        if (must.isEmpty || must.exists(!dfs.contains(_))) None
-        else Some(CBool(id, must, not, idfOf(must)))
-      case QuerySpec.Phrase(t) =>
-        val terms = analyzer.tokenize(t)
-        if (terms.isEmpty || terms.distinct.exists(!dfs.contains(_))) None
-        else if (terms.length == 1)
-          Some(CFree(id, terms, idfOf(terms))) // 1-term phrase = term query
-        else Some(CPhrase(id, terms.toIndexedSeq,
-          terms.foldLeft(0.0)((s, x) => s + BM25.idf(dfs(x), stats.n_docs))))
-    }}
-    if (compiled.isEmpty) return Seq.empty
-    val avgdl = stats.avgdl
-    val kk = k
-    val g = groupSize
-    val qB = spark.sparkContext.broadcast(compiled)
-
-    val perTask =
-      try {
-        postingsServe
-          .filter(col("term").isInCollection(allTerms))
-          .as[PostingBlockRow]
-          .groupByKey(_.segment / g)
-          .flatMapGroups { (_, rows) =>
-            val mergers = scala.collection.mutable.LinkedHashMap
-              .empty[String, Wand.TopKMerger]
-            def m(id: String) = mergers.getOrElseUpdate(id, new Wand.TopKMerger(kk))
-            Wand.bySegment(rows).foreach { case (_, byTerm) =>
-              qB.value.foreach {
-                case CFree(id, terms, idfs, minM) =>
-                  val qb = terms.iterator.flatMap(t => byTerm.get(t).map(t -> _)).toMap
-                  if (qb.nonEmpty) {
-                    val mm = m(id)
-                    mm.offerAll(Wand.topK(qb, idfs, avgdl, kk,
-                      initialThreshold = mm.threshold, minMatch = minM))
-                  }
-                case CBool(id, must, not, idfs) =>
-                  val mb = must.iterator.flatMap(t => byTerm.get(t).map(t -> _)).toMap
-                  val nb = not.iterator.flatMap(t => byTerm.get(t).map(t -> _)).toMap
-                  if (mb.nonEmpty) {
-                    val mm = m(id)
-                    mm.offerAll(Wand.topKConjunctive(mb, nb, idfs, avgdl, kk, must,
-                      initialThreshold = mm.threshold))
-                  }
-                case CPhrase(id, seq, idfSum) =>
-                  val qb = seq.distinct.iterator
-                    .flatMap(t => byTerm.get(t).map(t -> _)).toMap
-                  if (qb.nonEmpty) {
-                    val mm = m(id)
-                    mm.offerAll(Wand.topKPhrase(qb, seq, idfSum, avgdl, kk,
-                      initialThreshold = mm.threshold))
-                  }
-              }
-            }
-            mergers.iterator.flatMap { case (id, mm) =>
-              mm.result.iterator.map(h => (id, h.doc_id, h.score))
-            }
-          }
-          .collect()
-      } finally qB.unpersist(blocking = false)
-
-    perTask.groupBy(_._1).toSeq.flatMap { case (qid, hits) =>
-      hits.map(h => (h._2, h._3))
-        .sorted(new Ordering[(Long, Double)] {
-          override def compare(a: (Long, Double), b: (Long, Double)): Int =
-            BM25.hitOrdering.compare(a, b)
-        })
-        .take(k).zipWithIndex
-        .map { case ((doc, score), i) => (qid, i + 1, doc, score) }
-    }
-  }
+                      k: Int = 10): Seq[(String, Int, Long, Double)] =
+    serve(queries.map { case (id, q) => id -> lowering.spec(q) }, k)
 
   /**
    * Metadata-filtered top-k: BM25 over only the documents matching a
@@ -803,26 +466,19 @@ class IndexReader(spark: SparkSession, dir: String,
    */
   def searchWhere(query: String, predicate: org.apache.spark.sql.Column,
                   k: Int = 10): Vector[QueryHit] = {
-    val terms = analyzer.tokenize(query).distinct.sorted
-    if (terms.isEmpty || stats.n_docs == 0) return Vector.empty
-    val dfs = docFreqs(terms)
-    if (dfs.isEmpty) return Vector.empty
-    val idfs = dfs.map { case (t, df) => t -> BM25.idf(df, stats.n_docs) }
+    val plan = lowering.lower(Seq(lowering.free(query))).head match {
+      case Some(p) => p
+      case None => return Vector.empty
+    }
     val avgdl = stats.avgdl
-    val kk = k
-
     val g = groupSize
     val allowed = IndexBuilder.readStaging(spark, dir)
       .filter(predicate)
       .select(col("segment").as("a_segment"), col("doc_id").as("a_doc_id"))
       .as[(Int, Long)]
       .groupByKey(_._1 / g)
-    val blocks = postings
-      .filter(col("term").isInCollection(terms))
-      .as[PostingBlockRow]
-      .groupByKey(_.segment / g)
 
-    val perTask = blocks.cogroup(allowed) { (_, rows, allowRows) =>
+    val perTask = bySegmentRange(postings, plan.terms).cogroup(allowed) { (_, rows, allowRows) =>
       val segs = Wand.bySegment(rows)
       if (segs.isEmpty) Iterator.empty
       else {
@@ -839,21 +495,20 @@ class IndexReader(spark: SparkSession, dir: String,
           if (buf == null) { buf = new LongBuf(); okBySeg.put(s, buf) }
           buf.add(id)
         }
-        val merger = new Wand.TopKMerger(kk)
+        val merger = new Wand.TopKMerger(k)
         segs.foreach { case (seg, byTerm) =>
           val buf = okBySeg.get(seg)
           if (buf != null && buf.nonEmpty) {
             val arr = buf.sortedArray
-            merger.offerAll(Wand.topK(byTerm, idfs, avgdl, kk,
-              initialThreshold = merger.threshold,
+            merger.offerAll(plan.run(byTerm, avgdl, k, merger.threshold,
               allow = id => java.util.Arrays.binarySearch(arr, id) >= 0))
           }
         }
-        merger.result.iterator
+        merger.result.iterator.map(h => (h.doc_id, h.score))
       }
     }.collect()
 
-    mergeDriver(perTask, k)
+    best(perTask.toSeq, k).map { case (d, s) => QueryHit(d, s) }.toVector
   }
 
   /**
@@ -864,36 +519,8 @@ class IndexReader(spark: SparkSession, dir: String,
    * intersection ([[Wand.topKConjunctive]]); driver k-way merge.
    */
   def searchBoolean(mustQuery: String, notQuery: String = "",
-                    k: Int = 10): Vector[QueryHit] = {
-    val must = analyzer.tokenize(mustQuery).distinct.sorted
-    val not = analyzer.tokenize(notQuery).distinct.sorted.filterNot(must.contains)
-    if (must.isEmpty || stats.n_docs == 0) return Vector.empty
-    val dfs = docFreqs(must)
-    if (dfs.size < must.size) return Vector.empty // a must-term is absent from the corpus
-    val idfs = dfs.map { case (t, df) => t -> BM25.idf(df, stats.n_docs) }
-    val avgdl = stats.avgdl
-    val kk = k
-    val mustSet = must.toSet
-    val allTerms = must ++ not
-
-    val g = groupSize
-    val perTask = postingsServe
-      .filter(col("term").isInCollection(allTerms))
-      .as[PostingBlockRow]
-      .groupByKey(_.segment / g)
-      .flatMapGroups { (_, rows) =>
-        val merger = new Wand.TopKMerger(kk)
-        Wand.bySegment(rows).foreach { case (_, byTerm) =>
-          val (mb, nb) = byTerm.partition { case (t, _) => mustSet.contains(t) }
-          merger.offerAll(Wand.topKConjunctive(mb, nb, idfs, avgdl, kk, must,
-            initialThreshold = merger.threshold))
-        }
-        merger.result.iterator
-      }
-      .collect()
-
-    mergeDriver(perTask, k)
-  }
+                    k: Int = 10): Vector[QueryHit] =
+    serve1(lowering.boolean(mustQuery, notQuery), k)
 
   /**
    * Exact phrase top-k, INDEX-ONLY (format v3 positional postings): a
@@ -919,42 +546,11 @@ class IndexReader(spark: SparkSession, dir: String,
    * early termination — and the same PhraseQuery scoring (tf = span
    * count, idf = Σ idf(term_i) in phrase order). Each matching start
    * position counts 1 (the span count — reproducible in plain SQL),
-   * not Lucene's 1/(1+dist) sloppyFreq weighting.
+   * not Lucene's 1/(1+dist) sloppyFreq weighting. A one-term phrase is
+   * the term query and needs no position lists.
    */
-  def searchNear(phrase: String, slop: Int, k: Int = 10): Vector[QueryHit] = {
-    require(slop >= 0, s"slop must be >= 0, got $slop")
-    require(positionsStored,
-      s"index at $dir was built with storePositions=false — phrase/near " +
-        "queries need position lists; rebuild with storePositions=true")
-    val terms = analyzer.tokenize(phrase) // ordered, duplicates kept
-    if (terms.isEmpty || stats.n_docs == 0) return Vector.empty
-    if (terms.length == 1) return search(phrase, k)
-    val dfs = docFreqs(terms.distinct)
-    if (dfs.size < terms.distinct.size) return Vector.empty
-    // Lucene PhraseWeight: idf summed over term OCCURRENCES in order
-    val idfSum = terms.foldLeft(0.0)((s, t) => s + BM25.idf(dfs(t), stats.n_docs))
-    val avgdl = stats.avgdl
-    val kk = k
-    val sl = slop
-    val seq = terms.toIndexedSeq
-
-    val g = groupSize
-    val perTask = postingsServe
-      .filter(col("term").isInCollection(terms.distinct))
-      .as[PostingBlockRow]
-      .groupByKey(_.segment / g)
-      .flatMapGroups { (_, rows) =>
-        val merger = new Wand.TopKMerger(kk)
-        Wand.bySegment(rows).foreach { case (_, byTerm) =>
-          merger.offerAll(Wand.topKPhrase(byTerm, seq, idfSum, avgdl, kk,
-            initialThreshold = merger.threshold, slop = sl))
-        }
-        merger.result.iterator
-      }
-      .collect()
-
-    mergeDriver(perTask, k)
-  }
+  def searchNear(phrase: String, slop: Int, k: Int = 10): Vector[QueryHit] =
+    serve1(lowering.near(phrase, slop), k)
 
   /**
    * Two-term UNORDERED proximity top-k (SpanNearQuery inOrder=false):
@@ -966,41 +562,16 @@ class IndexReader(spark: SparkSession, dir: String,
    * one distinct token.
    */
   def searchNearUnordered(termA: String, termB: String, slop: Int,
-                          k: Int = 10): Vector[QueryHit] = {
-    require(slop >= 0, s"slop must be >= 0, got $slop")
-    require(positionsStored,
-      s"index at $dir was built with storePositions=false — proximity " +
-        "queries need position lists; rebuild with storePositions=true")
-    val ts = Seq(termA, termB).map { raw =>
-      val t = analyzer.tokenize(raw)
-      require(t.length == 1, s"near term '$raw' analyzed to ${t.length} tokens")
-      t.head
+                          k: Int = 10): Vector[QueryHit] =
+    serve1(lowering.nearUnordered(termA, termB, slop), k)
+
+  /** The relational paths' segment scan, on the caller's session: `f`
+    * maps each segment's term → blocks to its output rows. */
+  private def scan[T: Encoder](terms: Seq[String])(
+      f: Plan.Blocks => Iterator[T]): Dataset[T] =
+    bySegmentRange(postings, terms).flatMapGroups { (_, rows) =>
+      Wand.bySegment(rows).iterator.flatMap { case (_, byTerm) => f(byTerm) }
     }
-    val (a, b) = (ts(0), ts(1))
-    require(a != b, "unordered near needs two distinct terms")
-    if (stats.n_docs == 0) return Vector.empty
-    val dfs = docFreqs(Seq(a, b).distinct)
-    if (dfs.size < 2) return Vector.empty
-    val idfSum = BM25.idf(dfs(a), stats.n_docs) + BM25.idf(dfs(b), stats.n_docs)
-    val avgdl = stats.avgdl
-    val kk = k
-    val sl = slop
-    val g = groupSize
-    val perTask = postingsServe
-      .filter(col("term").isInCollection(Seq(a, b)))
-      .as[PostingBlockRow]
-      .groupByKey(_.segment / g)
-      .flatMapGroups { (_, rows) =>
-        val merger = new Wand.TopKMerger(kk)
-        Wand.bySegment(rows).foreach { case (_, byTerm) =>
-          merger.offerAll(Wand.topKNearUnordered2(byTerm, a, b, sl,
-            idfSum, avgdl, kk, initialThreshold = merger.threshold))
-        }
-        merger.result.iterator
-      }
-      .collect()
-    mergeDriver(perTask, k)
-  }
 
   /**
    * The FULL match set of a boolean query as a DataFrame of docIds —
@@ -1014,27 +585,15 @@ class IndexReader(spark: SparkSession, dir: String,
    * never a driver materialization (the top-k paths collect O(k·tasks)
    * rows; a match SET is unbounded and must not come home).
    */
-  def matchingDocs(mustQuery: String, notQuery: String = ""): DataFrame = {
-    val must = analyzer.tokenize(mustQuery).distinct.sorted
-    val not = analyzer.tokenize(notQuery).distinct.sorted.filterNot(must.contains)
-    def empty = spark.createDataset(Seq.empty[Long]).toDF("doc_id")
-    if (must.isEmpty || stats.n_docs == 0) return empty
-    if (docFreqs(must).size < must.size) return empty // a must-term is absent
-    val mustSet = must.toSet
-    val allTerms = must ++ not
-    val g = groupSize
-    postings
-      .filter(col("term").isInCollection(allTerms))
-      .as[PostingBlockRow]
-      .groupByKey(_.segment / g)
-      .flatMapGroups { (_, rows) =>
-        Wand.bySegment(rows).iterator.flatMap { case (_, byTerm) =>
-          val (mb, nb) = byTerm.partition { case (t, _) => mustSet.contains(t) }
+  def matchingDocs(mustQuery: String, notQuery: String = ""): DataFrame =
+    lowering.lower(Seq(lowering.boolean(mustQuery, notQuery))).head match {
+      case Some(Plan.Conj(must, not, _)) =>
+        scan(must ++ not) { byTerm =>
+          val (mb, nb) = byTerm.partition { case (t, _) => must.contains(t) }
           Wand.matchingDocIds(mb, nb, must)
-        }
-      }
-      .toDF("doc_id")
-  }
+        }.toDF("doc_id")
+      case _ => spark.emptyDataset[Long].toDF("doc_id")
+    }
 
   /**
    * The FULL scored match set of a disjunctive (optionally
@@ -1047,27 +606,13 @@ class IndexReader(spark: SparkSession, dir: String,
    * DataFrame ops. At 100 TB this is what must flow into a shuffle —
    * never the postings, never a driver materialization.
    */
-  def scoredDocs(query: String, minMatch: Int = 1): DataFrame = {
-    val mm = math.max(1, minMatch)
-    val terms = analyzer.tokenize(query).distinct.sorted
-    def empty = spark.createDataset(Seq.empty[(Long, Double)]).toDF("doc_id", "score")
-    if (terms.isEmpty || stats.n_docs == 0) return empty
-    val dfs = docFreqs(terms)
-    if (dfs.size < mm || dfs.isEmpty) return empty
-    val idfs = dfs.map { case (t, df) => t -> BM25.idf(df, stats.n_docs) }
-    val avgdl = stats.avgdl
-    val g = groupSize
-    postings
-      .filter(col("term").isInCollection(terms))
-      .as[PostingBlockRow]
-      .groupByKey(_.segment / g)
-      .flatMapGroups { (_, rows) =>
-        Wand.bySegment(rows).iterator.flatMap { case (_, byTerm) =>
-          Wand.scoredDocIds(byTerm, idfs, avgdl, mm)
-        }
-      }
-      .toDF("doc_id", "score")
-  }
+  def scoredDocs(query: String, minMatch: Int = 1): DataFrame =
+    lowering.lower(Seq(lowering.free(query, minMatch))).head match {
+      case Some(Plan.Disj(idfs, mm)) =>
+        val avgdl = stats.avgdl
+        scan(idfs.keys.toSeq.sorted)(Wand.scoredDocIds(_, idfs, avgdl, mm)).toDF("doc_id", "score")
+      case _ => spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
+    }
 
   /**
    * The full scored match set under query-time SYNONYM expansion
@@ -1084,7 +629,7 @@ class IndexReader(spark: SparkSession, dir: String,
       .filter(_.nonEmpty)
     val flat = gs.flatten
     require(flat.distinct.size == flat.size, "synonym groups must be disjoint")
-    def empty = spark.createDataset(Seq.empty[(Long, Double)]).toDF("doc_id", "score")
+    def empty = spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
     if (gs.isEmpty || stats.n_docs == 0) return empty
     val dfs = docFreqs(flat)
     // groups whose every member is absent contribute nothing
@@ -1095,18 +640,8 @@ class IndexReader(spark: SparkSession, dir: String,
     }.toArray
     val termGroup = live.zipWithIndex
       .flatMap { case (g, i) => g.map(_ -> i) }.toMap
-    val terms = live.flatten
     val avgdl = stats.avgdl
-    val g = groupSize
-    postings
-      .filter(col("term").isInCollection(terms))
-      .as[PostingBlockRow]
-      .groupByKey(_.segment / g)
-      .flatMapGroups { (_, rows) =>
-        Wand.bySegment(rows).iterator.flatMap { case (_, byTerm) =>
-          Wand.scoredDocIdsSynonyms(byTerm, termGroup, groupIdfs, avgdl)
-        }
-      }
+    scan(live.flatten)(Wand.scoredDocIdsSynonyms(_, termGroup, groupIdfs, avgdl))
       .toDF("doc_id", "score")
   }
 
@@ -1129,26 +664,15 @@ class IndexReader(spark: SparkSession, dir: String,
                           minMatch: Int = 1): DataFrame = {
     require(mu > 0, "mu must be positive")
     val mm = math.max(1, minMatch)
-    val terms = analyzer.tokenize(query).distinct.sorted
-    def empty = spark.createDataset(Seq.empty[(Long, Double)]).toDF("doc_id", "score")
+    val terms = lowering.terms(query)
+    def empty = spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
     if (terms.isEmpty || stats.n_docs == 0) return empty
     val cfs = collectionFreqs(terms)
     if (cfs.size < mm || cfs.isEmpty) return empty
     val total = totalTokens
     if (total <= 0) return empty
     val ps = cfs.map { case (t, cf) => t -> cf.toDouble / total }
-    val g = groupSize
-    val muL = mu
-    postings
-      .filter(col("term").isInCollection(terms))
-      .as[PostingBlockRow]
-      .groupByKey(_.segment / g)
-      .flatMapGroups { (_, rows) =>
-        Wand.bySegment(rows).iterator.flatMap { case (_, byTerm) =>
-          Wand.scoredDocIdsDirichlet(byTerm, ps, muL, mm)
-        }
-      }
-      .toDF("doc_id", "score")
+    scan(terms)(Wand.scoredDocIdsDirichlet(_, ps, mu, mm)).toDF("doc_id", "score")
   }
 
   /**
@@ -1681,9 +1205,24 @@ private[query] final class LongBuf {
   }
 }
 
-/** Query shapes for [[IndexReader.searchManyMixed]] — the Solr/Lucene
-  * query-type family the reference's sinks serve. */
 object IndexReader {
+
+  /** The index's corpus stats, format-checked: read in-process
+    * ([[readStatsDirect]]), or by a Spark job when the table is not in
+    * the one-file one-row shape. */
+  private[query] def readStats(spark: SparkSession, dir: String): CorpusStats = {
+    import spark.implicits._
+    val s = readStatsDirect(dir).getOrElse(
+      spark.read.parquet(IndexBuilder.corpusStatsDir(dir)).as[CorpusStats].head())
+    graft.model.IndexFormat.check(s, dir)
+    s
+  }
+
+  /** The manifest's `store_positions` flag (a missing key is an older
+    * positional build → true). */
+  private[query] def positionsStored(dir: String): Boolean = graft.store.Manifest
+    .read(graft.store.Manifest.phaseAPath(IndexBuilder.manifestDir(dir)))
+    .flatMap(_.get("store_positions")).forall(_ == "true")
 
   /** Driver-side read of the one-row corpus_stats table via
     * parquet-hadoop directly — opening a reader costs a Spark JOB
@@ -1712,6 +1251,9 @@ object IndexReader {
   } catch { case scala.util.control.NonFatal(_) => None }
 }
 
+/** Query shapes for [[IndexReader.searchManyMixed]] — the Solr/Lucene
+  * query-type family the reference's sinks serve. Each lowers exactly
+  * as its single-query method does ([[Lowering.spec]]). */
 sealed trait QuerySpec extends Serializable
 object QuerySpec {
   /** Free-text disjunctive BM25 (the [[IndexReader.search]] shape). */

@@ -38,19 +38,40 @@ class LocalIndex private (stats: CorpusStats,
   def nDocs: Long = stats.n_docs
   def nTerms: Long = stats.n_terms
 
-  /** In-process BM25 top-k; bit-identical to IndexReader.search. */
-  def search(query: String, k: Int = 10): Vector[QueryHit] = {
-    val terms = analyzer.tokenize(query).distinct.sorted
-    if (terms.isEmpty || stats.n_docs == 0) return Vector.empty
-    val blocks = terms.iterator.flatMap { t =>
-      Option(byTerm.get(t)).map(t -> _)
-    }.toMap
-    if (blocks.isEmpty) return Vector.empty
-    val idfs = terms.flatMap { t =>
-      Option(dfs.get(t)).filter(_ != 0L).map(df => t -> BM25.idf(df, stats.n_docs))
-    }.toMap
-    Wand.topK(blocks, idfs, stats.avgdl, k)
+  /** The corpus vocabulary (dictionary terms), sorted — the local
+    * analog of the cluster dictionary scan the expansions run
+    * against. */
+  private lazy val vocab: Array[String] = {
+    val a = new Array[String](dfs.size)
+    val it = dfs.keySet().iterator()
+    var i = 0
+    while (it.hasNext) { a(i) = it.next(); i += 1 }
+    java.util.Arrays.sort(a, java.util.Comparator.naturalOrder[String])
+    a
   }
+
+  /** The cluster reader's lowering, over the in-memory dictionary. */
+  private val lowering = new Lowering(analyzer, stats, new TermSource {
+    def docFreqs(terms: Seq[String]): Map[String, Long] =
+      terms.iterator.filter(dfs.containsKey).map(t => t -> dfs.get(t)).toMap
+    def expand(es: Seq[Shape.Expansion]): Seq[String] =
+      vocab.iterator.filter(t => es.exists(_.matches(t))).toSeq
+  }, positionsStored)
+
+  private def blocksOf(terms: Seq[String]): Plan.Blocks =
+    terms.iterator.flatMap(t => Option(byTerm.get(t)).map(t -> _)).toMap
+
+  /** The local executor: the lowered plan over the whole-corpus
+    * blocks — each term's blocks in global docId order form one
+    * posting list, so the same kernel scores bit-identically. */
+  private def run(shape: Shape, k: Int, allow: Long => Boolean = null): Vector[QueryHit] =
+    lowering.lower(Seq(shape)).head match {
+      case Some(p) => p.run(blocksOf(p.terms), stats.avgdl, k, allow = allow)
+      case None => Vector.empty
+    }
+
+  /** In-process BM25 top-k; bit-identical to IndexReader.search. */
+  def search(query: String, k: Int = 10): Vector[QueryHit] = run(lowering.free(query), k)
 
   /** In-process metadata-filtered BM25 top-k: `allow` vetoes docIDs
     * after cursor alignment, before the heap (the [[Wand.topK]]
@@ -59,18 +80,7 @@ class LocalIndex private (stats: CorpusStats,
     * docID test (a serving node holds doc metadata in memory; the
     * cluster path resolves a Column predicate against doc_stats). */
   def searchWhere(query: String, allow: Long => Boolean,
-                  k: Int = 10): Vector[QueryHit] = {
-    val terms = analyzer.tokenize(query).distinct.sorted
-    if (terms.isEmpty || stats.n_docs == 0) return Vector.empty
-    val blocks = terms.iterator.flatMap { t =>
-      Option(byTerm.get(t)).map(t -> _)
-    }.toMap
-    if (blocks.isEmpty) return Vector.empty
-    val idfs = terms.flatMap { t =>
-      Option(dfs.get(t)).filter(_ != 0L).map(df => t -> BM25.idf(df, stats.n_docs))
-    }.toMap
-    Wand.topK(blocks, idfs, stats.avgdl, k, allow = allow)
-  }
+                  k: Int = 10): Vector[QueryHit] = run(lowering.free(query), k, allow)
 
   /** In-process Dirichlet-LM top-k (the second scorer): the same
     * per-term max(0, ln(1 + tf/(μ·p)) + ln(μ/(dl+μ))) arithmetic as
@@ -82,162 +92,63 @@ class LocalIndex private (stats: CorpusStats,
     * score-all + sort is the right shape. */
   def searchDirichlet(query: String, mu: Double = 2000.0,
                       k: Int = 10): Vector[QueryHit] = {
-    val terms = analyzer.tokenize(query).distinct.sorted
+    val terms = lowering.terms(query)
     if (terms.isEmpty || stats.n_docs == 0) return Vector.empty
-    val blocks = terms.iterator.flatMap { t =>
-      Option(byTerm.get(t)).map(t -> _)
-    }.toMap
+    val blocks = blocksOf(terms)
     if (blocks.isEmpty) return Vector.empty
     require(totalTokens > 0,
       "searchDirichlet requires a fully-loaded index (LocalIndex.load)")
-    val ps = terms.flatMap { t =>
-      Option(cfs.get(t)).filter(_ != 0L)
-        .map(cf => t -> (cf.toDouble / totalTokens))
-    }.toMap
+    val ps = terms.filter(cfs.containsKey).map(t => t -> (cfs.get(t).toDouble / totalTokens)).toMap
     Wand.scoredDocIdsDirichlet(blocks, ps, mu)
       .toVector.sorted(BM25.hitOrdering).take(k)
       .map { case (id, s) => QueryHit(id, s) }
   }
 
-  /** The in-process disjunctive core the rewrite paths feed their
-    * expanded/weighted term sets into — [[IndexReader]]'s
-    * searchTermsCollect analog over the whole-corpus cursors. */
-  private def searchTerms(terms: Seq[String], k: Int,
-                          boost: String => Double = _ => 1.0): Vector[QueryHit] = {
-    if (terms.isEmpty || stats.n_docs == 0) return Vector.empty
-    val blocks = terms.iterator.flatMap { t =>
-      Option(byTerm.get(t)).map(t -> _)
-    }.toMap
-    if (blocks.isEmpty) return Vector.empty
-    val idfs = terms.flatMap { t =>
-      Option(dfs.get(t)).filter(_ != 0L)
-        .map(df => t -> boost(t) * BM25.idf(df, stats.n_docs))
-    }.toMap
-    Wand.topK(blocks, idfs, stats.avgdl, k)
-  }
-
-  /** The corpus vocabulary (dictionary terms), sorted — the local
-    * analog of the cluster dictionary scan the rewrite paths expand
-    * against. */
-  private lazy val vocab: Array[String] = {
-    val a = new Array[String](dfs.size)
-    val it = dfs.keySet().iterator()
-    var i = 0
-    while (it.hasNext) { a(i) = it.next(); i += 1 }
-    java.util.Arrays.sort(a, java.util.Comparator.naturalOrder[String])
-    a
-  }
-
   /** In-process prefix query; same expansion + scoring as
     * IndexReader.searchPrefix (bit-identical hits). */
   def searchPrefix(prefix: String, k: Int = 10,
-                   maxExpansions: Int = 1024): Vector[QueryHit] = {
-    val p = prefix.toLowerCase(java.util.Locale.ROOT).stripSuffix("*")
-    require(p.nonEmpty, "empty prefix")
-    val expanded = vocab.filter(_.startsWith(p)).toSeq
-    require(expanded.length <= maxExpansions,
-      s"prefix '$p*' expands to ${expanded.length} terms (> $maxExpansions)")
-    searchTerms(expanded, k)
-  }
+                   maxExpansions: Int = 1024): Vector[QueryHit] =
+    run(Shape.Or(Seq(Shape.prefix(prefix, maxExpansions))), k)
 
   /** In-process wildcard query; same glob semantics as
     * IndexReader.searchWildcard. */
   def searchWildcard(pattern: String, k: Int = 10,
-                     maxExpansions: Int = 1024): Vector[QueryHit] = {
-    val p = pattern.toLowerCase(java.util.Locale.ROOT)
-    require(p.exists(c => c != '*' && c != '?'),
-      s"wildcard pattern '$pattern' has no literal characters")
-    val re = Wand.globToRegex(p).r
-    val expanded = vocab.filter(t => re.matches(t)).toSeq
-    require(expanded.length <= maxExpansions,
-      s"wildcard '$p' expands to ${expanded.length} terms (> $maxExpansions)")
-    searchTerms(expanded, k)
-  }
+                     maxExpansions: Int = 1024): Vector[QueryHit] =
+    run(Shape.Or(Seq(Shape.wildcard(pattern, maxExpansions))), k)
 
-  /** In-process fuzzy query; same banded-Levenshtein expansion as
+  /** In-process fuzzy query; same Levenshtein expansion as
     * IndexReader.searchFuzzy ([[Wand.editDistanceWithin]] is the
     * same unit-cost distance as the engines'). */
   def searchFuzzy(term: String, maxEdits: Int = 2, k: Int = 10,
-                  maxExpansions: Int = 1024): Vector[QueryHit] = {
-    require(maxEdits >= 0 && maxEdits <= 2, s"maxEdits $maxEdits not in 0..2")
-    val q = term.toLowerCase(java.util.Locale.ROOT)
-    require(q.nonEmpty, "empty fuzzy term")
-    val expanded = vocab.filter(t =>
-      math.abs(t.length - q.length) <= maxEdits &&
-        Wand.editDistanceWithin(t, q, maxEdits)).toSeq
-    require(expanded.length <= maxExpansions,
-      s"'$q'~$maxEdits expands to ${expanded.length} terms (> $maxExpansions)")
-    searchTerms(expanded, k)
-  }
+                  maxExpansions: Int = 1024): Vector[QueryHit] =
+    run(Shape.Or(Seq(Shape.fuzzy(term, maxEdits, maxExpansions))), k)
 
-  /** In-process query-time term boosting; same boost×idf pre-core
+  /** In-process query-time term boosting; same boost×idf pre-kernel
     * scaling as IndexReader.searchBoosted. */
-  def searchBoosted(boosts: Seq[(String, Double)], k: Int = 10): Vector[QueryHit] = {
-    require(boosts.forall(_._2 >= 0), "boosts must be >= 0")
-    val termBoosts = boosts.map { case (raw, b) =>
-      val ts = analyzer.tokenize(raw)
-      require(ts.length == 1, s"boosted term '$raw' analyzed to ${ts.length} tokens")
-      ts.head -> b
-    }
-    require(termBoosts.map(_._1).distinct.length == termBoosts.length,
-      "duplicate boosted term")
-    val bm = termBoosts.toMap
-    searchTerms(bm.keys.toSeq.sorted, k, bm)
-  }
+  def searchBoosted(boosts: Seq[(String, Double)], k: Int = 10): Vector[QueryHit] =
+    run(lowering.boosted(boosts), k)
+
+  /** In-process query string; bit-identical to IndexReader.searchParsed. */
+  def searchParsed(q: String, k: Int = 10, maxExpansions: Int = 1024): Vector[QueryHit] =
+    run(lowering.parsed(q, maxExpansions), k)
 
   /** In-process minimum-should-match; bit-identical to
     * IndexReader.searchMinShouldMatch. */
   def searchMinShouldMatch(query: String, minMatch: Int,
-                           k: Int = 10): Vector[QueryHit] = {
-    val mm = math.max(1, minMatch)
-    val terms = analyzer.tokenize(query).distinct.sorted
-    if (terms.isEmpty || stats.n_docs == 0) return Vector.empty
-    val blocks = terms.iterator.flatMap { t =>
-      Option(byTerm.get(t)).map(t -> _)
-    }.toMap
-    if (blocks.size < mm) return Vector.empty
-    val idfs = terms.flatMap { t =>
-      Option(dfs.get(t)).filter(_ != 0L).map(df => t -> BM25.idf(df, stats.n_docs))
-    }.toMap
-    Wand.topK(blocks, idfs, stats.avgdl, k, minMatch = mm)
-  }
+                           k: Int = 10): Vector[QueryHit] =
+    run(lowering.free(query, minMatch), k)
 
   /** In-process two-term unordered proximity; bit-identical to
     * IndexReader.searchNearUnordered. */
   def searchNearUnordered(termA: String, termB: String, slop: Int,
-                          k: Int = 10): Vector[QueryHit] = {
-    require(slop >= 0, s"slop must be >= 0, got $slop")
-    require(positionsStored, "index was built with storePositions=false — " +
-      "proximity queries need position lists; rebuild with storePositions=true")
-    val ts = Seq(termA, termB).map { raw =>
-      val t = analyzer.tokenize(raw)
-      require(t.length == 1, s"near term '$raw' analyzed to ${t.length} tokens")
-      t.head
-    }
-    val (a, b) = (ts(0), ts(1))
-    require(a != b, "unordered near needs two distinct terms")
-    if (stats.n_docs == 0) return Vector.empty
-    if (!dfs.containsKey(a) || !dfs.containsKey(b)) return Vector.empty
-    val idfSum = BM25.idf(dfs.get(a), stats.n_docs) + BM25.idf(dfs.get(b), stats.n_docs)
-    val blocks = Seq(a, b).iterator.flatMap { t =>
-      Option(byTerm.get(t)).map(t -> _)
-    }.toMap
-    Wand.topKNearUnordered2(blocks, a, b, slop, idfSum, stats.avgdl, k)
-  }
+                          k: Int = 10): Vector[QueryHit] =
+    run(lowering.nearUnordered(termA, termB, slop), k)
 
   /** In-process boolean (AND/NOT) BM25 top-k; bit-identical to
     * IndexReader.searchBoolean. */
   def searchBoolean(mustQuery: String, notQuery: String = "",
-                    k: Int = 10): Vector[QueryHit] = {
-    val must = analyzer.tokenize(mustQuery).distinct.sorted
-    val not = analyzer.tokenize(notQuery).distinct.sorted.filterNot(must.contains)
-    if (must.isEmpty || stats.n_docs == 0) return Vector.empty
-    if (!must.forall(t => dfs.containsKey(t))) return Vector.empty
-    val idfs = must.map(t => t -> BM25.idf(dfs.get(t), stats.n_docs)).toMap
-    val mb = must.iterator.flatMap(t => Option(byTerm.get(t)).map(t -> _)).toMap
-    val nb = not.iterator.flatMap(t => Option(byTerm.get(t)).map(t -> _)).toMap
-    Wand.topKConjunctive(mb, nb, idfs, stats.avgdl, k, must)
-  }
+                    k: Int = 10): Vector[QueryHit] =
+    run(lowering.boolean(mustQuery, notQuery), k)
 
   /** In-process exact phrase top-k over the v3 positional postings;
     * bit-identical to IndexReader.searchPhrase. */
@@ -246,40 +157,17 @@ class LocalIndex private (stats: CorpusStats,
 
   /** In-process ordered proximity top-k (slop 0 = exact phrase);
     * bit-identical to IndexReader.searchNear. */
-  def searchNear(phrase: String, slop: Int, k: Int = 10): Vector[QueryHit] = {
-    require(slop >= 0, s"slop must be >= 0, got $slop")
-    require(positionsStored, "index was built with storePositions=false — " +
-      "phrase queries need position lists; rebuild with storePositions=true")
-    val terms = analyzer.tokenize(phrase)
-    if (terms.isEmpty || stats.n_docs == 0) return Vector.empty
-    if (terms.length == 1) return search(phrase, k)
-    if (!terms.distinct.forall(t => dfs.containsKey(t))) return Vector.empty
-    val idfSum = terms.foldLeft(0.0)((s, t) => s + BM25.idf(dfs.get(t), stats.n_docs))
-    val blocks = terms.distinct.iterator
-      .flatMap(t => Option(byTerm.get(t)).map(t -> _)).toMap
-    Wand.topKPhrase(blocks, terms, idfSum, stats.avgdl, k, slop = slop)
-  }
+  def searchNear(phrase: String, slop: Int, k: Int = 10): Vector[QueryHit] =
+    run(lowering.near(phrase, slop), k)
 }
 
 object LocalIndex {
 
   /** Load a built index for serving. One pass over dictionary +
     * postings; blocks stay compressed. */
-  private def readStats(spark: SparkSession, dir: String): CorpusStats = {
-    import spark.implicits._
-    val s = spark.read.parquet(IndexBuilder.corpusStatsDir(dir))
-      .as[CorpusStats].head()
-    graft.model.IndexFormat.check(s, dir)
-    s
-  }
-
-  private def positionsStored(dir: String): Boolean = graft.store.Manifest
-    .read(graft.store.Manifest.phaseAPath(IndexBuilder.manifestDir(dir)))
-    .flatMap(_.get("store_positions")).forall(_ == "true")
-
   def load(spark: SparkSession, dir: String): LocalIndex = {
     import spark.implicits._
-    val stats = readStats(spark, dir)
+    val stats = IndexReader.readStats(spark, dir)
     val dfs = new java.util.HashMap[String, Long]()
     val cfs = new java.util.HashMap[String, Long]()
     var totalTokens = 0L
@@ -340,14 +228,14 @@ object LocalIndex {
       // (max_doc_id) ascends across segment boundaries too
       byTerm.put(t, rows.sortBy(_.max_doc_id).toIndexedSeq)
     }
-    new LocalIndex(stats, dfs, byTerm, positionsStored(dir), cfs, totalTokens)
+    new LocalIndex(stats, dfs, byTerm, IndexReader.positionsStored(dir), cfs, totalTokens)
   }
 
   /** Load only the blocks for a term subset (partial serving cache —
     * e.g. the head of the query-log distribution). */
   def loadTerms(spark: SparkSession, dir: String, terms: Seq[String]): LocalIndex = {
     import spark.implicits._
-    val stats = readStats(spark, dir)
+    val stats = IndexReader.readStats(spark, dir)
     val dfs = new java.util.HashMap[String, Long]()
     spark.read.parquet(IndexBuilder.dictionaryDir(dir))
       .filter(col("term").isInCollection(terms))
@@ -360,6 +248,6 @@ object LocalIndex {
       .as[PostingBlockRow].collect()
       .groupBy(_.term)
       .foreach { case (t, rows) => byTerm.put(t, rows.sortBy(_.max_doc_id).toIndexedSeq) }
-    new LocalIndex(stats, dfs, byTerm, positionsStored(dir))
+    new LocalIndex(stats, dfs, byTerm, IndexReader.positionsStored(dir))
   }
 }

@@ -5,8 +5,9 @@ package graft.query
  * reference's users actually type queries through (JesterJ ships
  * documents to Solr/OpenSearch; users query those with the Lucene
  * query syntax: `+must -not "a phrase"~2 term^2.5 wild*card fuzzy~1`).
- * Parsing is pure string work; EXECUTION dispatch lives in
- * [[IndexReader.searchParsed]] (and documents the supported subset).
+ * Parsing is pure string work; [[Lowering.parsed]] turns the clauses
+ * into one query shape for both executors, and
+ * [[IndexReader.searchParsed]] documents the supported subset.
  *
  * Clause grammar (whitespace-separated, quotes group):
  *   - `"some phrase"`       exact phrase; `"some phrase"~N` ordered

@@ -97,6 +97,19 @@ class SearchManySpec extends SparkFunSuite {
     }
     assert(err.getMessage.contains("storePositions"))
   }
+
+  test("searchManyMixed rejects the arguments the single-query methods reject") {
+    val dir = tmpDir("idx-mixed-args")
+    IndexBuilder.build(spark, SyntheticTranscripts.generate(spark, 42L, nConvs = 60),
+      BuildConfig(dir, nSegments = 2))
+    val rdr = new IndexReader(spark, dir)
+    Seq(QuerySpec.Fuzzy("user", 3), QuerySpec.Fuzzy("user", -1), QuerySpec.Prefix(""),
+      QuerySpec.Prefix("*")).foreach { bad =>
+      intercept[IllegalArgumentException] {
+        rdr.searchManyMixed(Seq("ok" -> QuerySpec.Free("user"), "bad" -> bad), 10)
+      }
+    }
+  }
 }
 
 /** Filtered retrieval: exact top-k under a metadata predicate. */
