@@ -103,6 +103,11 @@ object IndexBuilder {
   def dictionaryDir(outDir: String) = s"$outDir/dictionary"
   def corpusStatsDir(outDir: String) = s"$outDir/corpus_stats"
 
+  /** Parquet row-group bound of the term-sorted tables (postings,
+    * dictionary): each row group's min/max term is then a sparse terms
+    * index, so a term lookup decodes a few row groups, not the file. */
+  val TermRowGroupBytes: String = (128 * 1024).toString
+
   /** Posting-table schema, for inference-free reads (an empty segment
     * dir must read as 0 rows, not an AnalysisException). */
   val PostingSchema: org.apache.spark.sql.types.StructType =
@@ -593,7 +598,7 @@ object IndexBuilder {
       dict.repartitionByRange(math.max(1, p / 4), col("term"))
         .sortWithinPartitions("term")
         .observe(obs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(tmp)
+        .write.option("parquet.block.size", TermRowGroupBytes).mode("overwrite").parquet(tmp)
     }
     val nTerms = obs.get("n").asInstanceOf[Long]
 
@@ -671,15 +676,16 @@ object IndexBuilder {
         }
       }
       // local BLOCK-row sort (postings/128 rows — cheap) so each
-      // parquet file is term-clustered: query-time term filters prune
-      // whole row groups via min/max stats instead of scanning the
-      // segment
+      // parquet file is term-clustered: with the bounded row groups of
+      // the write below, query-time term filters prune whole row groups
+      // via min/max stats instead of scanning the segment
       .sortWithinPartitions("segment", "term", "block_id")
 
     val waveTmp = Paths.get(cfg.outDir, "_tmp_wave")
     Manifest.deleteRecursively(waveTmp)
     val (_, tEnc) = timedMs {
-      encoded.write.partitionBy("segment").mode("overwrite").parquet(waveTmp.toString)
+      encoded.write.option("parquet.block.size", TermRowGroupBytes)
+        .partitionBy("segment").mode("overwrite").parquet(waveTmp.toString)
     }
     dbg(s"wave tokenize+shuffle+encode+write ${tEnc}ms")
     val ingest = turnsAcc.value; val tokens = tokensAcc.value

@@ -3,6 +3,9 @@ package graft.query
 import graft.analysis.Analyzer
 import graft.index.IndexBuilder
 import graft.model.{CorpusStats, PostingBlockRow, QueryHit, RankedTurn}
+import graft.store.LocalParquet
+import java.nio.file.Paths
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,19 +13,25 @@ import org.apache.spark.sql.functions._
  * Distributed BM25 top-k retrieval over a built index (SURVEY.md
  * §2.7): every top-k method builds a query [[Shape]], the shared
  * [[Lowering]] turns it into a [[Plan]] (dictionary expansions, df →
- * idf), and ONE executor runs any batch of plans: a postings scan
- * pruned to the plans' terms (Parquet row-group stats: postings files
- * are term-sorted within each segment) → per-segment-range tasks
- * running each plan's block-max WAND kernel with a bounded min-heap →
- * driver k-way merge per query under the total order (score desc,
- * docId asc). A single query is a batch of one.
+ * idf), and ONE executor runs any batch of plans in ONE Spark stage
+ * with no shuffle: each task reads its own segments' postings files
+ * in place ([[graft.store.LocalParquet]]) and runs each plan's
+ * block-max WAND kernel with a bounded min-heap → driver k-way merge
+ * per query under the total order (score desc, docId asc). A single
+ * query is a batch of one.
  *
- * The per-segment shuffle moves only the query terms' posting BLOCKS
- * (compressed), never documents.
+ * What prunes the read: postings files are term-sorted within each
+ * segment and written in bounded row groups, so each row group's
+ * min/max term is a sparse terms index — a task reads only the row
+ * groups whose range holds a query term, and decodes their other
+ * columns only for the matching rows (position lists only for
+ * proximity plans). The df lookup reads the
+ * dictionary's matching row groups the same way, in-process on the
+ * driver: no dictionary job.
  *
  * == Two-level merge + θ sharing ==
- * Query tasks each own a contiguous RANGE of segments (`groupByKey(
- * segment / groupSize)`), processed in ascending docId order with the
+ * Query tasks each own a contiguous RANGE of segments (`segment /
+ * groupSize`), processed in ascending docId order with the
  * WAND threshold carried ACROSS segments ([[Wand.TopKMerger]] seeds
  * each segment's evaluator with the task's current kth score — the
  * shared-collector-threshold pattern of Lucene's per-segment search).
@@ -31,7 +40,9 @@ import org.apache.spark.sql.functions._
  * collect would be O(k · 2^20) rows with every segment's WAND starting
  * cold at θ = −∞.
  *
- * @param queryTasks target query-task count; 0 → 2 × defaultParallelism
+ * @param queryTasks target query-task count; 0 → defaultParallelism
+ *   (the segment tasks are equal-sized, so one wave: each extra task
+ *   costs a launch and a result round-trip on the query's path)
  */
 class IndexReader(spark: SparkSession, dir: String,
                   queryTasks: Int = 0) extends Serializable {
@@ -44,27 +55,7 @@ class IndexReader(spark: SparkSession, dir: String,
 
   private lazy val postings = spark.read.parquet(IndexBuilder.postingsDir(dir))
   private lazy val dictionary = spark.read.parquet(IndexBuilder.dictionaryDir(dir))
-
-  /** Dedicated session for the fixed-shape top-k collect paths (same
-    * SparkContext, isolated SQLConf): every runtime-modifiable SQL conf
-    * of the caller's session, with ADAPTIVE EXECUTION OFF. The WAND
-    * serving jobs are one postings scan + one groupByKey whose task
-    * count the reader already right-sizes ([[groupSize]] targets 2x
-    * parallelism), so AQE's per-exchange stage materialization adds a
-    * scheduling round-trip per query without adding information —
-    * measured ~40% of a warm top-10 search's latency (median 111 ms ->
-    * 68 ms on the 5.28 M-doc bench index). Relational compositions
-    * (matchingDocs / scoredDocs / facets), whose join sizes DO vary
-    * with the match set, stay on the caller's session with AQE as
-    * configured. */
-  private[query] lazy val serveSession: SparkSession = {
-    val s2 = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) => if (spark.conf.isModifiable(k)) s2.conf.set(k, v) }
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    s2
-  }
-  private lazy val postingsServe =
-    serveSession.read.parquet(IndexBuilder.postingsDir(dir))
+  private lazy val dictionaryFiles = IndexReader.dictionaryFiles(dir)
 
   /** Segments per query task (contiguous ranges keep docIds ascending
     * within a task — the θ-carry correctness condition). */
@@ -73,8 +64,18 @@ class IndexReader(spark: SparkSession, dir: String,
       .read(graft.store.Manifest.phaseAPath(IndexBuilder.manifestDir(dir)))
       .flatMap(_.get("n_segments_effective")).map(_.toInt).getOrElse(0)
     val tasks = if (queryTasks > 0) queryTasks
-                else 2 * spark.sparkContext.defaultParallelism
+                else spark.sparkContext.defaultParallelism
     if (nSeg <= 0) 1 else math.max(1, (nSeg + tasks - 1) / tasks)
+  }
+
+  /** The `postings/segment=N` listing as query tasks of [[groupSize]]
+    * consecutive segments, ascending: each task's (segment, postings
+    * files). Listed once per reader. */
+  private lazy val segmentGroups: Seq[Seq[(Int, Seq[String])]] = {
+    val g = groupSize
+    LocalParquet.partitions(Paths.get(IndexBuilder.postingsDir(dir)), "segment")
+      .map { case (seg, d) => seg -> LocalParquet.files(d).map(_.toString) }
+      .groupBy(_._1 / g).toSeq.sortBy(_._1).map(_._2)
   }
 
   /** Whether the index stored per-posting position lists
@@ -82,16 +83,16 @@ class IndexReader(spark: SparkSession, dir: String,
     * positional build → true). Phrase queries require them. */
   lazy val positionsStored: Boolean = IndexReader.positionsStored(dir)
 
-  /** Global document frequencies for a term set (small collect). */
+  /** Global document frequencies for a term set: an in-process read
+    * of the dictionary row groups that can hold the terms — bounded by
+    * terms × row-group size, not by the vocabulary. */
   def docFreqs(terms: Seq[String]): Map[String, Long] =
-    dictionary.filter(col("term").isInCollection(terms))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    IndexReader.dictionaryLookup(dictionaryFiles, terms, "df")
 
   /** Collection frequencies (total occurrences) for the given terms —
-    * same range-pruned dictionary lookup as [[docFreqs]]. */
+    * same row-group-pruned dictionary lookup as [[docFreqs]]. */
   def collectionFreqs(terms: Seq[String]): Map[String, Long] =
-    dictionary.filter(col("term").isInCollection(terms))
-      .select("term", "cf").as[(String, Long)].collect().toMap
+    IndexReader.dictionaryLookup(dictionaryFiles, terms, "cf")
 
   /** Total token count of the indexed corpus: Σ cf over the dictionary
     * (block-footer-derived, one cheap aggregate, cached per reader) —
@@ -116,26 +117,28 @@ class IndexReader(spark: SparkSession, dir: String,
     src.filter(col("term").isInCollection(terms)).as[PostingBlockRow].groupByKey(_.segment / g)
   }
 
-  /** The top-k executor: ONE postings job on the serving session for
-    * any batch of plans — each task runs every plan over its segments
-    * in docId order, one [[Wand.TopKMerger]] per query id carrying θ
-    * across them — returning the pre-merge (id, doc, score) rows,
-    * O(k · tasks) per id. The plans ride in the task closure. */
-  private def collectPlans(plans: Seq[(String, Plan)], k: Int): Array[(String, Long, Double)] = {
-    if (plans.isEmpty) return Array.empty
+  /** The top-k executor: ONE shuffle-free Spark stage for any batch of
+    * plans, one task per [[segmentGroups]] entry. Each task reads its
+    * segments' files in place, pruned to the plans' terms, and runs
+    * every plan over them in docId order, one [[Wand.TopKMerger]] per
+    * query id carrying θ across segments — returning the pre-merge
+    * (id, doc, score) rows, O(k · tasks) per id. The plans ride in the
+    * task closure ([[SegmentTask]]); the job is described as
+    * `graft:<method>`. */
+  private def collectPlans(method: String, plans: Seq[(String, Plan)],
+                           k: Int): Array[(String, Long, Double)] = {
+    val groups = segmentGroups
+    if (plans.isEmpty || groups.isEmpty) return Array.empty
     val avgdl = stats.avgdl
-    bySegmentRange(postingsServe, plans.flatMap(_._2.terms).distinct.sorted)
-      .flatMapGroups { (_, rows) =>
-        val mergers = scala.collection.mutable.LinkedHashMap.empty[String, Wand.TopKMerger]
-        Wand.bySegment(rows).foreach { case (_, byTerm) =>
-          plans.foreach { case (id, p) =>
-            val m = mergers.getOrElseUpdate(id, new Wand.TopKMerger(k))
-            m.offerAll(p.run(byTerm, avgdl, k, m.threshold))
-          }
-        }
-        mergers.iterator.flatMap { case (id, m) => m.result.iterator.map(h => (id, h.doc_id, h.score)) }
-      }
-      .collect()
+    val terms = plans.flatMap(_._2.terms).toSet
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft:$method")
+    val out = new Array[Array[SegmentTask.Hit]](groups.size)
+    try sc.runJob(sc.parallelize(groups, groups.size), SegmentTask(plans, terms, avgdl, k), groups.indices,
+      (i: Int, hits: Array[SegmentTask.Hit]) => out(i) = hits)
+    finally sc.setJobDescription(caller)
+    out.flatten
   }
 
   private def best(hits: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] =
@@ -143,27 +146,28 @@ class IndexReader(spark: SparkSession, dir: String,
 
   /** Lowers a batch of shapes and serves it in one postings job:
     * (query id, rank 1..k, doc, score) rows. */
-  private def serve(shapes: Seq[(String, Shape)], k: Int): Seq[(String, Int, Long, Double)] = {
+  private def serve(method: String, shapes: Seq[(String, Shape)],
+                    k: Int): Seq[(String, Int, Long, Double)] = {
     val plans = shapes.map(_._1).zip(lowering.lower(shapes.map(_._2)))
       .collect { case (id, Some(p)) => id -> p }
-    collectPlans(plans, k).toSeq.groupBy(_._1).toSeq.flatMap { case (id, rows) =>
+    collectPlans(method, plans, k).toSeq.groupBy(_._1).toSeq.flatMap { case (id, rows) =>
       best(rows.map(r => (r._2, r._3)), k).zipWithIndex
         .map { case ((doc, score), i) => (id, i + 1, doc, score) }
     }
   }
 
-  private def serve1(shape: Shape, k: Int): Vector[QueryHit] =
-    serve(Seq("" -> shape), k).map(r => QueryHit(r._3, r._4)).toVector
+  private def serve1(method: String, shape: Shape, k: Int): Vector[QueryHit] =
+    serve(method, Seq("" -> shape), k).map(r => QueryHit(r._3, r._4)).toVector
 
   /** Top-k hits for a free-text query. Deterministic: tie-break
     * (score desc, docId asc); summation in ascending term order. */
   def search(query: String, k: Int = 10): Vector[QueryHit] =
-    serve1(lowering.free(query), k)
+    serve1("search", lowering.free(query), k)
 
   /** The pre-driver-merge collected rows — package-visible so specs
     * can pin the O(k · tasks) collect bound. */
   private[query] def searchCollect(query: String, k: Int): Array[QueryHit] =
-    collectPlans(lowering.lower(Seq(lowering.free(query))).flatten.map("" -> _), k)
+    collectPlans("searchCollect", lowering.lower(Seq(lowering.free(query))).flatten.map("" -> _), k)
       .map(r => QueryHit(r._2, r._3))
 
   /**
@@ -180,7 +184,7 @@ class IndexReader(spark: SparkSession, dir: String,
    */
   def searchPrefix(prefix: String, k: Int = 10,
                    maxExpansions: Int = 1024): Vector[QueryHit] =
-    serve1(Shape.Or(Seq(Shape.prefix(prefix, maxExpansions))), k)
+    serve1("searchPrefix", Shape.Or(Seq(Shape.prefix(prefix, maxExpansions))), k)
 
   /**
    * Fuzzy top-k — Lucene FuzzyQuery under the same scoring-boolean
@@ -206,7 +210,7 @@ class IndexReader(spark: SparkSession, dir: String,
    */
   def searchFuzzy(term: String, maxEdits: Int = 2, k: Int = 10,
                   maxExpansions: Int = 1024): Vector[QueryHit] =
-    serve1(Shape.Or(Seq(Shape.fuzzy(term, maxEdits, maxExpansions))), k)
+    serve1("searchFuzzy", Shape.Or(Seq(Shape.fuzzy(term, maxEdits, maxExpansions))), k)
 
   /**
    * Wildcard top-k — Lucene WildcardQuery under the same
@@ -227,7 +231,7 @@ class IndexReader(spark: SparkSession, dir: String,
    */
   def searchWildcard(pattern: String, k: Int = 10,
                      maxExpansions: Int = 1024): Vector[QueryHit] =
-    serve1(Shape.Or(Seq(Shape.wildcard(pattern, maxExpansions))), k)
+    serve1("searchWildcard", Shape.Or(Seq(Shape.wildcard(pattern, maxExpansions))), k)
 
   /**
    * Query-time term boosting (Lucene's `term^boost` syntax): each
@@ -242,7 +246,7 @@ class IndexReader(spark: SparkSession, dir: String,
    * by boosting its terms).
    */
   def searchBoosted(boosts: Seq[(String, Double)], k: Int = 10): Vector[QueryHit] =
-    serve1(lowering.boosted(boosts), k)
+    serve1("searchBoosted", lowering.boosted(boosts), k)
 
   /**
    * Spellcheck / suggest (the Solr spellcheck component): the closest
@@ -289,7 +293,7 @@ class IndexReader(spark: SparkSession, dir: String,
    */
   def searchParsed(q: String, k: Int = 10,
                    maxExpansions: Int = 1024): Vector[QueryHit] =
-    serve1(lowering.parsed(q, maxExpansions), k)
+    serve1("searchParsed", lowering.parsed(q, maxExpansions), k)
 
   /** Term enumeration (the Solr terms component / Lucene TermsEnum):
     * dictionary terms matching an optional prefix, with their
@@ -400,7 +404,7 @@ class IndexReader(spark: SparkSession, dir: String,
       .sortBy { case (t, sc) => (-sc, t) }
       .take(maxQueryTerms).map(_._1).sorted
     if (chosen.isEmpty) return Vector.empty
-    serve1(Shape.Or(chosen.map(Shape.Term(_))), k + 1).filter(_.doc_id != docId).take(k)
+    serve1("moreLikeThis", Shape.Or(chosen.map(Shape.Term(_))), k + 1).filter(_.doc_id != docId).take(k)
   }
 
   /**
@@ -418,7 +422,7 @@ class IndexReader(spark: SparkSession, dir: String,
    */
   def searchMinShouldMatch(query: String, minMatch: Int,
                            k: Int = 10): Vector[QueryHit] =
-    serve1(lowering.free(query, minMatch), k)
+    serve1("searchMinShouldMatch", lowering.free(query, minMatch), k)
 
   /**
    * Batched top-k: MANY queries against the index in ONE Spark job —
@@ -433,7 +437,7 @@ class IndexReader(spark: SparkSession, dir: String,
    * @return (query_id, rank, doc_id, score) rows, rank 1..k
    */
   def searchMany(queries: Seq[(String, String)], k: Int = 10): Seq[(String, Int, Long, Double)] =
-    serve(queries.map { case (id, q) => id -> lowering.free(q) }, k)
+    serve("searchMany", queries.map { case (id, q) => id -> lowering.free(q) }, k)
 
   /**
    * Mixed-shape batched serving: free-text, boolean (AND/NOT),
@@ -453,7 +457,7 @@ class IndexReader(spark: SparkSession, dir: String,
    */
   def searchManyMixed(queries: Seq[(String, QuerySpec)],
                       k: Int = 10): Seq[(String, Int, Long, Double)] =
-    serve(queries.map { case (id, q) => id -> lowering.spec(q) }, k)
+    serve("searchManyMixed", queries.map { case (id, q) => id -> lowering.spec(q) }, k)
 
   /**
    * Metadata-filtered top-k: BM25 over only the documents matching a
@@ -520,7 +524,7 @@ class IndexReader(spark: SparkSession, dir: String,
    */
   def searchBoolean(mustQuery: String, notQuery: String = "",
                     k: Int = 10): Vector[QueryHit] =
-    serve1(lowering.boolean(mustQuery, notQuery), k)
+    serve1("searchBoolean", lowering.boolean(mustQuery, notQuery), k)
 
   /**
    * Exact phrase top-k, INDEX-ONLY (format v3 positional postings): a
@@ -533,7 +537,7 @@ class IndexReader(spark: SparkSession, dir: String,
    * over the phrase's terms in order (duplicates counted).
    */
   def searchPhrase(phrase: String, k: Int = 10): Vector[QueryHit] =
-    searchNear(phrase, 0, k)
+    serve1("searchPhrase", lowering.near(phrase, 0), k)
 
   /**
    * Ordered proximity top-k (Lucene SpanNearQuery inOrder=true / the
@@ -550,7 +554,7 @@ class IndexReader(spark: SparkSession, dir: String,
    * the term query and needs no position lists.
    */
   def searchNear(phrase: String, slop: Int, k: Int = 10): Vector[QueryHit] =
-    serve1(lowering.near(phrase, slop), k)
+    serve1("searchNear", lowering.near(phrase, slop), k)
 
   /**
    * Two-term UNORDERED proximity top-k (SpanNearQuery inOrder=false):
@@ -563,7 +567,7 @@ class IndexReader(spark: SparkSession, dir: String,
    */
   def searchNearUnordered(termA: String, termB: String, slop: Int,
                           k: Int = 10): Vector[QueryHit] =
-    serve1(lowering.nearUnordered(termA, termB, slop), k)
+    serve1("searchNearUnordered", lowering.nearUnordered(termA, termB, slop), k)
 
   /** The relational paths' segment scan, on the caller's session: `f`
     * maps each segment's term → blocks to its output rows. */
@@ -1224,31 +1228,75 @@ object IndexReader {
     .read(graft.store.Manifest.phaseAPath(IndexBuilder.manifestDir(dir)))
     .flatMap(_.get("store_positions")).forall(_ == "true")
 
-  /** Driver-side read of the one-row corpus_stats table via
-    * parquet-hadoop directly — opening a reader costs a Spark JOB
-    * (scheduler round-trip + task launch) per IndexReader instance
-    * just to fetch six scalars. Falls back to the Spark read (None)
-    * when the table is not the single-file single-row shape this
-    * fast path expects. */
+  /** Driver-side read of the one-row corpus_stats table, in-process —
+    * a Spark read costs a JOB (scheduler round-trip + task launch) per
+    * IndexReader instance just to fetch six scalars. Falls back to the
+    * Spark read (None) when the table is not the single-file
+    * single-row shape this fast path expects. */
   private[query] def readStatsDirect(dir: String): Option[CorpusStats] = try {
-    val d = new java.io.File(IndexBuilder.corpusStatsDir(dir))
-    val fs = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.endsWith(".parquet"))
-    if (fs.length != 1) return None
-    val reader = org.apache.parquet.hadoop.ParquetReader.builder(
-        new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(fs.head.getPath))
-      .withConf(new org.apache.hadoop.conf.Configuration())
-      .build()
-    try {
-      val g = reader.read()
-      if (g == null || reader.read() != null) return None // not exactly one row
-      Some(CorpusStats(
-        g.getLong("n_docs", 0), g.getDouble("avgdl", 0), g.getLong("n_terms", 0),
-        g.getInteger("index_version", 0), g.getInteger("tokenizer_version", 0),
-        g.getString("analyzer", 0)))
-    } finally reader.close()
+    LocalParquet.files(Paths.get(IndexBuilder.corpusStatsDir(dir))) match {
+      case Seq(f) => LocalParquet.read(f) { r =>
+          CorpusStats(r[Long]("n_docs"), r[Double]("avgdl"), r[Long]("n_terms"),
+            r[Int]("index_version"), r[Int]("tokenizer_version"), r[String]("analyzer"))
+        } match {
+          case Seq(s) => Some(s)
+          case _ => None // not exactly one row
+        }
+      case _ => None
+    }
   } catch { case scala.util.control.NonFatal(_) => None }
+
+  private[query] def dictionaryFiles(dir: String): Seq[String] =
+    LocalParquet.files(Paths.get(IndexBuilder.dictionaryDir(dir))).map(_.toString)
+
+  /** `field` (df or cf) of each of `terms` present in the dictionary
+    * files — an in-process read of only the row groups whose term
+    * range can hold one of them. */
+  private[query] def dictionaryLookup(files: Seq[String], terms: Seq[String],
+                                      field: String): Map[String, Long] = {
+    val ts = terms.toSet
+    files.flatMap(f => LocalParquet.read(Paths.get(f), Some(ts))(r => r[String]("term") -> r[Long](field))).toMap
+  }
+
+  /** A postings row of `segment` (a partition column, so not in the
+    * file); a missing `positions` value is null. */
+  private[query] def blockRow(segment: Int, r: LocalParquet.Row): PostingBlockRow =
+    PostingBlockRow(r[String]("term"), segment, r[Int]("block_id"), r[Int]("n_docs"),
+      r[Long]("max_doc_id"), r[Int]("block_max_tf"), r[Int]("block_min_dl"),
+      r[Array[Byte]]("doc_deltas"), r[Array[Byte]]("tfs"), r[Array[Byte]]("dls"),
+      r[Array[Byte]]("positions"), r[Long]("block_cf"))
+}
+
+/** The query task of [[IndexReader]]'s executor. Spark's closure
+  * cleaner reads the class that defines a job's function with ASM on
+  * every job; defining it in this small object, and passing it to the
+  * `runJob` overload that takes it as is, keeps that read off the large
+  * `IndexReader`, `RDD` and `SparkContext` classes. */
+private[query] object SegmentTask {
+  type Hit = (String, Long, Double)
+
+  /** A task over segment groups: each segment's postings files read in
+    * place, pruned to `terms`, then every plan run over the segments in
+    * docId order, one [[Wand.TopKMerger]] per query id carrying θ. */
+  def apply(plans: Seq[(String, Plan)], terms: Set[String], avgdl: Double,
+            k: Int): (TaskContext, Iterator[Seq[(Int, Seq[String])]]) => Array[Hit] = (_, tasks) => {
+    // only proximity plans read position lists
+    val without = if (plans.exists(p => p._2.isInstanceOf[Plan.Near] || p._2.isInstanceOf[Plan.NearUnordered]))
+      Set.empty[String] else Set("positions")
+    val mergers = scala.collection.mutable.LinkedHashMap.empty[String, Wand.TopKMerger]
+    tasks.flatten.foreach { case (seg, files) =>
+      val rows = files.flatMap(f =>
+        LocalParquet.read(Paths.get(f), Some(terms), without)(IndexReader.blockRow(seg, _)))
+      if (rows.nonEmpty) {
+        val byTerm: Plan.Blocks = rows.toVector.groupBy(_.term)
+        plans.foreach { case (id, p) =>
+          val m = mergers.getOrElseUpdate(id, new Wand.TopKMerger(k))
+          m.offerAll(p.run(byTerm, avgdl, k, m.threshold))
+        }
+      }
+    }
+    mergers.iterator.flatMap { case (id, m) => m.result.iterator.map(h => (id, h.doc_id, h.score)) }.toArray
+  }
 }
 
 /** Query shapes for [[IndexReader.searchManyMixed]] — the Solr/Lucene

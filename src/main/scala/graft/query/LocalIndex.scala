@@ -237,9 +237,7 @@ object LocalIndex {
     import spark.implicits._
     val stats = IndexReader.readStats(spark, dir)
     val dfs = new java.util.HashMap[String, Long]()
-    spark.read.parquet(IndexBuilder.dictionaryDir(dir))
-      .filter(col("term").isInCollection(terms))
-      .select("term", "df").as[(String, Long)].collect()
+    IndexReader.dictionaryLookup(IndexReader.dictionaryFiles(dir), terms, "df")
       .foreach { case (t, df) => dfs.put(t, df) }
     val byTerm = new java.util.HashMap[String, IndexedSeq[PostingBlockRow]]()
     spark.read.schema(IndexBuilder.PostingSchema)

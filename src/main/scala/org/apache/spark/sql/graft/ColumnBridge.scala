@@ -33,4 +33,14 @@ object ColumnBridge {
                  schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** Adds rows and bytes read outside Spark's data sources to the
+    * running task's input metrics (`incRecordsRead`/`incBytesRead` are
+    * `private[spark]`); a no-op outside a task. */
+  def addTaskInput(records: Long, bytes: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { c =>
+      val m = c.taskMetrics().inputMetrics
+      m.incRecordsRead(records)
+      m.incBytesRead(bytes)
+    }
 }

@@ -5,7 +5,8 @@ import graft.analysis.Tokenizer
 import graft.model.Turn
 import graft.query.{BM25, IndexReader}
 import graft.sources.SyntheticTranscripts
-import graft.store.Manifest
+import graft.store.{LocalParquet, Manifest}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -265,5 +266,47 @@ class IndexBuilderSpec extends SparkFunSuite {
     referenceQueries.take(5).foreach { q =>
       rdr.search(q, 10).foreach(h => assert(h.doc_id / segSize != 2))
     }
+  }
+
+  test("bounded row groups: a rare-term search reads only the term's row groups") {
+    val dir = tmpDir("idx-row-groups")
+    IndexBuilder.build(spark, SyntheticTranscripts.generate(spark, Seed, nConvs = 1000),
+      BuildConfig(dir, nSegments = 2))
+    // rows per row group of each segment's postings files
+    val segments = LocalParquet.partitions(Paths.get(IndexBuilder.postingsDir(dir)), "segment")
+      .map { case (_, d) =>
+        LocalParquet.files(d).flatMap { f =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            new org.apache.parquet.io.LocalInputFile(f),
+            org.apache.parquet.ParquetReadOptions.builder(
+              new org.apache.parquet.conf.PlainParquetConfiguration()).build())
+          try r.getRowGroups.asScala.map(_.getRowCount).toVector finally r.close()
+        }
+      }
+    assert(segments.size == 2 && segments.forall(_.size > 1),
+      s"row groups per segment: ${segments.map(_.size)}")
+
+    val rare = spark.read.parquet(IndexBuilder.dictionaryDir(dir))
+      .filter(col("term").startsWith("rare")).orderBy("term").select("term").as[String].head()
+    val rdr = new IndexReader(spark, dir)
+    assert(rdr.search("user", 1).nonEmpty) // reader state is set up before counting
+    val sc = spark.sparkContext
+    val group = s"row-groups-${System.nanoTime()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val records = new java.util.concurrent.atomic.AtomicLong()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) e.stageIds.foreach(stages.add(_))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "rare-term search")
+      try assert(rdr.search(rare, 10).nonEmpty) finally sc.clearJobGroup()
+      org.apache.spark.GraftTestBus.drain(sc)
+    } finally sc.removeSparkListener(l)
+    assert(records.get > 0 && records.get < segments.map(_.sum).min,
+      s"read ${records.get} posting rows; segments hold ${segments.map(_.sum)}")
   }
 }

@@ -1,0 +1,59 @@
+package graft.store
+
+import graft.SparkFunSuite
+
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+/** The in-process Parquet reader against Spark's own reader: term
+  * filtering, dropped columns, both codec paths, and a footer cache
+  * that notices a rewritten file. */
+class LocalParquetSpec extends SparkFunSuite {
+
+  /** One single-file, term-sorted table of `n` rows written by Spark. */
+  private def table(name: String, n: Int, codec: String = "snappy"): Path = {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir(name)
+    (0 until n).map(i => (f"t$i%05d", i.toLong, s"payload-$i"))
+      .toDF("term", "df", "positions").orderBy("term").coalesce(1)
+      .write.option("compression", codec).option("parquet.block.size", "4096").parquet(dir)
+    val Seq(f) = LocalParquet.files(Paths.get(dir))
+    f
+  }
+
+  private def rows(f: Path, terms: Option[Set[String]] = None,
+                   without: Set[String] = Set.empty): Vector[(String, Long, String)] =
+    LocalParquet.read(f, terms, without)(r => (r[String]("term"), r[Long]("df"), r[String]("positions")))
+
+  test("term-filtered reads match Spark's, with snappy and zstd pages") {
+    val s = spark
+    import s.implicits._
+    for (codec <- Seq("snappy", "zstd")) {
+      val f = table(s"lp-$codec", 3000, codec)
+      val all = spark.read.parquet(f.toString).as[(String, Long, String)].collect().toVector
+      assert(rows(f) == all, codec)
+      val want = Set("t00007", "t01500", "t02999", "absent")
+      assert(rows(f, Some(want)) == all.filter(r => want(r._1)), codec)
+      assert(rows(f, Some(Set.empty)).isEmpty)
+    }
+  }
+
+  test("a dropped column reads as null and leaves the others unchanged") {
+    val f = table("lp-without", 500)
+    val full = rows(f, Some(Set("t00010", "t00400")))
+    assert(full.size == 2 && full.forall(_._3 != null))
+    assert(rows(f, Some(Set("t00010", "t00400")), Set("positions")) == full.map(r => (r._1, r._2, null)))
+  }
+
+  test("a file rewritten in place is read anew, not from the footer cache") {
+    val a = table("lp-a", 200)
+    val b = table("lp-b", 300)
+    val p = Paths.get(tmpDir("lp-swap"))
+    Files.createDirectories(p)
+    val f = p.resolve("part-0.parquet")
+    Files.copy(a, f)
+    assert(rows(f).size == 200)
+    Files.copy(b, f, StandardCopyOption.REPLACE_EXISTING)
+    assert(rows(f).size == 300)
+  }
+}
