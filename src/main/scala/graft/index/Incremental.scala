@@ -1,9 +1,11 @@
 package graft.index
 
-import graft.analysis.Tokenizer
-import graft.model.{DocTurn, IndexFormat, Turn}
+import graft.model.{DocTurn, Turn}
 import graft.store.Manifest
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -32,17 +34,18 @@ import java.nio.file.{Files, Paths}
  * plus the tail segments NEW rows land in.
  *
  * == Mechanics ==
- * The diff shuffles ids + 8-byte hashes — never the corpus text (the
- * per-doc hash is precomputed in staging; changed docs' text is
- * re-fetched by a semi-join against the source). Touched segments'
- * replacement rows are written as per-segment OVERLAY dirs (base
- * staging stays immutable); STALE ledger rows re-plan exactly those
- * segments for Phase B; the phase A manifest is refreshed from a
- * narrow-column aggregation of the updated view. Every step is
- * idempotent: a crash anywhere replays the diff against the current
- * view and converges — a replayed diff over already-published overlays
- * is empty, and already-appended STALE rows drive the remaining
- * rebuilds.
+ * Two front ends build a change set — the doc_ids leaving the touched
+ * segments and the staging rows entering them: [[delta]] diffs a whole
+ * source against staging, [[atomicSet]] resolves a keyed patch against
+ * it (UPDATED rows only). Both hand it to one apply step
+ * ([[applyChanges]]): touched segments' replacement rows are written
+ * as per-segment OVERLAY dirs (base staging stays immutable); STALE
+ * ledger rows re-plan exactly those segments for Phase B; the phase A
+ * manifest is refreshed from one aggregation over the updated view.
+ * Every step is idempotent: a crash anywhere replays the change set
+ * against the current view and converges — a replayed change set over
+ * already-published overlays is empty, and already-appended STALE rows
+ * drive the remaining rebuilds.
  *
  * Untouched segments' postings are never rewritten — byte-identical
  * across updates (IncrementalSpec) — and remain score-correct under
@@ -52,86 +55,97 @@ import java.nio.file.{Files, Paths}
  * Contract: (conv_id, turn_idx) is UNIQUE in the source (the
  * reference's document-id uniqueness); duplicate keys make the diff
  * join fan out and are undefined behavior, exactly as they are for
- * the initial build's rank-based docIDs. Cost shape: the source is
- * scanned up to three times per delta (hash diff; updated-row fetch;
+ * the initial build's rank-based docIDs. Cost shape: a [[delta]]
+ * scans the source up to three times (hash diff; updated-row fetch;
  * new-row fetch) but only ids + 8-byte hashes ever cross a shuffle —
  * re-scanning columnar source beats shipping the text column through
- * an exchange at any scale.
+ * an exchange at any scale. An [[atomicSet]] reads no source: one
+ * join of the patch with the staging view, then the touched segments'
+ * rows and one stats aggregation over the view.
  */
 object Incremental {
 
   /** Atomic document updates (the Solr atomic-update verb
     * `{"id": …, "field": {"set": v}}`): field-level patches keyed by
-    * (conv_id, turn_idx), realized as a DELTA BUILD — the patched
-    * corpus view feeds the same content-hash diff → per-segment
-    * overlay machinery as any other incremental update, so only
-    * segments holding a patched document rebuild and scores stay
-    * bit-equal to a full rebuild over the patched corpus. `sets`
-    * carries the key columns plus any subset of the updatable payload
-    * columns (text / role / tool); absent columns and NULL values keep
-    * the current value (Solr's partial-document semantics). Scale: one
-    * key-equi left join against the staging view plus the ordinary
-    * delta cost (only ids and 8-byte hashes cross a shuffle). */
+    * (conv_id, turn_idx). `sets` carries the key columns plus any
+    * subset of the updatable payload columns (text / role / tool);
+    * absent columns and NULL values keep the current value (Solr's
+    * partial-document semantics), and patches to keys absent from the
+    * index drop.
+    *
+    * The patch is resolved against the staging view into a change set
+    * ([[changeSet]]) and applied by the same step as a [[delta]]
+    * ([[applyChanges]]); Phase B and finalize then run as in a build
+    * ([[IndexBuilder.finishBuild]]). Only segments holding a changed
+    * document get an overlay and rebuild, and scores stay bit-equal to
+    * a full rebuild over the patched corpus. A patch never adds a
+    * document, and it pays no source-side hash, diff or id assignment.
+    * A patch that changes nothing rebuilds nothing. Its Spark jobs are
+    * described `graft:atomicSet`. */
   def atomicSet(spark: SparkSession, cfg: BuildConfig,
                 sets: DataFrame): BuildReport =
-    IndexBuilder.build(spark, patchedCorpus(spark, cfg, sets)._1, cfg)
+    IndexBuilder.inBuildSession(spark, "atomicSet", sets) { (bs, patch) =>
+      val t0 = System.currentTimeMillis()
+      recoverCompact(cfg.outDir)
+      val prior = Manifest.read(Manifest.phaseAPath(IndexBuilder.manifestDir(cfg.outDir)))
+        .filter(IndexBuilder.compatible(cfg, _))
+        .getOrElse(throw new IllegalStateException(
+          s"atomicSet needs an index built with this config at ${cfg.outDir}"))
+      val (rows, perSegment) = changeSet(bs, cfg, patch)
+      try {
+        val changed = org.apache.spark.sql.graft.ColumnBridge
+          .internalDF(bs, rows, IndexBuilder.StagingSchema)
+        IndexBuilder.finishBuild(bs, cfg, t0,
+          applyChanges(bs, cfg, t0, prior, perSegment.keySet, changed, None, None))
+      } finally rows.unpersist()
+    }
 
-  /** The patched corpus view [[atomicSet]] feeds to the delta build,
-    * staged O(patch) — NOT O(corpus): only the patched keys' merged
-    * rows are materialized (eager localCheckpoint of the second
-    * returned frame); the untouched rows stay a lazy anti-join over
-    * the immutable-valued staging view. The round-5 form checkpointed
-    * the ENTIRE corpus for any patch size — a one-document patch
-    * spooled the full staging view to executor disk.
+  /** The patch resolved against the staging view, in staging form:
+    * for each patched key present in the index whose content changes,
+    * the stored row with the patched fields set — doc_id and segment
+    * kept, dl and src_hash recomputed. Returns these rows, locally
+    * checkpointed, and the number of them per segment.
     *
-    * Why the lazy base side is safe against the delta rewriting the
-    * staging it reads: the delta only publishes overlays for segments
-    * holding PATCHED documents, and an overlay's surviving rows carry
-    * values identical to the base rows they replace — so any
-    * recomputation of the anti-joined (untouched-keys-only) branch
-    * observes the same values before and after the overlay publish.
-    * Only the patched keys' rows differ mid-delta, and exactly those
-    * are pinned by the checkpoint.
+    * Patches to one key merge field by field first, as Solr merges
+    * atomic updates: `max` per field skips nulls, so patches that set
+    * different fields all survive, and two patches that set the same
+    * field keep the max value (a patch batch carries no arrival order,
+    * so the pick just has to be deterministic).
     *
-    * Duplicate patch keys previously fanned out the join and silently
-    * indexed duplicated documents; patches are now merged per key and
-    * per field first, as Solr merges atomic updates field by field. Two
-    * patches that set the same field keep the max value (a patch batch
-    * carries no arrival order, so the pick just has to be
-    * deterministic).
-    * Patches addressed to keys absent from the corpus drop, as
-    * before. */
-  private[index] def patchedCorpus(spark: SparkSession, cfg: BuildConfig,
-                                   sets: DataFrame): (Dataset[Turn], DataFrame) = {
-    import spark.implicits._
-    val updatable = Seq("text", "role", "tool")
-    val provided = updatable.filter(sets.columns.contains)
+    * The checkpoint holds O(patch) rows, never the corpus. It pins the
+    * change set because applying it rewrites the staging it was
+    * resolved from: a recomputation after the overlays publish would
+    * find nothing changed. A lost block fails the job instead. The
+    * caller unpersists the rows. */
+  private[index] def changeSet(spark: SparkSession, cfg: BuildConfig,
+                               sets: DataFrame): (RDD[InternalRow], Map[Int, Long]) = {
+    val provided = Seq("text", "role", "tool").filter(sets.columns.contains)
     require(provided.nonEmpty,
       "sets must provide at least one updatable column (text/role/tool)")
-    val renamed = provided.foldLeft(
-      sets.select(("conv_id" +: "turn_idx" +: provided).map(col): _*))(
-      (d, c) => d.withColumnRenamed(c, s"__set_$c"))
-    // per-key, per-field merge: `max` skips nulls, so patches to one
-    // key that set different fields all survive
-    val merged = provided.map(c => max(col(s"__set_$c")).as(s"__set_$c"))
-    val oneSet = renamed.groupBy("conv_id", "turn_idx").agg(merged.head, merged.tail: _*)
-    // the staging view does not store ts (the content hash covers only
-    // role/text/tool, so a synthetic constant cannot dirty a document)
-    val cur0 = IndexBuilder.readDocs(spark, cfg.outDir)
-    val cur = if (cur0.columns.contains("ts")) cur0
-      else cur0.withColumn("ts",
-        lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
-    def toTurns(d: DataFrame): Dataset[Turn] = d.select(col("conv_id"),
-      col("turn_idx").cast("int").as("turn_idx"), col("role"), col("text"),
-      col("tool"), col("ts").cast("timestamp").as("ts")).as[Turn]
-    val mergedPatch0 = cur.join(oneSet, Seq("conv_id", "turn_idx"))
-    val mergedPatch = provided.foldLeft(mergedPatch0)((d, c) =>
+    val merged = provided.map(c => max(col(c)).as(s"__set_$c"))
+    val oneSet = sets.groupBy("conv_id", "turn_idx").agg(merged.head, merged.tail: _*)
+    val joined = IndexBuilder.readStaging(spark, cfg.outDir)
+      .join(oneSet, Seq("conv_id", "turn_idx"))
+    val patched = provided.foldLeft(joined)((d, c) =>
       d.withColumn(c, coalesce(col(s"__set_$c"), col(c))))
-    val patched = toTurns(mergedPatch).toDF().localCheckpoint(true)
-    val untouched = toTurns(
-      cur.join(oneSet.select("conv_id", "turn_idx"),
-        Seq("conv_id", "turn_idx"), "left_anti"))
-    (untouched.toDF().unionByName(patched).as[Turn], patched)
+      .withColumn("h", xxhash64(col("role"), col("text"), col("tool")))
+    val az = cfg.analyzer
+    val dlOf = udf((s: String) => az.docLength(s))
+    // staging written before the hash column existed reads back with
+    // src_hash = null: every patched row of it counts as changed
+    val changed = patched.filter(col("src_hash").isNull || col("h") =!= col("src_hash"))
+      .withColumn("dl", dlOf(col("text")))
+      .withColumn("src_hash", col("h"))
+      .select(IndexBuilder.StagingSchema.fieldNames.map(col).toIndexedSeq: _*)
+    val perSegment = new IndexBuilder.SegCounter
+    spark.sparkContext.register(perSegment, "graft.changedRows")
+    val segment = IndexBuilder.StagingSchema.fieldIndex("segment")
+    val rows = changed.queryExecution.toRdd.map { r =>
+      perSegment.add(r.getInt(segment) -> 1L); r.copy()
+    }
+    rows.localCheckpoint()
+    rows.count()
+    (rows, perSegment.value)
   }
 
   /** Diff + overlay + re-plan. Returns (nDocs, avgdl, segSize,
@@ -141,14 +155,11 @@ object Incremental {
             srcHash: String): (Long, Double, Long, Int) = {
     import spark.implicits._
     val t0 = System.currentTimeMillis()
-    val outDir = cfg.outDir
-    val mdir = IndexBuilder.manifestDir(outDir)
-    val m = Manifest.read(Manifest.phaseAPath(mdir)).get
+    val m = Manifest.read(Manifest.phaseAPath(IndexBuilder.manifestDir(cfg.outDir))).get
     val segSize = m("seg_size").toLong
-    val oldNSeg = m("n_segments_effective").toInt
     val az = cfg.analyzer
 
-    val view = IndexBuilder.readStaging(spark, outDir)
+    val view = IndexBuilder.readStaging(spark, cfg.outDir)
 
     // ---- diff: keys + hashes only; unchanged rows never leave the join ----
     val srcKeys = turns.toDF().select(col("conv_id"), col("turn_idx"),
@@ -218,90 +229,115 @@ object Incremental {
         if (nFresh == 0) Set.empty
         else (((maxId + 1) / segSize).toInt to ((maxId + nFresh) / segSize).toInt).toSet
 
-      val overlaySegs = changedSegs ++ freshSegs
-      if (overlaySegs.nonEmpty) {
-        // invalidate the finalize commit point FIRST: the dictionary /
-        // corpus_stats derived for the pre-delta corpus must never
-        // survive a crash that lands after the waves but before
-        // finalizeStats reruns (pending would be empty on resume and
-        // the stale COMPLETE finalize manifest would skip the rebuild)
-        Files.deleteIfExists(Manifest.finalizePath(mdir))
-        // STALE rows next: if we crash before the overlays publish,
-        // the re-planned segments rebuild from whatever view exists
-        // (idempotent overwrite), and the rerun's diff re-creates any
-        // missing overlays
-        Manifest.appendLedger(mdir, overlaySegs.toSeq.sorted.map(s => Map(
-          "segment" -> s.toString,
-          "status" -> Manifest.Stale,
-          "snapshot_id" -> t0.toString)))
-
-        // overlay rows = surviving rows of touched segments + updated
-        // versions + appended docs
-        val dlOf = udf((s: String) => az.docLength(s))
-        val droppedIds = deltaRows.filter(col("doc_id").isNotNull)
-          .select(col("doc_id")) // updated ∪ deleted old versions
-        val keep = view.filter(col("segment").isInCollection(overlaySegs))
-          .join(droppedIds, Seq("doc_id"), "left_anti")
-        val updatedKeys = deltaRows
-          .filter(col("h").isNotNull && col("doc_id").isNotNull)
-          .select(col("conv_id"), col("turn_idx"), col("doc_id"), col("segment"))
-        val updRows = turns.toDF().join(updatedKeys, Seq("conv_id", "turn_idx"))
-          .select(col("doc_id"), col("segment"), col("conv_id"), col("turn_idx"),
-            col("role"), col("text"), col("tool"), dlOf(col("text")).as("dl"))
-          .withColumn("src_hash", xxhash64(col("role"), col("text"), col("tool")))
-        val overlayNew = keep.unionByName(updRows).unionByName(freshRows)
-
-        val tmp = Paths.get(outDir, "_tmp_overlay")
-        Manifest.deleteRecursively(tmp)
-        overlayNew
-          .repartitionByRange(math.max(1, math.min(overlaySegs.size, p)),
-            col("segment"), col("doc_id"))
-          .sortWithinPartitions("segment", "doc_id")
-          .write.partitionBy("segment").mode("overwrite").parquet(tmp.toString)
-        overlaySegs.toSeq.sorted.foreach { seg =>
-          val src = tmp.resolve(s"segment=$seg")
-          val dest = Paths.get(IndexBuilder.overlayDir(outDir), s"segment=$seg")
-          if (Files.exists(src)) Manifest.publishDir(src, dest)
-          else { // segment lost ALL rows: empty overlay masks the base
-            Manifest.deleteRecursively(dest)
-            Files.createDirectories(dest)
-          }
-        }
-        Manifest.deleteRecursively(tmp)
-      }
-      freshRows.unpersist()
-
-      // ---- refresh phase A stats from the UPDATED view (narrow
-      // columns only; exact long arithmetic ⇒ avgdl equals what a full
-      // rebuild over the same corpus computes, so scores are
-      // bit-identical) ----
-      val nv = IndexBuilder.readStaging(spark, outDir).agg(
-        count(lit(1)).as("n"),
-        coalesce(sum(col("dl").cast("long")), lit(0L)).as("dl_sum"),
-        coalesce(max("doc_id"), lit(-1L)).as("max_id")).head()
-      val nDocs2 = nv.getLong(0)
-      val dlSum2 = nv.getLong(1)
-      val maxId2 = nv.getLong(2)
-      val avgdl2 = if (nDocs2 == 0) 1.0 else dlSum2.toDouble / nDocs2
-      val nSegEff2 = math.max(oldNSeg,
-        if (maxId2 < 0) 0 else (maxId2 / segSize).toInt + 1)
-
-      Manifest.writeAtomic(Manifest.phaseAPath(mdir), Map(
-        "status" -> Manifest.Complete,
-        "n_docs" -> nDocs2.toString,
-        "avgdl" -> avgdl2.toString,
-        "seg_size" -> segSize.toString,
-        "n_segments_effective" -> nSegEff2.toString,
-        "content_hash" -> srcHash,
-        "analyzer" -> cfg.analyzer.id,
-        "store_positions" -> cfg.storePositions.toString,
-        "index_version" -> IndexFormat.Version.toString,
-        "tokenizer_version" -> Tokenizer.Version.toString,
-        "delta_of" -> m.getOrElse("content_hash", ""),
-        "segments_touched" -> overlaySegs.size.toString,
-        "wall_ms" -> (System.currentTimeMillis() - t0).toString))
-      (nDocs2, avgdl2, segSize, nSegEff2)
+      // updated versions and appended docs are upserted; deleted docs
+      // leave
+      val deletes = deltaRows.filter(col("h").isNull)
+        .select(col("doc_id"), col("segment"))
+      val dlOf = udf((s: String) => az.docLength(s))
+      val updatedKeys = deltaRows
+        .filter(col("h").isNotNull && col("doc_id").isNotNull)
+        .select(col("conv_id"), col("turn_idx"), col("doc_id"), col("segment"))
+      val updRows = turns.toDF().join(updatedKeys, Seq("conv_id", "turn_idx"))
+        .select(col("doc_id"), col("segment"), col("conv_id"), col("turn_idx"),
+          col("role"), col("text"), col("tool"), dlOf(col("text")).as("dl"))
+        .withColumn("src_hash", xxhash64(col("role"), col("text"), col("tool")))
+      try applyChanges(spark, cfg, t0, m, changedSegs ++ freshSegs,
+        updRows.unionByName(freshRows), Some(deletes), Some(srcHash))
+      finally freshRows.unpersist()
     } finally deltaRows.unpersist()
+  }
+
+  /** Applies a change set to the index on disk — `upserts` (staging
+    * rows) replace the view rows with their doc_id or join their
+    * segment, `deletes` (doc_id, segment) leave — in crash-safe order:
+    * the finalize manifest is invalidated, STALE ledger rows re-plan
+    * the `touched` segments, each gets an overlay (its surviving and
+    * upserted rows) published in place of its staging, and the phase A
+    * manifest is refreshed from one aggregation over the updated view.
+    * The content hash is `srcHash` when the caller has it, else part of
+    * that aggregation. Returns (nDocs, avgdl, segSize, nSegEff) of the
+    * updated corpus. */
+  private def applyChanges(spark: SparkSession, cfg: BuildConfig, t0: Long,
+                           prior: Map[String, String], touched: Set[Int],
+                           upserts: DataFrame, deletes: Option[DataFrame],
+                           srcHash: Option[String]): (Long, Double, Long, Int) = {
+    val outDir = cfg.outDir
+    val mdir = IndexBuilder.manifestDir(outDir)
+    if (touched.nonEmpty) {
+      // invalidate the finalize commit point FIRST: the dictionary /
+      // corpus_stats derived for the pre-change corpus must never
+      // survive a crash that lands after the waves but before
+      // finalizeStats reruns (pending would be empty on resume and
+      // the stale COMPLETE finalize manifest would skip the rebuild)
+      Files.deleteIfExists(Manifest.finalizePath(mdir))
+      // STALE rows next: if we crash before the overlays publish,
+      // the re-planned segments rebuild from whatever view exists
+      // (idempotent overwrite), and the rerun re-creates any missing
+      // overlays
+      Manifest.appendLedger(mdir, touched.toSeq.sorted.map(s => Map(
+        "segment" -> s.toString,
+        "status" -> Manifest.Stale,
+        "snapshot_id" -> t0.toString)))
+
+      // overlay rows: per doc_id, the last of its view row (op 0), its
+      // upsert (1) and its delete (2), unless that is the delete. One
+      // shuffle by segment: the window's (segment, doc_id) clustering
+      // and the write's segment order ride it, no join
+      val p = if (cfg.sortPartitions > 0) cfg.sortPartitions
+              else spark.sparkContext.defaultParallelism
+      val current = IndexBuilder.readStaging(spark, outDir)
+        .filter(col("segment").isInCollection(touched)).withColumn("op", lit(0))
+      val ops = deletes.foldLeft(current.unionByName(upserts.withColumn("op", lit(1))))(
+        (d, del) => d.unionByName(del.withColumn("op", lit(2)), allowMissingColumns = true))
+      val last = Window.partitionBy("segment", "doc_id").orderBy(col("op").desc)
+      val tmp = Paths.get(outDir, "_tmp_overlay")
+      Manifest.deleteRecursively(tmp)
+      ops.repartition(math.max(1, math.min(touched.size, p)), col("segment"))
+        .withColumn("rank", row_number().over(last))
+        .filter(col("rank") === 1 && col("op") =!= 2)
+        .select(IndexBuilder.StagingSchema.fieldNames.map(col).toIndexedSeq: _*)
+        .sortWithinPartitions("segment", "doc_id")
+        .write.partitionBy("segment").mode("overwrite").parquet(tmp.toString)
+      touched.toSeq.sorted.foreach { seg =>
+        val src = tmp.resolve(s"segment=$seg")
+        val dest = Paths.get(IndexBuilder.overlayDir(outDir), s"segment=$seg")
+        if (Files.exists(src)) Manifest.publishDir(src, dest)
+        else { // segment lost ALL rows: empty overlay masks the base
+          Manifest.deleteRecursively(dest)
+          Files.createDirectories(dest)
+        }
+      }
+      Manifest.deleteRecursively(tmp)
+    }
+
+    // ---- refresh phase A stats from the UPDATED view. Exact long
+    // arithmetic ⇒ avgdl equals what a full rebuild over the same
+    // corpus computes, so scores are bit-identical; the content hash
+    // equals the one a build over that corpus compares against. The
+    // aggregates ride a noop write as an Observation: one job, no
+    // shuffle ----
+    val aggs = Seq(count(lit(1)).as("n"),
+      coalesce(sum(col("dl").cast("long")), lit(0L)).as("dl_sum"),
+      coalesce(max("doc_id"), lit(-1L)).as("max_id")) ++
+      (if (srcHash.isEmpty) Seq(IndexBuilder.ContentHash.as("h")) else Nil)
+    val obs = org.apache.spark.sql.Observation()
+    IndexBuilder.readStaging(spark, outDir).observe(obs, aggs.head, aggs.tail: _*)
+      .write.format("noop").mode("overwrite").save()
+    val nv = obs.get
+    val nDocs = nv("n").asInstanceOf[Long]
+    val dlSum = nv("dl_sum").asInstanceOf[Long]
+    val maxId = nv("max_id").asInstanceOf[Long]
+    val avgdl = if (nDocs == 0) 1.0 else dlSum.toDouble / nDocs
+    val segSize = prior("seg_size").toLong
+    val nSegEff = math.max(prior("n_segments_effective").toInt,
+      if (maxId < 0) 0 else (maxId / segSize).toInt + 1)
+
+    IndexBuilder.writePhaseA(cfg, nDocs, avgdl, segSize, nSegEff,
+      srcHash.getOrElse(nv("h").toString), Map(
+        "delta_of" -> prior.getOrElse("content_hash", ""),
+        "segments_touched" -> touched.size.toString,
+        "wall_ms" -> (System.currentTimeMillis() - t0).toString))
+    (nDocs, avgdl, segSize, nSegEff)
   }
 
   /**

@@ -60,7 +60,7 @@ class SimulatedKill(wave: Int) extends RuntimeException(s"simulated kill after w
  * parquet min/max stats prune segment filters for Phase B and resume;
  * doc_stats is this same table column-pruned), and a phaseA manifest
  * carrying an order-insensitive corpus content hash (xor of
- * xxhash64(conv_id, turn_idx, text)) for change detection — the
+ * xxhash64(conv_id, turn_idx, role, text, tool)) for change detection — the
  * reference's `jj_scanner_doc_hash` analog
  * (`ScannerImpl.java:380-417`). The dictionary and corpus_stats are
  * derived AFTER the waves from the posting-block footers
@@ -177,7 +177,7 @@ object IndexBuilder {
   }
 
   /** Per-segment Long-counter accumulator (merge = pointwise sum). */
-  private class SegCounter extends org.apache.spark.util.AccumulatorV2[(Int, Long), Map[Int, Long]] {
+  private[index] class SegCounter extends org.apache.spark.util.AccumulatorV2[(Int, Long), Map[Int, Long]] {
     private val m = scala.collection.mutable.HashMap.empty[Int, Long]
     override def isZero: Boolean = m.isEmpty
     override def copy(): SegCounter = {
@@ -191,20 +191,35 @@ object IndexBuilder {
     override def value: Map[Int, Long] = m.toMap
   }
 
-  def build(spark: SparkSession, turns: Dataset[Turn], cfg: BuildConfig): BuildReport = {
-    // Small-corpus builds: the default 128 MB split size collapses the
-    // staging read into a handful of input tasks, capping every
-    // downstream map stage at that width regardless of cluster size.
-    // Splits are sized so the read parallelism tracks the cluster; at
-    // TB scale the defaults already give plentiful splits and these
-    // bounds are no-ops in practice.
-    //
-    // The overrides live on a DEDICATED session (newSession shares the
-    // SparkContext but has isolated SQLConf), so concurrent queries on
-    // the caller's session never observe them and two concurrent builds
-    // cannot race on a save/restore of shared conf. The caller's input
-    // Dataset is re-bound to the build session through a global temp
-    // view — logical plans are session-independent.
+  /** Builds the index of `turns` into `cfg.outDir`: a fresh build, a
+    * delta against the index already there ([[Incremental.delta]]), or
+    * a resume of a killed build — then Phase B, finalize and
+    * auto-compaction. Its Spark jobs are described `graft:build`. */
+  def build(spark: SparkSession, turns: Dataset[Turn], cfg: BuildConfig): BuildReport =
+    inBuildSession(spark, "build", turns.toDF()) { (bs, src) =>
+      import bs.implicits._
+      buildInner(bs, src.as[Turn], cfg)
+    }
+
+  /** Runs `body` on a build session with `input` re-bound into it, every
+    * Spark job it starts described `graft:<op>` (the caller's
+    * description is restored after).
+    *
+    * Small-corpus builds: the default 128 MB split size collapses the
+    * staging read into a handful of input tasks, capping every
+    * downstream map stage at that width regardless of cluster size.
+    * Splits are sized so the read parallelism tracks the cluster; at
+    * TB scale the defaults already give plentiful splits and these
+    * bounds are no-ops in practice.
+    *
+    * The overrides live on a DEDICATED session (newSession shares the
+    * SparkContext but has isolated SQLConf), so concurrent queries on
+    * the caller's session never observe them and two concurrent builds
+    * cannot race on a save/restore of shared conf. The caller's input
+    * is re-bound to the build session through a global temp view —
+    * logical plans are session-independent. */
+  private[index] def inBuildSession[T](spark: SparkSession, op: String, input: DataFrame)
+                                      (body: (SparkSession, DataFrame) => T): T = {
     val bs = spark.newSession()
     Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone").foreach { k =>
       spark.conf.getOption(k).foreach(bs.conf.set(k, _))
@@ -212,15 +227,50 @@ object IndexBuilder {
     bs.conf.set("spark.sql.files.maxPartitionBytes", (16L << 20).toString)
     bs.conf.set("spark.sql.files.openCostInBytes", (1L << 20).toString)
     val vn = s"graft_build_src_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    turns.createOrReplaceGlobalTempView(vn)
-    try {
-      import bs.implicits._
-      buildInner(bs, bs.table(s"global_temp.$vn").as[Turn], cfg)
-    } finally spark.catalog.dropGlobalTempView(vn)
+    input.createOrReplaceGlobalTempView(vn)
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft:$op")
+    try body(bs, bs.table(s"global_temp.$vn"))
+    finally {
+      sc.setJobDescription(caller)
+      spark.catalog.dropGlobalTempView(vn)
+    }
   }
 
+  /** Order-insensitive corpus content hash: the xor of every row's
+    * xxhash64(conv_id, turn_idx, role, text, tool) (0 when empty). */
+  private[index] val ContentHash: org.apache.spark.sql.Column =
+    coalesce(expr("bit_xor(xxhash64(conv_id, turn_idx, role, text, tool))"), lit(0L))
+
+  /** Writes the phase A manifest: the corpus stats, the content hash,
+    * the build format, and `extra` fields. */
+  private[index] def writePhaseA(cfg: BuildConfig, nDocs: Long, avgdl: Double, segSize: Long,
+                                 nSegEff: Int, contentHash: String,
+                                 extra: Map[String, String]): Unit =
+    Manifest.writeAtomic(Manifest.phaseAPath(manifestDir(cfg.outDir)), Map(
+      "status" -> Manifest.Complete,
+      "n_docs" -> nDocs.toString,
+      "avgdl" -> avgdl.toString,
+      "seg_size" -> segSize.toString,
+      "n_segments_effective" -> nSegEff.toString,
+      "content_hash" -> contentHash,
+      "analyzer" -> cfg.analyzer.id,
+      "store_positions" -> cfg.storePositions.toString,
+      "index_version" -> IndexFormat.Version.toString,
+      "tokenizer_version" -> Tokenizer.Version.toString) ++ extra)
+
+  /** Whether an on-disk phase A manifest was built in `cfg`'s format
+    * (analyzer, positions, index version) and its staging is there. */
+  private[index] def compatible(cfg: BuildConfig, m: Map[String, String]): Boolean =
+    m.get("status").contains(Manifest.Complete) &&
+      m.get("analyzer").contains(cfg.analyzer.id) &&
+      m.get("store_positions").contains(cfg.storePositions.toString) &&
+      m.get("index_version").contains(IndexFormat.Version.toString) &&
+      Files.exists(Paths.get(stagingDir(cfg.outDir)))
+
+  /** Routing: fresh build, delta, or resume; then [[finishBuild]]. */
   private def buildInner(spark: SparkSession, turns: Dataset[Turn], cfg: BuildConfig): BuildReport = {
-    import spark.implicits._
     val t0 = System.currentTimeMillis()
     val mdir = manifestDir(cfg.outDir)
     // a staging base lost to a crash inside compact's rename window
@@ -229,8 +279,7 @@ object IndexBuilder {
     // rebuild
     Incremental.recoverCompact(cfg.outDir)
 
-    val phaseAPath = Manifest.phaseAPath(mdir)
-    val prior = Manifest.read(phaseAPath)
+    val prior = Manifest.read(Manifest.phaseAPath(mdir))
 
     // ---- change detection: order-insensitive corpus hash over the
     // full identity+content tuple. The upfront scan (a full corpus
@@ -240,29 +289,22 @@ object IndexBuilder {
     val (srcCount, srcHash) =
       if (prior.isEmpty) (-1L, null: String)
       else {
-        val hashRow = turns.agg(
-          coalesce(sum(lit(1L)), lit(0L)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(conv_id, turn_idx, role, text, tool))"), lit(0L)).as("h")
-        ).head()
+        val hashRow = turns.agg(coalesce(sum(lit(1L)), lit(0L)).as("n"), ContentHash.as("h")).head()
         (hashRow.getLong(0), hashRow.getLong(1).toString)
       }
     // analyzer/index_version checks REQUIRE the keys (not forall): a
     // pre-v2 on-disk index must trigger a clean full rebuild, never a
     // resume into mixed-format tables
-    val compatible = cfg.resume && prior.exists(m =>
-      m.get("status").contains(Manifest.Complete) &&
-        m.get("analyzer").contains(cfg.analyzer.id) &&
-        m.get("store_positions").contains(cfg.storePositions.toString) &&
-        m.get("index_version").contains(IndexFormat.Version.toString) &&
-        Files.exists(Paths.get(stagingDir(cfg.outDir))))
-    val phaseAValid = compatible && prior.exists(_.get("content_hash").contains(srcHash))
+    val canReuse = cfg.resume && prior.exists(compatible(cfg, _))
+    val phaseAValid = canReuse && prior.exists(_.get("content_hash").contains(srcHash))
 
-    val (nDocs, avgdl, segSize, nSegEff) =
+    val stats =
       if (phaseAValid) {
         val m = prior.get
         (m("n_docs").toLong, m("avgdl").toDouble,
           m("seg_size").toLong, m("n_segments_effective").toInt)
-      } else if (compatible && prior.exists(_.get("n_docs").exists(_ != "0"))) {
+      }
+      else if (canReuse && prior.exists(_.get("n_docs").exists(_ != "0"))) {
         // source changed but the on-disk index is the same format over
         // an older corpus version → DELTA: diff per-doc hashes, rewrite
         // only touched segments' staging, mark them stale. Phase B then
@@ -275,6 +317,17 @@ object IndexBuilder {
         Manifest.deleteRecursively(Paths.get(cfg.outDir))
         phaseA(spark, turns, cfg, srcHash, srcCount)
       }
+    finishBuild(spark, cfg, t0, stats)
+  }
+
+  /** Phase B over the segments the manifests leave pending, then
+    * finalize and auto-compaction: the half of a build after its phase
+    * A state (`stats`: nDocs, avgdl, segSize, effective segment count)
+    * is on disk. [[Incremental.atomicSet]] enters here directly. */
+  private[index] def finishBuild(spark: SparkSession, cfg: BuildConfig, t0: Long,
+                                 stats: (Long, Double, Long, Int)): BuildReport = {
+    val (nDocs, avgdl, _, nSegEff) = stats
+    val mdir = manifestDir(cfg.outDir)
 
     // ---- Phase B: postings in waves, resume-aware. A failing wave is
     // isolated segment by segment; a deterministically-failing segment
@@ -482,8 +535,7 @@ object IndexBuilder {
 
     // pass 1: sort + per-partition counts → dense offsets (docID
     // stability — SURVEY.md §7.5)
-    val ((sorted, offsets, nDocs), tCounts) = timedMs(sortAndOffsets(spark, turns, p))
-    dbg(s"phaseA sort+count ${tCounts}ms")
+    val ((sorted, offsets, nDocs), sortMs) = timedMs(sortAndOffsets(spark, turns, p))
     require(srcCount < 0 || nDocs == srcCount,
       s"sorted count $nDocs != source count $srcCount")
     val nSegTarget = cfg.segmentsFor(nDocs)
@@ -539,12 +591,11 @@ object IndexBuilder {
     // is this same table read with column pruning.
     val stagingTmp = Paths.get(cfg.outDir, "_tmp_staging_docs")
     Manifest.deleteRecursively(stagingTmp)
-    val (_, tStag) = timedMs {
+    val (_, stagingMs) = timedMs {
       org.apache.spark.sql.graft.ColumnBridge
         .internalDF(spark, stagingRows, StagingSchema)
         .write.mode("overwrite").parquet(stagingTmp.toString)
     }
-    dbg(s"phaseA staging-write ${tStag}ms")
     Manifest.publishDir(stagingTmp, Paths.get(stagingDir(cfg.outDir)))
 
     // avgdl — defined as sum(dl)/n_docs in double (the dictionary is
@@ -552,18 +603,13 @@ object IndexBuilder {
     // corpus is tokenized exactly twice: dl here, postings in B)
     val avgdl = if (nDocs == 0) 1.0 else dlAcc.value.toDouble / nDocs
 
-    Manifest.writeAtomic(Manifest.phaseAPath(manifestDir(cfg.outDir)), Map(
-      "status" -> Manifest.Complete,
-      "n_docs" -> nDocs.toString,
-      "avgdl" -> avgdl.toString,
-      "seg_size" -> segSize.toString,
-      "n_segments_effective" -> nSegEff.toString,
-      "content_hash" -> (if (needHash) hashAcc.value.toString else srcHash),
-      "analyzer" -> cfg.analyzer.id,
-      "store_positions" -> cfg.storePositions.toString,
-      "index_version" -> IndexFormat.Version.toString,
-      "tokenizer_version" -> Tokenizer.Version.toString,
-      "wall_ms" -> (System.currentTimeMillis() - t0).toString))
+    // sort_ms: the range sort + per-partition counts; staging_ms: the
+    // id-assigning staging write
+    writePhaseA(cfg, nDocs, avgdl, segSize, nSegEff,
+      if (needHash) hashAcc.value.toString else srcHash, Map(
+        "sort_ms" -> sortMs.toString,
+        "staging_ms" -> stagingMs.toString,
+        "wall_ms" -> (System.currentTimeMillis() - t0).toString))
     (nDocs, avgdl, segSize, nSegEff)
   }
 
@@ -613,9 +659,6 @@ object IndexBuilder {
       "wall_ms" -> (System.currentTimeMillis() - t0).toString))
     nTerms
   }
-
-  private def dbg(msg: => String): Unit =
-    if (sys.env.contains("GRAFT_BUILD_TIMING")) System.err.println(s"[build] $msg")
 
   private def timedMs[T](f: => T): (T, Long) = {
     val t = System.currentTimeMillis(); val r = f
@@ -683,11 +726,8 @@ object IndexBuilder {
 
     val waveTmp = Paths.get(cfg.outDir, "_tmp_wave")
     Manifest.deleteRecursively(waveTmp)
-    val (_, tEnc) = timedMs {
-      encoded.write.option("parquet.block.size", TermRowGroupBytes)
-        .partitionBy("segment").mode("overwrite").parquet(waveTmp.toString)
-    }
-    dbg(s"wave tokenize+shuffle+encode+write ${tEnc}ms")
+    encoded.write.option("parquet.block.size", TermRowGroupBytes)
+      .partitionBy("segment").mode("overwrite").parquet(waveTmp.toString)
     val ingest = turnsAcc.value; val tokens = tokensAcc.value
     val written = blocksAcc.value
 

@@ -102,19 +102,69 @@ class IncrementalSpec extends SparkFunSuite {
     val dir = tmpDir("atom-opatch")
     val cfg = BuildConfig(dir, nSegments = 8, waveSize = 8, autoCompactFraction = 0)
     IndexBuilder.build(spark, v1, cfg)
-    val corpusN = v1.count()
     val sets = Seq(
       ("conv-000010", 0, "opatch one"),
       ("conv-000011", 0, "opatch two"),
       ("conv-000011", 0, "opatch two duplicate"), // duplicate key: deduped, not fanned out
       ("conv-does-not-exist", 0, "dropped")       // absent key: silently dropped
     ).toDF("conv_id", "turn_idx", "text")
-    val (turns, staged) = Incremental.patchedCorpus(spark, cfg, sets)
-    // the materialized (checkpointed) side is the PATCH, not the corpus
-    assert(staged.count() == 2,
-      "staged rows must equal the distinct-in-corpus patch size")
-    assert(turns.count() == corpusN, "patched view keeps every corpus row exactly once")
-    assert(turns.filter(col("text").startsWith("opatch")).count() == 2)
+    val (rows, perSegment) = Incremental.changeSet(spark, cfg, sets)
+    try {
+      // the materialized (checkpointed) side is the PATCH, not the corpus
+      assert(rows.isCheckpointed)
+      assert(rows.count() == 2,
+        "checkpointed rows must equal the distinct-in-corpus patch size")
+      assert(perSegment.values.sum == 2)
+      val changed = org.apache.spark.sql.graft.ColumnBridge
+        .internalDF(spark, rows, IndexBuilder.StagingSchema)
+        .select("conv_id", "text").as[(String, String)].collect().toMap
+      assert(changed == Map("conv-000010" -> "opatch one",
+        "conv-000011" -> "opatch two duplicate"))
+    } finally rows.unpersist()
+    // atomicSet releases its change set
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    Incremental.atomicSet(spark, cfg, sets)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(persisted).isEmpty)
+  }
+
+  test("atomicSet killed after its overlays converges on rerun; its content hash lets a build of the patched corpus resume") {
+    val dir = tmpDir("atom-kill"); val fullDir = tmpDir("atom-kill-full")
+    val cfg = BuildConfig(dir, nSegments = 8, waveSize = 8, autoCompactFraction = 0)
+    IndexBuilder.build(spark, v1, cfg)
+    val word = "killed mid patch contents quokkaword"
+    val sets = Seq(("conv-000010", 0, word), ("conv-000300", 1, word))
+      .toDF("conv_id", "turn_idx", "text")
+    val mdir = IndexBuilder.manifestDir(dir)
+    intercept[SimulatedKill](Incremental.atomicSet(spark, cfg.copy(failAfterWaves = 0), sets))
+    // the kill lands after the overlays and STALE rows
+    val overlaid = IndexBuilder.overlaidSegments(dir)
+    assert(overlaid.nonEmpty)
+    assert(overlaid.forall(s => graft.store.Manifest.segmentStates(mdir)(s)
+      .get("status").contains(graft.store.Manifest.Stale)))
+    assert(!Files.exists(graft.store.Manifest.finalizePath(mdir)))
+    val rep = Incremental.atomicSet(spark, cfg, sets)
+    assert(rep.segmentsBuilt == overlaid.size)
+
+    val patched = v1.withColumn("text",
+      when((col("conv_id") === "conv-000010" && col("turn_idx") === 0) ||
+        (col("conv_id") === "conv-000300" && col("turn_idx") === 1), lit(word))
+        .otherwise(col("text"))).as[Turn]
+    IndexBuilder.build(spark, patched, BuildConfig(fullDir, nSegments = 8, waveSize = 8))
+    val ri = new IndexReader(spark, dir); val rf = new IndexReader(spark, fullDir)
+    assert(ri.stats.n_docs == rf.stats.n_docs)
+    assert(ri.stats.avgdl == rf.stats.avgdl) // bit-equal doubles
+    assert(ri.stats.n_terms == rf.stats.n_terms)
+    queriesEqual(ri, rf)
+    assert(ri.searchRanked("quokkaword", 10).size == 2)
+    // the phase A content hash is the patched corpus's, so a build over
+    // it resumes: no rebuild, and no delta (which would rewrite phaseA)
+    val phaseA = graft.store.Manifest.phaseAPath(mdir)
+    val written = graft.store.Manifest.read(phaseA).get
+    val h = patched.agg(org.apache.spark.sql.functions.expr(
+      "bit_xor(xxhash64(conv_id, turn_idx, role, text, tool))")).head().getLong(0).toString
+    assert(written("content_hash") == h)
+    assert(IndexBuilder.build(spark, patched, cfg).segmentsBuilt == 0)
+    assert(graft.store.Manifest.read(phaseA).get == written)
   }
 
   test("atomicSet merges patches to one key field by field (disjoint fields both survive)") {
