@@ -21,12 +21,10 @@ object Routing {
     branchValues.map { v => v -> df.filter(col(routeField) === lit(v)) }.toMap
 
   /** `routers/DuplicateToAll.java:50-58` — fan-out to every successor.
-    * With DataFrames no row cloning is needed: persist once, consume in
-    * every branch lineage. */
-  def duplicateToAll(df: DataFrame, nBranches: Int): Seq[DataFrame] = {
-    val cached = df.persist()
-    Seq.fill(nBranches)(cached)
-  }
+    * With DataFrames no row cloning is needed: a DataFrame is already
+    * reusable by every branch lineage, and caching it (with its
+    * `unpersist`) is the caller's choice. */
+  def duplicateToAll(df: DataFrame, nBranches: Int): Seq[DataFrame] = Seq.fill(nBranches)(df)
 
   /** `routers/RoundRobinRouter.java:42-68` — 1-of-N fan-out purely for
     * parallelism; Spark's task scheduler subsumes it, expressed as an

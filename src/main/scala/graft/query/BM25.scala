@@ -15,9 +15,10 @@ package graft.query
  *
  * Determinism contract: a document's score is the sum of per-term
  * contributions accumulated in ASCENDING TERM ORDER — both the engine
- * (Wand) and the brute-force oracle use this exact summation order, so
- * scores are bit-identical doubles, making "rank-identical" (score
- * desc, docId asc) well-defined.
+ * (Wand) and the specs' brute-force oracle (`BM25Oracle`, in the test
+ * sources) use this exact summation order, so scores are bit-identical
+ * doubles, making "rank-identical" (score desc, docId asc)
+ * well-defined.
  */
 object BM25 extends Serializable {
   val K1: Double = 1.2
@@ -38,34 +39,5 @@ object BM25 extends Serializable {
       val c = java.lang.Double.compare(b._2, a._2) // score desc
       if (c != 0) c else java.lang.Long.compare(a._1, b._1) // docId asc
     }
-  }
-
-  /**
-   * Brute-force exact oracle: score every document against the query
-   * terms (distinct, sorted) and return top-k under [[hitOrdering]].
-   * Used by the parity test suite (SURVEY.md §5) and as the
-   * correctness reference for WAND.
-   *
-   * @param docs (docId, dl, termFreqs) for every doc in the corpus
-   * @param dfs  per-term document frequency
-   */
-  def bruteForceTopK(queryTerms: Seq[String],
-                     docs: Iterable[(Long, Int, collection.Map[String, Int])],
-                     dfs: collection.Map[String, Long],
-                     nDocs: Long, avgdl: Double, k: Int): Seq[(Long, Double)] = {
-    val terms = queryTerms.distinct.sorted
-    val hits = docs.iterator.flatMap { case (docId, dl, tfs) =>
-      var s = 0.0
-      var matched = false
-      terms.foreach { t =>
-        val tf = tfs.getOrElse(t, 0)
-        if (tf > 0) {
-          matched = true
-          s += score(tf, dl, dfs.getOrElse(t, 0L), nDocs, avgdl)
-        }
-      }
-      if (matched) Iterator.single((docId, s)) else Iterator.empty
-    }.toVector
-    hits.sorted(hitOrdering).take(k)
   }
 }

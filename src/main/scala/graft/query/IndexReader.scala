@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
  * idf), and ONE executor runs any batch of plans in ONE Spark stage
  * with no shuffle: each task reads its own segments' postings files
  * in place ([[graft.store.LocalParquet]]) and runs each plan's
- * block-max WAND kernel with a bounded min-heap → driver k-way merge
- * per query under the total order (score desc, docId asc). A single
- * query is a batch of one.
+ * block-max WAND kernel into one bounded collector per query → driver
+ * k-way merge per query under the total order (score desc, docId
+ * asc). A single query is a batch of one.
  *
  * What prunes the read: postings files are term-sorted within each
  * segment and written in bounded row groups, so each row group's
@@ -31,10 +31,11 @@ import org.apache.spark.sql.functions._
  *
  * == Two-level merge + θ sharing ==
  * Query tasks each own a contiguous RANGE of segments (`segment /
- * groupSize`), processed in ascending docId order with the
- * WAND threshold carried ACROSS segments ([[Wand.TopKMerger]] seeds
- * each segment's evaluator with the task's current kth score — the
- * shared-collector-threshold pattern of Lucene's per-segment search).
+ * groupSize`), processed in ascending docId order into ONE
+ * collector per query ([[Wand.TopKMerger]]): every segment's kernel
+ * writes into it directly and prunes against the task's live kth
+ * score — the shared-collector-threshold pattern of Lucene's
+ * per-segment search.
  * The driver then merges per-TASK top-k: O(k · tasks) rows collected,
  * independent of segment count — at 2^20 segments the flat per-segment
  * collect would be O(k · 2^20) rows with every segment's WAND starting
@@ -120,11 +121,11 @@ class IndexReader(spark: SparkSession, dir: String,
   /** The top-k executor: ONE shuffle-free Spark stage for any batch of
     * plans, one task per [[segmentGroups]] entry. Each task reads its
     * segments' files in place, pruned to the plans' terms, and runs
-    * every plan over them in docId order, one [[Wand.TopKMerger]] per
-    * query id carrying θ across segments — returning the pre-merge
-    * (id, doc, score) rows, O(k · tasks) per id. The plans ride in the
-    * task closure ([[SegmentTask]]); the job is described as
-    * `graft:<method>`. */
+    * every plan over them in docId order, each plan writing into one
+    * [[Wand.TopKMerger]] per query id that carries θ across segments —
+    * returning the pre-merge (id, doc, score) rows, O(k · tasks) per
+    * id. The plans ride in the task closure ([[SegmentTask]]); the job
+    * is described as `graft:<method>`. */
   private def collectPlans(method: String, plans: Seq[(String, Plan)],
                            k: Int): Array[(String, Long, Double)] = {
     val groups = segmentGroups
@@ -324,7 +325,7 @@ class IndexReader(spark: SparkSession, dir: String,
     * OR of the per-term length bands pushes to Parquet, candidates
     * come back with df, and the per-term best pick runs driver-side
     * under the same suggest order via the parity-pinned
-    * [[Wand.editDistance]]) plus one distributed match-set count —
+    * [[Shape.editDistance]]) plus one distributed match-set count —
     * two Spark jobs total, where the round-5 form paid one sequential
     * suggest job per distinct term. A term with no suggestion within
     * `maxEdits` stays as typed; the collation then counts 0 hits,
@@ -356,7 +357,7 @@ class IndexReader(spark: SparkSession, dir: String,
       .select("term", "df").as[(String, Long)].collect()
     ts.map { t =>
       val cands = matched.iterator
-        .map { case (term, df) => (Wand.editDistance(term, t), -df, term) }
+        .map { case (term, df) => (Shape.editDistance(term, t, maxEdits), -df, term) }
         .filter(_._1 <= maxEdits).toSeq
       t -> (if (cands.isEmpty) None else Some(cands.min._3))
     }.toMap
@@ -499,16 +500,15 @@ class IndexReader(spark: SparkSession, dir: String,
           if (buf == null) { buf = new LongBuf(); okBySeg.put(s, buf) }
           buf.add(id)
         }
-        val merger = new Wand.TopKMerger(k)
+        val top = new Wand.TopKMerger(k)
         segs.foreach { case (seg, byTerm) =>
           val buf = okBySeg.get(seg)
           if (buf != null && buf.nonEmpty) {
             val arr = buf.sortedArray
-            merger.offerAll(plan.run(byTerm, avgdl, k, merger.threshold,
-              allow = id => java.util.Arrays.binarySearch(arr, id) >= 0))
+            plan.run(byTerm, avgdl, top, id => java.util.Arrays.binarySearch(arr, id) >= 0)
           }
         }
-        merger.result.iterator.map(h => (h.doc_id, h.score))
+        top.result.iterator.map(h => (h.doc_id, h.score))
       }
     }.collect()
 
@@ -657,7 +657,7 @@ class IndexReader(spark: SparkSession, dir: String,
    * with BM25: per matched term max(0, ln(1 + tf/(μ·p(t|C))) +
    * ln(μ/(dl+μ))), p(t|C) = cf/totalTokens from the dictionary.
    * Serves through the relational path (match set → TakeOrdered at
-   * the caller), not the WAND heap: the block-max metadata bounds
+   * the caller), not the WAND collector: the block-max metadata bounds
    * BM25's tfNorm, not the LM saturation curve, so BM25 remains the
    * pruned default scorer and the LM is the re-scoring alternative —
    * at 100 TB a scored MATCH SET is what flows into a shuffle either
@@ -1277,7 +1277,8 @@ private[query] object SegmentTask {
 
   /** A task over segment groups: each segment's postings files read in
     * place, pruned to `terms`, then every plan run over the segments in
-    * docId order, one [[Wand.TopKMerger]] per query id carrying θ. */
+    * docId order, each writing straight into its query id's one
+    * [[Wand.TopKMerger]], whose live k-th score is θ. */
   def apply(plans: Seq[(String, Plan)], terms: Set[String], avgdl: Double,
             k: Int): (TaskContext, Iterator[Seq[(Int, Seq[String])]]) => Array[Hit] = (_, tasks) => {
     // only proximity plans read position lists
@@ -1289,10 +1290,7 @@ private[query] object SegmentTask {
         LocalParquet.read(Paths.get(f), Some(terms), without)(IndexReader.blockRow(seg, _)))
       if (rows.nonEmpty) {
         val byTerm: Plan.Blocks = rows.toVector.groupBy(_.term)
-        plans.foreach { case (id, p) =>
-          val m = mergers.getOrElseUpdate(id, new Wand.TopKMerger(k))
-          m.offerAll(p.run(byTerm, avgdl, k, m.threshold))
-        }
+        plans.foreach { case (id, p) => p.run(byTerm, avgdl, mergers.getOrElseUpdate(id, new Wand.TopKMerger(k))) }
       }
     }
     mergers.iterator.flatMap { case (id, m) => m.result.iterator.map(h => (id, h.doc_id, h.score)) }.toArray

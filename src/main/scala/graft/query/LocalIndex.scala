@@ -66,7 +66,10 @@ class LocalIndex private (stats: CorpusStats,
     * posting list, so the same kernel scores bit-identically. */
   private def run(shape: Shape, k: Int, allow: Long => Boolean = null): Vector[QueryHit] =
     lowering.lower(Seq(shape)).head match {
-      case Some(p) => p.run(blocksOf(p.terms), stats.avgdl, k, allow = allow)
+      case Some(p) =>
+        val top = new Wand.TopKMerger(k)
+        p.run(blocksOf(p.terms), stats.avgdl, top, allow)
+        top.result
       case None => Vector.empty
     }
 
@@ -74,7 +77,7 @@ class LocalIndex private (stats: CorpusStats,
   def search(query: String, k: Int = 10): Vector[QueryHit] = run(lowering.free(query), k)
 
   /** In-process metadata-filtered BM25 top-k: `allow` vetoes docIDs
-    * after cursor alignment, before the heap (the [[Wand.topK]]
+    * after cursor alignment, before the collector (the [[Wand.topK]]
     * filter hook) — exact over the allowed set, like
     * IndexReader.searchWhere with the predicate already resolved to a
     * docID test (a serving node holds doc metadata in memory; the
@@ -117,7 +120,7 @@ class LocalIndex private (stats: CorpusStats,
     run(Shape.Or(Seq(Shape.wildcard(pattern, maxExpansions))), k)
 
   /** In-process fuzzy query; same Levenshtein expansion as
-    * IndexReader.searchFuzzy ([[Wand.editDistanceWithin]] is the
+    * IndexReader.searchFuzzy ([[Shape.editDistance]] is the
     * same unit-cost distance as the engines'). */
   def searchFuzzy(term: String, maxEdits: Int = 2, k: Int = 10,
                   maxExpansions: Int = 1024): Vector[QueryHit] =

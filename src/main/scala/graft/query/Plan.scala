@@ -1,7 +1,7 @@
 package graft.query
 
 import graft.analysis.Analyzer
-import graft.model.{CorpusStats, PostingBlockRow, QueryHit}
+import graft.model.{CorpusStats, PostingBlockRow}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{col, length, levenshtein, lit}
 
@@ -19,11 +19,11 @@ private[query] sealed trait Plan extends Serializable {
   def terms: Seq[String]
 
   /** Top-k over `blocks` (term → blocks; terms outside the plan are
-    * ignored). `theta` seeds the WAND threshold; `allow`, honoured by
-    * [[Plan.Disj]] only, vetoes docIds before the heap. */
-  def run(blocks: Plan.Blocks, avgdl: Double, k: Int,
-          theta: Double = Double.NegativeInfinity,
-          allow: Long => Boolean = null): Vector[QueryHit]
+    * ignored) into `top`, whose live k-th score is the WAND threshold.
+    * `allow`, honoured by [[Plan.Disj]] only, vetoes docIds before the
+    * collector. */
+  def run(blocks: Plan.Blocks, avgdl: Double, top: Wand.TopKMerger,
+          allow: Long => Boolean = null): Unit
 }
 
 private[query] object Plan {
@@ -38,19 +38,17 @@ private[query] object Plan {
   /** Disjunction over boost-scaled idfs; a doc needs `minMatch` terms. */
   final case class Disj(idfs: Map[String, Double], minMatch: Int = 1) extends Plan {
     val terms: Seq[String] = idfs.keys.toSeq.sorted
-    def run(blocks: Blocks, avgdl: Double, k: Int, theta: Double,
-            allow: Long => Boolean): Vector[QueryHit] =
-      Wand.topK(pick(blocks, terms), idfs, avgdl, k, theta, allow, minMatch)
+    def run(blocks: Blocks, avgdl: Double, top: Wand.TopKMerger, allow: Long => Boolean): Unit =
+      Wand.topK(pick(blocks, terms), idfs, avgdl, top, allow, minMatch)
   }
 
   /** Every `must` term required, any `not` term excluding; scored over `must`. */
   final case class Conj(must: Seq[String], not: Seq[String],
                         idfs: Map[String, Double]) extends Plan {
     def terms: Seq[String] = must ++ not
-    def run(blocks: Blocks, avgdl: Double, k: Int, theta: Double,
-            allow: Long => Boolean): Vector[QueryHit] = {
+    def run(blocks: Blocks, avgdl: Double, top: Wand.TopKMerger, allow: Long => Boolean): Unit = {
       noFilter(allow)
-      Wand.topKConjunctive(pick(blocks, must), pick(blocks, not), idfs, avgdl, k, must, theta)
+      Wand.topKConjunctive(pick(blocks, must), pick(blocks, not), idfs, avgdl, top, must)
     }
   }
 
@@ -58,20 +56,18 @@ private[query] object Plan {
     * idf summed over the term occurrences. */
   final case class Near(seq: IndexedSeq[String], idfSum: Double, slop: Int) extends Plan {
     val terms: Seq[String] = seq.distinct
-    def run(blocks: Blocks, avgdl: Double, k: Int, theta: Double,
-            allow: Long => Boolean): Vector[QueryHit] = {
+    def run(blocks: Blocks, avgdl: Double, top: Wand.TopKMerger, allow: Long => Boolean): Unit = {
       noFilter(allow)
-      Wand.topKPhrase(pick(blocks, terms), seq, idfSum, avgdl, k, theta, slop)
+      Wand.topKPhrase(pick(blocks, terms), seq, idfSum, avgdl, top, slop)
     }
   }
 
   /** Two distinct terms within `slop` + 1 positions, either order. */
   final case class NearUnordered(a: String, b: String, idfSum: Double, slop: Int) extends Plan {
     def terms: Seq[String] = Seq(a, b)
-    def run(blocks: Blocks, avgdl: Double, k: Int, theta: Double,
-            allow: Long => Boolean): Vector[QueryHit] = {
+    def run(blocks: Blocks, avgdl: Double, top: Wand.TopKMerger, allow: Long => Boolean): Unit = {
       noFilter(allow)
-      Wand.topKNearUnordered2(pick(blocks, terms), a, b, slop, idfSum, avgdl, k, theta)
+      Wand.topKNearUnordered2(pick(blocks, terms), a, b, slop, idfSum, avgdl, top)
     }
   }
 }
@@ -108,7 +104,7 @@ private[query] object Shape {
       s"prefix '$p*' expands to $n terms (> $cap) — use a longer prefix or raise maxExpansions"
   }
   final case class Wild(pattern: String, cap: Int) extends Expansion {
-    private val re = java.util.regex.Pattern.compile(Wand.globToRegex(pattern))
+    private val re = java.util.regex.Pattern.compile(globToRegex(pattern))
     def column: Column = {
       val fixed = pattern.takeWhile(c => c != '*' && c != '?')
       val m = col("term").rlike(re.pattern)
@@ -122,7 +118,7 @@ private[query] object Shape {
     def column: Column =
       length(col("term")).between(q.length - maxEdits, q.length + maxEdits) &&
         levenshtein(col("term"), lit(q)) <= maxEdits
-    def matches(t: String): Boolean = Wand.editDistanceWithin(t, q, maxEdits)
+    def matches(t: String): Boolean = editDistance(t, q, maxEdits) <= maxEdits
     def tooMany(n: Int): String =
       s"'$q'~$maxEdits expands to $n terms (> $cap) — lower maxEdits or raise maxExpansions"
   }
@@ -142,6 +138,58 @@ private[query] object Shape {
     val q = raw.toLowerCase(java.util.Locale.ROOT)
     require(q.nonEmpty, "empty fuzzy term")
     Fuzzy(q, maxEdits, cap)
+  }
+
+  /** Translate a Lucene-style glob (`*` = any run, `?` = exactly one
+    * character) into an anchored regex. Literal characters are
+    * escaped one-by-one with a backslash (never `\Q…\E`, which RE2
+    * engines don't support) so the same string means the same thing
+    * to Java regex (Spark `rlike`) and to DuckDB's RE2
+    * `regexp_matches` — the wildcard specs and the gate oracle pin
+    * that parity. */
+  def globToRegex(glob: String): String = {
+    val sb = new StringBuilder("^")
+    glob.foreach {
+      case '*' => sb.append(".*")
+      case '?' => sb.append('.')
+      case c if c.isLetterOrDigit => sb.append(c)
+      case c => sb.append('\\').append(c)
+    }
+    sb.append('$').toString
+  }
+
+  /** Unit-cost Levenshtein distance (Wagner–Fischer, two rows). It
+    * MUST agree with Spark's and DuckDB's `levenshtein` (the fuzzy
+    * expansions filter with those and re-check with this; the fuzzy
+    * specs pin the parity), hence the CODE-POINT alphabet: both
+    * engines count code points, so supplementary-plane tokens must not
+    * be split into surrogate halves here. With a `cap`, the DP stops
+    * with `cap + 1` as soon as a whole row exceeds the cap: a result
+    * above the cap says only that the distance is above it. */
+  def editDistance(a: String, b: String, cap: Int = Int.MaxValue): Int = {
+    if (a == b) return 0
+    val s0 = a.codePoints().toArray
+    val t0 = b.codePoints().toArray
+    if (math.abs(s0.length - t0.length) > cap) return cap + 1
+    val (s, t) = if (s0.length <= t0.length) (s0, t0) else (t0, s0)
+    var prev = Array.tabulate(s.length + 1)(identity)
+    var cur = new Array[Int](s.length + 1)
+    var j = 1
+    while (j <= t.length) {
+      cur(0) = j
+      var rowMin = j
+      var i = 1
+      while (i <= s.length) {
+        val v = math.min(prev(i - 1) + (if (s(i - 1) == t(j - 1)) 0 else 1), math.min(prev(i), cur(i - 1)) + 1)
+        cur(i) = v
+        if (v < rowMin) rowMin = v
+        i += 1
+      }
+      if (rowMin > cap) return cap + 1
+      val tmp = prev; prev = cur; cur = tmp
+      j += 1
+    }
+    prev(s.length)
   }
 }
 

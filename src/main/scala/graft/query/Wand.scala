@@ -6,10 +6,29 @@ import graft.model.{PostingBlockRow, QueryHit}
 import scala.collection.mutable
 
 /**
- * Block-max WAND top-k over one segment's posting blocks (Broder et
+ * Block-max WAND top-k over docId-ordered posting blocks (Broder et
  * al., "Efficient query evaluation using a two-level retrieval
  * process", CIKM'03; Ding & Suel's block-max refinement, SIGIR'11 —
- * both public literature).
+ * both public literature), and the full match sets of the relational
+ * paths.
+ *
+ * Every kernel is built from three shared pieces:
+ *  - the COLLECTOR, [[TopKMerger]]: the one bounded heap. Every top-k
+ *    kernel writes its hits into it directly, and its live k-th score
+ *    θ, through [[TopKMerger.beats]], is the one pruning test. One
+ *    collector spans a whole query task (or the whole corpus in
+ *    [[LocalIndex]]), Lucene's shared `TopScoreDocCollector`;
+ *  - the LEAPFROG, [[leapfrog]]: the one intersection loop. The
+ *    sparsest required cursor drives, the others advance by skip
+ *    pointers, NOT cursors veto, and a bound callback ends the loop
+ *    early. It serves conjunctions, ordered and unordered proximity
+ *    and [[matchingDocIds]];
+ *  - the MATCH-SET MERGE, [[merge]]: the one ascending-docId k-way
+ *    cursor merge with a per-document scoring function. It serves
+ *    [[scoredDocIds]], [[scoredDocIdsSynonyms]] and
+ *    [[scoredDocIdsDirichlet]].
+ * The disjunction keeps its own pivot loop ([[topK]]), which needs
+ * cursors sorted by docId.
  *
  * Key properties:
  *  - blocks are decoded lazily: `advance(target)` skips whole blocks
@@ -25,14 +44,21 @@ import scala.collection.mutable
  *    so scores are bit-identical to the brute-force oracle;
  *  - tie-break (score desc, docId asc) is exact: candidates are visited
  *    in ascending docId, so an equal-score later candidate correctly
- *    loses to the in-heap k-th and the `ub <= θ` skip is lossless. The
+ *    loses to the collector's k-th and the bound test is lossless. The
  *    upper bound is inflated by 1e-9 relative to absorb summation-order
  *    rounding so it never under-estimates a true score.
  */
 object Wand extends Serializable {
 
+  /** A cursor over one term's blocks; the blocks are put in docId order
+    * (block doc ranges are disjoint, so max_doc_id is the total order
+    * even when a memory-capped mid-segment flush restarted block_id
+    * numbering). */
   final class Cursor(val term: String, val idf: Double,
-                     blocks: IndexedSeq[PostingBlockRow], avgdl: Double) {
+                     unsorted: IndexedSeq[PostingBlockRow], avgdl: Double) {
+    private val blocks = unsorted.sortBy(_.max_doc_id)
+    /** Postings in the list: the leapfrog's driver is the smallest. */
+    lazy val size: Long = blocks.iterator.map(_.n_docs.toLong).sum
     // suffix max of tfNorm(block_max_tf, block_min_dl, avgdl): bound
     // over this and all later blocks, computed once per search at the
     // current corpus avgdl
@@ -125,6 +151,21 @@ object Wand extends Serializable {
     }
   }
 
+  /** Term-sorted cursors over `blocks` (the summation order), empty
+    * lists dropped. */
+  private def open(blocks: Plan.Blocks, idf: String => Double, avgdl: Double): Array[Cursor] =
+    blocks.toArray.sortBy(_._1).map { case (t, bs) => new Cursor(t, idf(t), bs, avgdl) }.filterNot(_.exhausted)
+
+  /** Cursors over each of `terms` (distinct, ascending), or None when
+    * one has no postings here: a conjunction is segment-local, since
+    * docs live in exactly one segment. */
+  private def openAll(blocks: Plan.Blocks, terms: Seq[String], idf: String => Double,
+                      avgdl: Double): Option[Array[Cursor]] = {
+    val ts = terms.distinct.sorted
+    val cs = open(blocks.filter { case (t, _) => ts.contains(t) }, idf, avgdl)
+    if (ts.nonEmpty && cs.length == ts.length) Some(cs) else None
+  }
+
   /** Worst-first ordering for the bounded heap: head is the hit that
     * loses first under (score desc, docId asc). */
   private val worstFirst: Ordering[QueryHit] = new Ordering[QueryHit] {
@@ -135,33 +176,41 @@ object Wand extends Serializable {
   }
 
   /**
-   * Accumulating top-k merger for one query TASK spanning many
-   * segments — the shared-collector-threshold pattern of Lucene's
-   * per-segment search. Feed segments in ASCENDING docId order (the
-   * reader groups contiguous segment ranges, so this is free); after
-   * each segment, [[threshold]] is the θ to seed the next segment's
-   * evaluator with: scores strictly worse than the current kth can
-   * never surface, and an equal score correctly loses because every
-   * later segment's docIds exceed everything already in the heap
-   * (tie-break is docId ASC). One merger's result is O(k) rows per
-   * task, so the driver collects O(k · tasks), not O(k · segments).
+   * The one top-k collector, shared by every kernel a query task runs
+   * — the shared-collector-threshold pattern of Lucene's per-segment
+   * search. Feed segments in ASCENDING docId order (the reader groups
+   * contiguous segment ranges, so this is free): its k-th score θ is
+   * then the live threshold of every kernel ([[beats]]), since scores
+   * strictly worse than the current k-th can never surface, and an
+   * equal score correctly loses because every later docId exceeds
+   * everything already in the heap (tie-break is docId ASC). One
+   * collector's result is O(k) rows per task, so the driver collects
+   * O(k · tasks), not O(k · segments).
    */
   final class TopKMerger(k: Int) {
+    // PriorityQueue dequeues the MAX under its ordering; order by
+    // worstFirst reversed so head = worst of the current top-k
     private val heap = mutable.PriorityQueue.empty[QueryHit](worstFirst.reverse)
-    def threshold: Double =
-      if (heap.size >= k) heap.head.score else Double.NegativeInfinity
-    def offer(h: QueryHit): Unit = {
-      if (heap.size < k) heap.enqueue(h)
-      else {
-        val worst = heap.head
-        if (h.score > worst.score ||
-            (h.score == worst.score && h.doc_id < worst.doc_id)) {
-          heap.dequeue(); heap.enqueue(h)
-        }
+    /** θ: the k-th score once k hits are in (+∞ when k ≤ 0). */
+    private var theta = if (k <= 0) Double.PositiveInfinity else Double.NegativeInfinity
+
+    /** Whether a doc whose score is at most `bound` may still enter.
+      * The bound is inflated to absorb summation-order rounding: a pure
+      * overestimate is lossless, an underestimate would drop hits. */
+    def beats(bound: Double): Boolean =
+      bound * (1 + 1e-9) + java.lang.Double.MIN_VALUE > theta
+
+    /** Offers a hit; a [[QueryHit]] is allocated only if it enters. */
+    def offer(doc: Long, score: Double): Unit =
+      if (heap.size < k) {
+        heap.enqueue(QueryHit(doc, score))
+        if (heap.size == k) theta = heap.head.score
+      } else if (k > 0 && (score > theta || (score == theta && doc < heap.head.doc_id))) {
+        heap.dequeue(); heap.enqueue(QueryHit(doc, score))
+        theta = heap.head.score
       }
-    }
-    def offerAll(hs: Vector[QueryHit]): Unit = hs.foreach(offer)
-    /** Best-first; consumes the merger. */
+
+    /** Best-first; consumes the collector. */
     def result: Vector[QueryHit] = heap.dequeueAll.reverseIterator.toVector
   }
 
@@ -174,13 +223,95 @@ object Wand extends Serializable {
     }
 
   /**
-   * Top-k over one segment. `termBlocks` maps term → its blocks in this
-   * segment (ordered by docId range — block doc ranges are disjoint,
-   * so max_doc_id is the total order even when a memory-capped
-   * mid-segment flush restarted block_id numbering); `idfs` the
-   * global idf per term.
-   * `initialThreshold` lets callers seed θ (e.g. from another segment's
-   * results) — scores strictly worse can never surface.
+   * The one intersection loop, document at a time: the sparsest of
+   * `must` drives; the other cursors advance by skip pointers to each
+   * candidate, and any miss jumps the driver forward to the furthest
+   * of them (classic leapfrog); a `nots` cursor on an aligned candidate
+   * vetoes it. `hit` gets every surviving docId in ascending order,
+   * with all `must` cursors on it, for as long as `live()` holds.
+   * `live` is checked before each candidate, when every cursor sits at
+   * or before every doc still to come, so a test of the cursors'
+   * suffix block-max bounds there covers all of them: that is the
+   * block-max early exit a conjunction admits (the docId leapfrog
+   * already skips undecoded blocks structurally).
+   */
+  private def leapfrog(must: Array[Cursor], nots: Array[Cursor], live: () => Boolean)(
+      hit: Long => Unit): Unit = {
+    val driver = must.minBy(_.size)
+    val others = must.filterNot(_ eq driver)
+    while (!driver.exhausted && live()) {
+      val target = driver.docId
+      var maxSeen = target
+      var j = 0
+      while (j < others.length) {
+        val c = others(j)
+        c.advance(target)
+        if (c.docId > maxSeen) maxSeen = c.docId
+        j += 1
+      }
+      if (maxSeen == Long.MaxValue) return // a required list ran out
+      if (maxSeen == target) {
+        if (!nots.exists { n => n.advance(target); n.docId == target }) hit(target)
+        driver.next()
+      } else driver.advance(maxSeen)
+    }
+  }
+
+  /**
+   * The one match-set merge: an ascending-docId k-way merge over
+   * term-sorted `cursors`, emitting (docId, `score(docId)`) for every
+   * doc that at least `minMatch` cursors sit on. `score` runs while
+   * those cursors are on the doc and reads them in ascending term
+   * order, so a doc's score here is bit-equal to its top-k score. No
+   * heap, no pivot, no θ: the output is bounded by the segment size.
+   */
+  private def merge(cursors: Array[Cursor], minMatch: Int)(score: Long => Double): Iterator[(Long, Double)] = {
+    if (cursors.length < minMatch) return Iterator.empty
+    val out = Vector.newBuilder[(Long, Double)]
+    var doc = cursors.foldLeft(Long.MaxValue)((m, c) => math.min(m, c.docId))
+    while (doc != Long.MaxValue) {
+      if (cursors.count(_.docId == doc) >= minMatch) out += ((doc, score(doc)))
+      var next = Long.MaxValue
+      var i = 0
+      while (i < cursors.length) {
+        val c = cursors(i)
+        if (c.docId == doc) c.next()
+        if (c.docId < next) next = c.docId
+        i += 1
+      }
+      doc = next
+    }
+    out.result().iterator
+  }
+
+  /** `f` of every cursor folded with `op`, in term order (a suffix
+    * block-max bound of the cursors' lists). */
+  private def boundOf(cursors: Array[Cursor], f: Cursor => Double,
+                      op: (Double, Double) => Double): Double = {
+    var b = f(cursors(0))
+    var i = 1
+    while (i < cursors.length) { b = op(b, f(cursors(i))); i += 1 }
+    b
+  }
+
+  /** Σ `currentScore` of the cursors on `doc`, in term order. */
+  private def sumOn(cursors: Array[Cursor], doc: Long): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < cursors.length) {
+      val c = cursors(i)
+      if (c.docId == doc) s += c.currentScore
+      i += 1
+    }
+    s
+  }
+
+  /**
+   * Disjunctive top-k over one docId-ordered run of blocks into `top`.
+   * `termBlocks` maps term → its blocks; `idfs` the global idf per
+   * term. `allow`, when set, vetoes a candidate after alignment,
+   * before the collector, so filtered search keeps exact top-k
+   * semantics (bounds stay upper bounds).
    *
    * `minMatch` is Lucene's minimum-should-match: a candidate must
    * contain at least `minMatch` of the query terms (1 = plain
@@ -188,37 +319,16 @@ object Wand extends Serializable {
    * below the docId-sorted cursor at index m−1 appears in fewer than
    * m posting lists (cursors only move forward, so only cursors at or
    * below D can contain it), so the pivot is the first index i with
-   * BOTH i ≥ m−1 AND prefix-UB(0..i) > θ — if i > m−1 the UB test
+   * BOTH i ≥ m−1 AND prefix-UB(0..i) beats θ — if i > m−1 the UB test
    * failed at i−1 (≥ m−1), so any doc before the pivot either cannot
    * reach m matches or cannot beat θ. Both conditions only REMOVE
    * candidates, so the score bounds stay upper bounds.
    */
-  def topK(termBlocks: Map[String, IndexedSeq[PostingBlockRow]],
-           idfs: Map[String, Double], avgdl: Double, k: Int,
-           initialThreshold: Double = Double.NegativeInfinity,
-           allow: Long => Boolean = null,
-           minMatch: Int = 1): Vector[QueryHit] = {
-    // cursors in ascending term order — fixes summation order
-    val cursors = termBlocks.toArray.sortBy(_._1).map { case (t, blocks) =>
-      new Cursor(t, idfs.getOrElse(t, 0.0), blocks.sortBy(_.max_doc_id), avgdl)
-    }.filterNot(_.exhausted)
+  def topK(termBlocks: Plan.Blocks, idfs: Map[String, Double], avgdl: Double,
+           top: TopKMerger, allow: Long => Boolean = null, minMatch: Int = 1): Unit = {
+    val cursors = open(termBlocks, idfs.getOrElse(_, 0.0), avgdl)
     val mm = math.max(1, minMatch)
-    if (cursors.length < mm || k <= 0) return Vector.empty
-
-    // PriorityQueue dequeues the MAX under its ordering; order by
-    // worstFirst reversed so head = worst of the current top-k.
-    val heap = mutable.PriorityQueue.empty[QueryHit](worstFirst.reverse)
-    def theta: Double = if (heap.size >= k) heap.head.score else initialThreshold
-    def offer(doc: Long, s: Double): Unit = {
-      if (heap.size < k) { if (s > initialThreshold) heap.enqueue(QueryHit(doc, s)) }
-      else {
-        val worst = heap.head
-        if (s > worst.score || (s == worst.score && doc < worst.doc_id)) {
-          heap.dequeue(); heap.enqueue(QueryHit(doc, s))
-        }
-      }
-    }
-
+    if (cursors.length < mm) return
     val byDoc = cursors.clone()
     val cmp = new java.util.Comparator[Cursor] {
       override def compare(a: Cursor, b: Cursor): Int = {
@@ -226,263 +336,85 @@ object Wand extends Serializable {
         if (c != 0) c else a.term.compareTo(b.term)
       }
     }
-
-    var done = false
-    while (!done) {
+    while (true) {
       java.util.Arrays.sort(byDoc, cmp)
-      // pivot = first prefix whose cumulative upper bound can beat θ;
-      // bound inflated to absorb summation-order rounding (a pure
-      // overestimate is lossless, an underestimate would drop hits)
-      val t = theta
+      // pivot = first prefix whose cumulative upper bound can beat θ
       var ub = 0.0
       var pivot = -1
       var i = 0
       while (i < byDoc.length && pivot < 0) {
         ub += byDoc(i).maxRemainingScore
-        if (i >= mm - 1 &&
-            ub * (1 + 1e-9) + java.lang.Double.MIN_VALUE > t) pivot = i
+        if (i >= mm - 1 && top.beats(ub)) pivot = i
         i += 1
       }
-      if (pivot < 0 || byDoc(pivot).exhausted) done = true
-      else {
-        val pivotDoc = byDoc(pivot).docId
-        if (byDoc(0).docId == pivotDoc) {
-          // lead cursors aligned on pivotDoc → full score, accumulated
-          // in term order over cursors[] (term-sorted at construction).
-          // A metadata filter (`allow`) drops the candidate here —
-          // after alignment, before the heap — so filtered search
-          // keeps exact top-k semantics (bounds stay upper bounds).
-          var j = 0
-          if (allow == null || allow(pivotDoc)) {
-            var s = 0.0
-            var matched = 0
-            while (j < cursors.length) {
-              val c = cursors(j)
-              if (!c.exhausted && c.docId == pivotDoc) {
-                s += c.currentScore; matched += 1
-              }
-              j += 1
-            }
-            if (matched >= mm) offer(pivotDoc, s)
-          }
-          j = 0
-          while (j < byDoc.length) {
-            if (byDoc(j).docId == pivotDoc) byDoc(j).next(); j += 1
-          }
-        } else {
-          // advance all cursors before the pivot up to pivotDoc
-          var j = 0
-          while (j < pivot) { byDoc(j).advance(pivotDoc); j += 1 }
-        }
+      if (pivot < 0 || byDoc(pivot).exhausted) return
+      val pivotDoc = byDoc(pivot).docId
+      if (byDoc(0).docId == pivotDoc) {
+        // lead cursors aligned on pivotDoc → full score, accumulated
+        // in term order over cursors[] (term-sorted at construction)
+        // (one term always matches: byDoc(0) sits on pivotDoc)
+        if ((allow == null || allow(pivotDoc)) && (mm == 1 || cursors.count(_.docId == pivotDoc) >= mm))
+          top.offer(pivotDoc, sumOn(cursors, pivotDoc))
+        var j = 0
+        while (j < byDoc.length) { if (byDoc(j).docId == pivotDoc) byDoc(j).next(); j += 1 }
+      } else {
+        // advance all cursors before the pivot up to pivotDoc
+        var j = 0
+        while (j < pivot) { byDoc(j).advance(pivotDoc); j += 1 }
       }
     }
-    heap.dequeueAll.reverseIterator.toVector // best-first
   }
 
   /**
-   * Conjunctive (AND) top-k with optional exclusion (NOT) over one
-   * segment — the boolean query shape the reference gets from its
-   * Solr/Lucene sink. Document-at-a-time intersection: the sparsest
-   * must-term drives; the other cursors advance by skip pointers to
-   * each candidate, any miss jumps the driver forward to the furthest
-   * cursor (classic leapfrog). NOT cursors advance alongside and veto.
-   * Scores accumulate over the must terms in ascending term order —
-   * same summation contract as [[topK]].
-   *
-   * Every must term must have postings in this segment or the segment
-   * contributes nothing (docs live in exactly one segment, so
-   * conjunction is segment-local).
+   * Conjunctive (AND) top-k with optional exclusion (NOT) into `top` —
+   * the boolean query shape the reference gets from its Solr/Lucene
+   * sink: the [[leapfrog]] over the must terms, scored over them in
+   * ascending term order (same summation contract as [[topK]]). The
+   * early exit: Σ suffix block-max bounds ≥ any remaining candidate's
+   * score, so once that sum cannot beat θ the rest of the run cannot
+   * change the collector.
    */
-  def topKConjunctive(mustBlocks: Map[String, IndexedSeq[PostingBlockRow]],
-                      notBlocks: Map[String, IndexedSeq[PostingBlockRow]],
-                      idfs: Map[String, Double], avgdl: Double, k: Int,
-                      mustTerms: Seq[String],
-                      initialThreshold: Double = Double.NegativeInfinity): Vector[QueryHit] = {
-    if (mustTerms.isEmpty || k <= 0) return Vector.empty
-    val terms = mustTerms.distinct.sorted
-    if (!terms.forall(t => mustBlocks.get(t).exists(_.nonEmpty))) return Vector.empty
-    // term-sorted cursors fix the summation order; the sparsest term
-    // (fewest postings) drives the intersection
-    val cursors = terms.map { t =>
-      new Cursor(t, idfs.getOrElse(t, 0.0), mustBlocks(t).sortBy(_.max_doc_id), avgdl)
-    }.toArray
-    val sizes = terms.map(t => mustBlocks(t).map(_.n_docs.toLong).sum)
-    val driver = cursors(sizes.zipWithIndex.minBy(x => (x._1, x._2))._2)
-    val others = cursors.filterNot(_ eq driver)
-    val nots = notBlocks.toArray.sortBy(_._1).map { case (t, bs) =>
-      new Cursor(t, 0.0, bs.sortBy(_.max_doc_id), avgdl)
-    }
-
-    val heap = mutable.PriorityQueue.empty[QueryHit](worstFirst.reverse)
-    def offer(doc: Long, s: Double): Unit = {
-      if (heap.size < k) { if (s > initialThreshold) heap.enqueue(QueryHit(doc, s)) }
-      else {
-        val worst = heap.head
-        if (s > worst.score || (s == worst.score && doc < worst.doc_id)) {
-          heap.dequeue(); heap.enqueue(QueryHit(doc, s))
-        }
+  def topKConjunctive(mustBlocks: Plan.Blocks, notBlocks: Plan.Blocks,
+                      idfs: Map[String, Double], avgdl: Double, top: TopKMerger,
+                      mustTerms: Seq[String]): Unit =
+    openAll(mustBlocks, mustTerms, idfs.getOrElse(_, 0.0), avgdl).foreach { cursors =>
+      leapfrog(cursors, open(notBlocks, _ => 0.0, avgdl),
+        () => top.beats(boundOf(cursors, _.maxRemainingScore, _ + _))) { doc =>
+        top.offer(doc, sumOn(cursors, doc))
       }
     }
-
-    while (!driver.exhausted) {
-      // block-max early termination (the conjunctive analog of topK's
-      // pivot test): Σ suffix block-max bounds ≥ any remaining
-      // candidate's score, so once the inflated sum cannot beat θ the
-      // rest of the segment cannot change the heap — future docIds
-      // all exceed every heap entry's, so score ties never replace
-      // either. The inflation mirrors topK's (a pure overestimate is
-      // lossless; an underestimate would drop hits). At 10× list
-      // length on fixed cores this is the one score-based skip a
-      // conjunction admits (the docId leapfrog already skips
-      // undecoded blocks structurally).
-      val t = if (heap.size >= k) heap.head.score else initialThreshold
-      if (t != Double.NegativeInfinity) {
-        var ub = 0.0
-        var i = 0
-        while (i < cursors.length) { ub += cursors(i).maxRemainingScore; i += 1 }
-        if (!(ub * (1 + 1e-9) + java.lang.Double.MIN_VALUE > t))
-          return heap.dequeueAll.reverseIterator.toVector
-      }
-      val target = driver.docId
-      var maxSeen = target
-      var allMatch = true
-      var j = 0
-      while (j < others.length) {
-        val c = others(j)
-        c.advance(target)
-        if (c.exhausted) return heap.dequeueAll.reverseIterator.toVector
-        if (c.docId != target) { allMatch = false; if (c.docId > maxSeen) maxSeen = c.docId }
-        j += 1
-      }
-      if (allMatch) {
-        var excluded = false
-        var n = 0
-        while (n < nots.length && !excluded) {
-          nots(n).advance(target)
-          if (!nots(n).exhausted && nots(n).docId == target) excluded = true
-          n += 1
-        }
-        if (!excluded) {
-          var s = 0.0
-          var i = 0
-          while (i < cursors.length) { s += cursors(i).currentScore; i += 1 }
-          offer(target, s)
-        }
-        driver.next()
-      } else driver.advance(maxSeen)
-    }
-    heap.dequeueAll.reverseIterator.toVector
-  }
 
   /**
    * The FULL match set of a conjunction over one segment — the
-   * [[topKConjunctive]] leapfrog with no scoring and no heap: every
-   * docId containing all must terms and no not term, emitted in
-   * ascending order. Serves search-as-relational-operator paths
-   * (facet counting, match counting, export joins) where the consumer
-   * is a distributed aggregation, not a top-k collect — scores would
-   * be paid and thrown away, so the cursors carry idf 0 and never
-   * call the tf normalizer.
+   * [[leapfrog]] with no scoring and no collector: every docId
+   * containing all must terms and no not term, emitted in ascending
+   * order. Serves search-as-relational-operator paths (facet counting,
+   * match counting, export joins) where the consumer is a distributed
+   * aggregation, not a top-k collect — scores would be paid and thrown
+   * away, so the cursors carry idf 0 and never call the tf normalizer.
    */
-  def matchingDocIds(mustBlocks: Map[String, IndexedSeq[PostingBlockRow]],
-                     notBlocks: Map[String, IndexedSeq[PostingBlockRow]],
+  def matchingDocIds(mustBlocks: Plan.Blocks, notBlocks: Plan.Blocks,
                      mustTerms: Seq[String]): Iterator[Long] = {
-    if (mustTerms.isEmpty) return Iterator.empty
-    val terms = mustTerms.distinct.sorted
-    // conjunction is segment-local (docs live in exactly one segment):
-    // any absent must-term empties this segment's contribution
-    if (!terms.forall(t => mustBlocks.get(t).exists(_.nonEmpty))) return Iterator.empty
-    val cursors = terms.map { t =>
-      new Cursor(t, 0.0, mustBlocks(t).sortBy(_.max_doc_id), 1.0)
-    }.toArray
-    val sizes = terms.map(t => mustBlocks(t).map(_.n_docs.toLong).sum)
-    val driver = cursors(sizes.zipWithIndex.minBy(x => (x._1, x._2))._2)
-    val others = cursors.filterNot(_ eq driver)
-    val nots = notBlocks.toArray.sortBy(_._1).map { case (t, bs) =>
-      new Cursor(t, 0.0, bs.sortBy(_.max_doc_id), 1.0)
-    }
-
     val out = Vector.newBuilder[Long]
-    var done = false
-    while (!driver.exhausted && !done) {
-      val target = driver.docId
-      var maxSeen = target
-      var allMatch = true
-      var j = 0
-      while (j < others.length && !done) {
-        val c = others(j)
-        c.advance(target)
-        if (c.exhausted) { done = true; allMatch = false }
-        else {
-          if (c.docId != target) { allMatch = false; if (c.docId > maxSeen) maxSeen = c.docId }
-          j += 1
-        }
-      }
-      if (!done) {
-        if (allMatch) {
-          var excluded = false
-          var n = 0
-          while (n < nots.length && !excluded) {
-            nots(n).advance(target)
-            if (!nots(n).exhausted && nots(n).docId == target) excluded = true
-            n += 1
-          }
-          if (!excluded) out += target
-          driver.next()
-        } else driver.advance(maxSeen)
-      }
+    openAll(mustBlocks, mustTerms, _ => 0.0, 1.0).foreach { cursors =>
+      leapfrog(cursors, open(notBlocks, _ => 0.0, 1.0), () => true)(out += _)
     }
     out.result().iterator
   }
 
   /**
    * EVERY matching doc's full disjunctive BM25 score over one segment
-   * — the scored sibling of [[matchingDocIds]]: no heap, no pivot, no
-   * θ; a plain k-way cursor merge emitting (docId, score) in ascending
-   * docId order, scores accumulated in ascending term order (the
-   * [[topK]] summation contract, so a doc's score here is bit-equal to
-   * its top-k score). Serves search-as-relational-operator paths that
-   * need scores — field collapsing / grouping, score-weighted exports
-   * — where the consumer is a distributed aggregation, not a top-k
+   * — the scored sibling of [[matchingDocIds]]: the [[merge]] with
+   * [[topK]]'s per-doc sum, so a doc's score here is bit-equal to its
+   * top-k score. Serves search-as-relational-operator paths that need
+   * scores — field collapsing / grouping, score-weighted exports —
+   * where the consumer is a distributed aggregation, not a top-k
    * collect. `minMatch` filters to docs matching ≥ m query terms.
    */
-  def scoredDocIds(termBlocks: Map[String, IndexedSeq[PostingBlockRow]],
-                   idfs: Map[String, Double], avgdl: Double,
+  def scoredDocIds(termBlocks: Plan.Blocks, idfs: Map[String, Double], avgdl: Double,
                    minMatch: Int = 1): Iterator[(Long, Double)] = {
-    val cursors = termBlocks.toArray.sortBy(_._1).map { case (t, blocks) =>
-      new Cursor(t, idfs.getOrElse(t, 0.0), blocks.sortBy(_.max_doc_id), avgdl)
-    }.filterNot(_.exhausted)
-    val mm = math.max(1, minMatch)
-    if (cursors.length < mm) return Iterator.empty
-    val out = Vector.newBuilder[(Long, Double)] // bounded by segment size
-    var live = true
-    while (live) {
-      var min = Long.MaxValue
-      var i = 0
-      while (i < cursors.length) {
-        val d = cursors(i).docId
-        if (d < min) min = d
-        i += 1
-      }
-      if (min == Long.MaxValue) live = false
-      else {
-        var s = 0.0
-        var matched = 0
-        i = 0
-        while (i < cursors.length) { // ascending term order
-          val c = cursors(i)
-          if (c.docId == min) { s += c.currentScore; matched += 1 }
-          i += 1
-        }
-        if (matched >= mm) out += ((min, s))
-        i = 0
-        while (i < cursors.length) {
-          if (cursors(i).docId == min) cursors(i).next()
-          i += 1
-        }
-      }
-    }
-    out.result().iterator
+    val cursors = open(termBlocks, idfs.getOrElse(_, 0.0), avgdl)
+    merge(cursors, math.max(1, minMatch))(sumOn(cursors, _))
   }
 
   /**
@@ -492,62 +424,33 @@ object Wand extends Serializable {
    * Lucene's choices: summed tf treats members as occurrences of the
    * same concept; max df keeps the idf of the most common member so
    * expansion never inflates rarity). Groups combine disjunctively.
-   * Same ascending-term cursor merge as [[scoredDocIds]]; the group
-   * accumulation sums member tfs at the aligned doc BEFORE the
-   * saturation curve, which is what distinguishes a synonym group
+   * The [[merge]]'s scorer sums member tfs at the aligned doc BEFORE
+   * the saturation curve, which is what distinguishes a synonym group
    * from a plain OR of its members. Deterministic: group scores sum
    * in ascending group order.
    */
-  def scoredDocIdsSynonyms(termBlocks: Map[String, IndexedSeq[PostingBlockRow]],
-                           termGroup: Map[String, Int],
-                           groupIdfs: Array[Double],
-                           avgdl: Double): Iterator[(Long, Double)] = {
-    val cursors = termBlocks.toArray.sortBy(_._1).map { case (t, blocks) =>
-      new Cursor(t, 0.0, blocks.sortBy(_.max_doc_id), avgdl)
-    }.filterNot(_.exhausted)
-    if (cursors.isEmpty) return Iterator.empty
+  def scoredDocIdsSynonyms(termBlocks: Plan.Blocks, termGroup: Map[String, Int],
+                           groupIdfs: Array[Double], avgdl: Double): Iterator[(Long, Double)] = {
+    val cursors = open(termBlocks, _ => 0.0, avgdl)
     val groupOf = cursors.map(c => termGroup(c.term))
-    val nGroups = groupIdfs.length
-    val groupTf = new Array[Int](nGroups)
-    val out = Vector.newBuilder[(Long, Double)] // bounded by segment size
-    var live = true
-    while (live) {
-      var min = Long.MaxValue
+    val groupTf = new Array[Int](groupIdfs.length)
+    merge(cursors, 1) { doc =>
+      java.util.Arrays.fill(groupTf, 0)
+      var dl = 0
       var i = 0
       while (i < cursors.length) {
-        val d = cursors(i).docId
-        if (d < min) min = d
+        val c = cursors(i)
+        if (c.docId == doc) { groupTf(groupOf(i)) += c.currentTf; dl = c.currentDl }
         i += 1
       }
-      if (min == Long.MaxValue) live = false
-      else {
-        java.util.Arrays.fill(groupTf, 0)
-        var dl = 0
-        i = 0
-        while (i < cursors.length) {
-          val c = cursors(i)
-          if (c.docId == min) {
-            groupTf(groupOf(i)) += c.currentTf
-            dl = c.currentDl
-          }
-          i += 1
-        }
-        var s = 0.0
-        var g = 0
-        while (g < nGroups) { // ascending group order
-          if (groupTf(g) > 0)
-            s += groupIdfs(g) * BM25.tfNorm(groupTf(g), dl, avgdl)
-          g += 1
-        }
-        out += ((min, s))
-        i = 0
-        while (i < cursors.length) {
-          if (cursors(i).docId == min) cursors(i).next()
-          i += 1
-        }
+      var s = 0.0
+      var g = 0
+      while (g < groupTf.length) { // ascending group order
+        if (groupTf(g) > 0) s += groupIdfs(g) * BM25.tfNorm(groupTf(g), dl, avgdl)
+        g += 1
       }
+      s
     }
-    out.result().iterator
   }
 
   /**
@@ -555,62 +458,34 @@ object Wand extends Serializable {
    * similarity (Zhai & Lafferty '01; Lucene LMDirichletSimilarity):
    * per matched term, max(0, ln(1 + tf/(μ·p(t|C))) + ln(μ/(dl+μ)))
    * with p(t|C) = cf(t)/totalTokens, the per-term clamp being Lucene's
-   * non-negative-score guarantee. Same ascending-term cursor merge as
-   * [[scoredDocIds]] (deterministic summation order); `ps` carries
-   * each term's collection probability. The LM scorer serves through
-   * the relational path (match set → TakeOrdered), not the WAND heap —
-   * BM25 stays the pruned serving scorer; block-max metadata bounds
+   * non-negative-score guarantee. The [[merge]] in ascending term
+   * order (deterministic summation); `ps` carries each term's
+   * collection probability. The LM scorer serves through the
+   * relational path (match set → TakeOrdered), not the WAND collector
+   * — BM25 stays the pruned serving scorer; block-max metadata bounds
    * tfNorm, not the LM saturation curve.
    */
-  def scoredDocIdsDirichlet(termBlocks: Map[String, IndexedSeq[PostingBlockRow]],
-                            ps: Map[String, Double], mu: Double,
+  def scoredDocIdsDirichlet(termBlocks: Plan.Blocks, ps: Map[String, Double], mu: Double,
                             minMatch: Int = 1): Iterator[(Long, Double)] = {
-    val cursors = termBlocks.toArray.sortBy(_._1).map { case (t, blocks) =>
-      new Cursor(t, ps.getOrElse(t, 0.0), blocks.sortBy(_.max_doc_id), 1.0)
-    }.filterNot(_.exhausted)
-    val mm = math.max(1, minMatch)
-    if (cursors.length < mm) return Iterator.empty
-    val out = Vector.newBuilder[(Long, Double)] // bounded by segment size
-    var live = true
-    while (live) {
-      var min = Long.MaxValue
+    val cursors = open(termBlocks, _ => 0.0, 1.0)
+    val p = cursors.map(c => ps.getOrElse(c.term, 0.0))
+    merge(cursors, math.max(1, minMatch)) { doc =>
+      var s = 0.0
       var i = 0
-      while (i < cursors.length) {
-        val d = cursors(i).docId
-        if (d < min) min = d
+      while (i < cursors.length) { // ascending term order
+        val c = cursors(i)
+        if (c.docId == doc)
+          s += math.max(0.0, math.log(1.0 + c.currentTf / (mu * p(i))) + math.log(mu / (c.currentDl + mu)))
         i += 1
       }
-      if (min == Long.MaxValue) live = false
-      else {
-        var s = 0.0
-        var matched = 0
-        i = 0
-        while (i < cursors.length) { // ascending term order
-          val c = cursors(i)
-          if (c.docId == min) {
-            val tf = c.currentTf; val dl = c.currentDl
-            val term = math.log(1.0 + tf / (mu * c.idf)) +
-              math.log(mu / (dl + mu)) // c.idf carries p(t|C) here
-            s += math.max(0.0, term)
-            matched += 1
-          }
-          i += 1
-        }
-        if (matched >= mm) out += ((min, s))
-        i = 0
-        while (i < cursors.length) {
-          if (cursors(i).docId == min) cursors(i).next()
-          i += 1
-        }
-      }
+      s
     }
-    out.result().iterator
   }
 
   /**
-   * Exact phrase top-k over one segment, index-only (format v3
-   * positions): conjunctive leapfrog over the phrase's distinct terms,
-   * then ordered-adjacency counting by position-list intersection —
+   * Exact phrase top-k into `top`, index-only (format v3 positions):
+   * the [[leapfrog]] over the phrase's distinct terms, then
+   * ordered-adjacency counting by position-list intersection —
    * pf = |{p : p ∈ pos(t_0), p+1 ∈ pos(t_1), …}|. Scoring is Lucene
    * PhraseQuery semantics: one "term" whose tf is the phrase frequency
    * and whose idf is Σ idf(term_i) over the phrase's terms IN ORDER
@@ -626,79 +501,28 @@ object Wand extends Serializable {
    * pf counts matching starts, each weighted 1 (the span count —
    * simpler than Lucene's 1/(1+dist) sloppyFreq, and reproducible in
    * plain SQL; slop = 0 degenerates to exact adjacency, bit-equal to
-   * the phrase path). With slop, a later term's position may serve
-   * several starts, so the early-termination bound uses only t₀'s
-   * block bound (pf ≤ tf(t₀) always; the min-over-terms bound of the
-   * exact case no longer holds).
+   * the phrase path).
+   *
+   * Early exit: the phrase frequency of a doc is bounded by EVERY
+   * term's tf there, so idfSum · min_i(suffix tfNorm bound_i) bounds
+   * any remaining phrase score (tfNorm is increasing in tf and each
+   * cursor's bound already absorbs the doc-length direction via
+   * block_min_dl). With slop, a later term's position may serve
+   * several starts, so the bound uses only t₀'s (pf ≤ tf(t₀) always).
    */
-  def topKPhrase(blocks: Map[String, IndexedSeq[PostingBlockRow]],
-                 phraseTerms: Seq[String], idfSum: Double, avgdl: Double,
-                 k: Int,
-                 initialThreshold: Double = Double.NegativeInfinity,
-                 slop: Int = 0): Vector[QueryHit] = {
-    if (phraseTerms.isEmpty || k <= 0) return Vector.empty
-    val distinct = phraseTerms.distinct.sorted
-    if (!distinct.forall(t => blocks.get(t).exists(_.nonEmpty))) return Vector.empty
-    val byTerm = distinct.map { t =>
-      t -> new Cursor(t, 0.0, blocks(t).sortBy(_.max_doc_id), avgdl)
-    }.toMap
-    val cursors = byTerm.values.toArray
-    val sizes = distinct.map(t => blocks(t).map(_.n_docs.toLong).sum)
-    val driver = byTerm(distinct(sizes.zipWithIndex.minBy(x => (x._1, x._2))._2))
-    val others = cursors.filterNot(_ eq driver)
-    // phrase slot s → its term's cursor (duplicate terms share one)
-    val slots = phraseTerms.map(byTerm).toArray
-
-    val heap = mutable.PriorityQueue.empty[QueryHit](worstFirst.reverse)
-    def offer(doc: Long, s: Double): Unit = {
-      if (heap.size < k) { if (s > initialThreshold) heap.enqueue(QueryHit(doc, s)) }
-      else {
-        val worst = heap.head
-        if (s > worst.score || (s == worst.score && doc < worst.doc_id)) {
-          heap.dequeue(); heap.enqueue(QueryHit(doc, s))
-        }
-      }
-    }
-
-    val m = slots.length
-    val flats = new Array[Array[Int]](m)
-    val froms = new Array[Int](m)
-    val untils = new Array[Int](m)
-    val ptrs = new Array[Int](m)
-
-    while (!driver.exhausted) {
-      // block-max early termination: the phrase frequency of a doc is
-      // bounded by EVERY term's tf there, so idfSum · min_i(suffix
-      // tfNorm bound_i) bounds any remaining phrase score (tfNorm is
-      // increasing in tf and each cursor's bound already absorbs the
-      // doc-length direction via block_min_dl). Same inflated-bound
-      // convention as topK — overestimates are lossless.
-      val t = if (heap.size >= k) heap.head.score else initialThreshold
-      if (t != Double.NegativeInfinity) {
-        var minTfn = Double.MaxValue
-        if (slop == 0) {
-          var i = 0
-          while (i < cursors.length) {
-            val b = cursors(i).maxRemainingTfNorm
-            if (b < minTfn) minTfn = b
-            i += 1
-          }
-        } else minTfn = slots(0).maxRemainingTfNorm // pf <= tf(t0) only
-        if (!(idfSum * minTfn * (1 + 1e-9) + java.lang.Double.MIN_VALUE > t))
-          return heap.dequeueAll.reverseIterator.toVector
-      }
-      val target = driver.docId
-      var maxSeen = target
-      var allMatch = true
-      var j = 0
-      while (j < others.length) {
-        val c = others(j)
-        c.advance(target)
-        if (c.exhausted) return heap.dequeueAll.reverseIterator.toVector
-        if (c.docId != target) { allMatch = false; if (c.docId > maxSeen) maxSeen = c.docId }
-        j += 1
-      }
-      if (allMatch) {
+  def topKPhrase(blocks: Plan.Blocks, phraseTerms: Seq[String], idfSum: Double,
+                 avgdl: Double, top: TopKMerger, slop: Int = 0): Unit =
+    openAll(blocks, phraseTerms, _ => 0.0, avgdl).foreach { cursors =>
+      // phrase slot s → its term's cursor (duplicate terms share one)
+      val slots = phraseTerms.map(t => cursors.find(_.term == t).get).toArray
+      val m = slots.length
+      val flats = new Array[Array[Int]](m)
+      val froms = new Array[Int](m)
+      val untils = new Array[Int](m)
+      val ptrs = new Array[Int](m)
+      def bound: Double =
+        if (slop == 0) boundOf(cursors, _.maxRemainingTfNorm, math.min) else slots(0).maxRemainingTfNorm
+      leapfrog(cursors, Array.empty, () => top.beats(idfSum * bound)) { doc =>
         // ordered-adjacency count over the aligned doc's position lists
         var s = 0
         while (s < m) {
@@ -732,56 +556,28 @@ object Wand extends Serializable {
           if (ok && prev - p0 <= maxWidth) pf += 1
           i0 += 1
         }
-        if (pf > 0) offer(target, idfSum * BM25.tfNorm(pf, driver.currentDl, avgdl))
-        driver.next()
-      } else driver.advance(maxSeen)
+        if (pf > 0) top.offer(doc, idfSum * BM25.tfNorm(pf, slots(0).currentDl, avgdl))
+      }
     }
-    heap.dequeueAll.reverseIterator.toVector
-  }
 
-  /** Two-term UNORDERED proximity top-k over one segment
-    * (SpanNearQuery inOrder=false at m = 2): pf counts positions p of
-    * `termA` with ANY `termB` position within |q − p| ≤ slop + 1 —
-    * the symmetric within-window test, anchored on termA's
-    * occurrences so each A-position counts once and pf ≤ tf(A) (the
-    * early-termination bound). Two monotone pointers over the aligned
+  /** Two-term UNORDERED proximity top-k into `top` (SpanNearQuery
+    * inOrder=false at m = 2): the [[leapfrog]] over both terms; pf
+    * counts positions p of `termA` with ANY `termB` position within
+    * |q − p| ≤ slop + 1 — the symmetric within-window test, anchored on
+    * termA's occurrences so each A-position counts once and pf ≤ tf(A)
+    * (the early-exit bound). Two monotone pointers over the aligned
     * doc's position lists — each list scanned once per doc, like the
     * ordered kernel. Scoring is the phrase family's: tf = pf, idf =
     * idf(A) + idf(B). The m-term generalization needs a min-window
     * walk over m lists; two terms cover the dominant unordered use
     * and keep the semantics SQL-reproducible. */
-  def topKNearUnordered2(blocks: Map[String, IndexedSeq[PostingBlockRow]],
-                         termA: String, termB: String, slop: Int,
-                         idfSum: Double, avgdl: Double, k: Int,
-                         initialThreshold: Double = Double.NegativeInfinity): Vector[QueryHit] = {
+  def topKNearUnordered2(blocks: Plan.Blocks, termA: String, termB: String, slop: Int,
+                         idfSum: Double, avgdl: Double, top: TopKMerger): Unit = {
     require(termA != termB, "unordered near needs two distinct terms")
-    if (k <= 0) return Vector.empty
-    if (!blocks.get(termA).exists(_.nonEmpty) ||
-        !blocks.get(termB).exists(_.nonEmpty)) return Vector.empty
-    val ca = new Cursor(termA, 0.0, blocks(termA).sortBy(_.max_doc_id), avgdl)
-    val cb = new Cursor(termB, 0.0, blocks(termB).sortBy(_.max_doc_id), avgdl)
-    val d = slop + 1
-    val heap = mutable.PriorityQueue.empty[QueryHit](worstFirst.reverse)
-    def offer(doc: Long, s: Double): Unit = {
-      if (heap.size < k) { if (s > initialThreshold) heap.enqueue(QueryHit(doc, s)) }
-      else {
-        val worst = heap.head
-        if (s > worst.score || (s == worst.score && doc < worst.doc_id)) {
-          heap.dequeue(); heap.enqueue(QueryHit(doc, s))
-        }
-      }
-    }
-    while (!ca.exhausted && !cb.exhausted) {
-      val t = if (heap.size >= k) heap.head.score else initialThreshold
-      if (t != Double.NegativeInfinity) {
-        val bound = idfSum * ca.maxRemainingTfNorm // pf <= tf(A)
-        if (!(bound * (1 + 1e-9) + java.lang.Double.MIN_VALUE > t))
-          return heap.dequeueAll.reverseIterator.toVector
-      }
-      if (ca.docId < cb.docId) ca.advance(cb.docId)
-      else if (cb.docId < ca.docId) cb.advance(ca.docId)
-      else {
-        val doc = ca.docId
+    openAll(blocks, Seq(termA, termB), _ => 0.0, avgdl).foreach { cursors =>
+      val (ca, cb) = if (cursors(0).term == termA) (cursors(0), cursors(1)) else (cursors(1), cursors(0))
+      val d = slop + 1
+      leapfrog(cursors, Array.empty, () => top.beats(idfSum * ca.maxRemainingTfNorm)) { doc =>
         val (fa, froma, untila) = ca.currentPositions
         val (fb, fromb, untilb) = cb.currentPositions
         var pf = 0
@@ -793,90 +589,8 @@ object Wand extends Serializable {
           if (ib < untilb && fb(ib) <= p + d) pf += 1
           ia += 1
         }
-        if (pf > 0) offer(doc, idfSum * BM25.tfNorm(pf, ca.currentDl, avgdl))
-        ca.next()
+        if (pf > 0) top.offer(doc, idfSum * BM25.tfNorm(pf, ca.currentDl, avgdl))
       }
     }
-    heap.dequeueAll.reverseIterator.toVector
-  }
-
-  /** Unit-cost Levenshtein "within max" test (classic Wagner–Fischer
-    * two-row DP with an early bail when a full row exceeds `max`) —
-    * used to assign batch-wide fuzzy dictionary matches back to their
-    * query term driver-side. MUST agree with Spark's / DuckDB's
-    * `levenshtein` (all three are the same unit-cost distance; the
-    * fuzzy specs pin the parity) — hence the CODE-POINT alphabet:
-    * both engines count code points, so supplementary-plane tokens
-    * must not be split into surrogate halves here. */
-  def editDistanceWithin(a: String, b: String, max: Int): Boolean = {
-    if (a == b) return true
-    val s0 = a.codePoints().toArray
-    val t0 = b.codePoints().toArray
-    if (math.abs(s0.length - t0.length) > max) return false
-    val (s, t) = if (s0.length <= t0.length) (s0, t0) else (t0, s0)
-    var prev = Array.tabulate(s.length + 1)(identity)
-    var cur = new Array[Int](s.length + 1)
-    var j = 1
-    while (j <= t.length) {
-      cur(0) = j
-      var rowMin = j
-      var i = 1
-      while (i <= s.length) {
-        val sub = prev(i - 1) + (if (s(i - 1) == t(j - 1)) 0 else 1)
-        val v = math.min(sub, math.min(prev(i), cur(i - 1)) + 1)
-        cur(i) = v
-        if (v < rowMin) rowMin = v
-        i += 1
-      }
-      if (rowMin > max) return false
-      val tmp = prev; prev = cur; cur = tmp
-      j += 1
-    }
-    prev(s.length) <= max
-  }
-
-  /** Exact unit-cost Levenshtein distance, same code-point alphabet
-    * and parity contract as [[editDistanceWithin]] — used by the
-    * batched collation to rank a shared dictionary scan's candidates
-    * per query term driver-side (distance asc is the primary key of
-    * the suggest order). */
-  def editDistance(a: String, b: String): Int = {
-    if (a == b) return 0
-    val s0 = a.codePoints().toArray
-    val t0 = b.codePoints().toArray
-    val (s, t) = if (s0.length <= t0.length) (s0, t0) else (t0, s0)
-    var prev = Array.tabulate(s.length + 1)(identity)
-    var cur = new Array[Int](s.length + 1)
-    var j = 1
-    while (j <= t.length) {
-      cur(0) = j
-      var i = 1
-      while (i <= s.length) {
-        val sub = prev(i - 1) + (if (s(i - 1) == t(j - 1)) 0 else 1)
-        cur(i) = math.min(sub, math.min(prev(i), cur(i - 1)) + 1)
-        i += 1
-      }
-      val tmp = prev; prev = cur; cur = tmp
-      j += 1
-    }
-    prev(s.length)
-  }
-
-  /** Translate a Lucene-style glob (`*` = any run, `?` = exactly one
-    * character) into an anchored regex. Literal characters are
-    * escaped one-by-one with a backslash (never `\Q…\E`, which RE2
-    * engines don't support) so the same string means the same thing
-    * to Java regex (Spark `rlike`) and to DuckDB's RE2
-    * `regexp_matches` — the wildcard specs and the gate oracle pin
-    * that parity. */
-  def globToRegex(glob: String): String = {
-    val sb = new StringBuilder("^")
-    glob.foreach {
-      case '*' => sb.append(".*")
-      case '?' => sb.append('.')
-      case c if c.isLetterOrDigit => sb.append(c)
-      case c => sb.append('\\').append(c)
-    }
-    sb.append('$').toString
   }
 }

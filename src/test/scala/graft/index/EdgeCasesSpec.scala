@@ -70,7 +70,7 @@ class EdgeCasesSpec extends SparkFunSuite {
     val dfs = collection.mutable.HashMap.empty[String, Long]
     docTfs.foreach(_._3.keys.foreach(t => dfs.update(t, dfs.getOrElse(t, 0L) + 1)))
     val avgdl = docTfs.map(_._2).sum.toDouble / corpus.length
-    val want = graft.query.BM25.bruteForceTopK(Seq("user", "assistant"),
+    val want = graft.query.BM25Oracle.bruteForceTopK(Seq("user", "assistant"),
       docTfs, dfs, corpus.length, avgdl, 10)
     val got = new IndexReader(spark, dir).search("user assistant", 10)
       .map(h => (h.doc_id, h.score))

@@ -3,7 +3,7 @@ package graft.index
 import graft.SparkFunSuite
 import graft.analysis.Tokenizer
 import graft.model.Turn
-import graft.query.{BM25, IndexReader}
+import graft.query.{BM25, BM25Oracle, IndexReader}
 import graft.sources.SyntheticTranscripts
 import graft.store.{LocalParquet, Manifest}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
@@ -53,7 +53,7 @@ class IndexBuilderSpec extends SparkFunSuite {
   }
 
   private def oracleTopK(q: String, k: Int = 10): Seq[(Long, Double)] =
-    BM25.bruteForceTopK(Tokenizer.tokenize(q).distinct.sorted, docTfs, dfs, nDocs, avgdl, k)
+    BM25Oracle.bruteForceTopK(Tokenizer.tokenize(q).distinct.sorted, docTfs, dfs, nDocs, avgdl, k)
 
   test("e2e: build at local parallelism, 20-query rank parity vs oracle") {
     val dir = tmpDir("idx-e2e")

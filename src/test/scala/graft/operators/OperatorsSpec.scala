@@ -218,6 +218,14 @@ class OperatorsSpec extends SparkFunSuite {
     assert(merged.count() == 4) // fr/de dropped like the reference's no-match
   }
 
+  test("duplicateToAll fans out to every branch and leaves nothing persisted") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val branches = Routing.duplicateToAll(docs, 3)
+    assert(branches.size == 3)
+    assert(branches.map(_.count()) == Seq.fill(3)(docs.count()))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("branchCounts = router accounting") {
     val counts = Routing.branchCounts(docs, "lang")
       .as[(String, Long)].collect().toMap

@@ -58,7 +58,7 @@ class FacetSpec extends SparkFunSuite {
     val q = "user la ma"
     val terms = graft.analysis.Tokenizer.tokenize(q).distinct.sorted
     // brute force with k = everything IS the full scored match set
-    val want = BM25.bruteForceTopK(terms, docTfs, dfs, nDocs, avgdl,
+    val want = BM25Oracle.bruteForceTopK(terms, docTfs, dfs, nDocs, avgdl,
       Int.MaxValue).toMap
     val got = rdr.scoredDocs(q).as[(Long, Double)].collect().toMap
     assert(got == want) // bit-equal doubles (same summation order)
@@ -86,7 +86,7 @@ class FacetSpec extends SparkFunSuite {
       .mapValues(_.size.toLong).toMap
     val q = "user la"
     val terms = graft.analysis.Tokenizer.tokenize(q).distinct.sorted
-    val scored = BM25.bruteForceTopK(terms, docTfs, dfs, nDocs, avgdl, Int.MaxValue)
+    val scored = BM25Oracle.bruteForceTopK(terms, docTfs, dfs, nDocs, avgdl, Int.MaxValue)
     val want = scored.groupBy { case (id, _) => corpus(id.toInt).role }
       .map { case (role, hits) =>
         val best = hits.minBy { case (id, s) => (-s, id) }
@@ -113,7 +113,7 @@ class FacetSpec extends SparkFunSuite {
       .mapValues(_.size.toLong).toMap
     val q = "user la"
     val terms = graft.analysis.Tokenizer.tokenize(q).distinct.sorted
-    val scored = BM25.bruteForceTopK(terms, docTfs, dfs, nDocs, avgdl, Int.MaxValue)
+    val scored = BM25Oracle.bruteForceTopK(terms, docTfs, dfs, nDocs, avgdl, Int.MaxValue)
     val meta = corpus.zipWithIndex
       .map { case (t, i) => (i.toLong, t.role) }.toSeq.toDF("doc_id", "role")
     val want = scored.groupBy { case (id, _) => corpus(id.toInt).role }
@@ -148,7 +148,7 @@ class FacetSpec extends SparkFunSuite {
     Seq("la", "ka", "b").foreach { p =>
       val expanded = dfs.keys.filter(_.startsWith(p)).toSeq.sorted
       assert(expanded.size > 1, s"degenerate prefix '$p'")
-      val want = BM25.bruteForceTopK(expanded, docTfs, dfs, nDocs, avgdl, 10)
+      val want = BM25Oracle.bruteForceTopK(expanded, docTfs, dfs, nDocs, avgdl, 10)
       val got = rdr.searchPrefix(p, 10).map(h => (h.doc_id, h.score))
       assert(got == want, s"prefix '$p'")
       // trailing * and uppercase are accepted
@@ -175,7 +175,7 @@ class FacetSpec extends SparkFunSuite {
       .mapValues(_.size.toLong).toMap
     val q = "user la"
     val terms = graft.analysis.Tokenizer.tokenize(q).distinct.sorted
-    val all = BM25.bruteForceTopK(terms, docTfs, dfs, nDocs, avgdl, Int.MaxValue)
+    val all = BM25Oracle.bruteForceTopK(terms, docTfs, dfs, nDocs, avgdl, Int.MaxValue)
     assert(all.size > 20)
     // exact scores (identity scoreKey): page walk reproduces the full
     // ordering as consecutive slices
@@ -320,7 +320,7 @@ class FacetSpec extends SparkFunSuite {
       .mapValues(_.size.toLong).toMap
     val q = "user la"
     val terms = graft.analysis.Tokenizer.tokenize(q).distinct.sorted
-    val scored = BM25.bruteForceTopK(terms, docTfs, dfs, nDocs, avgdl, Int.MaxValue)
+    val scored = BM25Oracle.bruteForceTopK(terms, docTfs, dfs, nDocs, avgdl, Int.MaxValue)
     val meta = corpus.indices
       .map(i => (i.toLong, (i % 7 + 1).toDouble)).toDF("doc_id", "w")
     val want = scored.map { case (id, s) => (id, s * (id % 7 + 1).toDouble) }
@@ -348,7 +348,7 @@ class FacetSpec extends SparkFunSuite {
       .mapValues(_.size.toLong).toMap
     def full(q: String): Map[Long, Double] = {
       val ts = graft.analysis.Tokenizer.tokenize(q).distinct.sorted
-      BM25.bruteForceTopK(ts, docTfs, dfs, nDocs, avgdl, Int.MaxValue).toMap
+      BM25Oracle.bruteForceTopK(ts, docTfs, dfs, nDocs, avgdl, Int.MaxValue).toMap
     }
     val (q1, q2, n, w, k) = ("user la", "ma", 25, 3.0, 10)
     val s1 = full(q1); val s2 = full(q2)
@@ -587,7 +587,7 @@ class FacetSpec extends SparkFunSuite {
   }
 
   /** Spec-local reference glob matcher — direct recursive descent, an
-    * independent implementation from Wand.globToRegex + regex. */
+    * independent implementation from Shape.globToRegex + regex. */
   private def refGlob(pat: String, s: String): Boolean =
     if (pat.isEmpty) s.isEmpty
     else pat.head match {
@@ -611,7 +611,7 @@ class FacetSpec extends SparkFunSuite {
     Seq("?a", "*sh", "u*", "b?s*") .foreach { pat =>
       val expanded = vocab.filter(refGlob(pat, _))
       assert(expanded.nonEmpty, s"degenerate glob '$pat'")
-      val want = BM25.bruteForceTopK(expanded, docTfs, dfs, nDocs, avgdl, 10)
+      val want = BM25Oracle.bruteForceTopK(expanded, docTfs, dfs, nDocs, avgdl, 10)
       val got = rdr.searchWildcard(pat, 10).map(h => (h.doc_id, h.score))
       assert(got == want, s"glob '$pat'")
       // uppercase input is lowercased, same result
@@ -628,7 +628,7 @@ class FacetSpec extends SparkFunSuite {
   }
 
   /** Spec-local reference edit distance — full unbanded Wagner–Fischer
-    * matrix, an independent implementation from Wand.editDistanceWithin's
+    * matrix, an independent implementation from Shape.editDistance's
     * two-row early-bail form. */
   private def refLev(a: String, b: String): Int = {
     val d = Array.ofDim[Int](a.length + 1, b.length + 1)
@@ -655,7 +655,7 @@ class FacetSpec extends SparkFunSuite {
     Seq(("laq", 1), ("user", 2), ("bask", 1)).foreach { case (q, me) =>
       val expanded = vocab.filter(refLev(_, q) <= me)
       assert(expanded.nonEmpty, s"degenerate fuzzy '$q'~$me")
-      val want = BM25.bruteForceTopK(expanded, docTfs, dfs, nDocs, avgdl, 10)
+      val want = BM25Oracle.bruteForceTopK(expanded, docTfs, dfs, nDocs, avgdl, 10)
       val got = rdr.searchFuzzy(q, me, 10).map(h => (h.doc_id, h.score))
       assert(got == want, s"fuzzy '$q'~$me (expansion $expanded)")
     }
@@ -668,15 +668,18 @@ class FacetSpec extends SparkFunSuite {
     intercept[IllegalArgumentException] { rdr.searchFuzzy("user", 3, 10) }
   }
 
-  test("Wand.editDistanceWithin agrees with the reference matrix over the vocabulary") {
+  test("Shape.editDistance agrees with the reference matrix over the vocabulary") {
     val (_, corpus) = fixture("idx-lev-parity")
     val vocab = corpus.flatMap(t =>
       graft.analysis.Tokenizer.termFreqs(t.text).keys).distinct.sorted
     assert(vocab.size > 10)
     val probes = vocab ++ Seq("laq", "zzz", "", "userx", "ka")
-    for (a <- probes; b <- vocab; m <- 0 to 2)
-      assert(Wand.editDistanceWithin(a, b, m) == (refLev(a, b) <= m),
-        s"editDistanceWithin('$a','$b',$m)")
+    for (a <- probes; b <- vocab) {
+      for (m <- 0 to 2)
+        assert((Shape.editDistance(a, b, m) <= m) == (refLev(a, b) <= m),
+          s"editDistance('$a','$b',$m)")
+      assert(Shape.editDistance(a, b) == refLev(a, b), s"editDistance('$a','$b')")
+    }
   }
 
   test("moreLikeThis: tf·idf term selection + disjunctive search, seed excluded") {
@@ -699,7 +702,7 @@ class FacetSpec extends SparkFunSuite {
       .sortBy { case (t, sc) => (-sc, t) }.take(cap).map(_._1).sorted
     val sel = select(1, 4)
     assert(sel.size == 4 && seedTf.size > 4) // the cap binds
-    val want = BM25.bruteForceTopK(sel, docTfs, dfs, nDocs, avgdl, Int.MaxValue)
+    val want = BM25Oracle.bruteForceTopK(sel, docTfs, dfs, nDocs, avgdl, Int.MaxValue)
       .filter(_._1 != 0L).take(10)
     val got = rdr.moreLikeThis(0L, 10, maxQueryTerms = 4)
       .map(h => (h.doc_id, h.score))
@@ -708,7 +711,7 @@ class FacetSpec extends SparkFunSuite {
     // minTermFreq floor changes the selected set
     val sel2 = select(2, 4)
     assert(sel2 != sel && sel2.nonEmpty)
-    val want2 = BM25.bruteForceTopK(sel2, docTfs, dfs, nDocs, avgdl, Int.MaxValue)
+    val want2 = BM25Oracle.bruteForceTopK(sel2, docTfs, dfs, nDocs, avgdl, Int.MaxValue)
       .filter(_._1 != 0L).take(10)
     assert(rdr.moreLikeThis(0L, 10, maxQueryTerms = 4, minTermFreq = 2)
       .map(h => (h.doc_id, h.score)) == want2)

@@ -65,7 +65,7 @@ class QueryParserSpec extends SparkFunSuite {
     def add(t: String, b: Double): Unit = acc.update(t, acc.getOrElse(t, 0.0) + b)
     add("la", 2.0)                                        // la^2
     vocab.filter(refGlob("k?", _)).foreach(add(_, 1.0))   // k?
-    vocab.filter(v => Wand.editDistanceWithin(v, "usr", 1)).foreach(add(_, 1.0)) // usr~1
+    vocab.filter(v => Shape.editDistance(v, "usr", 1) <= 1).foreach(add(_, 1.0)) // usr~1
     add("user", 1.0)                                      // bare
     assert(acc("user") >= 2.0, "degenerate: fuzzy must also reach 'user'")
     assert(hits(rdr.searchParsed("la^2 k? usr~1 user", 10)) ==

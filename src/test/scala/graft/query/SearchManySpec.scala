@@ -145,7 +145,7 @@ class SearchWhereSpec extends graft.SparkFunSuite {
         val got = rdr.searchWhere(q, pred, 10).map(h => (h.doc_id, h.score))
         // oracle: score all docs, keep allowed, same global df/avgdl
         val terms = graft.analysis.Tokenizer.tokenize(q).distinct.sorted
-        val want = graft.query.BM25.bruteForceTopK(terms,
+        val want = graft.query.BM25Oracle.bruteForceTopK(terms,
           docTfs.filter(d => oraclePred(d._1)), dfs, corpus.length, avgdl, 10)
         assert(got == want, s"query '$q'")
       }

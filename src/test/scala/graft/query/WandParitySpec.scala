@@ -56,6 +56,25 @@ class WandParitySpec extends AnyFunSuite {
     }
   }
 
+  /** One kernel run into a fresh collector of `k`. */
+  private def collect(k: Int)(run: Wand.TopKMerger => Unit): Vector[QueryHit] = {
+    val top = new Wand.TopKMerger(k)
+    run(top)
+    top.result
+  }
+
+  /** One kernel run into a collector already holding `k` hits at
+    * score 1e9 (docIds below every real one): the hits the run added,
+    * after checking it displaced none of those. */
+  private def unbeatable(k: Int)(run: Wand.TopKMerger => Unit): Vector[QueryHit] = {
+    val top = new Wand.TopKMerger(k)
+    (1 to k).foreach(i => top.offer(-i, 1e9))
+    run(top)
+    val (seed, added) = top.result.partition(_.doc_id < 0)
+    assert(seed.size == k && seed.forall(_.score == 1e9))
+    added
+  }
+
   private def wandSearch(segments: Map[Int, Map[String, IndexedSeq[PostingBlockRow]]],
                          query: String, k: Int, mm: Int = 1): Vector[QueryHit] = {
     val terms = Tokenizer.tokenize(query).distinct.sorted
@@ -63,7 +82,7 @@ class WandParitySpec extends AnyFunSuite {
     val perSeg = segments.values.flatMap { byTerm =>
       val tb = byTerm.filter { case (t, _) => terms.contains(t) }
       if (tb.isEmpty) Vector.empty
-      else Wand.topK(tb, idfs, avgdl, k, minMatch = mm)
+      else collect(k)(Wand.topK(tb, idfs, avgdl, _, minMatch = mm))
     }.toVector
     perSeg.sortBy(h => (-h.score, h.doc_id)).sorted(new Ordering[QueryHit] {
       def compare(a: QueryHit, b: QueryHit): Int =
@@ -83,7 +102,7 @@ class WandParitySpec extends AnyFunSuite {
       val segments = buildSegments(nSeg)
       queries.foreach { q =>
         val terms = Tokenizer.tokenize(q).distinct.sorted
-        val expect = BM25.bruteForceTopK(terms, docTfs, dfs, nDocs, avgdl, 10)
+        val expect = BM25Oracle.bruteForceTopK(terms, docTfs, dfs, nDocs, avgdl, 10)
         val got = wandSearch(segments, q, 10).map(h => (h.doc_id, h.score))
         assert(got == expect, s"query '$q' ($nSeg segments)")
       }
@@ -140,7 +159,7 @@ class WandParitySpec extends AnyFunSuite {
     val idfs = terms.map(t => t -> BM25.idf(dfs.getOrElse(t, 0L), nDocs)).toMap
     val conj = segments.values.flatMap { byTerm =>
       val tb = byTerm.filter { case (t, _) => terms.contains(t) }
-      Wand.topKConjunctive(tb, Map.empty, idfs, avgdl, 10, terms)
+      collect(10)(Wand.topKConjunctive(tb, Map.empty, idfs, avgdl, _, terms))
     }.toVector.sorted(new Ordering[QueryHit] {
       def compare(a: QueryHit, b: QueryHit): Int =
         BM25.hitOrdering.compare((a.doc_id, a.score), (b.doc_id, b.score))
@@ -150,14 +169,13 @@ class WandParitySpec extends AnyFunSuite {
     assert(wandSearch(segments, q, 10, mm = 5).isEmpty)
     // an unbeatable carried-in θ returns empty, never sub-threshold hits
     val tb = segments(0).filter { case (t, _) => terms.contains(t) }
-    assert(Wand.topK(tb, idfs, avgdl, 10, initialThreshold = 1e9,
-      minMatch = 2).isEmpty)
+    assert(unbeatable(10)(Wand.topK(tb, idfs, avgdl, _, minMatch = 2)).isEmpty)
   }
 
   test("k larger than hit count returns all hits, ranked") {
     val segments = buildSegments(4)
     val got = wandSearch(segments, "w299", 100000).map(h => (h.doc_id, h.score))
-    val expect = BM25.bruteForceTopK(Seq("w299"), docTfs, dfs, nDocs, avgdl, 100000)
+    val expect = BM25Oracle.bruteForceTopK(Seq("w299"), docTfs, dfs, nDocs, avgdl, 100000)
     assert(got == expect)
     assert(got.nonEmpty)
   }
@@ -186,20 +204,20 @@ class WandParitySpec extends AnyFunSuite {
           idfs("bb") * BM25.tfNorm(tfs(i), dls(i), cAvgdl)
         (id, s)
       }.sortBy { case (id, s) => (-s, id) }.take(10)
-    val got = Wand.topKConjunctive(Map("aa" -> blkA, "bb" -> blkB), Map.empty,
-      idfs, cAvgdl, 10, Seq("aa", "bb")).map(h => (h.doc_id, h.score))
+    val got = collect(10)(Wand.topKConjunctive(Map("aa" -> blkA, "bb" -> blkB), Map.empty,
+      idfs, cAvgdl, _, Seq("aa", "bb"))).map(h => (h.doc_id, h.score))
     assert(got == exhaustive(_ => false))
     // with a NOT term excluding part of the head
     val notIds = ids.filter(_ % 3 == 0)
     val blkN = PostingCodec.encodeTerm("nn", 0, notIds,
       Array.fill(notIds.length)(1), notIds.map(i => dls(i.toInt))).toIndexedSeq
-    val gotNot = Wand.topKConjunctive(Map("aa" -> blkA, "bb" -> blkB),
-      Map("nn" -> blkN), idfs, cAvgdl, 10, Seq("aa", "bb")).map(h => (h.doc_id, h.score))
+    val gotNot = collect(10)(Wand.topKConjunctive(Map("aa" -> blkA, "bb" -> blkB),
+      Map("nn" -> blkN), idfs, cAvgdl, _, Seq("aa", "bb"))).map(h => (h.doc_id, h.score))
     assert(gotNot == exhaustive(_ % 3 == 0))
     // a θ carried in from another segment that nothing here can beat
     // must return empty, not hits below the shared threshold
-    val none = Wand.topKConjunctive(Map("aa" -> blkA, "bb" -> blkB), Map.empty,
-      idfs, cAvgdl, 10, Seq("aa", "bb"), initialThreshold = 1e9)
+    val none = unbeatable(10)(Wand.topKConjunctive(Map("aa" -> blkA, "bb" -> blkB), Map.empty,
+      idfs, cAvgdl, _, Seq("aa", "bb")))
     assert(none.isEmpty)
   }
 
@@ -212,8 +230,8 @@ class WandParitySpec extends AnyFunSuite {
     val blocks = Map("alpha" -> PostingCodec.encodeTerm("alpha", 0,
       dup.map(_._1).toArray, Array.fill(20)(1), Array.fill(20)(3)).toIndexedSeq)
     val idfs = Map("alpha" -> BM25.idf(20, 20))
-    val got = Wand.topK(blocks, idfs, davg, 5)
-    val expect = BM25.bruteForceTopK(Seq("alpha"), dupTfs, ddfs, 20, davg, 5)
+    val got = collect(5)(Wand.topK(blocks, idfs, davg, _))
+    val expect = BM25Oracle.bruteForceTopK(Seq("alpha"), dupTfs, ddfs, 20, davg, 5)
     assert(got.map(h => (h.doc_id, h.score)) == expect)
     assert(got.map(_.doc_id) == Vector(0L, 1L, 2L, 3L, 4L)) // docId asc among ties
   }
