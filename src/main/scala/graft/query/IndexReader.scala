@@ -4,9 +4,10 @@ import graft.analysis.Analyzer
 import graft.index.IndexBuilder
 import graft.model.{CorpusStats, PostingBlockRow, QueryHit, RankedTurn}
 import graft.store.LocalParquet
+import graft.store.LocalParquet.TermFilter
 import java.nio.file.Paths
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -25,9 +26,18 @@ import org.apache.spark.sql.functions._
  * min/max term is a sparse terms index — a task reads only the row
  * groups whose range holds a query term, and decodes their other
  * columns only for the matching rows (position lists only for
- * proximity plans). The df lookup reads the
- * dictionary's matching row groups the same way, in-process on the
- * driver: no dictionary job.
+ * proximity plans). The dictionary is read the same way, in-process
+ * on the driver, so neither step runs a job of its own: the df
+ * lookup reads the row groups that can hold its terms, a prefix
+ * expansion those whose range meets the prefix, and a fuzzy or
+ * leading-wildcard expansion every row group's `term` column. The
+ * relational paths ([[matchingDocs]], [[scoredDocs]], [[searchWhere]])
+ * read postings through the same per-segment helper, one task per
+ * segment group, with no postings shuffle. So every query-side read
+ * of a postings or dictionary file goes through
+ * [[graft.store.LocalParquet]], except the Spark `dictionary`
+ * DataFrame behind [[suggest]], [[terms]], [[collate]],
+ * [[totalTokens]] and [[termVectors]].
  *
  * == Two-level merge + θ sharing ==
  * Query tasks each own a contiguous RANGE of segments (`segment /
@@ -49,20 +59,22 @@ class IndexReader(spark: SparkSession, dir: String,
                   queryTasks: Int = 0) extends Serializable {
   import spark.implicits._
 
-  lazy val stats: CorpusStats = IndexReader.readStats(spark, dir)
+  /** `dir` as a local path: the index files are read in place. */
+  private val root: String = IndexReader.localDir(dir)
+
+  lazy val stats: CorpusStats = IndexReader.readStats(root)
 
   /** Query-side chain = the chain the index was built with. */
   lazy val analyzer: Analyzer = Analyzer.parse(stats.analyzer)
 
-  private lazy val postings = spark.read.parquet(IndexBuilder.postingsDir(dir))
-  private lazy val dictionary = spark.read.parquet(IndexBuilder.dictionaryDir(dir))
-  private lazy val dictionaryFiles = IndexReader.dictionaryFiles(dir)
+  private lazy val dictionary = spark.read.parquet(IndexBuilder.dictionaryDir(root))
+  private lazy val dictionaryFiles = IndexReader.dictionaryFiles(root)
 
   /** Segments per query task (contiguous ranges keep docIds ascending
     * within a task — the θ-carry correctness condition). */
   private[query] lazy val groupSize: Int = {
     val nSeg = graft.store.Manifest
-      .read(graft.store.Manifest.phaseAPath(IndexBuilder.manifestDir(dir)))
+      .read(graft.store.Manifest.phaseAPath(IndexBuilder.manifestDir(root)))
       .flatMap(_.get("n_segments_effective")).map(_.toInt).getOrElse(0)
     val tasks = if (queryTasks > 0) queryTasks
                 else spark.sparkContext.defaultParallelism
@@ -74,15 +86,13 @@ class IndexReader(spark: SparkSession, dir: String,
     * files). Listed once per reader. */
   private lazy val segmentGroups: Seq[Seq[(Int, Seq[String])]] = {
     val g = groupSize
-    LocalParquet.partitions(Paths.get(IndexBuilder.postingsDir(dir)), "segment")
-      .map { case (seg, d) => seg -> LocalParquet.files(d).map(_.toString) }
-      .groupBy(_._1 / g).toSeq.sortBy(_._1).map(_._2)
+    IndexReader.segments(root).groupBy(_._1 / g).toSeq.sortBy(_._1).map(_._2)
   }
 
   /** Whether the index stored per-posting position lists
     * (BuildConfig.storePositions; missing manifest key = older
     * positional build → true). Phrase queries require them. */
-  lazy val positionsStored: Boolean = IndexReader.positionsStored(dir)
+  lazy val positionsStored: Boolean = IndexReader.positionsStored(root)
 
   /** Global document frequencies for a term set: an in-process read
     * of the dictionary row groups that can hold the terms — bounded by
@@ -101,22 +111,18 @@ class IndexReader(spark: SparkSession, dir: String,
   lazy val totalTokens: Long =
     dictionary.agg(coalesce(sum(col("cf")), lit(0L))).as[Long].head()
 
-  /** The lowering over this index's dictionary: df lookups and one
-    * range-pruned dictionary scan per expansion family — postings are
+  /** The lowering over this index's dictionary: df lookups, and one
+    * in-process dictionary read per expansion family, pruned to the
+    * row groups that meet the family's literal prefixes — postings are
     * never read to expand a query. */
   private lazy val lowering = new Lowering(analyzer, stats, new TermSource {
     def docFreqs(terms: Seq[String]): Map[String, Long] = IndexReader.this.docFreqs(terms)
-    def expand(es: Seq[Shape.Expansion]): Seq[String] =
-      dictionary.filter(es.map(_.column).reduce(_ || _))
-        .select("term").as[String].collect().sorted.toSeq
+    def expand(es: Seq[Shape.Expansion]): Seq[String] = {
+      val filter = TermFilter.prefixed(es.map(_.literalPrefix).toSet, t => es.exists(_.matches(t)))
+      dictionaryFiles.flatMap(f =>
+        LocalParquet.read(Paths.get(f), Some(filter), Set("df", "cf"))(_[String]("term"))).sorted
+    }
   }, positionsStored)
-
-  /** The posting blocks of `terms` in `src`, grouped by segment range. */
-  private def bySegmentRange(src: DataFrame,
-                             terms: Seq[String]): KeyValueGroupedDataset[Int, PostingBlockRow] = {
-    val g = groupSize
-    src.filter(col("term").isInCollection(terms)).as[PostingBlockRow].groupByKey(_.segment / g)
-  }
 
   /** The top-k executor: ONE shuffle-free Spark stage for any batch of
     * plans, one task per [[segmentGroups]] entry. Each task reads its
@@ -174,9 +180,10 @@ class IndexReader(spark: SparkSession, dir: String,
   /**
    * Prefix (trailing-wildcard) top-k — Lucene PrefixQuery under its
    * SCORING_BOOLEAN rewrite: the prefix expands against the dictionary
-   * to its matching terms (a Parquet-pushdown `startsWith` range scan,
-   * never a postings read), and the expansion lowers to one disjunction
-   * with each expanded term keeping its own idf.
+   * to its matching terms (an in-process read of the dictionary row
+   * groups whose term range meets the prefix, never a postings read),
+   * and the expansion lowers to one disjunction with each expanded term
+   * keeping its own idf: one Spark job, the postings one.
    * The prefix is lowercased but NOT analyzed (Lucene wildcard-term
    * semantics — stemming a partial term would corrupt it); a trailing
    * `*` is accepted and stripped. More than `maxExpansions` matching
@@ -192,16 +199,15 @@ class IndexReader(spark: SparkSession, dir: String,
    * rewrite as [[searchPrefix]]: the term expands against the
    * dictionary to every vocabulary term within `maxEdits` Levenshtein
    * edits, and the expansion lowers to one disjunction with each
-   * expanded term keeping its own idf. The distance
-   * scan prunes first with a length band (|len(t) − len(q)| ≤
-   * maxEdits, a necessary condition for the edit distance, and a
-   * plain comparison Parquet can evaluate cheaply) so the full
-   * `levenshtein` only runs on the banded slice; either way the scan
-   * touches the DICTIONARY — the corpus vocabulary, orders of
-   * magnitude smaller than the postings — never a posting list.
-   * Lucene proper intersects a Levenshtein automaton with its term
-   * FST; against a columnar dictionary this banded scan is that
-   * intersection's analog (one pruned scan, no postings I/O).
+   * expanded term keeping its own idf. The expansion reads every
+   * dictionary row group in-process on the driver, decoding only the
+   * `term` column, and keeps the terms within the capped
+   * [[Shape.editDistance]] (which gives up as soon as a whole DP row
+   * exceeds `maxEdits`); it touches the DICTIONARY — the corpus
+   * vocabulary, orders of magnitude smaller than the postings — never
+   * a posting list, and runs no Spark job of its own. Lucene proper
+   * intersects a Levenshtein automaton with its term FST; this capped
+   * scan of the term column is that intersection's analog.
    *
    * The term is lowercased but NOT analyzed (Lucene fuzzy-term
    * semantics — stemming a misspelling would corrupt it). More than
@@ -220,12 +226,14 @@ class IndexReader(spark: SparkSession, dir: String,
    * dictionary and the expansion lowers to one disjunction with each
    * expanded term keeping its own idf. The
    * pattern's literal prefix (the characters before the first
-   * wildcard) pushes to Parquet as a `startsWith` range scan — the
-   * columnar analog of Lucene seeking the term enum to the common
-   * prefix — and the full anchored regex then runs only on that
-   * slice. A leading-wildcard pattern is accepted (full dictionary
-   * scan, exactly Lucene's cost caveat) but the scan still touches
-   * the DICTIONARY only, never a posting list. The pattern is
+   * wildcard) is a term range: the in-process dictionary read takes
+   * only the row groups that meet it — the columnar analog of Lucene
+   * seeking the term enum to the common prefix — and the full
+   * anchored regex then runs only on that slice. A leading-wildcard
+   * pattern is accepted (every row group's `term` column is read,
+   * exactly Lucene's cost caveat) but the read still touches the
+   * DICTIONARY only, never a posting list, and runs no Spark job of
+   * its own. The pattern is
    * lowercased but NOT analyzed (Lucene wildcard-term semantics).
    * More than `maxExpansions` matching terms throws rather than
    * silently truncating the match set.
@@ -321,9 +329,9 @@ class IndexReader(spark: SparkSession, dir: String,
     * separate presence check is needed — plus the corrected query's
     * boolean (all-terms) hit count, Solr's "collation with hits"
     * response shape. ONE banded dictionary scan covers every distinct
-    * query term (the [[searchManyMixed]] batched-fuzzy pattern: the
-    * OR of the per-term length bands pushes to Parquet, candidates
-    * come back with df, and the per-term best pick runs driver-side
+    * query term (the OR of the per-term length bands pushes to
+    * Parquet, candidates come back with df, and the per-term best pick
+    * runs driver-side
     * under the same suggest order via the parity-pinned
     * [[Shape.editDistance]]) plus one distributed match-set count —
     * two Spark jobs total, where the round-5 form paid one sequential
@@ -388,7 +396,7 @@ class IndexReader(spark: SparkSession, dir: String,
   def moreLikeThis(docId: Long, k: Int = 10, maxQueryTerms: Int = 25,
                    minTermFreq: Int = 1, minDocFreq: Int = 1): Vector[QueryHit] = {
     if (stats.n_docs == 0) return Vector.empty
-    val seedOpt = IndexBuilder.readDocs(spark, dir)
+    val seedOpt = IndexBuilder.readDocs(spark, root)
       .filter(col("doc_id") === docId).select("text").as[String]
       .collect().headOption
     if (seedOpt.isEmpty) return Vector.empty // unknown seed: no neighbors
@@ -464,10 +472,12 @@ class IndexReader(spark: SparkSession, dir: String,
    * Metadata-filtered top-k: BM25 over only the documents matching a
    * predicate on the doc table (staging columns: conv_id, turn_idx,
    * role, tool, text, dl, segment). Distributed and broadcast-free:
-   * the allowed docIds are COGROUPED with the posting blocks by
-   * segment, so each task holds one segment's allowed set (bounded by
-   * segSize) and WAND drops disallowed candidates after cursor
-   * alignment — exact filtered top-k, not post-filtering.
+   * the allowed docIds are grouped by segment group (the one shuffle,
+   * of (segment, docId) pairs), and each group's task reads its own
+   * segments' postings in place, holds one segment's allowed set at a
+   * time (bounded by segSize), and WAND drops disallowed candidates
+   * after cursor alignment — exact filtered top-k, not
+   * post-filtering. Segment groups with no allowed doc read nothing.
    */
   def searchWhere(query: String, predicate: org.apache.spark.sql.Column,
                   k: Int = 10): Vector[QueryHit] = {
@@ -477,16 +487,13 @@ class IndexReader(spark: SparkSession, dir: String,
     }
     val avgdl = stats.avgdl
     val g = groupSize
-    val allowed = IndexBuilder.readStaging(spark, dir)
+    val groups = segmentGroups.map(segs => segs.head._1 / g -> segs).toMap
+    val terms = plan.terms.toSet
+    val perTask = IndexBuilder.readStaging(spark, root)
       .filter(predicate)
-      .select(col("segment").as("a_segment"), col("doc_id").as("a_doc_id"))
-      .as[(Int, Long)]
+      .select("segment", "doc_id").as[(Int, Long)]
       .groupByKey(_._1 / g)
-
-    val perTask = bySegmentRange(postings, plan.terms).cogroup(allowed) { (_, rows, allowRows) =>
-      val segs = Wand.bySegment(rows)
-      if (segs.isEmpty) Iterator.empty
-      else {
+      .flatMapGroups { (group, allowRows) =>
         // per-segment allowed sets as SORTED primitive long arrays +
         // binary search (~8 B/doc — no boxing, no HashSet node
         // overhead): memory stays proportional to predicate
@@ -500,17 +507,18 @@ class IndexReader(spark: SparkSession, dir: String,
           if (buf == null) { buf = new LongBuf(); okBySeg.put(s, buf) }
           buf.add(id)
         }
+        val filter = Some(TermFilter.in(terms))
         val top = new Wand.TopKMerger(k)
-        segs.foreach { case (seg, byTerm) =>
+        groups.getOrElse(group, Nil).foreach { case (seg, files) =>
           val buf = okBySeg.get(seg)
           if (buf != null && buf.nonEmpty) {
             val arr = buf.sortedArray
-            plan.run(byTerm, avgdl, top, id => java.util.Arrays.binarySearch(arr, id) >= 0)
+            plan.run(IndexReader.segmentBlocks(seg, files, filter, Set("positions")), avgdl, top,
+              id => java.util.Arrays.binarySearch(arr, id) >= 0)
           }
         }
         top.result.iterator.map(h => (h.doc_id, h.score))
-      }
-    }.collect()
+      }.collect()
 
     best(perTask.toSeq, k).map { case (d, s) => QueryHit(d, s) }.toVector
   }
@@ -569,13 +577,21 @@ class IndexReader(spark: SparkSession, dir: String,
                           k: Int = 10): Vector[QueryHit] =
     serve1("searchNearUnordered", lowering.nearUnordered(termA, termB, slop), k)
 
-  /** The relational paths' segment scan, on the caller's session: `f`
-    * maps each segment's term → blocks to its output rows. */
+  /** The relational paths' segment scan, a Dataset on the caller's
+    * session: one task per [[segmentGroups]] entry reads each of its
+    * segments' postings in place, pruned to `terms` (no position
+    * lists), and `f` maps each segment's term → blocks to its output
+    * rows. No shuffle. */
   private def scan[T: Encoder](terms: Seq[String])(
-      f: Plan.Blocks => Iterator[T]): Dataset[T] =
-    bySegmentRange(postings, terms).flatMapGroups { (_, rows) =>
-      Wand.bySegment(rows).iterator.flatMap { case (_, byTerm) => f(byTerm) }
-    }
+      f: Plan.Blocks => Iterator[T]): Dataset[T] = {
+    val groups = segmentGroups
+    val ts = terms.toSet
+    implicit val tag: scala.reflect.ClassTag[T] = implicitly[Encoder[T]].clsTag
+    spark.createDataset(spark.sparkContext.parallelize(groups, math.max(1, groups.size)).mapPartitions { tasks =>
+      val filter = Some(TermFilter.in(ts))
+      tasks.flatten.flatMap { case (seg, files) => f(IndexReader.segmentBlocks(seg, files, filter, Set("positions"))) }
+    })
+  }
 
   /**
    * The FULL match set of a boolean query as a DataFrame of docIds —
@@ -836,7 +852,7 @@ class IndexReader(spark: SparkSession, dir: String,
   def termVectors(docIds: Seq[Long]): DataFrame = {
     require(docIds.nonEmpty, "termVectors needs at least one doc id")
     val toks = graft.operators.TextAnalysis.tokensCol(col("text"))
-    IndexBuilder.readDocs(spark, dir)
+    IndexBuilder.readDocs(spark, root)
       .filter(col("doc_id").isInCollection(docIds))
       .select(col("doc_id"), explode(toks).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -937,7 +953,7 @@ class IndexReader(spark: SparkSession, dir: String,
       val ap = array_position(col("ts"), t)
       when(ap === 0, Big).otherwise(ap)
     }: _*)
-    IndexBuilder.readDocs(spark, dir)
+    IndexBuilder.readDocs(spark, root)
       .filter(col("doc_id").isInCollection(docIds))
       .withColumn("ts", toks)
       .withColumn("mpos",
@@ -1172,7 +1188,7 @@ class IndexReader(spark: SparkSession, dir: String,
     val hits = search(query, k)
     if (hits.isEmpty) return Seq.empty
     val ids = hits.map(_.doc_id)
-    val meta = IndexBuilder.readDocs(spark, dir)
+    val meta = IndexBuilder.readDocs(spark, root)
       .filter(col("doc_id").isInCollection(ids))
       .select("doc_id", "conv_id", "turn_idx")
       .as[(Long, String, Int)].collect().map(r => r._1 -> (r._2, r._3)).toMap
@@ -1211,15 +1227,28 @@ private[query] final class LongBuf {
 
 object IndexReader {
 
-  /** The index's corpus stats, format-checked: read in-process
-    * ([[readStatsDirect]]), or by a Spark job when the table is not in
-    * the one-file one-row shape. */
-  private[query] def readStats(spark: SparkSession, dir: String): CorpusStats = {
-    import spark.implicits._
-    val s = readStatsDirect(dir).getOrElse(
-      spark.read.parquet(IndexBuilder.corpusStatsDir(dir)).as[CorpusStats].head())
-    graft.model.IndexFormat.check(s, dir)
-    s
+  /** `dir` as a local path: a `file:` URI maps to its path, any other
+    * scheme throws, since every index file is read in place. */
+  private[query] def localDir(dir: String): String =
+    if (!dir.matches("(?s)[A-Za-z][A-Za-z0-9+.-]*:.*")) dir
+    else {
+      val uri = new java.net.URI(dir)
+      require(uri.getScheme.equalsIgnoreCase("file"),
+        s"index dir $dir is not on the local file system: its files are read in place")
+      Paths.get(uri).toString
+    }
+
+  /** The index's corpus stats, read in-process and format-checked: the
+    * table is written as one file of one row, and anything else throws. */
+  private[query] def readStats(dir: String): CorpusStats = {
+    val table = IndexBuilder.corpusStatsDir(dir)
+    val rows = LocalParquet.files(Paths.get(table)).flatMap(f => LocalParquet.read(f) { r =>
+      CorpusStats(r[Long]("n_docs"), r[Double]("avgdl"), r[Long]("n_terms"),
+        r[Int]("index_version"), r[Int]("tokenizer_version"), r[String]("analyzer"))
+    })
+    require(rows.size == 1, s"corpus stats table $table holds ${rows.size} rows, not one")
+    graft.model.IndexFormat.check(rows.head, dir)
+    rows.head
   }
 
   /** The manifest's `store_positions` flag (a missing key is an older
@@ -1228,23 +1257,11 @@ object IndexReader {
     .read(graft.store.Manifest.phaseAPath(IndexBuilder.manifestDir(dir)))
     .flatMap(_.get("store_positions")).forall(_ == "true")
 
-  /** Driver-side read of the one-row corpus_stats table, in-process —
-    * a Spark read costs a JOB (scheduler round-trip + task launch) per
-    * IndexReader instance just to fetch six scalars. Falls back to the
-    * Spark read (None) when the table is not the single-file
-    * single-row shape this fast path expects. */
-  private[query] def readStatsDirect(dir: String): Option[CorpusStats] = try {
-    LocalParquet.files(Paths.get(IndexBuilder.corpusStatsDir(dir))) match {
-      case Seq(f) => LocalParquet.read(f) { r =>
-          CorpusStats(r[Long]("n_docs"), r[Double]("avgdl"), r[Long]("n_terms"),
-            r[Int]("index_version"), r[Int]("tokenizer_version"), r[String]("analyzer"))
-        } match {
-          case Seq(s) => Some(s)
-          case _ => None // not exactly one row
-        }
-      case _ => None
-    }
-  } catch { case scala.util.control.NonFatal(_) => None }
+  /** The `postings/segment=N` listing: each segment's postings files,
+    * ascending by segment. */
+  private[query] def segments(dir: String): Seq[(Int, Seq[String])] =
+    LocalParquet.partitions(Paths.get(IndexBuilder.postingsDir(dir)), "segment")
+      .map { case (seg, d) => seg -> LocalParquet.files(d).map(_.toString) }
 
   private[query] def dictionaryFiles(dir: String): Seq[String] =
     LocalParquet.files(Paths.get(IndexBuilder.dictionaryDir(dir))).map(_.toString)
@@ -1254,9 +1271,18 @@ object IndexReader {
     * range can hold one of them. */
   private[query] def dictionaryLookup(files: Seq[String], terms: Seq[String],
                                       field: String): Map[String, Long] = {
-    val ts = terms.toSet
-    files.flatMap(f => LocalParquet.read(Paths.get(f), Some(ts))(r => r[String]("term") -> r[Long](field))).toMap
+    val filter = Some(TermFilter.in(terms.toSet))
+    files.flatMap(f => LocalParquet.read(Paths.get(f), filter)(r => r[String]("term") -> r[Long](field))).toMap
   }
+
+  /** One segment's postings, read in place: the blocks of the terms
+    * `filter` keeps (every term when None), by term, in file order;
+    * the columns in `without` stay null. The one read of postings
+    * files on the query side. */
+  private[query] def segmentBlocks(seg: Int, files: Seq[String], filter: Option[TermFilter],
+                                   without: Set[String]): Plan.Blocks =
+    files.iterator.flatMap(f => LocalParquet.read(Paths.get(f), filter, without)(blockRow(seg, _)))
+      .toVector.groupBy(_.term)
 
   /** A postings row of `segment` (a partition column, so not in the
     * file); a missing `positions` value is null. */
@@ -1284,14 +1310,12 @@ private[query] object SegmentTask {
     // only proximity plans read position lists
     val without = if (plans.exists(p => p._2.isInstanceOf[Plan.Near] || p._2.isInstanceOf[Plan.NearUnordered]))
       Set.empty[String] else Set("positions")
+    val filter = Some(TermFilter.in(terms))
     val mergers = scala.collection.mutable.LinkedHashMap.empty[String, Wand.TopKMerger]
     tasks.flatten.foreach { case (seg, files) =>
-      val rows = files.flatMap(f =>
-        LocalParquet.read(Paths.get(f), Some(terms), without)(IndexReader.blockRow(seg, _)))
-      if (rows.nonEmpty) {
-        val byTerm: Plan.Blocks = rows.toVector.groupBy(_.term)
+      val byTerm = IndexReader.segmentBlocks(seg, files, filter, without)
+      if (byTerm.nonEmpty)
         plans.foreach { case (id, p) => p.run(byTerm, avgdl, mergers.getOrElseUpdate(id, new Wand.TopKMerger(k))) }
-      }
     }
     mergers.iterator.flatMap { case (id, m) => m.result.iterator.map(h => (id, h.doc_id, h.score)) }.toArray
   }

@@ -1,10 +1,11 @@
 package graft.query
 
 import graft.analysis.Analyzer
-import graft.index.IndexBuilder
 import graft.model.{CorpusStats, PostingBlockRow, QueryHit}
+import graft.store.LocalParquet
+import graft.store.LocalParquet.TermFilter
+import java.nio.file.Paths
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
 /**
  * Serving mode: the whole index (compressed posting blocks +
@@ -166,89 +167,52 @@ class LocalIndex private (stats: CorpusStats,
 
 object LocalIndex {
 
-  /** Load a built index for serving. One pass over dictionary +
-    * postings; blocks stay compressed. */
+  /** Load a built index for serving: the dictionary and every
+    * segment's postings read in-process on the driver through
+    * [[graft.store.LocalParquet]], with no Spark job; blocks stay
+    * compressed. An index whose segments hold no postings (an
+    * all-empty-text corpus) loads as an empty index. `spark` is not
+    * used: the files are read in place. */
   def load(spark: SparkSession, dir: String): LocalIndex = {
-    import spark.implicits._
-    val stats = IndexReader.readStats(spark, dir)
+    val root = IndexReader.localDir(dir)
+    val stats = IndexReader.readStats(root)
     val dfs = new java.util.HashMap[String, Long]()
     val cfs = new java.util.HashMap[String, Long]()
     var totalTokens = 0L
-    spark.read.parquet(IndexBuilder.dictionaryDir(dir))
-      .select("term", "df", "cf").as[(String, Long, Long)].collect()
-      .foreach { case (t, df, cf) =>
-        dfs.put(t, df); cfs.put(t, cf); totalTokens += cf
+    IndexReader.dictionaryFiles(root).foreach { f =>
+      LocalParquet.read(Paths.get(f))(r => (r[String]("term"), r[Long]("df"), r[Long]("cf"))).foreach {
+        case (t, df, cf) => dfs.put(t, df); cfs.put(t, cf); totalTokens += cf
       }
-    // small enough to collect → ONE parallel job (every executor
-    // decodes its partitions concurrently); genuinely large indexes
-    // stream partition-at-a-time instead, trading load speed for a
-    // bounded driver fetch (collect would trip
-    // spark.driver.maxResultSize and double peak driver memory)
-    val postingBytes = {
-      val p = java.nio.file.Paths.get(IndexBuilder.postingsDir(dir))
-      val s = java.nio.file.Files.walk(p)
-      try {
-        val it = s.iterator()
-        var n = 0L
-        while (it.hasNext) { val f = it.next(); if (java.nio.file.Files.isRegularFile(f)) n += java.nio.file.Files.size(f) }
-        n
-      } finally s.close()
     }
-    // the collect() fast path must stay safely under the driver's
-    // result-size cap (serialized task results ≥ on-disk size); 0 = no cap
-    val maxResult = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.driver.maxResultSize", "1g"))
-    val collectCap =
-      if (maxResult <= 0) 1L << 30 else math.min(1L << 30, maxResult / 4)
-    val acc = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[PostingBlockRow]]()
-    def put(b: PostingBlockRow): Unit = {
-      var buf = acc.get(b.term)
-      if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty; acc.put(b.term, buf) }
-      buf += b
-    }
-    // explicit schema: an index whose segment dirs are all empty (an
-    // all-empty-text corpus) must load as an empty index, not throw
-    // AnalysisException from schema inference — same contract as
-    // IndexBuilder.finalizeStats
-    val ds = spark.read.schema(IndexBuilder.PostingSchema)
-      .parquet(IndexBuilder.postingsDir(dir)).as[PostingBlockRow]
-    def stream(): Unit = {
-      val it = ds.toLocalIterator()
-      while (it.hasNext) put(it.next())
-    }
-    if (postingBytes > collectCap) stream()
-    else try ds.collect().foreach(put)
-    catch {
-      // on-disk size under-estimates serialized task results for some
-      // compression ratios — fall back to the bounded streaming path
-      case e: org.apache.spark.SparkException
-        if String.valueOf(e.getMessage).contains("maxResultSize") =>
-        acc.clear(); stream()
-    }
-    val byTerm = new java.util.HashMap[String, IndexedSeq[PostingBlockRow]]()
-    acc.forEach { (t, rows) =>
-      // global docId order: segments are docId ranges, so
-      // (max_doc_id) ascends across segment boundaries too
-      byTerm.put(t, rows.sortBy(_.max_doc_id).toIndexedSeq)
-    }
-    new LocalIndex(stats, dfs, byTerm, IndexReader.positionsStored(dir), cfs, totalTokens)
+    new LocalIndex(stats, dfs, blocks(root, None),
+      IndexReader.positionsStored(root), cfs, totalTokens)
   }
 
   /** Load only the blocks for a term subset (partial serving cache —
-    * e.g. the head of the query-log distribution). */
+    * e.g. the head of the query-log distribution), read in-process
+    * like [[load]]. */
   def loadTerms(spark: SparkSession, dir: String, terms: Seq[String]): LocalIndex = {
-    import spark.implicits._
-    val stats = IndexReader.readStats(spark, dir)
+    val root = IndexReader.localDir(dir)
+    val stats = IndexReader.readStats(root)
     val dfs = new java.util.HashMap[String, Long]()
-    IndexReader.dictionaryLookup(IndexReader.dictionaryFiles(dir), terms, "df")
+    IndexReader.dictionaryLookup(IndexReader.dictionaryFiles(root), terms, "df")
       .foreach { case (t, df) => dfs.put(t, df) }
-    val byTerm = new java.util.HashMap[String, IndexedSeq[PostingBlockRow]]()
-    spark.read.schema(IndexBuilder.PostingSchema)
-      .parquet(IndexBuilder.postingsDir(dir))
-      .filter(col("term").isInCollection(terms))
-      .as[PostingBlockRow].collect()
-      .groupBy(_.term)
-      .foreach { case (t, rows) => byTerm.put(t, rows.sortBy(_.max_doc_id).toIndexedSeq) }
-    new LocalIndex(stats, dfs, byTerm, IndexReader.positionsStored(dir))
+    new LocalIndex(stats, dfs, blocks(root, Some(TermFilter.in(terms.toSet))),
+      IndexReader.positionsStored(root))
+  }
+
+  /** Every segment's blocks of the terms `filter` keeps, each term's in
+    * global docId order: segments are docId ranges, so (max_doc_id)
+    * ascends across segment boundaries too. */
+  private def blocks(dir: String, filter: Option[TermFilter]): java.util.HashMap[String, IndexedSeq[PostingBlockRow]] = {
+    type Bs = IndexedSeq[PostingBlockRow]
+    val acc = new java.util.HashMap[String, Bs]()
+    IndexReader.segments(dir).foreach { case (seg, files) =>
+      IndexReader.segmentBlocks(seg, files, filter, Set.empty).foreach { case (t, bs) =>
+        acc.merge(t, bs, (a: Bs, b: Bs) => a ++ b)
+      }
+    }
+    acc.replaceAll((_: String, bs: Bs) => bs.sortBy(_.max_doc_id))
+    acc
   }
 }

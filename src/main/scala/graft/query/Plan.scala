@@ -2,8 +2,6 @@ package graft.query
 
 import graft.analysis.Analyzer
 import graft.model.{CorpusStats, PostingBlockRow}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{col, length, levenshtein, lit}
 
 /**
  * The lowered query form (SURVEY.md §2.7, Lucene's rewrite): every
@@ -91,33 +89,28 @@ private[query] object Shape {
     * lowercased, not analyzed; more than `cap` matches throw. */
   sealed trait Expansion extends Clause with Product {
     def cap: Int
-    /** Dictionary filter; Parquet can push the prefix forms. */
-    def column: Column
+    /** What every match starts with ("" for none): a term range of the
+      * sorted dictionary, so a read can skip the row groups outside it. */
+    def literalPrefix: String
     /** The exact test, applied to every candidate term. */
     def matches(t: String): Boolean
     def tooMany(n: Int): String
   }
   final case class Prefix(p: String, cap: Int) extends Expansion {
-    def column: Column = col("term").startsWith(p)
+    def literalPrefix: String = p
     def matches(t: String): Boolean = t.startsWith(p)
     def tooMany(n: Int): String =
       s"prefix '$p*' expands to $n terms (> $cap) — use a longer prefix or raise maxExpansions"
   }
   final case class Wild(pattern: String, cap: Int) extends Expansion {
     private val re = java.util.regex.Pattern.compile(globToRegex(pattern))
-    def column: Column = {
-      val fixed = pattern.takeWhile(c => c != '*' && c != '?')
-      val m = col("term").rlike(re.pattern)
-      if (fixed.isEmpty) m else col("term").startsWith(fixed) && m
-    }
+    def literalPrefix: String = pattern.takeWhile(c => c != '*' && c != '?')
     def matches(t: String): Boolean = re.matcher(t).matches()
     def tooMany(n: Int): String =
       s"wildcard '$pattern' expands to $n terms (> $cap) — tighten the pattern or raise maxExpansions"
   }
   final case class Fuzzy(q: String, maxEdits: Int, cap: Int) extends Expansion {
-    def column: Column =
-      length(col("term")).between(q.length - maxEdits, q.length + maxEdits) &&
-        levenshtein(col("term"), lit(q)) <= maxEdits
+    def literalPrefix: String = ""
     def matches(t: String): Boolean = editDistance(t, q, maxEdits) <= maxEdits
     def tooMany(n: Int): String =
       s"'$q'~$maxEdits expands to $n terms (> $cap) — lower maxEdits or raise maxExpansions"
@@ -160,8 +153,9 @@ private[query] object Shape {
 
   /** Unit-cost Levenshtein distance (Wagner–Fischer, two rows). It
     * MUST agree with Spark's and DuckDB's `levenshtein` (the fuzzy
-    * expansions filter with those and re-check with this; the fuzzy
-    * specs pin the parity), hence the CODE-POINT alphabet: both
+    * expansions use this alone, `suggest` filters with Spark's, and the
+    * gate's oracles with DuckDB's; the fuzzy specs pin the parity),
+    * hence the CODE-POINT alphabet: both
     * engines count code points, so supplementary-plane tokens must not
     * be split into surrogate halves here. With a `cap`, the DP stops
     * with `cap + 1` as soon as a whole row exceeds the cap: a result
@@ -194,7 +188,8 @@ private[query] object Shape {
 }
 
 /** Where the lowering reads the dictionary: the cluster reader's
-  * Parquet scans or [[LocalIndex]]'s in-memory vocabulary. */
+  * in-process reads of the dictionary files or [[LocalIndex]]'s
+  * in-memory vocabulary. */
 private[query] trait TermSource {
   def docFreqs(terms: Seq[String]): Map[String, Long]
   /** Sorted dictionary terms matching any of one family's expansions

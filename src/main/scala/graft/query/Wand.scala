@@ -214,14 +214,6 @@ object Wand extends Serializable {
     def result: Vector[QueryHit] = heap.dequeueAll.reverseIterator.toVector
   }
 
-  /** Bucket one task's posting rows by segment, ascending (docId
-    * order — segments are contiguous docId ranges), each segment as
-    * term → blocks. */
-  def bySegment(rows: Iterator[PostingBlockRow]): Seq[(Int, Map[String, IndexedSeq[PostingBlockRow]])] =
-    rows.toVector.groupBy(_.segment).toSeq.sortBy(_._1).map { case (s, rs) =>
-      s -> rs.groupBy(_.term).map { case (t, x) => t -> (x: IndexedSeq[PostingBlockRow]) }
-    }
-
   /**
    * The one intersection loop, document at a time: the sparsest of
    * `must` drives; the other cursors advance by skip pointers to each

@@ -29,9 +29,9 @@ import scala.jdk.CollectionConverters._
  *
  * Index tables are written term-sorted in bounded row groups, so a
  * file's per-row-group min/max `term` statistics are a sparse terms
- * index: a term-filtered [[read]] reads only the row groups whose range
- * holds a query term, decodes their `term` column first, and decodes
- * the other columns only for the matching rows. Inside a Spark task
+ * index: a [[TermFilter]]ed [[read]] reads only the row groups whose
+ * range can hold a kept term, decodes their `term` column first, and
+ * decodes the other columns only for the kept rows. Inside a Spark task
  * the rows and bytes of the row groups read are added to the task's
  * input metrics.
  *
@@ -75,14 +75,45 @@ object LocalParquet {
       finally s.close()
     }
 
+  /** Which rows of a term-sorted table a [[read]] keeps, by `term`:
+    * `mayHold` tests a row group's term statistics, `keep` each row's
+    * term in the row groups that pass. */
+  sealed trait TermFilter {
+    private[LocalParquet] def mayHold(s: Statistics[Binary]): Boolean
+    private[LocalParquet] def keep(t: Binary): Boolean
+  }
+
+  object TermFilter {
+    /** Exactly `terms` (an empty set reads nothing). */
+    def in(terms: Set[String]): TermFilter = new TermFilter {
+      private val ks = terms.map(Binary.fromString)
+      def mayHold(s: Statistics[Binary]): Boolean =
+        ks.exists(k => s.compareMinToValue(k) <= 0 && s.compareMaxToValue(k) >= 0)
+      def keep(t: Binary): Boolean = ks.contains(t)
+    }
+
+    /** The terms that start with one of `prefixes` and pass `test`: a
+      * prefix is a term range, so only the row groups that meet one are
+      * read, and an empty prefix meets every row group. */
+    def prefixed(prefixes: Set[String], test: String => Boolean): TermFilter = new TermFilter {
+      private val ps = prefixes.map(Binary.fromString)
+      def mayHold(s: Statistics[Binary]): Boolean = ps.exists { p =>
+        s.compareMaxToValue(p) >= 0 && (s.compareMinToValue(p) <= 0 || startsWith(s.genericGetMin, p))
+      }
+      def keep(t: Binary): Boolean = ps.exists(startsWith(t, _)) && test(t.toStringUsingUTF8)
+    }
+
+    private def startsWith(t: Binary, p: Binary): Boolean = {
+      val (a, b) = (t.toByteBuffer, p.toByteBuffer)
+      a.remaining >= b.remaining && a.duplicate().limit(a.position + b.remaining).equals(b)
+    }
+  }
+
   /** The rows of `file` in file order, each mapped by `f` — only those
-    * whose `term` is in `terms` when given (an empty set reads
-    * nothing). Columns named in `without` are neither read nor decoded
-    * (null in the rows). */
-  def read[T](file: Path, terms: Option[Set[String]] = None,
+    * that `filter` keeps when given. Columns named in `without` are
+    * neither read nor decoded (null in the rows). */
+  def read[T](file: Path, filter: Option[TermFilter] = None,
               without: Set[String] = Set.empty)(f: Row => T): Vector[T] = {
-    if (terms.exists(_.isEmpty)) return Vector.empty
-    val keys = terms.map(_.map(Binary.fromString))
     val in = new LocalInputFile(file)
     val r = ParquetFileReader.open(in, footer(file), options(), in.newStream())
     try {
@@ -95,22 +126,22 @@ object LocalParquet {
       val converter = new GroupRecordConverter(schema).getRootConverter
       val out = Vector.newBuilder[T]
       r.getRowGroups.asScala.zipWithIndex.foreach { case (b, g) =>
-        if (keys.forall(mayHold(b, _))) {
+        if (filter.forall(mayHold(b, _))) {
           ColumnBridge.addTaskInput(b.getRowCount, b.getColumns.asScala
             .filterNot(c => without(c.getPath.toDotString)).map(_.getTotalSize).sum)
           val store = new ColumnReadStoreImpl(r.readRowGroup(g), converter, schema, meta.getCreatedBy)
           val n = b.getRowCount.toInt
           // the term pass picks the rows (runs, as the file is term-sorted)
-          val (rows, termValues) = keys match {
+          val (rows, termValues) = filter match {
             case None => ((0 until n).toArray, null)
-            case Some(ks) =>
+            case Some(tf) =>
               val c = store.getColumnReader(cols(termCol))
               val hits = Array.newBuilder[Int]; val ts = Array.newBuilder[Any]
               var i = 0
               while (i < n) {
                 if (c.getCurrentDefinitionLevel == cols(termCol).getMaxDefinitionLevel) {
                   val t = c.getBinary
-                  if (ks.contains(t)) { hits += i; ts += t.toStringUsingUTF8 }
+                  if (tf.keep(t)) { hits += i; ts += t.toStringUsingUTF8 }
                 }
                 c.consume(); i += 1
               }
@@ -190,12 +221,11 @@ object LocalParquet {
     }
   }
 
-  /** Whether a row group's `term` range can hold one of `keys`. */
-  private def mayHold(b: BlockMetaData, keys: Set[Binary]): Boolean =
+  /** Whether a row group's `term` range can hold a term `tf` keeps. */
+  private def mayHold(b: BlockMetaData, tf: TermFilter): Boolean =
     b.getColumns.asScala.find(_.getPath.toDotString == "term").forall { c =>
       val s = c.getStatistics.asInstanceOf[Statistics[Binary]]
-      !s.hasNonNullValue ||
-        keys.exists(k => s.compareMinToValue(k) <= 0 && s.compareMaxToValue(k) >= 0)
+      !s.hasNonNullValue || tf.mayHold(s)
     }
 
   /** Column `j`'s values of the ascending `rows` into `values(k)(j)`,

@@ -2,7 +2,7 @@ package graft.index
 
 import graft.SparkFunSuite
 import graft.model.Turn
-import graft.query.IndexReader
+import graft.query.{IndexReader, LocalIndex}
 import graft.sources.SyntheticTranscripts
 import org.apache.spark.sql.functions._
 
@@ -17,6 +17,18 @@ class EdgeCasesSpec extends SparkFunSuite {
     assert(rep.nDocs == 0 && rep.nTerms == 0)
     val rdr = new IndexReader(spark, dir)
     assert(rdr.search("anything", 10).isEmpty)
+    assertLoadsEmpty(dir, rdr, rep.nDocs)
+  }
+
+  /** `LocalIndex.load` and `loadTerms` read an index with no postings
+    * as an empty index, and the relational paths return nothing. */
+  private def assertLoadsEmpty(dir: String, rdr: IndexReader, nDocs: Long): Unit = {
+    for (local <- Seq(LocalIndex.load(spark, dir), LocalIndex.loadTerms(spark, dir, Seq("anything", "user")))) {
+      assert(local.nDocs == nDocs)
+      assert(local.search("anything user", 10).isEmpty)
+    }
+    assert(rdr.scoredDocs("anything user").collect().isEmpty)
+    assert(rdr.matchingDocs("anything").collect().isEmpty)
   }
 
   test("all-empty-text corpus: docs exist but nothing tokenizes; build still commits") {
@@ -26,6 +38,43 @@ class EdgeCasesSpec extends SparkFunSuite {
     val rep = IndexBuilder.build(spark, blank, BuildConfig(dir, nSegments = 4))
     assert(rep.nDocs == 20 && rep.nTerms == 0)
     assert(new IndexReader(spark, dir).search("anything", 10).isEmpty)
+    assertLoadsEmpty(dir, new IndexReader(spark, dir), rep.nDocs)
+  }
+
+  test("an index dir given as a file: URI reads like the plain path; another scheme throws") {
+    val dir = tmpDir("idx-uri")
+    IndexBuilder.build(spark, SyntheticTranscripts.generate(spark, 42L, nConvs = 40),
+      BuildConfig(dir, nSegments = 4))
+    val plain = new IndexReader(spark, dir)
+    val want = plain.search("user la", 5)
+    val dfs = plain.docFreqs(Seq("user"))
+    val scored = plain.scoredDocs("user la").collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
+    assert(want.nonEmpty && dfs.nonEmpty && scored.nonEmpty)
+    for (uri <- Seq("file://" + dir, java.nio.file.Paths.get(dir).toUri.toString)) {
+      val rdr = new IndexReader(spark, uri)
+      assert(rdr.search("user la", 5) == want, uri)
+      assert(rdr.docFreqs(Seq("user")) == dfs, uri)
+      assert(rdr.scoredDocs("user la").collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
+        .sameElements(scored), uri)
+      assert(LocalIndex.load(spark, uri).search("user la", 5) == want, uri)
+    }
+    for (bad <- Seq("hdfs://namenode:8020/idx", "s3a://bucket/idx")) {
+      val e = intercept[IllegalArgumentException](new IndexReader(spark, bad))
+      assert(e.getMessage.contains(bad))
+      intercept[IllegalArgumentException](LocalIndex.load(spark, bad))
+    }
+  }
+
+  test("corpus stats that are not exactly one row throw, naming the table") {
+    val dir = tmpDir("idx-stats2")
+    IndexBuilder.build(spark, SyntheticTranscripts.generate(spark, 7L, nConvs = 10),
+      BuildConfig(dir, nSegments = 2))
+    val table = IndexBuilder.corpusStatsDir(dir)
+    val Seq(f) = graft.store.LocalParquet.files(java.nio.file.Paths.get(table))
+    java.nio.file.Files.copy(f, f.resolveSibling("part-99999-copy.parquet"))
+    val e = intercept[IllegalArgumentException](new IndexReader(spark, dir).stats)
+    assert(e.getMessage.contains(table) && e.getMessage.contains("2 rows"))
+    intercept[IllegalArgumentException](LocalIndex.load(spark, dir))
   }
 
   test("single-doc corpus") {

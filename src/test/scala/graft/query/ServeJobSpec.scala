@@ -53,4 +53,27 @@ class ServeJobSpec extends SparkFunSuite {
   test("the df lookup runs no Spark job") {
     assert(jobsOf(reader.docFreqs(Seq("user", "la"))).isEmpty)
   }
+
+  test("prefix, wildcard and fuzzy queries each run one single-stage job: the expansion reads the dictionary in-process") {
+    assert(reader.searchPrefix("us", 5).nonEmpty && reader.searchWildcard("*er", 5).nonEmpty &&
+      reader.searchFuzzy("usr", 1, 5).nonEmpty)
+    assert(jobsOf(reader.searchPrefix("us", 5)) == Seq("graft:searchPrefix" -> 1))
+    assert(jobsOf(reader.searchWildcard("u?er", 5)) == Seq("graft:searchWildcard" -> 1))
+    assert(jobsOf(reader.searchWildcard("*er", 5)) == Seq("graft:searchWildcard" -> 1))
+    assert(jobsOf(reader.searchFuzzy("usr", 1, 5)) == Seq("graft:searchFuzzy" -> 1))
+  }
+
+  test("searchParsed with wildcard and fuzzy clauses and searchManyMixed with prefix and fuzzy specs each run one single-stage job") {
+    assert(reader.searchParsed("us* usr~1", 5).nonEmpty)
+    assert(jobsOf(reader.searchParsed("us* usr~1", 5)) == Seq("graft:searchParsed" -> 1))
+    val mixed = Seq("p" -> QuerySpec.Prefix("us"), "f" -> QuerySpec.Fuzzy("usr", 1), "t" -> QuerySpec.Free("la"))
+    assert(reader.searchManyMixed(mixed, 5).map(_._1).toSet == Set("p", "f", "t"))
+    assert(jobsOf(reader.searchManyMixed(mixed, 5)) == Seq("graft:searchManyMixed" -> 1))
+  }
+
+  test("scoredDocs and matchingDocs each collect in one single-stage job: no postings shuffle") {
+    assert(reader.scoredDocs("user la").collect().nonEmpty && reader.matchingDocs("user la").collect().nonEmpty)
+    assert(jobsOf(reader.scoredDocs("user la").collect()).map(_._2) == Seq(1))
+    assert(jobsOf(reader.matchingDocs("user la").collect()).map(_._2) == Seq(1))
+  }
 }

@@ -1,6 +1,7 @@
 package graft.store
 
 import graft.SparkFunSuite
+import graft.store.LocalParquet.TermFilter
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
@@ -23,7 +24,11 @@ class LocalParquetSpec extends SparkFunSuite {
 
   private def rows(f: Path, terms: Option[Set[String]] = None,
                    without: Set[String] = Set.empty): Vector[(String, Long, String)] =
-    LocalParquet.read(f, terms, without)(r => (r[String]("term"), r[Long]("df"), r[String]("positions")))
+    read(f, terms.map(TermFilter.in), without)
+
+  private def read(f: Path, filter: Option[TermFilter],
+                   without: Set[String] = Set.empty): Vector[(String, Long, String)] =
+    LocalParquet.read(f, filter, without)(r => (r[String]("term"), r[Long]("df"), r[String]("positions")))
 
   test("term-filtered reads match Spark's, with snappy and zstd pages") {
     val s = spark
@@ -36,6 +41,32 @@ class LocalParquetSpec extends SparkFunSuite {
       assert(rows(f, Some(want)) == all.filter(r => want(r._1)), codec)
       assert(rows(f, Some(Set.empty)).isEmpty)
     }
+  }
+
+  test("a prefix filter reads the row groups that meet its prefixes and keeps what passes its test") {
+    val s = spark
+    import s.implicits._
+    val f = table("lp-prefix", 3000)
+    val all = spark.read.parquet(f.toString).as[(String, Long, String)].collect().toVector
+    def check(prefixes: Set[String], test: String => Boolean): Unit = {
+      val want = all.filter(r => prefixes.exists(r._1.startsWith) && test(r._1))
+      assert(read(f, Some(TermFilter.prefixed(prefixes, test))) == want, prefixes)
+    }
+    check(Set("t001"), _ => true)                       // 100 rows inside a few row groups
+    check(Set("t0299", "t00"), _.endsWith("7"))         // two ranges, the first at the file's end
+    check(Set("t02999"), _ => true)                     // the last row alone
+    check(Set("u", "s", "t1"), _ => true)               // past the max, before the min, past every term
+    check(Set(""), _.contains("55"))                    // every row group, a per-term test
+    assert(read(f, Some(TermFilter.prefixed(Set("t001"), _ => false))).isEmpty)
+    // the range test skips row groups on both sides of the prefix: the
+    // 10 rows of t0150* sit in the middle of the file, and a read of
+    // them counts only the row groups it read, far fewer than the
+    // half of the file on either side
+    val rowsRead = spark.sparkContext.parallelize(Seq(f.toString), 1).map { p =>
+      LocalParquet.read(Paths.get(p), Some(TermFilter.prefixed(Set("t0150"), _ => true)))(_ => ())
+      org.apache.spark.TaskContext.get().taskMetrics().inputMetrics.recordsRead
+    }.collect().head
+    assert(rowsRead >= 10 && rowsRead < 3000 / 4, rowsRead)
   }
 
   test("a dropped column reads as null and leaves the others unchanged") {
