@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 object FtIndex {
 
   /** Bump to invalidate /tmp caches when the index layout changes. */
-  private val CacheVersion = 7 // v7: index format v3 (positional postings)
+  private val CacheVersion = 8 // v8: staging dirs carry per-segment `_segstats`
 
   private val built = scala.collection.mutable.Set[String]()
 

@@ -38,13 +38,18 @@ import java.nio.file.{Files, Paths}
  * segments and the staging rows entering them: [[delta]] diffs a whole
  * source against staging, [[atomicSet]] resolves a keyed patch against
  * it (UPDATED rows only). Both hand it to one apply step
- * ([[applyChanges]]): touched segments' replacement rows are written
- * as per-segment OVERLAY dirs (base staging stays immutable); STALE
- * ledger rows re-plan exactly those segments for Phase B; the phase A
- * manifest is refreshed from one aggregation over the updated view.
- * Every step is idempotent: a crash anywhere replays the change set
- * against the current view and converges — a replayed change set over
- * already-published overlays is empty, and already-appended STALE rows
+ * ([[applyChanges]]), which decides before it writes: touched
+ * segments' replacement rows are written as per-segment OVERLAY dirs
+ * (base staging stays immutable), unless overlays would then cover
+ * more than `autoCompactFraction` of the segments — then the changed
+ * view is written once as a new base ([[writeBase]], shared with
+ * [[compact]]) and no compaction follows. STALE ledger rows re-plan
+ * exactly the touched segments for Phase B; the phase A manifest is
+ * refreshed from the per-segment stats each staging write publishes
+ * with its rows ([[SegStats]]), read in-process. Every step is
+ * idempotent: a crash anywhere replays the change set against the
+ * current view and converges — a replayed change set over
+ * already-published staging is empty, and already-appended STALE rows
  * drive the remaining rebuilds.
  *
  * Untouched segments' postings are never rewritten — byte-identical
@@ -61,7 +66,7 @@ import java.nio.file.{Files, Paths}
  * re-scanning columnar source beats shipping the text column through
  * an exchange at any scale. An [[atomicSet]] reads no source: one
  * join of the patch with the staging view, then the touched segments'
- * rows and one stats aggregation over the view.
+ * rows (or, for a base write, the view).
  */
 object Incremental {
 
@@ -175,7 +180,7 @@ object Incremental {
 
       // ---- NEW docs: dense ids from maxDocId+1, same 2-pass trick as
       // phase A, over the (small) appended batch only ----
-      val maxId = view.agg(coalesce(max("doc_id"), lit(-1L))).head().getLong(0)
+      val maxId = SegStats.total(cfg.outDir).maxDocId
       // classification is by KEY PRESENCE (doc_id/h null-ness), never by
       // src_hash nullability: staging written before the hash column
       // existed reads back with src_hash = null, which must degrade to
@@ -251,18 +256,23 @@ object Incremental {
     * rows) replace the view rows with their doc_id or join their
     * segment, `deletes` (doc_id, segment) leave — in crash-safe order:
     * the finalize manifest is invalidated, STALE ledger rows re-plan
-    * the `touched` segments, each gets an overlay (its surviving and
-    * upserted rows) published in place of its staging, and the phase A
-    * manifest is refreshed from one aggregation over the updated view.
-    * The content hash is `srcHash` when the caller has it, else part of
-    * that aggregation. Returns (nDocs, avgdl, segSize, nSegEff) of the
-    * updated corpus. */
+    * the `touched` segments, the changed staging is published, and the
+    * phase A manifest is refreshed from the staging view's per-segment
+    * stats ([[SegStats]], read in-process). The changed staging is an
+    * overlay per touched segment (its surviving and upserted rows,
+    * published in place of its base rows), unless the overlaid and
+    * touched segments together exceed `autoCompactFraction` of the
+    * segments: then the whole view, changed, is written as the new
+    * base ([[writeBase]]) and the overlays go. The content hash is
+    * `srcHash` when the caller has it, else the stats' xor. Returns
+    * (nDocs, avgdl, segSize, nSegEff) of the updated corpus. */
   private def applyChanges(spark: SparkSession, cfg: BuildConfig, t0: Long,
                            prior: Map[String, String], touched: Set[Int],
                            upserts: DataFrame, deletes: Option[DataFrame],
                            srcHash: Option[String]): (Long, Double, Long, Int) = {
     val outDir = cfg.outDir
     val mdir = IndexBuilder.manifestDir(outDir)
+    val segSize = prior("seg_size").toLong
     if (touched.nonEmpty) {
       // invalidate the finalize commit point FIRST: the dictionary /
       // corpus_stats derived for the pre-change corpus must never
@@ -270,149 +280,179 @@ object Incremental {
       // finalizeStats reruns (pending would be empty on resume and
       // the stale COMPLETE finalize manifest would skip the rebuild)
       Files.deleteIfExists(Manifest.finalizePath(mdir))
-      // STALE rows next: if we crash before the overlays publish,
+      // STALE rows next: if we crash before the staging publishes,
       // the re-planned segments rebuild from whatever view exists
-      // (idempotent overwrite), and the rerun re-creates any missing
-      // overlays
+      // (idempotent overwrite), and the rerun re-applies the change set
       Manifest.appendLedger(mdir, touched.toSeq.sorted.map(s => Map(
         "segment" -> s.toString,
         "status" -> Manifest.Stale,
         "snapshot_id" -> t0.toString)))
 
-      // overlay rows: per doc_id, the last of its view row (op 0), its
-      // upsert (1) and its delete (2), unless that is the delete. One
-      // shuffle by segment: the window's (segment, doc_id) clustering
-      // and the write's segment order ride it, no join
+      // appended segments only ever extend the tail: the updated
+      // corpus's segment count is known before the write
+      val nSegAfter = math.max(prior("n_segments_effective").toInt, touched.max + 1)
+      val rebase = cfg.autoCompactFraction > 0 &&
+        (IndexBuilder.overlaidSegments(outDir) ++ touched).size > cfg.autoCompactFraction * nSegAfter
       val p = if (cfg.sortPartitions > 0) cfg.sortPartitions
               else spark.sparkContext.defaultParallelism
-      val current = IndexBuilder.readStaging(spark, outDir)
-        .filter(col("segment").isInCollection(touched)).withColumn("op", lit(0))
+      val view = IndexBuilder.readStaging(spark, outDir)
+      val current = (if (rebase) view else view.filter(col("segment").isInCollection(touched)))
+        .withColumn("op", lit(0))
       val ops = deletes.foldLeft(current.unionByName(upserts.withColumn("op", lit(1))))(
         (d, del) => d.unionByName(del.withColumn("op", lit(2)), allowMissingColumns = true))
+      // per doc_id, the last of its view row (op 0), its upsert (1) and
+      // its delete (2), unless that is the delete. One shuffle: the
+      // window's (segment, doc_id) clustering and the write's order
+      // ride it, no join
       val last = Window.partitionBy("segment", "doc_id").orderBy(col("op").desc)
-      val tmp = Paths.get(outDir, "_tmp_overlay")
-      Manifest.deleteRecursively(tmp)
-      ops.repartition(math.max(1, math.min(touched.size, p)), col("segment"))
+      def merged(clustered: DataFrame): DataFrame = clustered
         .withColumn("rank", row_number().over(last))
         .filter(col("rank") === 1 && col("op") =!= 2)
         .select(IndexBuilder.StagingSchema.fieldNames.map(col).toIndexedSeq: _*)
         .sortWithinPartitions("segment", "doc_id")
-        .write.partitionBy("segment").mode("overwrite").parquet(tmp.toString)
-      touched.toSeq.sorted.foreach { seg =>
-        val src = tmp.resolve(s"segment=$seg")
-        val dest = Paths.get(IndexBuilder.overlayDir(outDir), s"segment=$seg")
-        if (Files.exists(src)) Manifest.publishDir(src, dest)
-        else { // segment lost ALL rows: empty overlay masks the base
-          Manifest.deleteRecursively(dest)
-          Files.createDirectories(dest)
-        }
-      }
-      Manifest.deleteRecursively(tmp)
+      if (rebase) writeBase(spark, outDir, merged(ops.repartitionByRange(p, col("segment"), col("doc_id"))))
+      else writeOverlays(spark, outDir, touched,
+        merged(ops.repartition(math.max(1, math.min(touched.size, p)), col("segment"))))
     }
 
-    // ---- refresh phase A stats from the UPDATED view. Exact long
-    // arithmetic ⇒ avgdl equals what a full rebuild over the same
-    // corpus computes, so scores are bit-identical; the content hash
-    // equals the one a build over that corpus compares against. The
-    // aggregates ride a noop write as an Observation: one job, no
-    // shuffle ----
-    val aggs = Seq(count(lit(1)).as("n"),
-      coalesce(sum(col("dl").cast("long")), lit(0L)).as("dl_sum"),
-      coalesce(max("doc_id"), lit(-1L)).as("max_id")) ++
-      (if (srcHash.isEmpty) Seq(IndexBuilder.ContentHash.as("h")) else Nil)
-    val obs = org.apache.spark.sql.Observation()
-    IndexBuilder.readStaging(spark, outDir).observe(obs, aggs.head, aggs.tail: _*)
-      .write.format("noop").mode("overwrite").save()
-    val nv = obs.get
-    val nDocs = nv("n").asInstanceOf[Long]
-    val dlSum = nv("dl_sum").asInstanceOf[Long]
-    val maxId = nv("max_id").asInstanceOf[Long]
-    val avgdl = if (nDocs == 0) 1.0 else dlSum.toDouble / nDocs
-    val segSize = prior("seg_size").toLong
+    // ---- refresh phase A stats from the UPDATED view's per-segment
+    // stats. Exact long arithmetic ⇒ avgdl equals what a full rebuild
+    // over the same corpus computes, so scores are bit-identical; the
+    // content hash equals the one a build over that corpus compares
+    // against ----
+    val total = SegStats.total(outDir)
+    val avgdl = if (total.n == 0) 1.0 else total.dlSum.toDouble / total.n
     val nSegEff = math.max(prior("n_segments_effective").toInt,
-      if (maxId < 0) 0 else (maxId / segSize).toInt + 1)
+      if (total.maxDocId < 0) 0 else (total.maxDocId / segSize).toInt + 1)
 
-    IndexBuilder.writePhaseA(cfg, nDocs, avgdl, segSize, nSegEff,
-      srcHash.getOrElse(nv("h").toString), Map(
+    IndexBuilder.writePhaseA(cfg, total.n, avgdl, segSize, nSegEff,
+      srcHash.getOrElse(total.hash.toString), Map(
         "delta_of" -> prior.getOrElse("content_hash", ""),
         "segments_touched" -> touched.size.toString,
         "wall_ms" -> (System.currentTimeMillis() - t0).toString))
-    (nDocs, avgdl, segSize, nSegEff)
+    (total.n, avgdl, segSize, nSegEff)
+  }
+
+  /** `rows` (staging rows, sorted by (segment, doc_id) within
+    * partitions) as a DataFrame whose write sums them per segment into
+    * the returned accumulator: the sums ride the write's result stage,
+    * so they are applied once per successful task. */
+  private def counted(spark: SparkSession, rows: DataFrame): (DataFrame, SegStats.Acc) = {
+    val acc = SegStats.newAcc(spark)
+    val rdd = rows.queryExecution.toRdd.mapPartitions(_.map { r => acc.add(r); r })
+    (org.apache.spark.sql.graft.ColumnBridge.internalDF(spark, rdd, IndexBuilder.StagingSchema), acc)
+  }
+
+  /** Publishes each of `touched` as an overlay holding its rows of
+    * `rows` and their `_segstats`; a segment left with no rows gets an
+    * empty overlay, which masks its base rows. */
+  private def writeOverlays(spark: SparkSession, outDir: String, touched: Set[Int],
+                            rows: DataFrame): Unit = {
+    val tmp = Paths.get(outDir, "_tmp_overlay")
+    Manifest.deleteRecursively(tmp)
+    val (df, acc) = counted(spark, rows)
+    // the re-declared sort is free (the rows arrive sorted) and keeps
+    // the partitioned write from sorting by segment alone
+    df.sortWithinPartitions("segment", "doc_id")
+      .write.partitionBy("segment").mode("overwrite").parquet(tmp.toString)
+    val stats = acc.value
+    touched.toSeq.sorted.foreach { seg =>
+      val src = tmp.resolve(s"segment=$seg")
+      SegStats.write(src, Map(seg -> stats.getOrElse(seg, SegStats.Empty)))
+      Manifest.publishDir(src, Paths.get(IndexBuilder.overlayDir(outDir), s"segment=$seg"))
+    }
+    Manifest.deleteRecursively(tmp)
+  }
+
+  private def compactTmp(outDir: String) = Paths.get(outDir, "_tmp_compact")
+  private def precompact(outDir: String) = Paths.get(outDir, "_staging", "docs_precompact")
+
+  /** Writes `rows` (the whole staging view, sorted by (segment, doc_id)
+    * within partitions) aside as a complete new base: its parquet
+    * files, then its `_segstats` last — the mark [[recoverCompact]]
+    * takes for a finished copy. */
+  private[index] def writeBaseAside(spark: SparkSession, outDir: String, rows: DataFrame): Unit = {
+    val tmp = compactTmp(outDir)
+    Manifest.deleteRecursively(tmp)
+    val (df, acc) = counted(spark, rows)
+    df.write.parquet(tmp.toString)
+    SegStats.write(tmp, acc.value)
+  }
+
+  /** Replaces the staging base with `rows` (see [[writeBaseAside]]) and
+    * drops the overlays they fold in. Sequencing: the new base is
+    * written aside, the old base renamed away, the new one renamed in,
+    * then the overlays and the old base are deleted, in that order. A
+    * crash anywhere in it is repaired by [[recoverCompact]]. */
+  private def writeBase(spark: SparkSession, outDir: String, rows: DataFrame): Unit = {
+    writeBaseAside(spark, outDir, rows)
+    val base = Paths.get(IndexBuilder.stagingDir(outDir))
+    val old = precompact(outDir)
+    Manifest.deleteRecursively(old)
+    Files.move(base, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    Files.move(compactTmp(outDir), base, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    Manifest.deleteRecursively(Paths.get(IndexBuilder.overlayDir(outDir)))
+    Manifest.deleteRecursively(old)
   }
 
   /**
    * Fold accumulated per-segment overlays back into a fresh immutable
-   * base staging. Content-preserving — the staging VIEW is identical
-   * before and after — so it can run any time between builds; overlays
-   * otherwise accumulate one directory per segment ever touched, and
-   * `readStaging`'s NOT-IN mask grows with them. Run it when the
-   * overlay count becomes a noticeable fraction of the segment count.
-   *
-   * Sequencing: the merged view is written aside, the old base is
-   * renamed away, the new base renamed in, then old base + overlays
-   * are deleted. A crash between the two renames (base absent, both
-   * copies on disk) is repaired by [[recoverCompact]] — run at the
-   * next compact, build, or staging read — which completes the swap
-   * from the finished merged copy (or restores the pre-compact base);
-   * under a real object store the whole sequence becomes a catalog
-   * swap.
+   * base staging: the explicit verb for the base write an update makes
+   * once its overlays would cover more than `autoCompactFraction` of the
+   * segments. Content-preserving — the staging VIEW is identical before
+   * and after — so it can run any time between builds. Returns the
+   * number of overlays folded. The write and its crash repair are
+   * [[writeBase]]'s; under a real object store the swap becomes a
+   * catalog swap.
    */
   def compact(spark: SparkSession, outDir: String): Int = {
     recoverCompact(outDir)
     val over = IndexBuilder.overlaidSegments(outDir)
     if (over.isEmpty) return 0
-    val p = spark.sparkContext.defaultParallelism
-    val tmp = Paths.get(outDir, "_tmp_compact")
-    Manifest.deleteRecursively(tmp)
-    IndexBuilder.readStaging(spark, outDir)
-      .repartitionByRange(p, col("segment"), col("doc_id"))
-      .sortWithinPartitions("segment", "doc_id")
-      .write.parquet(tmp.toString)
-    val base = Paths.get(IndexBuilder.stagingDir(outDir))
-    val old = Paths.get(outDir, "_staging", "docs_precompact")
-    Manifest.deleteRecursively(old)
-    Files.move(base, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, base, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    Manifest.deleteRecursively(old)
-    Manifest.deleteRecursively(Paths.get(IndexBuilder.overlayDir(outDir)))
+    writeBase(spark, outDir, IndexBuilder.readStaging(spark, outDir)
+      .repartitionByRange(spark.sparkContext.defaultParallelism, col("segment"), col("doc_id"))
+      .sortWithinPartitions("segment", "doc_id"))
     over.size
   }
 
   /**
-   * Repair a crash inside [[compact]]: auto-compaction runs after
-   * every delta-heavy build, so the two-rename window must have an
-   * automated restore path — without one, a crash there leaves
+   * Repair a crash inside [[writeBase]] (an update's base write or
+   * [[compact]]): without it, a crash in the two-rename window leaves
    * `readStaging` broken (base absent) with only `docs_precompact` on
-   * disk. Idempotent; called from [[compact]], [[IndexBuilder.build]],
-   * and the missing-base path of [[IndexBuilder.readStaging]]:
+   * disk. Idempotent; every writer ([[compact]], [[atomicSet]],
+   * [[IndexBuilder.build]]) runs it first, and so does the missing-base
+   * path of [[IndexBuilder.readStaging]]:
    *
-   *  - base absent + complete merged copy (`_SUCCESS`) → finish the
-   *    swap (the merged copy already folds the overlays in);
-   *  - base absent + incomplete merged copy (defensive — the merge is
-   *    fully written before the first rename) → restore the
-   *    pre-compact base and discard the partial merge;
+   *  - base absent + complete new base (its `_segstats`, written last)
+   *    → finish the swap and drop the overlays it folds in;
+   *  - base absent + incomplete new base → restore the old base and
+   *    discard the partial copy (the overlays are still live);
    *  - base present + `docs_precompact` present (crash after the
    *    second rename, before cleanup) → the new base is live and
-   *    content-complete; drop the stale copies but KEEP the overlay
-   *    dir: its crash-time entries are content-masked duplicates of
-   *    the compacted base (harmless — the next compact folds them),
-   *    while any entries a later delta added are live data.
+   *    complete; drop the old base and the overlays. The overlays are
+   *    the pre-swap ones — folded into the new base, and for an
+   *    update's base write older than it — as no writer runs before
+   *    this repair;
+   *  - a new base written aside with no rename begun → discard it (its
+   *    update reruns against the unchanged view).
    */
   def recoverCompact(outDir: String): Unit = {
     val base = Paths.get(IndexBuilder.stagingDir(outDir))
-    val old = Paths.get(outDir, "_staging", "docs_precompact")
-    val tmp = Paths.get(outDir, "_tmp_compact")
-    if (!Files.exists(old)) return
-    if (!Files.exists(base)) {
-      if (Files.exists(tmp.resolve("_SUCCESS"))) {
+    val old = precompact(outDir)
+    val tmp = compactTmp(outDir)
+    val overlays = Paths.get(IndexBuilder.overlayDir(outDir))
+    if (!Files.exists(old)) Manifest.deleteRecursively(tmp)
+    else if (!Files.exists(base)) {
+      if (Files.exists(tmp.resolve(SegStats.FileName))) {
+        Manifest.deleteRecursively(overlays)
         Files.move(tmp, base, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        Manifest.deleteRecursively(old)
-        Manifest.deleteRecursively(Paths.get(IndexBuilder.overlayDir(outDir)))
       } else {
         Files.move(old, base, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         Manifest.deleteRecursively(tmp)
       }
+      Manifest.deleteRecursively(old)
     } else {
+      Manifest.deleteRecursively(overlays)
       Manifest.deleteRecursively(old)
       Manifest.deleteRecursively(tmp)
     }

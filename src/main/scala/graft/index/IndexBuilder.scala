@@ -2,14 +2,16 @@ package graft.index
 
 import graft.analysis.{Analyzer, Tokenizer}
 import graft.model._
-import graft.store.Manifest
+import graft.store.{LocalParquet, Manifest}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 
 case class BuildConfig(outDir: String,
@@ -23,7 +25,7 @@ case class BuildConfig(outDir: String,
                        storePositions: Boolean = true, // false → no per-posting position lists (phrase queries unavailable; ~smaller index + cheaper encode — the Lucene IndexOptions.DOCS_AND_FREQS analog for analytics-only fields)
                        maxOpenTerms: Int = 1 << 19,        // encoder vocab cap
                        maxBufferedPostings: Long = 1L << 22, // encoder memory cap (~64 MB arrays)
-                       autoCompactFraction: Double = 0.5) { // fold staging overlays back into the base once they cover > this fraction of segments (<= 0 disables)
+                       autoCompactFraction: Double = 0.5) { // an update whose overlaid plus touched segments exceed this fraction of the segments writes one new staging base instead of overlays (<= 0 disables)
   /** Segment count targets CACHE-RESIDENT encoder term maps (~25k
     * docs/segment → sub-MB per-task vocab): profiling showed the
     * encode stage goes DRAM-latency-bound once the per-segment term
@@ -62,10 +64,14 @@ class SimulatedKill(wave: Int) extends RuntimeException(s"simulated kill after w
  * carrying an order-insensitive corpus content hash (xor of
  * xxhash64(conv_id, turn_idx, role, text, tool)) for change detection — the
  * reference's `jj_scanner_doc_hash` analog
- * (`ScannerImpl.java:380-417`). The dictionary and corpus_stats are
- * derived AFTER the waves from the posting-block footers
- * (sum(n_docs), sum(block_cf) per term) — a shuffle over block rows
- * (≈ postings/128), not a third tokenize pass over the corpus.
+ * (`ScannerImpl.java:380-417`). Its per-segment sums (count, Σ dl, max
+ * doc_id, content hash) ride the staging write as an accumulator and
+ * publish with it as a `_segstats` file ([[SegStats]]), so an update
+ * refreshes the corpus stats without a scan. The dictionary and
+ * corpus_stats are derived AFTER the waves from the posting-block
+ * footers (sum(n_docs), sum(block_cf) per term): a merge of the
+ * term-sorted segment files inside term ranges, in one shuffle-free
+ * job, not a third tokenize pass over the corpus.
  *
  * == Phase B (postings, per-segment, in waves) ==
  * For each wave of segments not yet COMPLETE: read staging (pushed
@@ -87,8 +93,9 @@ class SimulatedKill(wave: Int) extends RuntimeException(s"simulated kill after w
  * into globally docId-sorted lists. Everything that crosses the wire
  * is doc rows (compact) or encoded blocks (compressed); per-task
  * memory is O(per-segment vocabulary), tuned by nSegments. The only
- * corpus-wide shuffles are the Phase-A range sort and the
- * dictionary's block-footer groupBy. Wave size bounds the working
+ * corpus-wide shuffle is the Phase-A range sort: the dictionary merges
+ * the already term-sorted segments per term range, with no exchange
+ * and no sort of block rows. Wave size bounds the working
  * set; killed builds resume by manifest anti-planning, and replays
  * are idempotent (overwrite-by-partition).
  */
@@ -143,7 +150,9 @@ object IndexBuilder {
    * base dir) is what Phase B, doc_stats readers, and metadata-filtered
    * search must read. Both sides carry parquet min/max segment stats,
    * so wave filters still prune files. Overlays accumulate one dir per
-   * touched segment; a periodic full rebuild compacts them away.
+   * touched segment until an update would overlay more than
+   * `autoCompactFraction` of the segments: that update writes one new
+   * base instead ([[Incremental]]).
    */
   def readStaging(spark: SparkSession, outDir: String): DataFrame = {
     if (!Files.exists(Paths.get(stagingDir(outDir))))
@@ -163,19 +172,6 @@ object IndexBuilder {
   def readDocs(spark: SparkSession, outDir: String): DataFrame =
     readStaging(spark, outDir)
 
-  /** Order-insensitive xor accumulator (for the ride-along corpus
-    * hash; updates ride a result stage → applied once per successful
-    * task, like the dl accumulator). */
-  private class XorAcc extends org.apache.spark.util.AccumulatorV2[Long, Long] {
-    private var v = 0L
-    override def isZero: Boolean = v == 0L
-    override def copy(): XorAcc = { val c = new XorAcc; c.v = v; c }
-    override def reset(): Unit = v = 0L
-    override def add(x: Long): Unit = v ^= x
-    override def merge(o: org.apache.spark.util.AccumulatorV2[Long, Long]): Unit = v ^= o.value
-    override def value: Long = v
-  }
-
   /** Per-segment Long-counter accumulator (merge = pointwise sum). */
   private[index] class SegCounter extends org.apache.spark.util.AccumulatorV2[(Int, Long), Map[Int, Long]] {
     private val m = scala.collection.mutable.HashMap.empty[Int, Long]
@@ -193,8 +189,8 @@ object IndexBuilder {
 
   /** Builds the index of `turns` into `cfg.outDir`: a fresh build, a
     * delta against the index already there ([[Incremental.delta]]), or
-    * a resume of a killed build — then Phase B, finalize and
-    * auto-compaction. Its Spark jobs are described `graft:build`. */
+    * a resume of a killed build — then Phase B and finalize. Its Spark
+    * jobs are described `graft:build`. */
   def build(spark: SparkSession, turns: Dataset[Turn], cfg: BuildConfig): BuildReport =
     inBuildSession(spark, "build", turns.toDF()) { (bs, src) =>
       import bs.implicits._
@@ -261,13 +257,15 @@ object IndexBuilder {
       "tokenizer_version" -> Tokenizer.Version.toString) ++ extra)
 
   /** Whether an on-disk phase A manifest was built in `cfg`'s format
-    * (analyzer, positions, index version) and its staging is there. */
+    * (analyzer, positions, index version) and its staging is there with
+    * its per-segment stats ([[SegStats]]; an index written before them
+    * has none and rebuilds). */
   private[index] def compatible(cfg: BuildConfig, m: Map[String, String]): Boolean =
     m.get("status").contains(Manifest.Complete) &&
       m.get("analyzer").contains(cfg.analyzer.id) &&
       m.get("store_positions").contains(cfg.storePositions.toString) &&
       m.get("index_version").contains(IndexFormat.Version.toString) &&
-      Files.exists(Paths.get(stagingDir(cfg.outDir)))
+      Files.exists(Paths.get(stagingDir(cfg.outDir))) && SegStats.present(cfg.outDir)
 
   /** Routing: fresh build, delta, or resume; then [[finishBuild]]. */
   private def buildInner(spark: SparkSession, turns: Dataset[Turn], cfg: BuildConfig): BuildReport = {
@@ -321,9 +319,9 @@ object IndexBuilder {
   }
 
   /** Phase B over the segments the manifests leave pending, then
-    * finalize and auto-compaction: the half of a build after its phase
-    * A state (`stats`: nDocs, avgdl, segSize, effective segment count)
-    * is on disk. [[Incremental.atomicSet]] enters here directly. */
+    * finalize: the half of a build after its phase A state (`stats`:
+    * nDocs, avgdl, segSize, effective segment count) is on disk.
+    * [[Incremental.atomicSet]] enters here directly. */
   private[index] def finishBuild(spark: SparkSession, cfg: BuildConfig, t0: Long,
                                  stats: (Long, Double, Long, Int)): BuildReport = {
     val (nDocs, avgdl, _, nSegEff) = stats
@@ -440,18 +438,6 @@ object IndexBuilder {
     val quarantined = pending.count(s => finalStates.get(s)
       .exists(_.get("status").contains(Manifest.Quarantined)))
 
-    // auto-compaction: a long-lived delta deployment (ContinuousIndexer)
-    // otherwise accumulates one overlay dir per segment ever touched,
-    // and readStaging's NOT-IN mask grows with them until an operator
-    // intervenes. Content-preserving (the staging view is identical),
-    // runs AFTER the index is fully published, so queries are unchanged.
-    if (cfg.autoCompactFraction > 0) {
-      val over = overlaidSegments(cfg.outDir)
-      if (over.nonEmpty && nSegEff > 0 &&
-          over.size.toDouble > cfg.autoCompactFraction * nSegEff)
-        Incremental.compact(spark, cfg.outDir)
-    }
-
     BuildReport(nDocs, avgdl, nTerms, built, complete.size,
       System.currentTimeMillis() - t0, quarantined)
   }
@@ -543,21 +529,19 @@ object IndexBuilder {
     val nSegEff = if (nDocs == 0) 0 else (((nDocs - 1) / segSize) + 1).toInt
     val offB = spark.sparkContext.broadcast(offsets)
 
-    // pass 2: assign ids + doc length; dl total folds into the same
-    // job via an accumulator (updates are applied once per successful
-    // result-stage task), so avgdl costs no extra pass
+    // pass 2: assign ids + doc length; the per-segment staging stats
+    // (count, dl total, max doc_id, content hash) fold into the same job
+    // via an accumulator (updates are applied once per successful
+    // result-stage task), so avgdl and the corpus hash cost no extra pass
     val az = cfg.analyzer
-    val dlAcc = spark.sparkContext.longAccumulator("graft.dlSum")
-    val hashAcc = new XorAcc
-    spark.sparkContext.register(hashAcc, "graft.srcHash")
-    val needHash = srcHash == null // fresh build: hash rides this pass
+    val segAcc = SegStats.newAcc(spark)
     val v1 = az.id == Analyzer.V1.id
     // staging rows are built as InternalRows straight from the sorted
     // shuffle's UTF8String views — no Turn decode, no String re-encode
     // (each row is consumed by the parquet writer before the next is
-    // pulled, so holding views is safe); src_hash and the fresh-build
-    // content hash fold into the same pass via the raw-field mirrors
-    // (RowHashSpec pins their equality to the SQL xxhash64 forms)
+    // pulled, so holding views is safe); src_hash and the content hash
+    // fold into the same pass via the raw-field mirrors (RowHashSpec
+    // pins their equality to the SQL xxhash64 forms)
     val stagingRows = sorted.mapPartitions { it =>
       val off = offB.value(TaskContext.getPartitionId())
       var i = 0L
@@ -571,10 +555,10 @@ object IndexBuilder {
         val dl =
           if (v1) Tokenizer.docLengthU8(text)
           else az.docLength(if (text == null) null else text.toString)
-        dlAcc.add(dl)
-        if (needHash) hashAcc.add(RowHash.turnHashRaw(conv, tix, role, text, tool))
+        val seg = (id / segSize).toInt
+        segAcc.add(seg, dl, id, RowHash.turnHashRaw(conv, tix, role, text, tool))
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](id, (id / segSize).toInt, conv, tix, role, text, tool, dl,
+          Array[Any](id, seg, conv, tix, role, text, tool, dl,
             RowHash.contentHashRaw(role, text, tool)))
           : org.apache.spark.sql.catalyst.InternalRow
       }
@@ -596,53 +580,67 @@ object IndexBuilder {
         .internalDF(spark, stagingRows, StagingSchema)
         .write.mode("overwrite").parquet(stagingTmp.toString)
     }
+    val segStats = segAcc.value
+    SegStats.write(stagingTmp, segStats)
     Manifest.publishDir(stagingTmp, Paths.get(stagingDir(cfg.outDir)))
 
     // avgdl — defined as sum(dl)/n_docs in double (the dictionary is
     // derived AFTER phase B from the encoded posting blocks, so the
     // corpus is tokenized exactly twice: dl here, postings in B)
-    val avgdl = if (nDocs == 0) 1.0 else dlAcc.value.toDouble / nDocs
+    val total = segStats.values.foldLeft(SegStats.Empty)(_ + _)
+    val avgdl = if (nDocs == 0) 1.0 else total.dlSum.toDouble / nDocs
 
     // sort_ms: the range sort + per-partition counts; staging_ms: the
     // id-assigning staging write
     writePhaseA(cfg, nDocs, avgdl, segSize, nSegEff,
-      if (needHash) hashAcc.value.toString else srcHash, Map(
+      Option(srcHash).getOrElse(total.hash.toString), Map(
         "sort_ms" -> sortMs.toString,
         "staging_ms" -> stagingMs.toString,
         "wall_ms" -> (System.currentTimeMillis() - t0).toString))
     (nDocs, avgdl, segSize, nSegEff)
   }
 
-  /** Post-wave finalize: dictionary (term → global df, cf) aggregated
-    * from the posting-block footers — sum(n_docs) and sum(block_cf)
-    * per term, a shuffle over BLOCK ROWS (≈ postings/128), never over
-    * the token stream — then corpus_stats, then the finalize manifest
-    * as the commit point. Returns n_terms. */
+  /** The dictionary-table schema (term, df, cf), every column
+    * optional. */
+  private val DictionarySchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      org.apache.spark.sql.Encoders.product[DictEntry].schema.map(_.copy(nullable = true)))
+
+  /** Post-wave finalize: the dictionary (term → global df, cf), then
+    * corpus_stats, then the finalize manifest as the commit point.
+    * Returns n_terms.
+    *
+    * Every segment's postings are term-sorted, so the dictionary is a
+    * merge inside term ranges, not a shuffle: `max(1, p/4)` ranges are
+    * cut on the driver, with no job, from the postings row groups'
+    * least terms (the cached footers), and ONE job of one task per
+    * range reads, in-process, the `term`, `n_docs` and `block_cf`
+    * columns of every segment's row groups that meet its range, sums
+    * them per term — df = Σ n_docs, cf = Σ block_cf over the term's
+    * blocks — and emits its terms in order. Dictionary file i is range
+    * i: files are term-sorted and their ranges disjoint, in 128 KiB row
+    * groups, so a reader's term lookup decodes a few row groups. */
   private def finalizeStats(spark: SparkSession, cfg: BuildConfig,
                             nDocs: Long, avgdl: Double, nSegEff: Int): Long = {
     import spark.implicits._
     val t0 = System.currentTimeMillis()
     val p = if (cfg.sortPartitions > 0) cfg.sortPartitions
             else spark.sparkContext.defaultParallelism
-    // explicit schema: an all-empty-text corpus leaves only empty
-    // segment=N dirs under postingsDir, and schema INFERENCE over them
-    // throws AnalysisException — with the schema given, the read just
-    // yields 0 rows and the dictionary comes out empty (EdgeCasesSpec)
-    val hasPostings = nSegEff > 0 && Files.exists(Paths.get(postingsDir(cfg.outDir)))
+    // an all-empty-text corpus leaves only empty segment=N dirs: no
+    // files, one empty range, one empty dictionary file
+    val files = if (nSegEff == 0) Seq.empty[String]
+      else LocalParquet.partitions(Paths.get(postingsDir(cfg.outDir)), "segment")
+        .flatMap { case (_, d) => LocalParquet.files(d).map(_.toString) }
+    val ranges = termRanges(files, math.max(1, p / 4))
 
     // n_terms rides the dictionary write as an Observation (one row per
     // written row) — the separate count job it replaces re-read the
     // freshly written dictionary for a number the write already knew
     val obs = org.apache.spark.sql.Observation()
     writeAtomic(spark, cfg.outDir, "dictionary") { tmp =>
-      val dict =
-        if (hasPostings)
-          spark.read.schema(PostingSchema).parquet(postingsDir(cfg.outDir))
-            .groupBy("term")
-            .agg(sum(col("n_docs").cast("long")).as("df"), sum("block_cf").as("cf"))
-        else Seq.empty[DictEntry].toDS().toDF()
-      dict.repartitionByRange(math.max(1, p / 4), col("term"))
-        .sortWithinPartitions("term")
+      val rows = spark.sparkContext.parallelize(ranges, ranges.size)
+        .mapPartitions(_.flatMap { case (lo, hi) => mergeRange(files, lo, hi) })
+      org.apache.spark.sql.graft.ColumnBridge.internalDF(spark, rows, DictionarySchema)
         .observe(obs, count(lit(1)).as("n"))
         .write.option("parquet.block.size", TermRowGroupBytes).mode("overwrite").parquet(tmp)
     }
@@ -658,6 +656,55 @@ object IndexBuilder {
       "n_terms" -> nTerms.toString,
       "wall_ms" -> (System.currentTimeMillis() - t0).toString))
     nTerms
+  }
+
+  /** At most `k` consecutive term ranges `[lo, hi)` covering every
+    * term (an absent end is open), cut so each holds about the same
+    * number of postings rows: the split terms are row-group least terms
+    * of `files`, taken at equal steps of the row count in term order. */
+  private[index] def termRanges(files: Seq[String], k: Int): Seq[(Option[String], Option[String])] = {
+    if (k <= 1) return Seq((None, None))
+    val groups = files.flatMap(f => LocalParquet.termRowGroups(Paths.get(f)))
+      .map { case (t, n) => (UTF8String.fromString(t), n) }
+      .sortBy(_._1)
+    val total = groups.map(_._2).sum
+    val cuts = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
+    var acc = 0L
+    var next = 1
+    groups.foreach { case (t, n) =>
+      // a row group whose rows start at or past the next step opens a
+      // range; equal or first terms open none (the range would be empty)
+      if (next < k && acc * k >= next * total && t.compareTo(groups.head._1) > 0 &&
+          cuts.lastOption.forall(_.compareTo(t) < 0)) {
+        cuts += t
+        while (next < k && acc * k >= next * total) next += 1
+      }
+      acc += n
+    }
+    val bounds = cuts.map(_.toString).toSeq
+    (None +: bounds.map(Some(_))).zip(bounds.map(Some(_)) :+ None)
+  }
+
+  /** The dictionary rows of the terms in `[lo, hi)`, in term order: the
+    * `term`, `n_docs` and `block_cf` columns of each file's rows in the
+    * range, summed per term. */
+  private def mergeRange(files: Seq[String], lo: Option[String],
+                         hi: Option[String]): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    val sums = new java.util.HashMap[String, Array[Long]]()
+    val filter = Some(LocalParquet.TermFilter.range(lo, hi))
+    val without = PostingSchema.fieldNames.toSet -- Set("term", "n_docs", "block_cf")
+    files.foreach { f =>
+      LocalParquet.read(Paths.get(f), filter, without)(r =>
+        (r[String]("term"), r[Int]("n_docs"), r[Long]("block_cf"))).foreach { case (t, n, cf) =>
+        val a = sums.computeIfAbsent(t, _ => new Array[Long](2))
+        a(0) += n; a(1) += cf
+      }
+    }
+    sums.asScala.toArray
+      .map { case (t, a) => (UTF8String.fromString(t), a) }
+      .sortBy(_._1).iterator.map { case (t, a) =>
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](t, a(0), a(1)))
+      }
   }
 
   private def timedMs[T](f: => T): (T, Long) = {

@@ -36,8 +36,8 @@ import org.apache.spark.sql.functions._
  * segment group, with no postings shuffle. So every query-side read
  * of a postings or dictionary file goes through
  * [[graft.store.LocalParquet]], except the Spark `dictionary`
- * DataFrame behind [[suggest]], [[terms]], [[collate]],
- * [[totalTokens]] and [[termVectors]].
+ * DataFrame behind [[suggest]], [[terms]], [[collate]] and
+ * [[termVectors]].
  *
  * == Two-level merge + θ sharing ==
  * Query tasks each own a contiguous RANGE of segments (`segment /
@@ -105,11 +105,13 @@ class IndexReader(spark: SparkSession, dir: String,
   def collectionFreqs(terms: Seq[String]): Map[String, Long] =
     IndexReader.dictionaryLookup(dictionaryFiles, terms, "cf")
 
-  /** Total token count of the indexed corpus: Σ cf over the dictionary
-    * (block-footer-derived, one cheap aggregate, cached per reader) —
-    * exact, unlike avgdl·nDocs which reintroduces the double ratio. */
-  lazy val totalTokens: Long =
-    dictionary.agg(coalesce(sum(col("cf")), lit(0L))).as[Long].head()
+  /** Total token count of the indexed corpus: Σ cf over the dictionary,
+    * one in-process read of its `cf` column (no Spark job, cached per
+    * reader) — exact, unlike avgdl·nDocs which reintroduces the double
+    * ratio. */
+  lazy val totalTokens: Long = dictionaryFiles.map { f =>
+    LocalParquet.read(Paths.get(f), None, Set("term", "df"))(_[Long]("cf")).sum
+  }.sum
 
   /** The lowering over this index's dictionary: df lookups, and one
     * in-process dictionary read per expansion family, pruned to the

@@ -15,7 +15,7 @@ import org.apache.parquet.hadoop.{CodecFactory, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, CompressionCodecName, ParquetMetadata}
 import org.apache.parquet.io.LocalInputFile
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveComparator}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.xerial.snappy.Snappy
@@ -103,11 +103,36 @@ object LocalParquet {
       def keep(t: Binary): Boolean = ps.exists(startsWith(t, _)) && test(t.toStringUsingUTF8)
     }
 
+    /** The terms in `[lo, hi)` by UTF-8 byte order, each end open when
+      * absent: only the row groups that meet the range are read. */
+    def range(lo: Option[String], hi: Option[String]): TermFilter = new TermFilter {
+      private val (l, h) = (lo.map(Binary.fromString), hi.map(Binary.fromString))
+      def mayHold(s: Statistics[Binary]): Boolean =
+        l.forall(s.compareMaxToValue(_) >= 0) && h.forall(s.compareMinToValue(_) < 0)
+      def keep(t: Binary): Boolean =
+        l.forall(ByteOrder.compare(t, _) >= 0) && h.forall(ByteOrder.compare(t, _) < 0)
+    }
+
+    /** The order of the `term` statistics: unsigned bytes, as Spark's
+      * string sort. */
+    private val ByteOrder = PrimitiveComparator.UNSIGNED_LEXICOGRAPHICAL_BINARY_COMPARATOR
+
     private def startsWith(t: Binary, p: Binary): Boolean = {
       val (a, b) = (t.toByteBuffer, p.toByteBuffer)
       a.remaining >= b.remaining && a.duplicate().limit(a.position + b.remaining).equals(b)
     }
   }
+
+  /** Each row group of `file` as its least `term` and its row count,
+    * from the cached footer; row groups without term statistics are
+    * left out. */
+  def termRowGroups(file: Path): Seq[(String, Long)] =
+    footer(file).getBlocks.asScala.toSeq.flatMap { b =>
+      b.getColumns.asScala.find(_.getPath.toDotString == "term").collect {
+        case c if c.getStatistics.hasNonNullValue =>
+          c.getStatistics.asInstanceOf[Statistics[Binary]].genericGetMin.toStringUsingUTF8 -> b.getRowCount
+      }
+    }
 
   /** The rows of `file` in file order, each mapped by `f` — only those
     * that `filter` keeps when given. Columns named in `without` are

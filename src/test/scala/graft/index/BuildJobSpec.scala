@@ -1,8 +1,13 @@
 package graft.index
 
 import graft.SparkFunSuite
+import graft.query.IndexReader
 import graft.sources.SyntheticTranscripts
+import graft.store.Manifest
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Build-side job labels and the cost of a patch: every Spark job of
@@ -10,24 +15,30 @@ import scala.jdk.CollectionConverters._
   * `Incremental.atomicSet` `graft:atomicSet`, the caller's description
   * survives both, and a one-document patch on an 8-segment index runs
   * a bounded number of jobs — it resolves against staging and rewrites
-  * one segment, with no corpus hash, key diff or id assignment. */
+  * one segment, with no corpus hash, key diff or id assignment; a
+  * patch past the auto-compaction fraction writes one staging base and
+  * compacts nothing after it. */
 class BuildJobSpec extends SparkFunSuite {
   import graft.SparkTestBase.spark.implicits._
 
-  /** Jobs of a one-document patch, bounded from a measurement: 12 on
-    * `local[4]`, against 30 when a patch ran as a source delta over a
-    * patched-corpus view. */
-  private val PatchJobBudget = 14
+  /** Jobs of a one-document patch, bounded from a measurement: 9 on
+    * `local[4]` (resolve, overlay write, one wave, the dictionary merge
+    * and the corpus_stats write). */
+  private val PatchJobBudget = 10
 
   /** The description of each job `call` starts in its own job group. */
-  private def jobsOf(call: => Unit): Seq[String] = {
+  private def jobsOf(call: => Unit): Seq[String] = timedJobsOf(call).map(_._1)
+
+  /** (description, submission time in epoch ms) of each job `call`
+    * starts in its own job group. */
+  private def timedJobsOf(call: => Unit): Seq[(String, Long)] = {
     val sc = spark.sparkContext
     val group = s"build-job-${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+          seen.add(String.valueOf(e.properties.getProperty("spark.job.description")) -> e.time)
     }
     sc.addSparkListener(l)
     try {
@@ -56,5 +67,31 @@ class BuildJobSpec extends SparkFunSuite {
     assert(rep.segmentsBuilt == 1)
     assert(patch.nonEmpty && patch.forall(_ == "graft:atomicSet"), patch.distinct)
     assert(patch.size <= PatchJobBudget, s"${patch.size} jobs for a one-document patch")
+  }
+
+  test("a patch that touches more than half the segments writes one new staging base and runs no job after finalize") {
+    val dir = tmpDir("build-job-rebase")
+    val cfg = BuildConfig(dir, nSegments = 4, waveSize = 4, autoCompactFraction = 0.5)
+    IndexBuilder.build(spark, SyntheticTranscripts.generate(spark, 42L, nConvs = 400, maxTurns = 8), cfg)
+    // the first turn of each of segments 0-2: 3 of 4 segments > 0.5
+    val picks = IndexBuilder.readDocs(spark, dir).filter(col("segment") < 3)
+      .groupBy("segment").agg(min(struct(col("doc_id"), col("conv_id"), col("turn_idx"))).as("d"))
+      .select(col("d.conv_id"), col("d.turn_idx")).as[(String, Int)].collect()
+    assert(picks.length == 3)
+    val sets = picks.toSeq.map { case (c, t) => (c, t, "rebased patch turn rebaseword") }
+      .toDF("conv_id", "turn_idx", "text")
+    var rep: BuildReport = null
+    val jobs = timedJobsOf { rep = Incremental.atomicSet(spark, cfg, sets) }
+    assert(rep.segmentsBuilt == 3)
+    assert(jobs.nonEmpty && jobs.forall(_._1 == "graft:atomicSet"))
+    // the finalize manifest is the patch's last write: no job (such as
+    // a compaction) starts after it
+    val finalized = Files.getLastModifiedTime(
+      Manifest.finalizePath(IndexBuilder.manifestDir(dir))).toMillis
+    assert(jobs.forall(_._2 <= finalized), s"jobs after finalize: ${jobs.filter(_._2 > finalized)}")
+    for (leftover <- Seq(IndexBuilder.overlayDir(dir), s"$dir/_tmp_compact", s"$dir/_staging/docs_precompact"))
+      assert(!Files.exists(Paths.get(leftover)), leftover)
+    val hits = new IndexReader(spark, dir).search("rebaseword", 10)
+    assert(hits.size == 3)
   }
 }

@@ -345,13 +345,12 @@ class IncrementalSpec extends SparkFunSuite {
     val old = Paths.get(dir, "_staging", "docs_precompact")
     val tmp = Paths.get(dir, "_tmp_compact")
 
-    // --- crash state A: merged copy complete, base renamed away, new
-    // base not yet renamed in (the exact instant between the two
-    // ATOMIC_MOVEs) ---
-    IndexBuilder.readStaging(spark, dir)
+    // --- crash state A: merged copy complete (written aside by the
+    // base write compact uses), base renamed away, new base not yet
+    // renamed in (the exact instant between the two ATOMIC_MOVEs) ---
+    Incremental.writeBaseAside(spark, dir, IndexBuilder.readStaging(spark, dir)
       .repartitionByRange(4, col("segment"), col("doc_id"))
-      .sortWithinPartitions("segment", "doc_id")
-      .write.parquet(tmp.toString)
+      .sortWithinPartitions("segment", "doc_id"))
     Files.move(base, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     assert(!Files.exists(base))
     // the next staging read (build and queries route through it) must
@@ -383,6 +382,86 @@ class IncrementalSpec extends SparkFunSuite {
     assert(!Files.exists(old))
     assert(rep.nDocs == v3.count())
     assert(IndexBuilder.verifyIngestion(spark, dir, v3) == 0L)
+  }
+
+  private def copyDir(src: String, dst: String): Unit = {
+    graft.store.Manifest.deleteRecursively(Paths.get(dst))
+    Files.walk(Paths.get(src)).iterator().asScala.foreach { p =>
+      Files.copy(p, Paths.get(dst).resolve(Paths.get(src).relativize(p).toString),
+        java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+    }
+  }
+
+  test("an atomicSet that writes a new staging base converges from each crash state of its base write") {
+    val pre = tmpDir("rebase-pre"); val ref = tmpDir("rebase-ref"); val fullDir = tmpDir("rebase-full")
+    val cfg = BuildConfig(pre, nSegments = 4, waveSize = 4, autoCompactFraction = 0.5)
+    IndexBuilder.build(spark, v1, cfg)
+    def firstKey(seg: Int) = IndexBuilder.readDocs(spark, pre).filter(col("segment") === seg)
+      .orderBy("doc_id").select("conv_id", "turn_idx").as[(String, Int)].head()
+    // patch A overlays segment 0 (1 of 4 segments); patch B touches
+    // segments 1 and 2, so overlays would cover 3 > 0.5 × 4: B writes a
+    // new base that folds A's overlay in
+    val Seq(a, b1, b2) = Seq(0, 1, 2).map(firstKey)
+    Incremental.atomicSet(spark, cfg, Seq((a._1, a._2, "rebase patch alpha rebaseword"))
+      .toDF("conv_id", "turn_idx", "text"))
+    assert(IndexBuilder.overlaidSegments(pre) == Set(0))
+    val setsB = Seq((b1._1, b1._2, "rebase patch beta rebaseword"), (b2._1, b2._2, "rebase patch gamma"))
+      .toDF("conv_id", "turn_idx", "text")
+    copyDir(pre, ref)
+    Incremental.atomicSet(spark, cfg.copy(outDir = ref), setsB)
+    assert(IndexBuilder.overlaidSegments(ref).isEmpty)
+
+    val patched = Map(a -> "rebase patch alpha rebaseword", b1 -> "rebase patch beta rebaseword",
+      b2 -> "rebase patch gamma")
+    val patchedCorpus = v1.map(t => patched.get((t.conv_id, t.turn_idx)).fold(t)(x => t.copy(text = x)))
+    IndexBuilder.build(spark, patchedCorpus, BuildConfig(fullDir, nSegments = 4, waveSize = 4))
+    val rf = new IndexReader(spark, fullDir)
+    val dictFull = spark.read.parquet(IndexBuilder.dictionaryDir(fullDir)).collect().map(_.toSeq).toSet
+    val hashFull = graft.store.Manifest.read(graft.store.Manifest.phaseAPath(IndexBuilder.manifestDir(fullDir)))
+      .get("content_hash")
+
+    // the on-disk states of B's apply, each built from the pre-B index:
+    // finalize invalidated, STALE rows for segments 1 and 2, and the new
+    // base (as B writes it: the reference run's) written aside, then
+    // the rename steps up to, not including, the phase A manifest
+    def crashState(name: String)(steps: (java.nio.file.Path, java.nio.file.Path, java.nio.file.Path) => Unit): String = {
+      val d = tmpDir(s"rebase-$name")
+      copyDir(pre, d)
+      val mdir = IndexBuilder.manifestDir(d)
+      Files.delete(graft.store.Manifest.finalizePath(mdir))
+      graft.store.Manifest.appendLedger(mdir, Seq(1, 2).map(s =>
+        Map("segment" -> s.toString, "status" -> graft.store.Manifest.Stale)))
+      val tmp = Paths.get(d, "_tmp_compact")
+      copyDir(IndexBuilder.stagingDir(ref), tmp.toString)
+      steps(Paths.get(IndexBuilder.stagingDir(d)), Paths.get(d, "_staging", "docs_precompact"), tmp)
+      d
+    }
+    val move = (from: java.nio.file.Path, to: java.nio.file.Path) =>
+      Files.move(from, to, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val states = Seq(
+      crashState("aside")((_, _, _) => ()),
+      crashState("between-renames")((base, old, _) => move(base, old)),
+      crashState("swapped")((base, old, tmp) => { move(base, old); move(tmp, base) }),
+      crashState("cleaned")((base, old, tmp) => {
+        move(base, old); move(tmp, base)
+        graft.store.Manifest.deleteRecursively(base.resolveSibling("seg"))
+        graft.store.Manifest.deleteRecursively(old)
+      }))
+    for (d <- states) {
+      Incremental.atomicSet(spark, cfg.copy(outDir = d), setsB)
+      val ri = new IndexReader(spark, d)
+      assert(ri.stats == rf.stats, d) // n_docs, bit-equal avgdl, n_terms
+      assert(spark.read.parquet(IndexBuilder.dictionaryDir(d)).collect().map(_.toSeq).toSet == dictFull, d)
+      assert(graft.store.Manifest.read(graft.store.Manifest.phaseAPath(IndexBuilder.manifestDir(d)))
+        .get("content_hash") == hashFull, d)
+      for (q <- Seq("rebaseword", "rebase patch gamma", "assistant tool error", "user assistant"))
+        assert(ri.search(q, 10).map(h => (h.doc_id, h.score)) ==
+          rf.search(q, 10).map(h => (h.doc_id, h.score)), s"$d: '$q'")
+      assert(IndexBuilder.overlaidSegments(d).isEmpty, d)
+      val leftovers = Seq(Paths.get(d, "_staging", "docs_precompact"), Paths.get(IndexBuilder.overlayDir(d))) ++
+        Files.list(Paths.get(d)).iterator().asScala.filter(_.getFileName.toString.startsWith("_tmp"))
+      assert(!leftovers.exists(Files.exists(_)), s"$d: ${leftovers.filter(Files.exists(_))}")
+    }
   }
 
   test("delta from an empty index = initial load; rerun of same source is a no-op") {

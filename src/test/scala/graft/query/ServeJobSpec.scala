@@ -12,12 +12,14 @@ import scala.jdk.CollectionConverters._
   * description survives the call. */
 class ServeJobSpec extends SparkFunSuite {
 
-  private lazy val reader: IndexReader = {
-    val dir = tmpDir("idx-serve-job")
+  private lazy val dir: String = {
+    val d = tmpDir("idx-serve-job")
     IndexBuilder.build(spark, SyntheticTranscripts.generate(spark, 42L, nConvs = 40),
-      BuildConfig(dir, nSegments = 4))
-    new IndexReader(spark, dir)
+      BuildConfig(d, nSegments = 4))
+    d
   }
+
+  private lazy val reader: IndexReader = new IndexReader(spark, dir)
 
   /** (description, stage count) of each job `call` starts in its own
     * job group. */
@@ -75,5 +77,15 @@ class ServeJobSpec extends SparkFunSuite {
     assert(reader.scoredDocs("user la").collect().nonEmpty && reader.matchingDocs("user la").collect().nonEmpty)
     assert(jobsOf(reader.scoredDocs("user la").collect()).map(_._2) == Seq(1))
     assert(jobsOf(reader.matchingDocs("user la").collect()).map(_._2) == Seq(1))
+  }
+
+  test("a fresh reader's scoredDocsDirichlet runs the jobs of a warmed one: totalTokens reads the dictionary in-process") {
+    assert(reader.scoredDocsDirichlet("user la").collect().nonEmpty)
+    val warm = jobsOf(reader.scoredDocsDirichlet("user la").collect())
+    val fresh = new IndexReader(spark, dir)
+    assert(jobsOf(fresh.scoredDocsDirichlet("user la").collect()) == warm)
+    val sumCf = spark.read.parquet(IndexBuilder.dictionaryDir(dir))
+      .agg(org.apache.spark.sql.functions.sum("cf")).head().getLong(0)
+    assert(fresh.totalTokens == sumCf && sumCf > 0)
   }
 }
