@@ -5,7 +5,6 @@ import graft.store.Manifest
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -43,14 +42,20 @@ import java.nio.file.{Files, Paths}
  * (base staging stays immutable), unless overlays would then cover
  * more than `autoCompactFraction` of the segments — then the changed
  * view is written once as a new base ([[writeBase]], shared with
- * [[compact]]) and no compaction follows. STALE ledger rows re-plan
- * exactly the touched segments for Phase B; the phase A manifest is
- * refreshed from the per-segment stats each staging write publishes
- * with its rows ([[SegStats]]), read in-process. Every step is
- * idempotent: a crash anywhere replays the change set against the
- * current view and converges — a replayed change set over
- * already-published staging is empty, and already-appended STALE rows
- * drive the remaining rebuilds.
+ * [[compact]]) and no compaction follows. Either write is one Spark
+ * job over segment tasks: a partitioner keyed on segment routes the
+ * change set (O(patch) rows) to its segment's task, which reads the
+ * segment's current rows in place ([[Staging]]: its overlay, else the
+ * base files whose segment statistics meet it) in doc_id order and
+ * merges the sorted changes into them — view < upsert < delete per
+ * doc_id ([[merge]]). No scan, window or sort of the view runs. STALE
+ * ledger rows re-plan exactly the touched segments for Phase B; the
+ * phase A manifest is refreshed from the per-segment stats each
+ * staging write publishes with its rows ([[SegStats]]), read
+ * in-process. Every step is idempotent: a crash anywhere replays the
+ * change set against the current view and converges — a replayed
+ * change set over already-published staging is empty, and
+ * already-appended STALE rows drive the remaining rebuilds.
  *
  * Untouched segments' postings are never rewritten — byte-identical
  * across updates (IncrementalSpec) — and remain score-correct under
@@ -66,7 +71,7 @@ import java.nio.file.{Files, Paths}
  * re-scanning columnar source beats shipping the text column through
  * an exchange at any scale. An [[atomicSet]] reads no source: one
  * join of the patch with the staging view, then the touched segments'
- * rows (or, for a base write, the view).
+ * rows in place (or, for a base write, every segment's).
  */
 object Incremental {
 
@@ -96,13 +101,10 @@ object Incremental {
         .filter(IndexBuilder.compatible(cfg, _))
         .getOrElse(throw new IllegalStateException(
           s"atomicSet needs an index built with this config at ${cfg.outDir}"))
-      val (rows, perSegment) = changeSet(bs, cfg, patch)
-      try {
-        val changed = org.apache.spark.sql.graft.ColumnBridge
-          .internalDF(bs, rows, IndexBuilder.StagingSchema)
-        IndexBuilder.finishBuild(bs, cfg, t0,
-          applyChanges(bs, cfg, t0, prior, perSegment.keySet, changed, None, None))
-      } finally rows.unpersist()
+      val ((rows, perSegment), resolveMs) = IndexBuilder.timedMs(changeSet(bs, cfg, patch))
+      try IndexBuilder.finishBuild(bs, cfg, t0, applyChanges(bs, cfg, t0, prior, perSegment.keySet,
+        rows, bs.sparkContext.emptyRDD, None, resolveMs))
+      finally rows.unpersist()
     }
 
   /** The patch resolved against the staging view, in staging form:
@@ -187,8 +189,7 @@ object Incremental {
       // "every matched doc is updated" — not "every doc is new"
       val freshKeys = deltaRows.filter(col("doc_id").isNull)
         .select(col("conv_id"), col("turn_idx"))
-      val p = if (cfg.sortPartitions > 0) cfg.sortPartitions
-              else spark.sparkContext.defaultParallelism
+      val p = IndexBuilder.sortPartitions(spark, cfg)
       val (sortedFresh, offsets, nFresh) = IndexBuilder.sortAndOffsets(spark,
         turns.toDF()
           .join(freshKeys, Seq("conv_id", "turn_idx"), "left_semi")
@@ -237,7 +238,7 @@ object Incremental {
       // updated versions and appended docs are upserted; deleted docs
       // leave
       val deletes = deltaRows.filter(col("h").isNull)
-        .select(col("doc_id"), col("segment"))
+        .select(col("segment"), col("doc_id")).as[(Int, Long)].rdd
       val dlOf = udf((s: String) => az.docLength(s))
       val updatedKeys = deltaRows
         .filter(col("h").isNotNull && col("doc_id").isNotNull)
@@ -246,15 +247,17 @@ object Incremental {
         .select(col("doc_id"), col("segment"), col("conv_id"), col("turn_idx"),
           col("role"), col("text"), col("tool"), dlOf(col("text")).as("dl"))
         .withColumn("src_hash", xxhash64(col("role"), col("text"), col("tool")))
-      try applyChanges(spark, cfg, t0, m, changedSegs ++ freshSegs,
-        updRows.unionByName(freshRows), Some(deletes), Some(srcHash))
+      val upserts = updRows.unionByName(freshRows)
+        .select(IndexBuilder.StagingSchema.fieldNames.map(col).toIndexedSeq: _*).queryExecution.toRdd
+      try applyChanges(spark, cfg, t0, m, changedSegs ++ freshSegs, upserts, deletes,
+        Some(srcHash), System.currentTimeMillis() - t0)
       finally freshRows.unpersist()
     } finally deltaRows.unpersist()
   }
 
   /** Applies a change set to the index on disk — `upserts` (staging
     * rows) replace the view rows with their doc_id or join their
-    * segment, `deletes` (doc_id, segment) leave — in crash-safe order:
+    * segment, `deletes` (segment, doc_id) leave — in crash-safe order:
     * the finalize manifest is invalidated, STALE ledger rows re-plan
     * the `touched` segments, the changed staging is published, and the
     * phase A manifest is refreshed from the staging view's per-segment
@@ -264,12 +267,15 @@ object Incremental {
     * touched segments together exceed `autoCompactFraction` of the
     * segments: then the whole view, changed, is written as the new
     * base ([[writeBase]]) and the overlays go. The content hash is
-    * `srcHash` when the caller has it, else the stats' xor. Returns
-    * (nDocs, avgdl, segSize, nSegEff) of the updated corpus. */
-  private def applyChanges(spark: SparkSession, cfg: BuildConfig, t0: Long,
-                           prior: Map[String, String], touched: Set[Int],
-                           upserts: DataFrame, deletes: Option[DataFrame],
-                           srcHash: Option[String]): (Long, Double, Long, Int) = {
+    * `srcHash` when the caller has it, else the stats' xor; `resolveMs`
+    * (the time spent building the change set) and the apply's own time
+    * go into the manifest beside `wall_ms`. Returns (nDocs, avgdl,
+    * segSize, nSegEff) of the updated corpus. */
+  private[index] def applyChanges(spark: SparkSession, cfg: BuildConfig, t0: Long,
+                                  prior: Map[String, String], touched: Set[Int],
+                                  upserts: RDD[InternalRow], deletes: RDD[(Int, Long)],
+                                  srcHash: Option[String], resolveMs: Long): (Long, Double, Long, Int) = {
+    val tApply = System.currentTimeMillis()
     val outDir = cfg.outDir
     val mdir = IndexBuilder.manifestDir(outDir)
     val segSize = prior("seg_size").toLong
@@ -293,26 +299,10 @@ object Incremental {
       val nSegAfter = math.max(prior("n_segments_effective").toInt, touched.max + 1)
       val rebase = cfg.autoCompactFraction > 0 &&
         (IndexBuilder.overlaidSegments(outDir) ++ touched).size > cfg.autoCompactFraction * nSegAfter
-      val p = if (cfg.sortPartitions > 0) cfg.sortPartitions
-              else spark.sparkContext.defaultParallelism
-      val view = IndexBuilder.readStaging(spark, outDir)
-      val current = (if (rebase) view else view.filter(col("segment").isInCollection(touched)))
-        .withColumn("op", lit(0))
-      val ops = deletes.foldLeft(current.unionByName(upserts.withColumn("op", lit(1))))(
-        (d, del) => d.unionByName(del.withColumn("op", lit(2)), allowMissingColumns = true))
-      // per doc_id, the last of its view row (op 0), its upsert (1) and
-      // its delete (2), unless that is the delete. One shuffle: the
-      // window's (segment, doc_id) clustering and the write's order
-      // ride it, no join
-      val last = Window.partitionBy("segment", "doc_id").orderBy(col("op").desc)
-      def merged(clustered: DataFrame): DataFrame = clustered
-        .withColumn("rank", row_number().over(last))
-        .filter(col("rank") === 1 && col("op") =!= 2)
-        .select(IndexBuilder.StagingSchema.fieldNames.map(col).toIndexedSeq: _*)
-        .sortWithinPartitions("segment", "doc_id")
-      if (rebase) writeBase(spark, outDir, merged(ops.repartitionByRange(p, col("segment"), col("doc_id"))))
-      else writeOverlays(spark, outDir, touched,
-        merged(ops.repartition(math.max(1, math.min(touched.size, p)), col("segment"))))
+      val changes = upserts.map(r => r.getInt(SegmentOrdinal) -> Change(r.getLong(0), Upsert, r.copy()))
+        .union(deletes.map { case (seg, id) => seg -> Change(id, Delete, null) })
+      if (rebase) writeBase(spark, outDir, nSegAfter, IndexBuilder.sortPartitions(spark, cfg), changes)
+      else writeOverlays(spark, outDir, touched, changes)
     }
 
     // ---- refresh phase A stats from the UPDATED view's per-segment
@@ -325,34 +315,107 @@ object Incremental {
     val nSegEff = math.max(prior("n_segments_effective").toInt,
       if (total.maxDocId < 0) 0 else (total.maxDocId / segSize).toInt + 1)
 
+    val now = System.currentTimeMillis()
     IndexBuilder.writePhaseA(cfg, total.n, avgdl, segSize, nSegEff,
       srcHash.getOrElse(total.hash.toString), Map(
         "delta_of" -> prior.getOrElse("content_hash", ""),
         "segments_touched" -> touched.size.toString,
-        "wall_ms" -> (System.currentTimeMillis() - t0).toString))
+        "resolve_ms" -> resolveMs.toString,
+        "apply_ms" -> (now - tApply).toString,
+        "wall_ms" -> (now - t0).toString))
     (total.n, avgdl, segSize, nSegEff)
   }
 
-  /** `rows` (staging rows, sorted by (segment, doc_id) within
-    * partitions) as a DataFrame whose write sums them per segment into
-    * the returned accumulator: the sums ride the write's result stage,
-    * so they are applied once per successful task. */
-  private def counted(spark: SparkSession, rows: DataFrame): (DataFrame, SegStats.Acc) = {
+  private val SegmentOrdinal = IndexBuilder.StagingSchema.fieldIndex("segment")
+
+  /** One change to a segment's rows: an upsert of `row` or a delete,
+    * of the view row with `docId`. */
+  private[index] case class Change(docId: Long, op: Int, row: InternalRow)
+
+  /** The ops of a [[Change]], in precedence order: of a doc_id's view
+    * row, upsert and delete, the greatest op wins. */
+  private[index] val Upsert = 1
+  private[index] val Delete = 2
+
+  /** `view` (one segment's staging rows in doc_id order) with `changes`
+    * applied: per doc_id, the view row is replaced by its upsert and
+    * dropped by its delete, a delete wins over an upsert, and an upsert
+    * with no view row joins in doc_id order. */
+  private[index] def merge(view: Iterator[InternalRow], changes: Seq[Change]): Iterator[InternalRow] = {
+    val cs = changes.sortBy(c => (c.docId, c.op)).toArray
+    val vs = view.buffered
+    var i = 0
+    new Iterator[InternalRow] {
+      private var nextRow: InternalRow = _
+      private def fill(): Unit =
+        while (nextRow == null && (vs.hasNext || i < cs.length)) {
+          val v = if (vs.hasNext) vs.head.getLong(0) else Long.MaxValue
+          if (i < cs.length && cs(i).docId <= v) {
+            val id = cs(i).docId
+            while (i + 1 < cs.length && cs(i + 1).docId == id) i += 1
+            val last = cs(i)
+            i += 1
+            if (v == id) vs.next()
+            if (last.op == Upsert) nextRow = last.row
+          } else nextRow = vs.next()
+        }
+      def hasNext: Boolean = { fill(); nextRow != null }
+      def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        val r = nextRow; nextRow = null; r
+      }
+    }
+  }
+
+  /** Routes a change, keyed by its segment, to the task of the segment's
+    * group: groups are ascending runs of segments, group i starting at
+    * `starts(i)`. */
+  private final class SegmentGroups(starts: Array[Int]) extends org.apache.spark.Partitioner {
+    def numPartitions: Int = starts.length
+    def getPartition(key: Any): Int = {
+      val i = java.util.Arrays.binarySearch(starts, key.asInstanceOf[Int])
+      if (i >= 0) i else math.max(0, -i - 2)
+    }
+  }
+
+  /** The staging view of `groups` (ascending runs of segments) with
+    * `changes` applied: one task per group, sorted by (segment, doc_id).
+    * The changes reach their group's task through an O(change set)
+    * shuffle; each task reads its segments' current rows in place
+    * ([[Staging]]) and merges the changes into them ([[merge]]). */
+  private def changedView(spark: SparkSession, outDir: String, groups: Seq[Seq[Int]],
+                          changes: RDD[(Int, Change)]): RDD[InternalRow] = {
+    val source = Staging.sources(outDir, groups.flatten).map(s => s.segment -> s).toMap
+    val tasks = groups.map(_.map(source))
+    changes.partitionBy(new SegmentGroups(groups.map(_.head).toArray))
+      .zipPartitions(spark.sparkContext.parallelize(tasks, tasks.size)) { (cs, srcs) =>
+        val bySegment = cs.toVector.groupBy(_._1)
+        srcs.flatten.flatMap { src =>
+          merge(src.stagingRows, bySegment.getOrElse(src.segment, Vector.empty).map(_._2))
+        }
+      }
+  }
+
+  /** `rows` (staging rows) as a DataFrame whose write sums them per
+    * segment into the returned accumulator: the sums ride the write's
+    * result stage, so they are applied once per successful task. */
+  private def counted(spark: SparkSession, rows: RDD[InternalRow]): (DataFrame, SegStats.Acc) = {
     val acc = SegStats.newAcc(spark)
-    val rdd = rows.queryExecution.toRdd.mapPartitions(_.map { r => acc.add(r); r })
+    val rdd = rows.mapPartitions(_.map { r => acc.add(r); r })
     (org.apache.spark.sql.graft.ColumnBridge.internalDF(spark, rdd, IndexBuilder.StagingSchema), acc)
   }
 
-  /** Publishes each of `touched` as an overlay holding its rows of
-    * `rows` and their `_segstats`; a segment left with no rows gets an
-    * empty overlay, which masks its base rows. */
+  /** Publishes each of `touched` as an overlay holding its rows of the
+    * changed view and their `_segstats`, in one job of one task per
+    * segment; a segment left with no rows gets an empty overlay, which
+    * masks its base rows. */
   private def writeOverlays(spark: SparkSession, outDir: String, touched: Set[Int],
-                            rows: DataFrame): Unit = {
+                            changes: RDD[(Int, Change)]): Unit = {
     val tmp = Paths.get(outDir, "_tmp_overlay")
     Manifest.deleteRecursively(tmp)
-    val (df, acc) = counted(spark, rows)
-    // the re-declared sort is free (the rows arrive sorted) and keeps
-    // the partitioned write from sorting by segment alone
+    val (df, acc) = counted(spark, changedView(spark, outDir, touched.toSeq.sorted.map(Seq(_)), changes))
+    // the rows arrive sorted; the declared sort keeps the partitioned
+    // write from re-sorting by segment alone
     df.sortWithinPartitions("segment", "doc_id")
       .write.partitionBy("segment").mode("overwrite").parquet(tmp.toString)
     val stats = acc.value
@@ -367,25 +430,30 @@ object Incremental {
   private def compactTmp(outDir: String) = Paths.get(outDir, "_tmp_compact")
   private def precompact(outDir: String) = Paths.get(outDir, "_staging", "docs_precompact")
 
-  /** Writes `rows` (the whole staging view, sorted by (segment, doc_id)
-    * within partitions) aside as a complete new base: its parquet
-    * files, then its `_segstats` last — the mark [[recoverCompact]]
-    * takes for a finished copy. */
-  private[index] def writeBaseAside(spark: SparkSession, outDir: String, rows: DataFrame): Unit = {
+  /** Writes the staging view of segments `[0, nSegments)` with `changes`
+    * applied aside as a complete new base: `p` contiguous segment ranges,
+    * one task and one segment-monotone file each, read in place and
+    * merged ([[changedView]]), then its `_segstats` last — the mark
+    * [[recoverCompact]] takes for a finished copy. */
+  private[index] def writeBaseAside(spark: SparkSession, outDir: String, nSegments: Int, p: Int,
+                                    changes: RDD[(Int, Change)]): Unit = {
     val tmp = compactTmp(outDir)
     Manifest.deleteRecursively(tmp)
-    val (df, acc) = counted(spark, rows)
-    df.write.parquet(tmp.toString)
+    val ranges = (0 until nSegments).grouped(math.max(1, (nSegments + p - 1) / p)).toSeq
+    val (df, acc) = counted(spark, changedView(spark, outDir, ranges, changes))
+    df.write.option("parquet.block.size", IndexBuilder.StagingRowGroupBytes).parquet(tmp.toString)
     SegStats.write(tmp, acc.value)
   }
 
-  /** Replaces the staging base with `rows` (see [[writeBaseAside]]) and
-    * drops the overlays they fold in. Sequencing: the new base is
-    * written aside, the old base renamed away, the new one renamed in,
-    * then the overlays and the old base are deleted, in that order. A
-    * crash anywhere in it is repaired by [[recoverCompact]]. */
-  private def writeBase(spark: SparkSession, outDir: String, rows: DataFrame): Unit = {
-    writeBaseAside(spark, outDir, rows)
+  /** Replaces the staging base with the changed view (see
+    * [[writeBaseAside]]) and drops the overlays it folds in. Sequencing:
+    * the new base is written aside, the old base renamed away, the new
+    * one renamed in, then the overlays and the old base are deleted, in
+    * that order. A crash anywhere in it is repaired by
+    * [[recoverCompact]]. */
+  private def writeBase(spark: SparkSession, outDir: String, nSegments: Int, p: Int,
+                        changes: RDD[(Int, Change)]): Unit = {
+    writeBaseAside(spark, outDir, nSegments, p, changes)
     val base = Paths.get(IndexBuilder.stagingDir(outDir))
     val old = precompact(outDir)
     Manifest.deleteRecursively(old)
@@ -402,16 +470,15 @@ object Incremental {
    * segments. Content-preserving — the staging VIEW is identical before
    * and after — so it can run any time between builds. Returns the
    * number of overlays folded. The write and its crash repair are
-   * [[writeBase]]'s; under a real object store the swap becomes a
-   * catalog swap.
+   * [[writeBase]]'s (with no changes); under a real object store the
+   * swap becomes a catalog swap.
    */
   def compact(spark: SparkSession, outDir: String): Int = {
     recoverCompact(outDir)
     val over = IndexBuilder.overlaidSegments(outDir)
     if (over.isEmpty) return 0
-    writeBase(spark, outDir, IndexBuilder.readStaging(spark, outDir)
-      .repartitionByRange(spark.sparkContext.defaultParallelism, col("segment"), col("doc_id"))
-      .sortWithinPartitions("segment", "doc_id"))
+    val nSegments = SegStats.view(outDir).keys.max + 1
+    writeBase(spark, outDir, nSegments, spark.sparkContext.defaultParallelism, spark.sparkContext.emptyRDD)
     over.size
   }
 

@@ -58,9 +58,10 @@ class SimulatedKill(wave: Int) extends RuntimeException(s"simulated kill after w
  * stability invariant tested at 2 vs 32 partitions. Docs land in
  * SEGMENTS = contiguous docId ranges (segment = docId / segSize), the
  * unit of checkpointing. Phase A commits: a staging copy of the corpus
- * (one doc_id-sorted, segment-monotone file per sort partition, so
- * parquet min/max stats prune segment filters for Phase B and resume;
- * doc_stats is this same table column-pruned), and a phaseA manifest
+ * (one doc_id-sorted, segment-monotone file per sort partition, in
+ * 1 MiB row groups, so parquet min/max stats let a Phase B or apply
+ * task read one segment's row groups in place; doc_stats is this same
+ * table column-pruned), and a phaseA manifest
  * carrying an order-insensitive corpus content hash (xor of
  * xxhash64(conv_id, turn_idx, role, text, tool)) for change detection — the
  * reference's `jj_scanner_doc_hash` analog
@@ -74,15 +75,15 @@ class SimulatedKill(wave: Int) extends RuntimeException(s"simulated kill after w
  * job, not a third tokenize pass over the corpus.
  *
  * == Phase B (postings, per-segment, in waves) ==
- * For each wave of segments not yet COMPLETE: read staging (pushed
- * segment filter + file stats select only the wave's segments) →
- * range-repartition DOC
- * rows by segment (exactly one segment per partition; equal keys never
- * split) → local doc_id sort → streaming [[encodeDocs]]: tokenize each
- * doc and APPEND to per-term posting buffers — docIds arrive ascending
- * per segment, so posting lists are sorted by construction and the
- * exploded token stream is never shuffled OR sorted → write
- * partitioned by segment → atomic per-segment publish + manifest row.
+ * For each wave of segments not yet COMPLETE: one shuffle-free job of
+ * one task per segment. Each task reads its segment's staging rows in
+ * place ([[Staging]]: staging is sorted by (segment, doc_id), so file
+ * and row-group segment stats select them) in doc_id order → streaming
+ * [[encodeDocs]]: tokenize each doc and APPEND to per-term posting
+ * buffers — docIds arrive ascending per segment, so posting lists are
+ * sorted by construction and the exploded token stream is never
+ * shuffled OR sorted → local block-row sort → write partitioned by
+ * segment → atomic per-segment publish + manifest row.
  *
  * == Why this scales ==
  * There is NO global repartition-by-term shuffle and no token-level
@@ -90,12 +91,12 @@ class SimulatedKill(wave: Int) extends RuntimeException(s"simulated kill after w
  * uniformly, so a head term with df ≈ N is split across every segment
  * with at most segSize postings per segment — skew is structurally
  * bounded, and per-term segment postings concatenate in segment order
- * into globally docId-sorted lists. Everything that crosses the wire
- * is doc rows (compact) or encoded blocks (compressed); per-task
- * memory is O(per-segment vocabulary), tuned by nSegments. The only
- * corpus-wide shuffle is the Phase-A range sort: the dictionary merges
- * the already term-sorted segments per term range, with no exchange
- * and no sort of block rows. Wave size bounds the working
+ * into globally docId-sorted lists. Per-task memory is O(per-segment
+ * vocabulary), tuned by nSegments, plus one staging row group. The
+ * only corpus-wide shuffle is the Phase-A range sort: Phase B reads
+ * the sorted staging in place, and the dictionary merges the already
+ * term-sorted segments per term range, with no exchange and no sort of
+ * block rows. Wave size bounds the working
  * set; killed builds resume by manifest anti-planning, and replays
  * are idempotent (overwrite-by-partition).
  */
@@ -114,6 +115,12 @@ object IndexBuilder {
     * dictionary): each row group's min/max term is then a sparse terms
     * index, so a term lookup decodes a few row groups, not the file. */
   val TermRowGroupBytes: String = (128 * 1024).toString
+
+  /** Parquet row-group bound of the staging base: each row group's
+    * min/max segment lets a segment task read its segment's row groups
+    * in place ([[Staging]]), decoding about one row group more than its
+    * own rows at each end. */
+  val StagingRowGroupBytes: String = (1024 * 1024).toString
 
   /** Posting-table schema, for inference-free reads (an empty segment
     * dir must read as 0 rows, not an AnalysisException). */
@@ -511,13 +518,16 @@ object IndexBuilder {
     (sorted, offsets, acc)
   }
 
+  /** The sort partitions of a build with `cfg`. */
+  private[index] def sortPartitions(spark: SparkSession, cfg: BuildConfig): Int =
+    if (cfg.sortPartitions > 0) cfg.sortPartitions else spark.sparkContext.defaultParallelism
+
   /** Phase A. Returns (nDocs, avgdl, segSize, effective segment count). */
   private def phaseA(spark: SparkSession, turns: Dataset[Turn], cfg: BuildConfig,
                      srcHash: String, srcCount: Long): (Long, Double, Long, Int) = {
     import spark.implicits._
     val t0 = System.currentTimeMillis()
-    val p = if (cfg.sortPartitions > 0) cfg.sortPartitions
-            else spark.sparkContext.defaultParallelism
+    val p = sortPartitions(spark, cfg)
 
     // pass 1: sort + per-partition counts → dense offsets (docID
     // stability — SURVEY.md §7.5)
@@ -578,7 +588,8 @@ object IndexBuilder {
     val (_, stagingMs) = timedMs {
       org.apache.spark.sql.graft.ColumnBridge
         .internalDF(spark, stagingRows, StagingSchema)
-        .write.mode("overwrite").parquet(stagingTmp.toString)
+        .write.option("parquet.block.size", StagingRowGroupBytes).mode("overwrite")
+        .parquet(stagingTmp.toString)
     }
     val segStats = segAcc.value
     SegStats.write(stagingTmp, segStats)
@@ -600,6 +611,10 @@ object IndexBuilder {
     (nDocs, avgdl, segSize, nSegEff)
   }
 
+  /** The corpus_stats-table schema, as Spark's encoder gives it. */
+  private val CorpusStatsSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.Encoders.product[CorpusStats].schema
+
   /** The dictionary-table schema (term, df, cf), every column
     * optional. */
   private val DictionarySchema: org.apache.spark.sql.types.StructType =
@@ -607,8 +622,8 @@ object IndexBuilder {
       org.apache.spark.sql.Encoders.product[DictEntry].schema.map(_.copy(nullable = true)))
 
   /** Post-wave finalize: the dictionary (term → global df, cf), then
-    * corpus_stats, then the finalize manifest as the commit point.
-    * Returns n_terms.
+    * corpus_stats (one row, written in-process), then the finalize
+    * manifest as the commit point. Returns n_terms.
     *
     * Every segment's postings are term-sorted, so the dictionary is a
     * merge inside term ranges, not a shuffle: `max(1, p/4)` ranges are
@@ -622,10 +637,8 @@ object IndexBuilder {
     * groups, so a reader's term lookup decodes a few row groups. */
   private def finalizeStats(spark: SparkSession, cfg: BuildConfig,
                             nDocs: Long, avgdl: Double, nSegEff: Int): Long = {
-    import spark.implicits._
     val t0 = System.currentTimeMillis()
-    val p = if (cfg.sortPartitions > 0) cfg.sortPartitions
-            else spark.sparkContext.defaultParallelism
+    val p = sortPartitions(spark, cfg)
     // an all-empty-text corpus leaves only empty segment=N dirs: no
     // files, one empty range, one empty dictionary file
     val files = if (nSegEff == 0) Seq.empty[String]
@@ -646,10 +659,11 @@ object IndexBuilder {
     }
     val nTerms = obs.get("n").asInstanceOf[Long]
 
+    // one row already in hand: written in-process, with no Spark job
     writeAtomic(spark, cfg.outDir, "corpus_stats") { tmp =>
-      Seq(CorpusStats(nDocs, avgdl, nTerms, IndexFormat.Version, Tokenizer.Version,
-        cfg.analyzer.id)).toDS()
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      Files.createDirectories(Paths.get(tmp))
+      LocalParquet.write(Paths.get(tmp, "part-00000.snappy.parquet"), CorpusStatsSchema,
+        Seq(Seq(nDocs, avgdl, nTerms, IndexFormat.Version, Tokenizer.Version, cfg.analyzer.id)))
     }
     Manifest.writeAtomic(Manifest.finalizePath(manifestDir(cfg.outDir)), Map(
       "status" -> Manifest.Complete,
@@ -694,7 +708,7 @@ object IndexBuilder {
     val filter = Some(LocalParquet.TermFilter.range(lo, hi))
     val without = PostingSchema.fieldNames.toSet -- Set("term", "n_docs", "block_cf")
     files.foreach { f =>
-      LocalParquet.read(Paths.get(f), filter, without)(r =>
+      LocalParquet.rows(Paths.get(f), filter, without)(r =>
         (r[String]("term"), r[Int]("n_docs"), r[Long]("block_cf"))).foreach { case (t, n, cf) =>
         val a = sums.computeIfAbsent(t, _ => new Array[Long](2))
         a(0) += n; a(1) += cf
@@ -707,7 +721,7 @@ object IndexBuilder {
       }
   }
 
-  private def timedMs[T](f: => T): (T, Long) = {
+  private[index] def timedMs[T](f: => T): (T, Long) = {
     val t = System.currentTimeMillis(); val r = f
     (r, System.currentTimeMillis() - t)
   }
@@ -719,8 +733,7 @@ object IndexBuilder {
                         wave: Seq[Int], attemptOf: Int => Int): Unit = {
     import spark.implicits._
     val t0 = System.currentTimeMillis()
-    val staging = readStaging(spark, cfg.outDir)
-      .filter(col("segment").isInCollection(wave)) // file/row-group pruning
+    val sources = Staging.sources(cfg.outDir, wave)
 
     // per-segment lineage counters ride the encode job as accumulators
     // (one update per successful result-stage task) — no separate
@@ -733,43 +746,30 @@ object IndexBuilder {
     spark.sparkContext.register(tokensAcc, "graft.tokens")
     spark.sparkContext.register(blocksAcc, "graft.blocks")
 
-    // Shuffle DOC rows, never token rows: the segment repartition
-    // moves the compact text corpus (one row per turn) and a LOCAL
-    // doc_id sort restores each segment's document order — both ~100x
-    // smaller than exchanging/sorting the exploded token stream, which
-    // profiling showed costs microseconds per posting in UnsafeRow
-    // serialization + external-sort memory stalls. Tokenization and
-    // posting-list construction then happen streaming inside the
-    // encoder: docIds arrive ascending per segment, so each term's
-    // postings are built by APPEND (no sort over tokens at all).
-    //
-    // RANGE partition, not hash: hashing `wave.size` distinct segment
-    // ids into `wave.size` buckets leaves ~1/e of the buckets empty
-    // and piles 3-4 segments onto the stragglers (balls-in-bins), so
-    // past ~N/4 cores the stage tail IS the stage. Range bounds place
-    // exactly one segment per partition; equal keys never split, which
-    // is the encoder's only requirement.
-    val encoded: Dataset[PostingBlockRow] = staging
-      .select($"doc_id", $"segment", $"text".cast("binary"), $"dl")
-      .repartitionByRange(wave.size, col("segment"))
-      .sortWithinPartitions("segment", "doc_id")
-      .as[(Long, Int, Array[Byte], Int)]
-      .mapPartitions { docs =>
-        val counted = docs.map { d =>
-          if (poison.contains(d._2))
-            throw new RuntimeException(s"poisoned segment ${d._2} (test hook)")
-          turnsAcc.add(d._2 -> 1L); tokensAcc.add(d._2 -> d._4.toLong); d
-        }
-        encodeDocs(counted, az, cfg.maxOpenTerms, cfg.maxBufferedPostings,
-          cfg.storePositions).map { b =>
-          blocksAcc.add(b.segment -> 1L); b
-        }
+    // One task per segment, no shuffle: each task reads its segment's
+    // doc_id, text (raw UTF-8 bytes) and dl in place, already in doc_id
+    // order (staging is sorted by (segment, doc_id)), and streams them
+    // into the encoder. Tokenization and posting-list construction
+    // happen inside the encoder: docIds arrive ascending, so each
+    // term's postings are built by APPEND (no sort over tokens at all).
+    val without = StagingSchema.fieldNames.toSet -- Set("doc_id", "segment", "text", "dl")
+    val blocks = spark.sparkContext.parallelize(sources, sources.size).mapPartitions { it =>
+      val docs = it.flatMap { src =>
+        src.rows(without)(r => (r[Long]("doc_id"), src.segment, r[Array[Byte]]("text"), r[Int]("dl")))
+      }.map { d =>
+        if (poison.contains(d._2))
+          throw new RuntimeException(s"poisoned segment ${d._2} (test hook)")
+        turnsAcc.add(d._2 -> 1L); tokensAcc.add(d._2 -> d._4.toLong); d
       }
-      // local BLOCK-row sort (postings/128 rows — cheap) so each
-      // parquet file is term-clustered: with the bounded row groups of
-      // the write below, query-time term filters prune whole row groups
-      // via min/max stats instead of scanning the segment
-      .sortWithinPartitions("segment", "term", "block_id")
+      encodeDocs(docs, az, cfg.maxOpenTerms, cfg.maxBufferedPostings, cfg.storePositions).map { b =>
+        blocksAcc.add(b.segment -> 1L); b
+      }
+    }
+    // local BLOCK-row sort (postings/128 rows — cheap) so each parquet
+    // file is term-clustered: with the bounded row groups of the write
+    // below, query-time term filters prune whole row groups via min/max
+    // stats instead of scanning the segment
+    val encoded = spark.createDataset(blocks).sortWithinPartitions("segment", "term", "block_id")
 
     val waveTmp = Paths.get(cfg.outDir, "_tmp_wave")
     Manifest.deleteRecursively(waveTmp)

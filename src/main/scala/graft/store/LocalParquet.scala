@@ -6,18 +6,22 @@ import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.bytes.BytesInput
 import org.apache.parquet.column.{ColumnDescriptor, ColumnReader}
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
-import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.column.statistics.{IntStatistics, Statistics}
 import org.apache.parquet.compression.CompressionCodecFactory
 import org.apache.parquet.compression.CompressionCodecFactory.BytesInputDecompressor
 import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.{CodecFactory, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, CompressionCodecName, ParquetMetadata}
-import org.apache.parquet.io.LocalInputFile
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveComparator}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveComparator, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructType}
 import org.xerial.snappy.Snappy
 import scala.jdk.CollectionConverters._
 
@@ -25,15 +29,17 @@ import scala.jdk.CollectionConverters._
  * In-process reads of the index's local Parquet files, with no Spark
  * job and no Hadoop `Configuration` (whose XML parse costs ~14 ms per
  * file open): `LocalInputFile` over `java.nio`, plain Parquet conf,
- * flat schemas only.
+ * flat schemas only. [[write]] writes a small table the same way.
  *
  * Index tables are written term-sorted in bounded row groups, so a
  * file's per-row-group min/max `term` statistics are a sparse terms
  * index: a [[TermFilter]]ed [[read]] reads only the row groups whose
  * range can hold a kept term, decodes their `term` column first, and
- * decodes the other columns only for the kept rows. Inside a Spark task
- * the rows and bytes of the row groups read are added to the task's
- * input metrics.
+ * decodes the other columns only for the kept rows. Staging files are
+ * segment-sorted, so [[Filter.segment]] reads one segment's rows the
+ * same way. [[rows]] streams a file one row group at a time. Inside a
+ * Spark task the rows and bytes of the row groups read are added to the
+ * task's input metrics.
  *
  * Parsed footers are kept per JVM (see [[footer]]), like the terms
  * index a Lucene reader loads once per segment: a footer parse costs
@@ -75,21 +81,46 @@ object LocalParquet {
       finally s.close()
     }
 
-  /** Which rows of a term-sorted table a [[read]] keeps, by `term`:
-    * `mayHold` tests a row group's term statistics, `keep` each row's
-    * term in the row groups that pass. */
-  sealed trait TermFilter {
-    private[LocalParquet] def mayHold(s: Statistics[Binary]): Boolean
-    private[LocalParquet] def keep(t: Binary): Boolean
+  /** Which rows a [[read]] keeps, by one column: `mayHold` tests a row
+    * group's statistics of it, `keep` the reader's current value of it
+    * in each row of the row groups that pass. A read decodes the
+    * filter's column first and the others only for the kept rows. */
+  sealed trait Filter {
+    private[LocalParquet] def column: String
+    private[LocalParquet] def mayHold(s: Statistics[_]): Boolean
+    private[LocalParquet] def keep(c: ColumnReader): Boolean
+  }
+
+  object Filter {
+    /** The rows of segment `seg` of a table with an INT32 `segment`
+      * column: only the row groups whose segment range holds it are
+      * read. */
+    def segment(seg: Int): Filter = new Filter {
+      def column = "segment"
+      def mayHold(s: Statistics[_]): Boolean = {
+        val st = s.asInstanceOf[IntStatistics]
+        st.getMin <= seg && seg <= st.getMax
+      }
+      def keep(c: ColumnReader): Boolean = c.getInteger == seg
+    }
+  }
+
+  /** Which rows of a term-sorted table a [[read]] keeps, by `term`. */
+  sealed abstract class TermFilter extends Filter {
+    private[LocalParquet] def column = "term"
+    private[LocalParquet] def mayHold(s: Statistics[_]): Boolean = holds(s.asInstanceOf[Statistics[Binary]])
+    private[LocalParquet] def keep(c: ColumnReader): Boolean = keeps(c.getBinary)
+    protected def holds(s: Statistics[Binary]): Boolean
+    protected def keeps(t: Binary): Boolean
   }
 
   object TermFilter {
     /** Exactly `terms` (an empty set reads nothing). */
     def in(terms: Set[String]): TermFilter = new TermFilter {
       private val ks = terms.map(Binary.fromString)
-      def mayHold(s: Statistics[Binary]): Boolean =
+      def holds(s: Statistics[Binary]): Boolean =
         ks.exists(k => s.compareMinToValue(k) <= 0 && s.compareMaxToValue(k) >= 0)
-      def keep(t: Binary): Boolean = ks.contains(t)
+      def keeps(t: Binary): Boolean = ks.contains(t)
     }
 
     /** The terms that start with one of `prefixes` and pass `test`: a
@@ -97,19 +128,19 @@ object LocalParquet {
       * read, and an empty prefix meets every row group. */
     def prefixed(prefixes: Set[String], test: String => Boolean): TermFilter = new TermFilter {
       private val ps = prefixes.map(Binary.fromString)
-      def mayHold(s: Statistics[Binary]): Boolean = ps.exists { p =>
+      def holds(s: Statistics[Binary]): Boolean = ps.exists { p =>
         s.compareMaxToValue(p) >= 0 && (s.compareMinToValue(p) <= 0 || startsWith(s.genericGetMin, p))
       }
-      def keep(t: Binary): Boolean = ps.exists(startsWith(t, _)) && test(t.toStringUsingUTF8)
+      def keeps(t: Binary): Boolean = ps.exists(startsWith(t, _)) && test(t.toStringUsingUTF8)
     }
 
     /** The terms in `[lo, hi)` by UTF-8 byte order, each end open when
       * absent: only the row groups that meet the range are read. */
     def range(lo: Option[String], hi: Option[String]): TermFilter = new TermFilter {
       private val (l, h) = (lo.map(Binary.fromString), hi.map(Binary.fromString))
-      def mayHold(s: Statistics[Binary]): Boolean =
+      def holds(s: Statistics[Binary]): Boolean =
         l.forall(s.compareMaxToValue(_) >= 0) && h.forall(s.compareMinToValue(_) < 0)
-      def keep(t: Binary): Boolean =
+      def keeps(t: Binary): Boolean =
         l.forall(ByteOrder.compare(t, _) >= 0) && h.forall(ByteOrder.compare(t, _) < 0)
     }
 
@@ -120,6 +151,19 @@ object LocalParquet {
     private def startsWith(t: Binary, p: Binary): Boolean = {
       val (a, b) = (t.toByteBuffer, p.toByteBuffer)
       a.remaining >= b.remaining && a.duplicate().limit(a.position + b.remaining).equals(b)
+    }
+  }
+
+  /** The least and greatest value of the integer column `column` over
+    * `file`'s row groups, from the cached footer; None when no row
+    * group has statistics of it (an empty file). */
+  def range(file: Path, column: String): Option[(Long, Long)] = {
+    val stats = footer(file).getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala
+      .find(_.getPath.toDotString == column).map(_.getStatistics).filter(_.hasNonNullValue))
+    if (stats.isEmpty) None
+    else {
+      def long(v: Any) = v.asInstanceOf[Number].longValue
+      Some((stats.map(s => long(s.genericGetMin)).min, stats.map(s => long(s.genericGetMax)).max))
     }
   }
 
@@ -135,55 +179,122 @@ object LocalParquet {
     }
 
   /** The rows of `file` in file order, each mapped by `f` — only those
-    * that `filter` keeps when given. Columns named in `without` are
-    * neither read nor decoded (null in the rows). */
-  def read[T](file: Path, filter: Option[TermFilter] = None,
-              without: Set[String] = Set.empty)(f: Row => T): Vector[T] = {
-    val in = new LocalInputFile(file)
-    val r = ParquetFileReader.open(in, footer(file), options(), in.newStream())
-    try {
-      val meta = r.getFileMetaData
-      val schema = meta.getSchema
-      val cols = schema.getColumns.asScala.toVector.filterNot(c => without(c.getPath.mkString(".")))
-      if (without.nonEmpty) r.setRequestedSchema(cols.asJava)
-      val index = cols.map(_.getPath.mkString(".")).zipWithIndex.toMap
-      val termCol = index.getOrElse("term", -1)
-      val converter = new GroupRecordConverter(schema).getRootConverter
-      val out = Vector.newBuilder[T]
-      r.getRowGroups.asScala.zipWithIndex.foreach { case (b, g) =>
-        if (filter.forall(mayHold(b, _))) {
-          ColumnBridge.addTaskInput(b.getRowCount, b.getColumns.asScala
-            .filterNot(c => without(c.getPath.toDotString)).map(_.getTotalSize).sum)
-          val store = new ColumnReadStoreImpl(r.readRowGroup(g), converter, schema, meta.getCreatedBy)
-          val n = b.getRowCount.toInt
-          // the term pass picks the rows (runs, as the file is term-sorted)
-          val (rows, termValues) = filter match {
-            case None => ((0 until n).toArray, null)
-            case Some(tf) =>
-              val c = store.getColumnReader(cols(termCol))
-              val hits = Array.newBuilder[Int]; val ts = Array.newBuilder[Any]
-              var i = 0
-              while (i < n) {
-                if (c.getCurrentDefinitionLevel == cols(termCol).getMaxDefinitionLevel) {
-                  val t = c.getBinary
-                  if (tf.keep(t)) { hits += i; ts += t.toStringUsingUTF8 }
-                }
-                c.consume(); i += 1
-              }
-              (hits.result(), ts.result())
-          }
-          if (rows.nonEmpty) {
-            val values = Array.fill(rows.length)(new Array[Any](cols.length))
-            cols.indices.foreach { j =>
-              if (termValues != null && j == termCol) rows.indices.foreach(k => values(k)(j) = termValues(k))
-              else decode(store.getColumnReader(cols(j)), cols(j), rows, values, j)
+    * that `filter` keeps when given. Columns named in `without`, other
+    * than the filter's, are neither read nor decoded (null in the rows);
+    * with `raw`, UTF-8 columns read as their bytes (`Array[Byte]`), not
+    * as `String`. */
+  def read[T](file: Path, filter: Option[Filter] = None, without: Set[String] = Set.empty,
+              raw: Boolean = false)(f: Row => T): Vector[T] = {
+    val it = new Rows(file, filter, without, raw, f, inTask = false)
+    try it.toVector finally it.close()
+  }
+
+  /** [[read]] as an iterator that holds one row group's kept rows at a
+    * time. The file closes when the iterator is exhausted or closed, or,
+    * inside a Spark task, when the task ends. */
+  def rows[T](file: Path, filter: Option[Filter] = None, without: Set[String] = Set.empty,
+              raw: Boolean = false)(f: Row => T): Iterator[T] with AutoCloseable =
+    new Rows(file, filter, without, raw, f, inTask = true)
+
+  private final class Rows[T](file: Path, filter: Option[Filter], without: Set[String],
+                              raw: Boolean, f: Row => T, inTask: Boolean)
+      extends Iterator[T] with AutoCloseable {
+    private val in = new LocalInputFile(file)
+    private val r = ParquetFileReader.open(in, footer(file), options(), in.newStream())
+    private var closed = false
+    if (inTask) Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+    private val meta = r.getFileMetaData
+    private val schema = meta.getSchema
+    private val cols = schema.getColumns.asScala.toVector.filterNot { c =>
+      val name = c.getPath.mkString(".")
+      without(name) && !filter.exists(_.column == name)
+    }
+    if (without.nonEmpty) r.setRequestedSchema(cols.asJava)
+    private val index = cols.map(_.getPath.mkString(".")).zipWithIndex.toMap
+    private val keyCol = filter.flatMap(tf => index.get(tf.column)).getOrElse(-1)
+    require(filter.isEmpty || keyCol >= 0, s"$file has no column ${filter.get.column} to filter on")
+    private val converter = new GroupRecordConverter(schema).getRootConverter
+    private val blocks = r.getRowGroups.asScala.toVector
+    private var g = 0
+    private var group: Iterator[T] = Iterator.empty
+
+    def hasNext: Boolean = {
+      while (!group.hasNext && !closed && g < blocks.size) { group = readGroup(g); g += 1 }
+      if (!group.hasNext) close()
+      group.hasNext
+    }
+
+    def next(): T = if (hasNext) group.next() else throw new NoSuchElementException
+
+    def close(): Unit = if (!closed) { closed = true; group = Iterator.empty; r.close() }
+
+    /** Row group `g`'s kept rows: the filter's column picks them (runs,
+      * in a sorted file), then each other column decodes only those. */
+    private def readGroup(g: Int): Iterator[T] = {
+      val b = blocks(g)
+      if (!filter.forall(mayHold(b, _))) return Iterator.empty
+      ColumnBridge.addTaskInput(b.getRowCount, b.getColumns.asScala
+        .filter(c => index.contains(c.getPath.toDotString)).map(_.getTotalSize).sum)
+      val store = new ColumnReadStoreImpl(r.readRowGroup(g), converter, schema, meta.getCreatedBy)
+      val n = b.getRowCount.toInt
+      val (rows, keys) = filter match {
+        case None => ((0 until n).toArray, null)
+        case Some(tf) =>
+          val d = cols(keyCol)
+          val c = store.getColumnReader(d)
+          val hits = Array.newBuilder[Int]; val ks = Array.newBuilder[Any]
+          var i = 0
+          while (i < n) {
+            if (c.getCurrentDefinitionLevel == d.getMaxDefinitionLevel && tf.keep(c)) {
+              hits += i; ks += value(c, d, raw)
             }
-            values.foreach(v => out += f(new Row(index, v)))
+            c.consume(); i += 1
           }
-        }
+          (hits.result(), ks.result())
       }
-      out.result()
-    } finally r.close()
+      if (rows.isEmpty) return Iterator.empty
+      val values = Array.fill(rows.length)(new Array[Any](cols.length))
+      cols.indices.foreach { j =>
+        if (keys != null && j == keyCol) rows.indices.foreach(k => values(k)(j) = keys(k))
+        else decode(store.getColumnReader(cols(j)), cols(j), rows, values, j, raw)
+      }
+      values.iterator.map(v => f(new Row(index, v)))
+    }
+  }
+
+  /** Writes `rows` (values in `schema`'s field order: Int, Long, Double,
+    * String or null) to `file` as one Snappy Parquet file, in-process:
+    * the Parquet schema and the row metadata are the ones Spark's writer
+    * gives `schema`, so Spark reads the file back as it would its own. */
+  def write(file: Path, schema: StructType, rows: Seq[Seq[Any]]): Unit = {
+    val fields = schema.fields.toSeq.map { f =>
+      val rep = if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
+      f.dataType match {
+        case IntegerType => Types.primitive(INT32, rep).named(f.name)
+        case LongType => Types.primitive(INT64, rep).named(f.name)
+        case DoubleType => Types.primitive(DOUBLE, rep).named(f.name)
+        case StringType => Types.primitive(BINARY, rep).as(LogicalTypeAnnotation.stringType()).named(f.name)
+        case other => throw new IllegalArgumentException(s"unsupported column type $other")
+      }
+    }
+    val message = new MessageType("spark_schema", fields: _*)
+    val w = ExampleParquetWriter.builder(new LocalOutputFile(file)).withType(message)
+      .withConf(new PlainParquetConfiguration()).withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withExtraMetaData(Map("org.apache.spark.version" -> org.apache.spark.SPARK_VERSION_SHORT,
+        "org.apache.spark.sql.parquet.row.metadata" -> schema.json).asJava)
+      .build()
+    try rows.foreach { row =>
+      val g = new SimpleGroupFactory(message).newGroup()
+      row.zipWithIndex.foreach {
+        case (null, _) =>
+        case (v: Int, i) => g.add(i, v)
+        case (v: Long, i) => g.add(i, v)
+        case (v: Double, i) => g.add(i, v)
+        case (v: String, i) => g.add(i, v)
+        case (v, _) => throw new IllegalArgumentException(s"unsupported value $v")
+      }
+      w.write(g)
+    } finally w.close()
   }
 
   private def options(): ParquetReadOptions = {
@@ -246,35 +357,42 @@ object LocalParquet {
     }
   }
 
-  /** Whether a row group's `term` range can hold a term `tf` keeps. */
-  private def mayHold(b: BlockMetaData, tf: TermFilter): Boolean =
-    b.getColumns.asScala.find(_.getPath.toDotString == "term").forall { c =>
-      val s = c.getStatistics.asInstanceOf[Statistics[Binary]]
-      !s.hasNonNullValue || tf.mayHold(s)
+  /** Whether a row group's statistics of the filter's column allow a
+    * row it keeps. */
+  private def mayHold(b: BlockMetaData, filter: Filter): Boolean =
+    b.getColumns.asScala.find(_.getPath.toDotString == filter.column).forall { c =>
+      val s: Statistics[_] = c.getStatistics
+      !s.hasNonNullValue || filter.mayHold(s)
     }
 
   /** Column `j`'s values of the ascending `rows` into `values(k)(j)`,
     * skipping the rows between them. */
   private def decode(c: ColumnReader, d: ColumnDescriptor, rows: Array[Int],
-                     values: Array[Array[Any]], j: Int): Unit = {
-    val t = d.getPrimitiveType
-    val utf8 = t.getLogicalTypeAnnotation == LogicalTypeAnnotation.stringType()
+                     values: Array[Array[Any]], j: Int, raw: Boolean): Unit = {
     var i = 0; var k = 0
     while (k < rows.length) {
       val hit = i == rows(k)
       if (c.getCurrentDefinitionLevel == d.getMaxDefinitionLevel) {
         if (!hit) c.skip()
-        else values(k)(j) = t.getPrimitiveTypeName match {
-          case INT32 => c.getInteger
-          case INT64 => c.getLong
-          case DOUBLE => c.getDouble
-          case BINARY if utf8 => c.getBinary.toStringUsingUTF8
-          case BINARY => c.getBinary.getBytes
-          case other => throw new IllegalArgumentException(s"unsupported column type $other")
-        }
+        else values(k)(j) = value(c, d, raw)
       }
       c.consume(); i += 1
       if (hit) k += 1
+    }
+  }
+
+  /** The reader's current (defined) value: Int, Long, Double, String
+    * for a UTF-8 column unless `raw`, else Array[Byte]. */
+  private def value(c: ColumnReader, d: ColumnDescriptor, raw: Boolean): Any = {
+    val t = d.getPrimitiveType
+    t.getPrimitiveTypeName match {
+      case INT32 => c.getInteger
+      case INT64 => c.getLong
+      case DOUBLE => c.getDouble
+      case BINARY if !raw && t.getLogicalTypeAnnotation == LogicalTypeAnnotation.stringType() =>
+        c.getBinary.toStringUsingUTF8
+      case BINARY => c.getBinary.getBytes
+      case other => throw new IllegalArgumentException(s"unsupported column type $other")
     }
   }
 }

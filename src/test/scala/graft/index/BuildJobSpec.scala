@@ -4,7 +4,7 @@ import graft.SparkFunSuite
 import graft.query.IndexReader
 import graft.sources.SyntheticTranscripts
 import graft.store.Manifest
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -21,10 +21,10 @@ import scala.jdk.CollectionConverters._
 class BuildJobSpec extends SparkFunSuite {
   import graft.SparkTestBase.spark.implicits._
 
-  /** Jobs of a one-document patch, bounded from a measurement: 9 on
-    * `local[4]` (resolve, overlay write, one wave, the dictionary merge
-    * and the corpus_stats write). */
-  private val PatchJobBudget = 10
+  /** Jobs of a patch, bounded from a measurement: 6 on `local[4]` (3 to
+    * resolve, then one each for the apply, the wave and the dictionary
+    * merge; corpus_stats is written in-process). */
+  private val PatchJobBudget = 7
 
   /** The description of each job `call` starts in its own job group. */
   private def jobsOf(call: => Unit): Seq[String] = timedJobsOf(call).map(_._1)
@@ -50,6 +50,29 @@ class BuildJobSpec extends SparkFunSuite {
       org.apache.spark.GraftTestBus.drain(sc)
     } finally sc.removeSparkListener(l)
     seen.asScala.toSeq
+  }
+
+  /** Shuffle records read by the tasks of the jobs `call` starts in its
+    * own job group. */
+  private def shuffleReadOf(call: => Unit): Long = {
+    val sc = spark.sparkContext
+    val group = s"build-shuffle-${System.nanoTime()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val read = new java.util.concurrent.atomic.AtomicLong()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          read.addAndGet(e.taskMetrics.shuffleReadMetrics.recordsRead)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "caller")
+      try call finally sc.clearJobGroup()
+      org.apache.spark.GraftTestBus.drain(sc)
+    } finally sc.removeSparkListener(l)
+    read.get
   }
 
   test("build and atomicSet jobs carry their graft label; a one-document patch runs a bounded number of jobs") {
@@ -83,6 +106,7 @@ class BuildJobSpec extends SparkFunSuite {
     var rep: BuildReport = null
     val jobs = timedJobsOf { rep = Incremental.atomicSet(spark, cfg, sets) }
     assert(rep.segmentsBuilt == 3)
+    assert(jobs.size <= PatchJobBudget, s"${jobs.size} jobs for a patch that writes a new staging base")
     assert(jobs.nonEmpty && jobs.forall(_._1 == "graft:atomicSet"))
     // the finalize manifest is the patch's last write: no job (such as
     // a compaction) starts after it
@@ -93,5 +117,36 @@ class BuildJobSpec extends SparkFunSuite {
       assert(!Files.exists(Paths.get(leftover)), leftover)
     val hits = new IndexReader(spark, dir).search("rebaseword", 10)
     assert(hits.size == 3)
+  }
+
+  test("the apply shuffles at most its change set, and Phase B shuffles nothing") {
+    for (fraction <- Seq(0.0, 0.5)) {
+      val dir = tmpDir(s"build-shuffle-$fraction")
+      val cfg = BuildConfig(dir, nSegments = 4, waveSize = 4, autoCompactFraction = fraction)
+      IndexBuilder.build(spark, SyntheticTranscripts.generate(spark, 42L, nConvs = 400, maxTurns = 8), cfg)
+      // three turns in three segments: overlays without a fraction, a
+      // new staging base with one
+      val keys = IndexBuilder.readDocs(spark, dir).filter(col("segment") < 3)
+        .groupBy("segment").agg(min(struct(col("doc_id"), col("conv_id"), col("turn_idx"))).as("d"))
+        .select(col("d.conv_id"), col("d.turn_idx")).as[(String, Int)].collect()
+      val sets = keys.toSeq.map { case (c, t) => (c, t, "shuffle probe text") }.toDF("conv_id", "turn_idx", "text")
+      val prior = Manifest.read(Manifest.phaseAPath(IndexBuilder.manifestDir(dir))).get
+      val (rows, perSegment) = Incremental.changeSet(spark, cfg, sets)
+      try {
+        val changed = perSegment.values.sum
+        assert(changed == 3)
+        val t0 = System.currentTimeMillis()
+        var stats: (Long, Double, Long, Int) = null
+        val applyRead = shuffleReadOf {
+          stats = Incremental.applyChanges(spark, cfg, t0, prior, perSegment.keySet, rows,
+            spark.sparkContext.emptyRDD, None, 0L)
+        }
+        assert(applyRead <= changed, s"fraction $fraction: the apply read $applyRead shuffle records")
+        assert(IndexBuilder.overlaidSegments(dir).isEmpty == (fraction > 0))
+        val waveRead = shuffleReadOf(IndexBuilder.finishBuild(spark, cfg, t0, stats))
+        assert(waveRead == 0, s"fraction $fraction: Phase B read $waveRead shuffle records")
+      } finally rows.unpersist()
+      assert(new IndexReader(spark, dir).search("shuffle probe", 10).size == 3)
+    }
   }
 }

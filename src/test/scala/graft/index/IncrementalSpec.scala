@@ -348,9 +348,7 @@ class IncrementalSpec extends SparkFunSuite {
     // --- crash state A: merged copy complete (written aside by the
     // base write compact uses), base renamed away, new base not yet
     // renamed in (the exact instant between the two ATOMIC_MOVEs) ---
-    Incremental.writeBaseAside(spark, dir, IndexBuilder.readStaging(spark, dir)
-      .repartitionByRange(4, col("segment"), col("doc_id"))
-      .sortWithinPartitions("segment", "doc_id"))
+    Incremental.writeBaseAside(spark, dir, SegStats.view(dir).keys.max + 1, 4, spark.sparkContext.emptyRDD)
     Files.move(base, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     assert(!Files.exists(base))
     // the next staging read (build and queries route through it) must

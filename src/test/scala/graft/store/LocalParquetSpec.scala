@@ -5,9 +5,10 @@ import graft.store.LocalParquet.TermFilter
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-/** The in-process Parquet reader against Spark's own reader: term
-  * filtering, dropped columns, both codec paths, and a footer cache
-  * that notices a rewritten file. */
+/** The in-process Parquet reader against Spark's own reader: term and
+  * segment filtering, dropped columns, raw UTF-8 bytes, the streaming
+  * form, both codec paths, a footer cache that notices a rewritten
+  * file, and the in-process writer read back by Spark. */
 class LocalParquetSpec extends SparkFunSuite {
 
   /** One single-file, term-sorted table of `n` rows written by Spark. */
@@ -86,5 +87,85 @@ class LocalParquetSpec extends SparkFunSuite {
     assert(rows(f).size == 200)
     Files.copy(b, f, StandardCopyOption.REPLACE_EXISTING)
     assert(rows(f).size == 300)
+  }
+
+  /** One single-file staging-like table of `n` rows sorted by
+    * (segment, doc_id), 40 rows per segment, in small row groups. */
+  private def segmented(name: String, n: Int): Path = {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir(name)
+    (0 until n).map(i => (i.toLong, i / 40, if (i % 7 == 0) null else s"text é $i ${"x" * (i % 50)}"))
+      .toDF("doc_id", "segment", "text").orderBy("segment", "doc_id").coalesce(1)
+      .write.option("parquet.block.size", "4096").parquet(dir)
+    val Seq(f) = LocalParquet.files(Paths.get(dir))
+    f
+  }
+
+  /** Records read by `body` inside one Spark task. */
+  private def recordsRead(f: Path)(body: Path => Unit): Long =
+    spark.sparkContext.parallelize(Seq(f.toString), 1).map { p =>
+      body(Paths.get(p))
+      org.apache.spark.TaskContext.get().taskMetrics().inputMetrics.recordsRead
+    }.collect().head
+
+  test("a segment filter reads the segment's row groups and rows; raw mode reads UTF-8 as its bytes") {
+    val s = spark
+    import s.implicits._
+    val f = segmented("lp-seg", 2000)
+    val all = spark.read.parquet(f.toString).as[(Long, Int, String)].collect().toVector
+    for (seg <- Seq(0, 7, 24, 49, 50)) {
+      val want = all.filter(_._2 == seg)
+      val got = LocalParquet.read(f, Some(LocalParquet.Filter.segment(seg)))(r =>
+        (r[Long]("doc_id"), r[Int]("segment"), r[String]("text")))
+      assert(got == want, seg)
+      val raw = LocalParquet.read(f, Some(LocalParquet.Filter.segment(seg)), Set("segment"), raw = true)(r =>
+        (r[Long]("doc_id"), r[Array[Byte]]("text")))
+      assert(raw.map(r => (r._1, Option(r._2).map(_.toSeq))) ==
+        want.map(w => (w._1, Option(w._3).map(_.getBytes("UTF-8").toSeq))), seg)
+    }
+    // segment 25 sits mid-file: its read decodes a few row groups, not
+    // the file
+    val n = recordsRead(f)(p => LocalParquet.read(p, Some(LocalParquet.Filter.segment(25)))(_ => ()))
+    assert(n >= 40 && n < 2000 / 4, n)
+  }
+
+  test("the streaming form yields read's rows, holding one row group at a time") {
+    val f = segmented("lp-rows", 2000)
+    val whole = LocalParquet.read(f)(r => (r[Long]("doc_id"), r[String]("text")))
+    val it = LocalParquet.rows(f)(r => (r[Long]("doc_id"), r[String]("text")))
+    assert(it.toVector == whole)
+    assert(!it.hasNext)
+    it.close()
+    val filtered = Some(LocalParquet.Filter.segment(3))
+    assert(LocalParquet.rows(f, filtered)(_[Long]("doc_id")).toVector ==
+      LocalParquet.read(f, filtered)(_[Long]("doc_id")))
+    // the first row costs one row group; an early close ends the read
+    val first = recordsRead(f) { p =>
+      val rs = LocalParquet.rows(p)(_[Long]("doc_id"))
+      assert(rs.next() == 0L)
+      rs.close()
+      assert(!rs.hasNext)
+    }
+    assert(first > 0 && first < 2000 / 4, first)
+  }
+
+  test("an in-process written table reads back through Spark with the encoder's schema") {
+    val s = spark
+    import s.implicits._
+    val schema = org.apache.spark.sql.Encoders.product[graft.model.CorpusStats].schema
+    val dir = Paths.get(tmpDir("lp-write"))
+    Files.createDirectories(dir)
+    LocalParquet.write(dir.resolve("part-00000.snappy.parquet"), schema,
+      Seq(Seq(12L, 3.25, 7L, 3, 2, "v1")))
+    val spark1 = Seq(graft.model.CorpusStats(12L, 3.25, 7L, 3, 2, "v1")).toDS()
+    val viaSpark = tmpDir("lp-write-spark")
+    spark1.coalesce(1).write.parquet(viaSpark)
+    val mine = spark.read.parquet(dir.toString)
+    assert(mine.schema == spark.read.parquet(viaSpark).schema)
+    assert(mine.as[graft.model.CorpusStats].collect().toSeq == spark1.collect().toSeq)
+    val Seq(f) = LocalParquet.files(dir)
+    assert(LocalParquet.read(f)(r => (r[Long]("n_docs"), r[Double]("avgdl"), r[String]("analyzer"))) ==
+      Vector((12L, 3.25, "v1")))
   }
 }
