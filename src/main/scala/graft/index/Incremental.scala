@@ -1,11 +1,11 @@
 package graft.index
 
-import graft.model.{DocTurn, Turn}
-import graft.store.Manifest
+import graft.model.Turn
+import graft.store.{LocalParquet, Manifest}
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -46,9 +46,11 @@ import java.nio.file.{Files, Paths}
  * job over segment tasks: a partitioner keyed on segment routes the
  * change set (O(patch) rows) to its segment's task, which reads the
  * segment's current rows in place ([[Staging]]: its overlay, else the
- * base files whose segment statistics meet it) in doc_id order and
+ * base files whose segment statistics meet it) in doc_id order,
  * merges the sorted changes into them — view < upsert < delete per
- * doc_id ([[merge]]). No scan, window or sort of the view runs. STALE
+ * doc_id ([[merge]]) — writes the result itself ([[Staging.write]])
+ * and returns its per-segment stats as its task result. No scan,
+ * window or sort of the view runs, and no Spark write job. STALE
  * ledger rows re-plan exactly the touched segments for Phase B; the
  * phase A manifest is refreshed from the per-segment stats each
  * staging write publishes with its rows ([[SegStats]]), read
@@ -131,7 +133,7 @@ object Incremental {
       "sets must provide at least one updatable column (text/role/tool)")
     val merged = provided.map(c => max(col(c)).as(s"__set_$c"))
     val oneSet = sets.groupBy("conv_id", "turn_idx").agg(merged.head, merged.tail: _*)
-    val joined = IndexBuilder.readStaging(spark, cfg.outDir)
+    val joined = IndexBuilder.readDocs(spark, cfg.outDir)
       .join(oneSet, Seq("conv_id", "turn_idx"))
     val patched = provided.foldLeft(joined)((d, c) =>
       d.withColumn(c, coalesce(col(s"__set_$c"), col(c))))
@@ -144,15 +146,16 @@ object Incremental {
       .withColumn("dl", dlOf(col("text")))
       .withColumn("src_hash", col("h"))
       .select(IndexBuilder.StagingSchema.fieldNames.map(col).toIndexedSeq: _*)
-    val perSegment = new IndexBuilder.SegCounter
-    spark.sparkContext.register(perSegment, "graft.changedRows")
-    val segment = IndexBuilder.StagingSchema.fieldIndex("segment")
-    val rows = changed.queryExecution.toRdd.map { r =>
-      perSegment.add(r.getInt(segment) -> 1L); r.copy()
-    }
+    val rows = changed.queryExecution.toRdd.map(_.copy())
     rows.localCheckpoint()
-    rows.count()
-    (rows, perSegment.value)
+    // the job that materializes the checkpoint counts its rows per
+    // segment, as its tasks' results
+    val counts = spark.sparkContext.runJob(rows, (it: Iterator[InternalRow]) =>
+      it.foldLeft(Map.empty[Int, Long]) { (m, r) =>
+        val seg = r.getInt(SegmentOrdinal)
+        m.updated(seg, m.getOrElse(seg, 0L) + 1)
+      })
+    (rows, counts.toSeq.flatten.groupMapReduce(_._1)(_._2)(_ + _))
   }
 
   /** Diff + overlay + re-plan. Returns (nDocs, avgdl, segSize,
@@ -166,7 +169,7 @@ object Incremental {
     val segSize = m("seg_size").toLong
     val az = cfg.analyzer
 
-    val view = IndexBuilder.readStaging(spark, cfg.outDir)
+    val view = IndexBuilder.readDocs(spark, cfg.outDir)
 
     // ---- diff: keys + hashes only; unchanged rows never leave the join ----
     val srcKeys = turns.toDF().select(col("conv_id"), col("turn_idx"),
@@ -195,42 +198,13 @@ object Incremental {
           .join(freshKeys, Seq("conv_id", "turn_idx"), "left_semi")
           .as[Turn],
         p)
-      val offB = spark.sparkContext.broadcast(offsets)
-      val freshRows: DataFrame =
-        if (nFresh == 0) spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), IndexBuilder.StagingSchema)
-        else {
-          val assigned = spark.createDataset(
-            sortedFresh.mapPartitions { it =>
-              val off = offB.value(TaskContext.getPartitionId())
-              var i = 0L
-              // raw InternalRows in SortedOrdinals order (conv_id,
-              // turn_idx, role, text, tool); toString copies, so the
-              // rows' reused buffers are never retained
-              it.map { r =>
-                val id = maxId + 1 + off + i; i += 1
-                val text = if (r.isNullAt(3)) null else r.getUTF8String(3).toString
-                DocTurn(id, (id / segSize).toInt, r.getUTF8String(0).toString,
-                  r.getInt(1),
-                  if (r.isNullAt(2)) null else r.getUTF8String(2).toString, text,
-                  if (r.isNullAt(4)) null else r.getUTF8String(4).toString,
-                  az.docLength(text))
-              }
-            }).toDF().withColumn("src_hash",
-            xxhash64(col("role"), col("text"), col("tool")))
-            // DISK_ONLY: the appended batch is corpus-sized on an
-            // initial-load-via-delta, and the in-memory columnar
-            // builder OOMs on corpus-sized text
-            .persist(StorageLevel.DISK_ONLY)
-          // materialize in an ISOLATED job: here the stage re-runs the
-          // sorted shuffle's reduce side (same RDD → same partition
-          // ids the counts pass saw). Evaluated lazily inside the
-          // overlay union instead, this map becomes a UnionRDD branch
-          // whose partition ids are OFFSET by the other branches —
-          // offsets would be misindexed.
-          assigned.count()
-          assigned
-        }
+      // each sorted partition's ids start at its own offset: the index
+      // of mapPartitionsWithIndex is the sorted RDD's partition, also
+      // inside the union below
+      val freshRows: RDD[InternalRow] =
+        if (nFresh == 0) spark.sparkContext.emptyRDD
+        else sortedFresh.mapPartitionsWithIndex((pid, it) =>
+          IndexBuilder.stagingRows(it, maxId + 1 + offsets(pid), segSize, az))
       val freshSegs: Set[Int] =
         if (nFresh == 0) Set.empty
         else (((maxId + 1) / segSize).toInt to ((maxId + nFresh) / segSize).toInt).toSet
@@ -247,11 +221,10 @@ object Incremental {
         .select(col("doc_id"), col("segment"), col("conv_id"), col("turn_idx"),
           col("role"), col("text"), col("tool"), dlOf(col("text")).as("dl"))
         .withColumn("src_hash", xxhash64(col("role"), col("text"), col("tool")))
-      val upserts = updRows.unionByName(freshRows)
-        .select(IndexBuilder.StagingSchema.fieldNames.map(col).toIndexedSeq: _*).queryExecution.toRdd
-      try applyChanges(spark, cfg, t0, m, changedSegs ++ freshSegs, upserts, deletes,
+      val upserts = updRows.select(IndexBuilder.StagingSchema.fieldNames.map(col).toIndexedSeq: _*)
+        .queryExecution.toRdd.union(freshRows)
+      applyChanges(spark, cfg, t0, m, changedSegs ++ freshSegs, upserts, deletes,
         Some(srcHash), System.currentTimeMillis() - t0)
-      finally freshRows.unpersist()
     } finally deltaRows.unpersist()
   }
 
@@ -378,31 +351,27 @@ object Incremental {
     }
   }
 
-  /** The staging view of `groups` (ascending runs of segments) with
-    * `changes` applied: one task per group, sorted by (segment, doc_id).
-    * The changes reach their group's task through an O(change set)
-    * shuffle; each task reads its segments' current rows in place
-    * ([[Staging]]) and merges the changes into them ([[merge]]). */
-  private def changedView(spark: SparkSession, outDir: String, groups: Seq[Seq[Int]],
-                          changes: RDD[(Int, Change)]): RDD[InternalRow] = {
+  /** Writes the staging view of `groups` (ascending runs of segments)
+    * with `changes` applied, in one job of one task per group, and
+    * returns the per-segment stats of what the tasks wrote. The changes
+    * reach their group's task through an O(change set) shuffle; each
+    * task reads its segments' current rows in place ([[Staging]]),
+    * merges the changes into them ([[merge]]) and hands `write` its
+    * group's index and rows, sorted by (segment, doc_id). */
+  private def writeChanged(spark: SparkSession, outDir: String, groups: Seq[Seq[Int]],
+                           changes: RDD[(Int, Change)])
+                          (write: (Int, Iterator[InternalRow]) => Map[Int, SegStat]): Map[Int, SegStat] = {
     val source = Staging.sources(outDir, groups.flatten).map(s => s.segment -> s).toMap
     val tasks = groups.map(_.map(source))
-    changes.partitionBy(new SegmentGroups(groups.map(_.head).toArray))
+    val view = changes.partitionBy(new SegmentGroups(groups.map(_.head).toArray))
       .zipPartitions(spark.sparkContext.parallelize(tasks, tasks.size)) { (cs, srcs) =>
         val bySegment = cs.toVector.groupBy(_._1)
         srcs.flatten.flatMap { src =>
           merge(src.stagingRows, bySegment.getOrElse(src.segment, Vector.empty).map(_._2))
         }
       }
-  }
-
-  /** `rows` (staging rows) as a DataFrame whose write sums them per
-    * segment into the returned accumulator: the sums ride the write's
-    * result stage, so they are applied once per successful task. */
-  private def counted(spark: SparkSession, rows: RDD[InternalRow]): (DataFrame, SegStats.Acc) = {
-    val acc = SegStats.newAcc(spark)
-    val rdd = rows.mapPartitions(_.map { r => acc.add(r); r })
-    (org.apache.spark.sql.graft.ColumnBridge.internalDF(spark, rdd, IndexBuilder.StagingSchema), acc)
+    SegStats.merge(spark.sparkContext.runJob(view, (ctx: TaskContext, rows: Iterator[InternalRow]) =>
+      write(ctx.partitionId(), rows)))
   }
 
   /** Publishes each of `touched` as an overlay holding its rows of the
@@ -413,13 +382,14 @@ object Incremental {
                             changes: RDD[(Int, Change)]): Unit = {
     val tmp = Paths.get(outDir, "_tmp_overlay")
     Manifest.deleteRecursively(tmp)
-    val (df, acc) = counted(spark, changedView(spark, outDir, touched.toSeq.sorted.map(Seq(_)), changes))
-    // the rows arrive sorted; the declared sort keeps the partitioned
-    // write from re-sorting by segment alone
-    df.sortWithinPartitions("segment", "doc_id")
-      .write.partitionBy("segment").mode("overwrite").parquet(tmp.toString)
-    val stats = acc.value
-    touched.toSeq.sorted.foreach { seg =>
+    val segments = touched.toVector.sorted
+    val dir = tmp.toString
+    val stats = writeChanged(spark, outDir, segments.map(Seq(_)), changes) { (i, rows) =>
+      if (!rows.hasNext) Map.empty
+      else Staging.write(LocalParquet.part(Files.createDirectories(Paths.get(dir, s"segment=${segments(i)}")), 0),
+        rows, overlay = true)
+    }
+    segments.foreach { seg =>
       val src = tmp.resolve(s"segment=$seg")
       SegStats.write(src, Map(seg -> stats.getOrElse(seg, SegStats.Empty)))
       Manifest.publishDir(src, Paths.get(IndexBuilder.overlayDir(outDir), s"segment=$seg"))
@@ -439,10 +409,11 @@ object Incremental {
                                     changes: RDD[(Int, Change)]): Unit = {
     val tmp = compactTmp(outDir)
     Manifest.deleteRecursively(tmp)
+    Files.createDirectories(tmp)
     val ranges = (0 until nSegments).grouped(math.max(1, (nSegments + p - 1) / p)).toSeq
-    val (df, acc) = counted(spark, changedView(spark, outDir, ranges, changes))
-    df.write.option("parquet.block.size", IndexBuilder.StagingRowGroupBytes).parquet(tmp.toString)
-    SegStats.write(tmp, acc.value)
+    val dir = tmp.toString
+    SegStats.write(tmp, writeChanged(spark, outDir, ranges, changes)((i, rows) =>
+      Staging.write(LocalParquet.part(Paths.get(dir), i), rows, overlay = false)))
   }
 
   /** Replaces the staging base with the changed view (see
@@ -485,10 +456,10 @@ object Incremental {
   /**
    * Repair a crash inside [[writeBase]] (an update's base write or
    * [[compact]]): without it, a crash in the two-rename window leaves
-   * `readStaging` broken (base absent) with only `docs_precompact` on
+   * `readDocs` broken (base absent) with only `docs_precompact` on
    * disk. Idempotent; every writer ([[compact]], [[atomicSet]],
    * [[IndexBuilder.build]]) runs it first, and so does the missing-base
-   * path of [[IndexBuilder.readStaging]]:
+   * path of [[IndexBuilder.readDocs]]:
    *
    *  - base absent + complete new base (its `_segstats`, written last)
    *    → finish the swap and drop the overlays it folds in;

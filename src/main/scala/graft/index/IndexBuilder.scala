@@ -5,12 +5,13 @@ import graft.model._
 import graft.store.{LocalParquet, Manifest}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 
@@ -65,10 +66,11 @@ class SimulatedKill(wave: Int) extends RuntimeException(s"simulated kill after w
  * carrying an order-insensitive corpus content hash (xor of
  * xxhash64(conv_id, turn_idx, role, text, tool)) for change detection — the
  * reference's `jj_scanner_doc_hash` analog
- * (`ScannerImpl.java:380-417`). Its per-segment sums (count, Σ dl, max
- * doc_id, content hash) ride the staging write as an accumulator and
- * publish with it as a `_segstats` file ([[SegStats]]), so an update
- * refreshes the corpus stats without a scan. The dictionary and
+ * (`ScannerImpl.java:380-417`). Each sort partition's task writes its
+ * own file and returns its per-segment sums (count, Σ dl, max doc_id,
+ * content hash) as its task result; they publish with the files as a
+ * `_segstats` file ([[SegStats]]), so an update refreshes the corpus
+ * stats without a scan. The dictionary and
  * corpus_stats are derived AFTER the waves from the posting-block
  * footers (sum(n_docs), sum(block_cf) per term): a merge of the
  * term-sorted segment files inside term ranges, in one shuffle-free
@@ -82,8 +84,10 @@ class SimulatedKill(wave: Int) extends RuntimeException(s"simulated kill after w
  * [[encodeDocs]]: tokenize each doc and APPEND to per-term posting
  * buffers — docIds arrive ascending per segment, so posting lists are
  * sorted by construction and the exploded token stream is never
- * shuffled OR sorted → local block-row sort → write partitioned by
- * segment → atomic per-segment publish + manifest row.
+ * shuffled OR sorted → the task sorts its block rows by term in a
+ * bounded buffer and writes them as the segment's term-sorted file
+ * ([[writePostings]]), returning its lineage counters as its task
+ * result → atomic per-segment publish + manifest row.
  *
  * == Why this scales ==
  * There is NO global repartition-by-term shuffle and no token-level
@@ -92,13 +96,16 @@ class SimulatedKill(wave: Int) extends RuntimeException(s"simulated kill after w
  * with at most segSize postings per segment — skew is structurally
  * bounded, and per-term segment postings concatenate in segment order
  * into globally docId-sorted lists. Per-task memory is O(per-segment
- * vocabulary), tuned by nSegments, plus one staging row group. The
- * only corpus-wide shuffle is the Phase-A range sort: Phase B reads
- * the sorted staging in place, and the dictionary merges the already
- * term-sorted segments per term range, with no exchange and no sort of
- * block rows. Wave size bounds the working
- * set; killed builds resume by manifest anti-planning, and replays
- * are idempotent (overwrite-by-partition).
+ * vocabulary), tuned by nSegments, plus one staging row group and a
+ * block-row buffer capped by the same `maxBufferedPostings` budget.
+ * The only corpus-wide shuffle is the Phase-A range sort: Phase B
+ * reads the sorted staging in place, and the dictionary merges the
+ * already term-sorted segment files per term range, with no exchange.
+ * Every index file is written inside the task that produces its rows
+ * ([[graft.store.LocalParquet.write]]: a hidden name renamed on close),
+ * with no Spark write job or commit protocol. Wave size bounds the
+ * working set; killed builds resume by manifest anti-planning, and
+ * replays are idempotent (overwrite-by-partition).
  */
 object IndexBuilder {
 
@@ -114,13 +121,13 @@ object IndexBuilder {
   /** Parquet row-group bound of the term-sorted tables (postings,
     * dictionary): each row group's min/max term is then a sparse terms
     * index, so a term lookup decodes a few row groups, not the file. */
-  val TermRowGroupBytes: String = (128 * 1024).toString
+  val TermRowGroupBytes: Long = 128 * 1024
 
   /** Parquet row-group bound of the staging base: each row group's
     * min/max segment lets a segment task read its segment's row groups
     * in place ([[Staging]]), decoding about one row group more than its
     * own rows at each end. */
-  val StagingRowGroupBytes: String = (1024 * 1024).toString
+  val StagingRowGroupBytes: Long = 1024 * 1024
 
   /** Posting-table schema, for inference-free reads (an empty segment
     * dir must read as 0 rows, not an AnalysisException). */
@@ -152,16 +159,18 @@ object IndexBuilder {
   }
 
   /**
-   * The staging corpus VIEW: base rows for untouched segments, overlay
-   * rows for segments rewritten by incremental updates. This (not the
-   * base dir) is what Phase B, doc_stats readers, and metadata-filtered
-   * search must read. Both sides carry parquet min/max segment stats,
-   * so wave filters still prune files. Overlays accumulate one dir per
-   * touched segment until an update would overlay more than
-   * `autoCompactFraction` of the segments: that update writes one new
-   * base instead ([[Incremental]]).
+   * The staging corpus VIEW as a DataFrame: base rows for untouched
+   * segments, overlay rows for segments rewritten by incremental
+   * updates; doc_stats (doc_id, conv_id, turn_idx, dl, segment + fields)
+   * is this view read with column pruning. Both sides carry parquet
+   * min/max segment stats, and files are doc_id-sorted, so lookups and
+   * segment filters prune by row-group stats. Phase B and the apply do
+   * not read it: they read each segment's rows in place ([[Staging]]).
+   * Overlays accumulate one dir per touched segment until an update
+   * would overlay more than `autoCompactFraction` of the segments: that
+   * update writes one new base instead ([[Incremental]]).
    */
-  def readStaging(spark: SparkSession, outDir: String): DataFrame = {
+  def readDocs(spark: SparkSession, outDir: String): DataFrame = {
     if (!Files.exists(Paths.get(stagingDir(outDir))))
       Incremental.recoverCompact(outDir) // crash inside compact's rename window
     val base = spark.read.schema(StagingSchema).parquet(stagingDir(outDir))
@@ -171,27 +180,6 @@ object IndexBuilder {
       val overlay = spark.read.schema(StagingSchema).parquet(overlayDir(outDir))
       base.filter(!col("segment").isInCollection(over)).unionByName(overlay)
     }
-  }
-
-  /** doc_stats view (doc_id, conv_id, turn_idx, dl, segment + fields) —
-    * the staging view read with column pruning; files are doc_id-sorted
-    * and segment-clustered so lookups prune by row-group stats. */
-  def readDocs(spark: SparkSession, outDir: String): DataFrame =
-    readStaging(spark, outDir)
-
-  /** Per-segment Long-counter accumulator (merge = pointwise sum). */
-  private[index] class SegCounter extends org.apache.spark.util.AccumulatorV2[(Int, Long), Map[Int, Long]] {
-    private val m = scala.collection.mutable.HashMap.empty[Int, Long]
-    override def isZero: Boolean = m.isEmpty
-    override def copy(): SegCounter = {
-      val c = new SegCounter; m.foreach { case (k, v) => c.m.update(k, v) }; c
-    }
-    override def reset(): Unit = m.clear()
-    override def add(v: (Int, Long)): Unit =
-      m.update(v._1, m.getOrElse(v._1, 0L) + v._2)
-    override def merge(other: org.apache.spark.util.AccumulatorV2[(Int, Long), Map[Int, Long]]): Unit =
-      other.value.foreach { case (k, v) => m.update(k, m.getOrElse(k, 0L) + v) }
-    override def value: Map[Int, Long] = m.toMap
   }
 
   /** Builds the index of `turns` into `cfg.outDir`: a fresh build, a
@@ -289,8 +277,8 @@ object IndexBuilder {
     // ---- change detection: order-insensitive corpus hash over the
     // full identity+content tuple. The upfront scan (a full corpus
     // read) only runs when there IS a prior manifest to compare
-    // against; a fresh build computes the same hash as an accumulator
-    // riding Phase A's id-assignment pass — one less corpus read. ----
+    // against; a fresh build's staging tasks compute the same hash as
+    // they write (their per-segment stats) — one less corpus read. ----
     val (srcCount, srcHash) =
       if (prior.isEmpty) (-1L, null: String)
       else {
@@ -489,9 +477,10 @@ object IndexBuilder {
    * Shuffle files live on executor-local disk at any corpus:heap
    * ratio; no storage-memory interaction at all.
    *
-   * Offset-indexing passes must still run in their OWN job (not
-   * lazily inside a union): a union branch sees UNION-GLOBAL partition
-   * ids and would misindex the offsets.
+   * An offset-indexing pass takes its partition id from the sorted
+   * RDD itself (the task's partition in a `runJob` over it, or the
+   * index of `mapPartitionsWithIndex` on it), never from the running
+   * task: inside a union a task's partition id is the union's.
    */
   /** Fixed column order of the rows [[sortAndOffsets]] returns:
     * conv_id(0), turn_idx(1), role(2), text(3), tool(4) — `ts` is
@@ -501,7 +490,7 @@ object IndexBuilder {
     Seq("conv_id", "turn_idx", "role", "text", "tool")
 
   private[index] def sortAndOffsets(spark: SparkSession, turns: Dataset[Turn],
-                                    p: Int): (org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow], Array[Long], Long) = {
+                                    p: Int): (org.apache.spark.rdd.RDD[InternalRow], Array[Long], Long) = {
     val sorted = turns.toDF().select(SortedOrdinals.map(col): _*)
       .repartitionByRange(p, col("conv_id"), col("turn_idx"))
       .sortWithinPartitions("conv_id", "turn_idx")
@@ -509,23 +498,41 @@ object IndexBuilder {
       // across passes AND lets the count pass run without decoding a
       // Turn object per row (the offset pass reads UTF8String views)
       .queryExecution.toRdd
-    val counts = sorted.mapPartitions { it =>
-      Iterator.single((TaskContext.getPartitionId(), it.size.toLong))
-    }.collect().sortBy(_._1)
-    val offsets = new Array[Long](counts.length.max(1))
-    var acc = 0L
-    counts.foreach { case (pid, c) => offsets(pid) = acc; acc += c }
-    (sorted, offsets, acc)
+    val counts = spark.sparkContext.runJob(sorted, (it: Iterator[InternalRow]) => it.size.toLong)
+    (sorted, counts.scanLeft(0L)(_ + _).take(counts.length.max(1)), counts.sum)
   }
 
   /** The sort partitions of a build with `cfg`. */
   private[index] def sortPartitions(spark: SparkSession, cfg: BuildConfig): Int =
     if (cfg.sortPartitions > 0) cfg.sortPartitions else spark.sparkContext.defaultParallelism
 
+  /** Staging rows ([[StagingSchema]]) of `sorted` rows in
+    * [[SortedOrdinals]] order, their doc_ids counting up from `firstId`:
+    * phase A's rows and a delta's appended rows, with one dl and
+    * src_hash code. The rows are built straight from the input's
+    * UTF8String views — no Turn decode, no String re-encode — so each
+    * must be consumed (or copied) before the next is pulled; src_hash is
+    * the raw-field mirror of the SQL xxhash64 form (RowHashSpec). */
+  private[index] def stagingRows(sorted: Iterator[InternalRow], firstId: Long, segSize: Long,
+                                 az: Analyzer): Iterator[InternalRow] = {
+    val v1 = az.id == Analyzer.V1.id
+    var id = firstId - 1
+    sorted.map { r =>
+      id += 1
+      val role = if (r.isNullAt(2)) null else r.getUTF8String(2)
+      val text = if (r.isNullAt(3)) null else r.getUTF8String(3)
+      val tool = if (r.isNullAt(4)) null else r.getUTF8String(4)
+      val dl =
+        if (v1) Tokenizer.docLengthU8(text)
+        else az.docLength(if (text == null) null else text.toString)
+      new GenericInternalRow(Array[Any](id, (id / segSize).toInt, r.getUTF8String(0), r.getInt(1),
+        role, text, tool, dl, RowHash.contentHashRaw(role, text, tool)))
+    }
+  }
+
   /** Phase A. Returns (nDocs, avgdl, segSize, effective segment count). */
   private def phaseA(spark: SparkSession, turns: Dataset[Turn], cfg: BuildConfig,
                      srcHash: String, srcCount: Long): (Long, Double, Long, Int) = {
-    import spark.implicits._
     val t0 = System.currentTimeMillis()
     val p = sortPartitions(spark, cfg)
 
@@ -537,61 +544,27 @@ object IndexBuilder {
     val nSegTarget = cfg.segmentsFor(nDocs)
     val segSize = math.max(1L, (nDocs + nSegTarget - 1) / nSegTarget)
     val nSegEff = if (nDocs == 0) 0 else (((nDocs - 1) / segSize) + 1).toInt
-    val offB = spark.sparkContext.broadcast(offsets)
 
-    // pass 2: assign ids + doc length; the per-segment staging stats
-    // (count, dl total, max doc_id, content hash) fold into the same job
-    // via an accumulator (updates are applied once per successful
-    // result-stage task), so avgdl and the corpus hash cost no extra pass
-    val az = cfg.analyzer
-    val segAcc = SegStats.newAcc(spark)
-    val v1 = az.id == Analyzer.V1.id
-    // staging rows are built as InternalRows straight from the sorted
-    // shuffle's UTF8String views — no Turn decode, no String re-encode
-    // (each row is consumed by the parquet writer before the next is
-    // pulled, so holding views is safe); src_hash and the content hash
-    // fold into the same pass via the raw-field mirrors (RowHashSpec
-    // pins their equality to the SQL xxhash64 forms)
-    val stagingRows = sorted.mapPartitions { it =>
-      val off = offB.value(TaskContext.getPartitionId())
-      var i = 0L
-      it.map { r =>
-        val id = off + i; i += 1
-        val conv = r.getUTF8String(0)
-        val tix = r.getInt(1)
-        val role = if (r.isNullAt(2)) null else r.getUTF8String(2)
-        val text = if (r.isNullAt(3)) null else r.getUTF8String(3)
-        val tool = if (r.isNullAt(4)) null else r.getUTF8String(4)
-        val dl =
-          if (v1) Tokenizer.docLengthU8(text)
-          else az.docLength(if (text == null) null else text.toString)
-        val seg = (id / segSize).toInt
-        segAcc.add(seg, dl, id, RowHash.turnHashRaw(conv, tix, role, text, tool))
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](id, seg, conv, tix, role, text, tool, dl,
-            RowHash.contentHashRaw(role, text, tool)))
-          : org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-
-    // staging: corpus + ids (atomic publish). One file per sort
-    // partition — NOT partitionBy(segment): segment is monotone
-    // within every sorted file, so parquet file/row-group min/max
-    // stats prune segment filters exactly as well as directory
-    // partitioning would, without the dynamic-partition write (which
-    // costs a per-task sort + one file handle per segment and a
-    // driver-side commit that grows with nSegments — ruinous once
-    // nSegments is sized for cache-resident encoder maps). doc_stats
-    // is this same table read with column pruning.
+    // pass 2, the staging commit: each sort partition's task assigns its
+    // rows' ids and doc lengths ([[stagingRows]]) and writes them as one
+    // doc_id-sorted, segment-monotone file — NOT partitionBy(segment):
+    // file and row-group min/max stats prune segment filters exactly as
+    // well as directory partitioning would, without a file handle per
+    // segment per task. The task returns its per-segment staging stats
+    // (count, dl total, max doc_id, content hash), so avgdl and the
+    // corpus hash cost no extra pass. doc_stats is this same table read
+    // with column pruning.
     val stagingTmp = Paths.get(cfg.outDir, "_tmp_staging_docs")
     Manifest.deleteRecursively(stagingTmp)
-    val (_, stagingMs) = timedMs {
-      org.apache.spark.sql.graft.ColumnBridge
-        .internalDF(spark, stagingRows, StagingSchema)
-        .write.option("parquet.block.size", StagingRowGroupBytes).mode("overwrite")
-        .parquet(stagingTmp.toString)
-    }
-    val segStats = segAcc.value
+    Files.createDirectories(stagingTmp)
+    val dir = stagingTmp.toString
+    val az = cfg.analyzer
+    val (segStats, stagingMs) = timedMs(SegStats.merge(
+      spark.sparkContext.runJob(sorted, (ctx: TaskContext, it: Iterator[InternalRow]) => {
+        val pid = ctx.partitionId()
+        Staging.write(LocalParquet.part(Paths.get(dir), pid), stagingRows(it, offsets(pid), segSize, az),
+          overlay = false)
+      })))
     SegStats.write(stagingTmp, segStats)
     Manifest.publishDir(stagingTmp, Paths.get(stagingDir(cfg.outDir)))
 
@@ -646,24 +619,21 @@ object IndexBuilder {
         .flatMap { case (_, d) => LocalParquet.files(d).map(_.toString) }
     val ranges = termRanges(files, math.max(1, p / 4))
 
-    // n_terms rides the dictionary write as an Observation (one row per
-    // written row) — the separate count job it replaces re-read the
-    // freshly written dictionary for a number the write already knew
-    val obs = org.apache.spark.sql.Observation()
-    writeAtomic(spark, cfg.outDir, "dictionary") { tmp =>
-      val rows = spark.sparkContext.parallelize(ranges, ranges.size)
-        .mapPartitions(_.flatMap { case (lo, hi) => mergeRange(files, lo, hi) })
-      org.apache.spark.sql.graft.ColumnBridge.internalDF(spark, rows, DictionarySchema)
-        .observe(obs, count(lit(1)).as("n"))
-        .write.option("parquet.block.size", TermRowGroupBytes).mode("overwrite").parquet(tmp)
+    // dictionary file i is range i, written by range task i, which
+    // returns its row count: n_terms is their sum
+    val nTerms = writeAtomic(cfg.outDir, "dictionary") { tmp =>
+      val dir = tmp.toString
+      spark.sparkContext.runJob(spark.sparkContext.parallelize(ranges.zipWithIndex, ranges.size),
+        (it: Iterator[((Option[String], Option[String]), Int)]) => it.map { case ((lo, hi), i) =>
+          LocalParquet.write(LocalParquet.part(Paths.get(dir), i), DictionarySchema, mergeRange(files, lo, hi),
+            TermRowGroupBytes)
+        }.sum).sum
     }
-    val nTerms = obs.get("n").asInstanceOf[Long]
 
     // one row already in hand: written in-process, with no Spark job
-    writeAtomic(spark, cfg.outDir, "corpus_stats") { tmp =>
-      Files.createDirectories(Paths.get(tmp))
-      LocalParquet.write(Paths.get(tmp, "part-00000.snappy.parquet"), CorpusStatsSchema,
-        Seq(Seq(nDocs, avgdl, nTerms, IndexFormat.Version, Tokenizer.Version, cfg.analyzer.id)))
+    writeAtomic(cfg.outDir, "corpus_stats") { tmp =>
+      LocalParquet.write(LocalParquet.part(tmp, 0), CorpusStatsSchema, Iterator.single(new GenericInternalRow(
+        Array[Any](nDocs, avgdl, nTerms, IndexFormat.Version, Tokenizer.Version, UTF8String.fromString(cfg.analyzer.id)))))
     }
     Manifest.writeAtomic(Manifest.finalizePath(manifestDir(cfg.outDir)), Map(
       "status" -> Manifest.Complete,
@@ -703,7 +673,7 @@ object IndexBuilder {
     * `term`, `n_docs` and `block_cf` columns of each file's rows in the
     * range, summed per term. */
   private def mergeRange(files: Seq[String], lo: Option[String],
-                         hi: Option[String]): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+                         hi: Option[String]): Iterator[InternalRow] = {
     val sums = new java.util.HashMap[String, Array[Long]]()
     val filter = Some(LocalParquet.TermFilter.range(lo, hi))
     val without = PostingSchema.fieldNames.toSet -- Set("term", "n_docs", "block_cf")
@@ -717,7 +687,7 @@ object IndexBuilder {
     sums.asScala.toArray
       .map { case (t, a) => (UTF8String.fromString(t), a) }
       .sortBy(_._1).iterator.map { case (t, a) =>
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](t, a(0), a(1)))
+        new GenericInternalRow(Array[Any](t, a(0), a(1)))
       }
   }
 
@@ -731,52 +701,16 @@ object IndexBuilder {
     * recorded in the ledger row. */
   private def buildWave(spark: SparkSession, cfg: BuildConfig,
                         wave: Seq[Int], attemptOf: Int => Int): Unit = {
-    import spark.implicits._
     val t0 = System.currentTimeMillis()
     val sources = Staging.sources(cfg.outDir, wave)
-
-    // per-segment lineage counters ride the encode job as accumulators
-    // (one update per successful result-stage task) — no separate
-    // metrics aggregation jobs
-    val az = cfg.analyzer
-    val poison = cfg.poisonSegments
-    val turnsAcc = new SegCounter; val tokensAcc = new SegCounter
-    val blocksAcc = new SegCounter
-    spark.sparkContext.register(turnsAcc, "graft.turns")
-    spark.sparkContext.register(tokensAcc, "graft.tokens")
-    spark.sparkContext.register(blocksAcc, "graft.blocks")
-
-    // One task per segment, no shuffle: each task reads its segment's
-    // doc_id, text (raw UTF-8 bytes) and dl in place, already in doc_id
-    // order (staging is sorted by (segment, doc_id)), and streams them
-    // into the encoder. Tokenization and posting-list construction
-    // happen inside the encoder: docIds arrive ascending, so each
-    // term's postings are built by APPEND (no sort over tokens at all).
-    val without = StagingSchema.fieldNames.toSet -- Set("doc_id", "segment", "text", "dl")
-    val blocks = spark.sparkContext.parallelize(sources, sources.size).mapPartitions { it =>
-      val docs = it.flatMap { src =>
-        src.rows(without)(r => (r[Long]("doc_id"), src.segment, r[Array[Byte]]("text"), r[Int]("dl")))
-      }.map { d =>
-        if (poison.contains(d._2))
-          throw new RuntimeException(s"poisoned segment ${d._2} (test hook)")
-        turnsAcc.add(d._2 -> 1L); tokensAcc.add(d._2 -> d._4.toLong); d
-      }
-      encodeDocs(docs, az, cfg.maxOpenTerms, cfg.maxBufferedPostings, cfg.storePositions).map { b =>
-        blocksAcc.add(b.segment -> 1L); b
-      }
-    }
-    // local BLOCK-row sort (postings/128 rows — cheap) so each parquet
-    // file is term-clustered: with the bounded row groups of the write
-    // below, query-time term filters prune whole row groups via min/max
-    // stats instead of scanning the segment
-    val encoded = spark.createDataset(blocks).sortWithinPartitions("segment", "term", "block_id")
-
     val waveTmp = Paths.get(cfg.outDir, "_tmp_wave")
     Manifest.deleteRecursively(waveTmp)
-    encoded.write.option("parquet.block.size", TermRowGroupBytes)
-      .partitionBy("segment").mode("overwrite").parquet(waveTmp.toString)
-    val ingest = turnsAcc.value; val tokens = tokensAcc.value
-    val written = blocksAcc.value
+
+    // One job of one task per segment, no shuffle ([[writePostings]]);
+    // each task returns its segment's lineage counters
+    val dir = waveTmp.toString
+    val counts = spark.sparkContext.runJob(spark.sparkContext.parallelize(sources, sources.size),
+      (it: Iterator[SegmentSource]) => it.map(writePostings(_, Paths.get(dir), cfg)).toVector).flatten.toMap
 
     // atomic per-segment data publish, then ONE ledger append as the
     // wave's commit point: a kill mid-publish leaves no ledger rows, so
@@ -801,14 +735,70 @@ object IndexBuilder {
     Manifest.appendLedger(manifestDir(cfg.outDir), wave.map { seg => Map(
       "segment" -> seg.toString,
       "status" -> Manifest.Complete,
-      "turns_read" -> ingest.getOrElse(seg, 0L).toString,
-      "tokens_emitted" -> tokens.getOrElse(seg, 0L).toString,
-      "postings_written" -> written.getOrElse(seg, 0L).toString,
+      "turns_read" -> counts.get(seg).fold(0L)(_._1).toString,
+      "tokens_emitted" -> counts.get(seg).fold(0L)(_._2).toString,
+      "postings_written" -> counts.get(seg).fold(0L)(_._3).toString,
       "attempts" -> attemptOf(seg).toString,
       "snapshot_id" -> t0.toString,
       "wall_ms" -> wallMs.toString)
     })
     Manifest.deleteRecursively(waveTmp)
+  }
+
+  /** The postings-file schema: the posting-table columns but `segment`,
+    * which the `segment=N` directory name carries. */
+  private val SegmentPostingSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(PostingSchema.filterNot(_.name == "segment"))
+
+  /** Bytes a buffered block row stands for beyond its term and arrays. */
+  private val BlockRowOverhead = 64
+
+  /** One segment's Phase B task: reads the segment's doc_id, text (raw
+    * UTF-8 bytes) and dl in place, in doc_id order ([[Staging]]), and
+    * streams them into [[encodeDocs]]. Tokenization and posting-list
+    * construction happen inside the encoder: docIds arrive ascending,
+    * so each term's postings are built by APPEND (no sort over tokens at
+    * all). The block rows are buffered up to the byte budget
+    * `maxBufferedPostings` stands for (16 B a posting), sorted by
+    * (term, block_id) — stable, so emission order breaks ties — and
+    * written as one term-sorted file of `segment=N` under `dir` in
+    * 128 KiB row groups, whose min/max terms let a query's term filter
+    * skip whole row groups; a segment larger than the budget gets
+    * several such files. Returns (segment, (turns read, tokens, blocks
+    * written)). */
+  private def writePostings(src: SegmentSource, dir: Path, cfg: BuildConfig): (Int, (Long, Long, Long)) = {
+    val seg = src.segment
+    var turns = 0L
+    var tokens = 0L
+    val without = StagingSchema.fieldNames.toSet -- Set("doc_id", "segment", "text", "dl")
+    val docs = src.rows(without)(r => (r[Long]("doc_id"), seg, r[Array[Byte]]("text"), r[Int]("dl"))).map { d =>
+      if (cfg.poisonSegments.contains(seg))
+        throw new RuntimeException(s"poisoned segment $seg (test hook)")
+      turns += 1; tokens += d._4; d
+    }
+    val blocks = encodeDocs(docs, cfg.analyzer, cfg.maxOpenTerms, cfg.maxBufferedPostings, cfg.storePositions)
+    val budget = 16 * cfg.maxBufferedPostings
+    var files = 0
+    var written = 0L
+    while (blocks.hasNext) {
+      val buf = scala.collection.mutable.ArrayBuffer.empty[(UTF8String, PostingBlockRow)]
+      var bytes = 0L
+      while (blocks.hasNext && bytes < budget) {
+        val b = blocks.next()
+        buf += UTF8String.fromString(b.term) -> b
+        bytes += BlockRowOverhead + b.term.length + b.doc_deltas.length + b.tfs.length + b.dls.length +
+          b.positions.length
+      }
+      val rows = buf.sortBy { case (t, b) => (t, b.block_id) }.iterator.map { case (t, b) =>
+        new GenericInternalRow(Array[Any](t, b.block_id, b.n_docs, b.max_doc_id, b.block_max_tf, b.block_min_dl,
+          b.doc_deltas, b.tfs, b.dls, b.positions, b.block_cf)): InternalRow
+      }
+      LocalParquet.write(LocalParquet.part(Files.createDirectories(dir.resolve(s"segment=$seg")), files),
+        SegmentPostingSchema, rows, TermRowGroupBytes)
+      files += 1
+      written += buf.size
+    }
+    seg -> ((turns, tokens, written))
   }
 
   /** Open posting buffer for one term within the current segment.
@@ -935,8 +925,10 @@ object IndexBuilder {
    * (a Lucene-style memory flush): posting lists stay docId-sorted
    * because block doc ranges remain disjoint and increasing — readers
    * order blocks by max_doc_id — at the cost of under-full tail blocks
-   * per flush. Worst-case task memory ≈ maxBufferedPostings × 16 B
-   * (default ~64 MB) regardless of corpus or vocabulary shape.
+   * per flush. Worst-case encoder memory ≈ maxBufferedPostings × 16 B
+   * (default ~64 MB) regardless of corpus or vocabulary shape; the
+   * Phase B task that drains it buffers at most the same byte budget
+   * of emitted block rows before it writes them ([[writePostings]]).
    */
   private[index] def encodeDocs(docs: Iterator[(Long, Int, Array[Byte], Int)],
                                 az: Analyzer = Analyzer.V1,
@@ -1014,7 +1006,7 @@ object IndexBuilder {
       /** Open a new posting in `b` (flushing a full block first — a
         * block is emitted when the NEXT posting arrives rather than
         * the moment it fills; block contents are identical and the
-        * wave's (segment, term, block_id) sort fixes row order). */
+        * Phase B task's (term, block_id) sort fixes row order). */
       private def openPosting(b: TermBuf, docId: Long, dl: Int, seg: Int): Unit = {
         if (b.n == PostingCodec.BlockSize) {
           nBuffered -= b.n; nBufferedPos -= b.pn
@@ -1105,19 +1097,22 @@ object IndexBuilder {
       }
     }
 
-  private def writeAtomic(spark: SparkSession, outDir: String, name: String)
-                         (write: String => Unit): Unit = {
+  /** Publishes the table `name` of `outDir` that `write` writes into an
+    * empty directory aside, and returns what `write` returns. */
+  private def writeAtomic[T](outDir: String, name: String)(write: Path => T): T = {
     val tmp = Paths.get(outDir, s"_tmp_$name")
     Manifest.deleteRecursively(tmp)
-    write(tmp.toString)
+    Files.createDirectories(tmp)
+    val out = write(tmp)
     Manifest.publishDir(tmp, Paths.get(outDir, name))
+    out
   }
 
   /** Ingestion-equality invariant (input_hint): per-turn text equality
     * between the indexed staging copy and the source, under stable
     * (conv_id, turn_idx) identity. Returns the number of violations. */
   def verifyIngestion(spark: SparkSession, outDir: String, source: Dataset[Turn]): Long = {
-    val staged = readStaging(spark, outDir)
+    val staged = readDocs(spark, outDir)
       .select(col("conv_id"), col("turn_idx"), col("text").as("staged_text"))
     source.select(col("conv_id"), col("turn_idx"), col("text"))
       .join(staged, Seq("conv_id", "turn_idx"), "full_outer")

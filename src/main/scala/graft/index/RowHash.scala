@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * skipped — exactly Spark's HashExpression fold. Pinned equal to the
  * SQL form by RowHashSpec.
  *
- * Used to fold the corpus content hash into Phase A's id-assignment
- * pass (an accumulator) on fresh builds, so the upfront
+ * Used to fold the corpus content hash into the staging writes' task
+ * results (per-segment stats) on fresh builds, so the upfront
  * change-detection scan — a full corpus read — only happens when
  * there is a prior manifest to compare against.
  */

@@ -1,8 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.util.AccumulatorV2
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -20,9 +18,10 @@ case class SegStat(n: Long, dlSum: Long, maxDocId: Long, hash: Long) {
  * Per-segment stats of the staging view, kept beside its rows.
  *
  * Every staging write (phase A's base, an overlay, a rewritten base)
- * sums its rows per segment in an accumulator of its result stage
- * (applied once per successful task) and stores the sums as a hidden
- * `_segstats` file inside the directory it publishes. The stats then
+ * sums its rows per segment inside the task that writes them
+ * ([[Sums]]), returns the sums as the task's result, and the job's
+ * caller stores them as a hidden `_segstats` file inside the directory it
+ * publishes. The stats then
  * move with their rows: a rename that publishes the rows publishes
  * their stats, and a kill can never leave one without the other.
  * Spark and [[graft.store.LocalParquet]] skip `_`-prefixed files.
@@ -38,53 +37,34 @@ object SegStats {
 
   val Empty: SegStat = SegStat(0L, 0L, -1L, 0L)
 
-  /** Per-segment [[SegStat]] accumulator (merge = [[SegStat.+]]). */
-  final class Acc extends AccumulatorV2[InternalRow, Map[Int, SegStat]] {
-    // n, dl sum, max doc_id, xor hash per segment; rows arrive grouped
-    // by segment, so the last slot is cached
+  /** The per-segment sums of the staging rows a task writes, which it
+    * returns as its result; rows arrive grouped by segment, so the last
+    * segment's slot is cached. */
+  final class Sums {
+    // n, dl sum, max doc_id, xor hash per segment
     private val m = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
     private var lastSeg = Int.MinValue
     private var last: Array[Long] = _
 
-    override def isZero: Boolean = m.isEmpty
-    override def copy(): Acc = {
-      val c = new Acc; m.foreach { case (k, v) => c.m.update(k, v.clone()) }; c
-    }
-    override def reset(): Unit = { m.clear(); lastSeg = Int.MinValue; last = null }
-
     /** One staging row (ordinals of [[IndexBuilder.StagingSchema]]). */
-    override def add(r: InternalRow): Unit = {
+    def add(r: InternalRow): Unit = {
       def u8(i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i)
-      add(r.getInt(1), r.getInt(7), r.getLong(0),
-        RowHash.turnHashRaw(r.getUTF8String(2), r.getInt(3), u8(4), u8(5), u8(6)))
-    }
-
-    def add(seg: Int, dl: Int, docId: Long, hash: Long): Unit = {
+      val seg = r.getInt(1)
       if (seg != lastSeg) {
         last = m.getOrElseUpdate(seg, Array(0L, 0L, -1L, 0L)); lastSeg = seg
       }
-      last(0) += 1; last(1) += dl
-      if (docId > last(2)) last(2) = docId
-      last(3) ^= hash
+      last(0) += 1; last(1) += r.getInt(7)
+      last(2) = math.max(last(2), r.getLong(0))
+      last(3) ^= RowHash.turnHashRaw(r.getUTF8String(2), r.getInt(3), u8(4), u8(5), u8(6))
     }
 
-    override def merge(o: AccumulatorV2[InternalRow, Map[Int, SegStat]]): Unit = {
-      o.value.foreach { case (k, s) =>
-        val a = m.getOrElseUpdate(k, Array(0L, 0L, -1L, 0L))
-        a(0) += s.n; a(1) += s.dlSum; a(2) = math.max(a(2), s.maxDocId); a(3) ^= s.hash
-      }
-    }
-
-    override def value: Map[Int, SegStat] =
+    def result: Map[Int, SegStat] =
       m.map { case (k, a) => k -> SegStat(a(0), a(1), a(2), a(3)) }.toMap
   }
 
-  /** A new [[Acc]], registered with `spark`'s context. */
-  def newAcc(spark: SparkSession): Acc = {
-    val a = new Acc
-    spark.sparkContext.register(a, "graft.segStats")
-    a
-  }
+  /** Tasks' per-segment stats summed per segment. */
+  def merge(parts: Iterable[Map[Int, SegStat]]): Map[Int, SegStat] =
+    parts.flatten.groupMapReduce(_._1)(_._2)(_ + _)
 
   /** Writes `stats` as `dir`'s `_segstats` file (atomic rename). */
   def write(dir: Path, stats: Map[Int, SegStat]): Unit = {

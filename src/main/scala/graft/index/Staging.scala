@@ -1,8 +1,9 @@
 package graft.index
 
 import graft.store.LocalParquet
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.file.{Files, Path, Paths}
@@ -38,8 +39,31 @@ private[index] case class SegmentSource(segment: Int, files: Seq[String], overla
 /** The staging view read in place, segment by segment, with no Spark
   * scan: base files are written sorted by (segment, doc_id), so each
   * file's `segment` statistics tell which segments it holds, and its
-  * row-group statistics which row groups. */
+  * row-group statistics which row groups. Every staging file is written
+  * by [[write]], inside the task that produces its rows. */
 private[index] object Staging {
+
+  /** The columns of an overlay file: the staging columns but `segment`,
+    * which the overlay's directory name carries. */
+  private val OverlayOrdinals =
+    IndexBuilder.StagingSchema.fields.indices.filter(_ != IndexBuilder.StagingSchema.fieldIndex("segment"))
+  private val OverlaySchema = StructType(OverlayOrdinals.map(IndexBuilder.StagingSchema.fields(_)))
+
+  /** Writes staging `rows`, sorted by (segment, doc_id), to `file` in
+    * [[IndexBuilder.StagingRowGroupBytes]] row groups, without the
+    * `segment` column for an `overlay`, and returns their per-segment
+    * stats ([[SegStats]]). */
+  def write(file: Path, rows: Iterator[InternalRow], overlay: Boolean): Map[Int, SegStat] = {
+    val sums = new SegStats.Sums
+    val summed = rows.map { r => sums.add(r); r }
+    if (!overlay) LocalParquet.write(file, IndexBuilder.StagingSchema, summed, IndexBuilder.StagingRowGroupBytes)
+    else {
+      val projected = ProjectingInternalRow(OverlaySchema, OverlayOrdinals)
+      LocalParquet.write(file, OverlaySchema, summed.map { r => projected.project(r); projected },
+        IndexBuilder.StagingRowGroupBytes)
+    }
+    sums.result
+  }
 
   /** The source of each of `segments`, in the same order. */
   def sources(outDir: String, segments: Seq[Int]): Seq[SegmentSource] = {

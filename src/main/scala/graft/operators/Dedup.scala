@@ -370,8 +370,6 @@ object Dedup {
       labels = next.select("id", "component")
       converged = changed == 0
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter changed=$changed")
     }
     edges.unpersist()
     require(converged, s"nearDupComponents did not converge in $maxIter rounds " +

@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
  * k-way merge per query under the total order (score desc, docId
  * asc). A single query is a batch of one.
  *
- * What prunes the read: postings files are term-sorted within each
- * segment and written in bounded row groups, so each row group's
+ * What prunes the read: each postings file is term-sorted (a segment
+ * has one, or several under a small encoder memory budget) and
+ * written in bounded row groups, so each row group's
  * min/max term is a sparse terms index — a task reads only the row
  * groups whose range holds a query term, and decodes their other
  * columns only for the matching rows (position lists only for
@@ -491,7 +492,7 @@ class IndexReader(spark: SparkSession, dir: String,
     val g = groupSize
     val groups = segmentGroups.map(segs => segs.head._1 / g -> segs).toMap
     val terms = plan.terms.toSet
-    val perTask = IndexBuilder.readStaging(spark, root)
+    val perTask = IndexBuilder.readDocs(spark, root)
       .filter(predicate)
       .select("segment", "doc_id").as[(Int, Long)]
       .groupByKey(_._1 / g)

@@ -1,7 +1,8 @@
 package graft.store
 
 import java.nio.ByteBuffer
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
+import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.bytes.BytesInput
 import org.apache.parquet.column.{ColumnDescriptor, ColumnReader}
@@ -10,18 +11,19 @@ import org.apache.parquet.column.statistics.{IntStatistics, Statistics}
 import org.apache.parquet.compression.CompressionCodecFactory
 import org.apache.parquet.compression.CompressionCodecFactory.BytesInputDecompressor
 import org.apache.parquet.conf.PlainParquetConfiguration
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.{CodecFactory, ParquetFileReader}
+import org.apache.parquet.hadoop.{CodecFactory, ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, CompressionCodecName, ParquetMetadata}
 import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveComparator, Type, Types}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveComparator}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 import org.xerial.snappy.Snappy
 import scala.jdk.CollectionConverters._
 
@@ -29,7 +31,8 @@ import scala.jdk.CollectionConverters._
  * In-process reads of the index's local Parquet files, with no Spark
  * job and no Hadoop `Configuration` (whose XML parse costs ~14 ms per
  * file open): `LocalInputFile` over `java.nio`, plain Parquet conf,
- * flat schemas only. [[write]] writes a small table the same way.
+ * flat schemas only. [[write]] writes every index file the same way,
+ * inside the task that produces its rows.
  *
  * Index tables are written term-sorted in bounded row groups, so a
  * file's per-row-group min/max `term` statistics are a sparse terms
@@ -60,7 +63,8 @@ object LocalParquet {
   }
 
   /** The data files of a table directory, name-sorted; hidden entries
-    * (`_SUCCESS`, `.crc`) skipped, a missing directory is empty. */
+    * (`_segstats`, a [[write]]'s temporary file, Spark's `_SUCCESS` and
+    * `.crc` files) skipped, a missing directory is empty. */
   def files(dir: Path): Seq[Path] = list(dir).filter(Files.isRegularFile(_))
 
   /** The `<key>=N` partition directories of a table, ascending by N. */
@@ -262,39 +266,39 @@ object LocalParquet {
     }
   }
 
-  /** Writes `rows` (values in `schema`'s field order: Int, Long, Double,
-    * String or null) to `file` as one Snappy Parquet file, in-process:
-    * the Parquet schema and the row metadata are the ones Spark's writer
-    * gives `schema`, so Spark reads the file back as it would its own. */
-  def write(file: Path, schema: StructType, rows: Seq[Seq[Any]]): Unit = {
-    val fields = schema.fields.toSeq.map { f =>
-      val rep = if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
-      f.dataType match {
-        case IntegerType => Types.primitive(INT32, rep).named(f.name)
-        case LongType => Types.primitive(INT64, rep).named(f.name)
-        case DoubleType => Types.primitive(DOUBLE, rep).named(f.name)
-        case StringType => Types.primitive(BINARY, rep).as(LogicalTypeAnnotation.stringType()).named(f.name)
-        case other => throw new IllegalArgumentException(s"unsupported column type $other")
-      }
-    }
-    val message = new MessageType("spark_schema", fields: _*)
-    val w = ExampleParquetWriter.builder(new LocalOutputFile(file)).withType(message)
-      .withConf(new PlainParquetConfiguration()).withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withExtraMetaData(Map("org.apache.spark.version" -> org.apache.spark.SPARK_VERSION_SHORT,
-        "org.apache.spark.sql.parquet.row.metadata" -> schema.json).asJava)
-      .build()
-    try rows.foreach { row =>
-      val g = new SimpleGroupFactory(message).newGroup()
-      row.zipWithIndex.foreach {
-        case (null, _) =>
-        case (v: Int, i) => g.add(i, v)
-        case (v: Long, i) => g.add(i, v)
-        case (v: Double, i) => g.add(i, v)
-        case (v: String, i) => g.add(i, v)
-        case (v, _) => throw new IllegalArgumentException(s"unsupported value $v")
-      }
-      w.write(g)
-    } finally w.close()
+  /** Writes `rows` (in `schema`'s field order) to `file` as one Snappy
+    * Parquet file in row groups of about `rowGroupBytes`, and returns
+    * how many there were. Spark's own write support turns the rows into
+    * Parquet, under a `Configuration` built empty, so the file is byte
+    * for byte what Spark's writer makes of the same rows in the same
+    * process, and Spark reads it back as its own. The rows go to a hidden name
+    * beside `file`, renamed to `file` once complete: a write that fails
+    * leaves no file behind, and a repeated one replaces the file whole. */
+  def write(file: Path, schema: StructType, rows: Iterator[InternalRow],
+            rowGroupBytes: Long = ParquetWriter.DEFAULT_BLOCK_SIZE): Long = {
+    val tmp = file.resolveSibling(s".${file.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    val conf = new Configuration(false)
+    ParquetWriteSupport.setSchema(schema, conf)
+    Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
+      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
+      .foreach(c => conf.set(c.key, c.defaultValueString))
+    var n = 0L
+    try {
+      val w = new RowWriter(new LocalOutputFile(tmp)).withConf(conf).withRowGroupSize(rowGroupBytes)
+        .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+      try rows.foreach { r => w.write(r); n += 1 } finally w.close()
+      Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+    n
+  }
+
+  /** The `i`th data file of a table directory. */
+  def part(dir: Path, i: Int): Path = dir.resolve(f"part-$i%05d.parquet")
+
+  private final class RowWriter(file: LocalOutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriter](file) {
+    protected def self(): RowWriter = this
+    protected def getWriteSupport(conf: Configuration) = new ParquetWriteSupport
   }
 
   private def options(): ParquetReadOptions = {

@@ -23,17 +23,6 @@ object ColumnBridge {
     org.apache.spark.sql.catalyst.expressions.aggregate
       .GraftCollectTopK(expression(member), k, reverse = true))
 
-  /** `RDD[InternalRow]` → DataFrame without the external-row encoder
-    * round-trip (`internalCreateDataFrame` is `private[sql]`): the
-    * staging writer hands Spark rows whose string fields are the
-    * UTF8String views read from the sorted shuffle, skipping a
-    * UTF8String → String → UTF8String copy per field per row. */
-  def internalDF(spark: org.apache.spark.sql.SparkSession,
-                 rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-                 schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
-
   /** Adds rows and bytes read outside Spark's data sources to the
     * running task's input metrics (`incRecordsRead`/`incBytesRead` are
     * `private[spark]`); a no-op outside a task. */

@@ -22,7 +22,7 @@ object ApplyOracle {
   def view(spark: SparkSession, dir: String, upserts: Seq[Row], deletes: Seq[(Int, Long)]): Set[Row] = {
     import spark.implicits._
     val names = IndexBuilder.StagingSchema.fieldNames.map(col).toIndexedSeq
-    val current = IndexBuilder.readStaging(spark, dir).withColumn("op", lit(0))
+    val current = IndexBuilder.readDocs(spark, dir).withColumn("op", lit(0))
     val ups = spark.createDataFrame(upserts.asJava, IndexBuilder.StagingSchema).withColumn("op", lit(1))
     val dels = deletes.toDF("segment", "doc_id").withColumn("op", lit(2))
     val last = Window.partitionBy("segment", "doc_id").orderBy(col("op").desc)
@@ -125,7 +125,7 @@ class ApplyOracleSpec extends SparkFunSuite {
     var appended = 0
     sq.steps.zipWithIndex.foreach { case (ops, step) =>
       val ctx = s"$name step $step ${ops.mkString(",")} (fraction ${sq.fraction})"
-      val view = IndexBuilder.readStaging(spark, dir).collect().toSeq.sortBy(_.getLong(0))
+      val view = IndexBuilder.readDocs(spark, dir).collect().toSeq.sortBy(_.getLong(0))
       val bySeg = view.groupBy(_.getInt(1))
       def pick(seg: Int, share: Double) = bySeg.getOrElse(seg, Nil).filter(_ => rng.nextDouble() < share)
       val deletes = ops.flatMap {
@@ -162,7 +162,7 @@ class ApplyOracleSpec extends SparkFunSuite {
       if (ops.exists(_.isInstanceOf[Empty]) && touched.nonEmpty) seen += "emptied"
       if (upserts.exists(_.getInt(1) > prior("n_segments_effective").toInt - 1)) seen += "new tail segment"
 
-      val got = IndexBuilder.readStaging(spark, dir).collect().toSeq
+      val got = IndexBuilder.readDocs(spark, dir).collect().toSeq
       assert(got.size == expected.size && got.toSet == expected,
         s"$ctx: extra ${got.toSet.diff(expected).take(5)}, missing ${expected.diff(got.toSet).take(5)}")
       assert(SegStats.view(dir).filter(_._2.n > 0).map { case (s, t) => s -> hashRow(t) } == aggregated(expected), ctx)

@@ -4,7 +4,9 @@ import graft.SparkFunSuite
 import graft.query.IndexReader
 import graft.sources.SyntheticTranscripts
 import graft.store.Manifest
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -73,6 +75,60 @@ class BuildJobSpec extends SparkFunSuite {
       org.apache.spark.GraftTestBus.drain(sc)
     } finally sc.removeSparkListener(l)
     read.get
+  }
+
+  /** What `call`, run in its own job group, carries out of its tasks
+    * or plans as a write: the `graft.*` accumulables of its stages, and
+    * the write-command nodes of its SQL executions (`WriteFilesExec`
+    * and `DataWritingCommandExec` over a file source). */
+  private def writeMechanismsOf(call: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"build-writes-${System.nanoTime()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val found = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def writeNodes(n: SparkPlanInfo): Seq[String] =
+      (if (Set("WriteFiles", "Execute InsertIntoHadoopFsRelationCommand")(n.nodeName)) Seq(n.nodeName)
+       else Nil) ++ n.children.flatMap(writeNodes)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) e.stageIds.foreach(stages.add)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId))
+          e.stageInfo.accumulables.values.flatMap(_.name).filter(_.startsWith("graft.")).foreach(found.add)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.jobGroupId.contains(group) =>
+          writeNodes(x.sparkPlanInfo).foreach(found.add)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "caller")
+      try call finally sc.clearJobGroup()
+      org.apache.spark.GraftTestBus.drain(sc)
+    } finally sc.removeSparkListener(l)
+    found.asScala.toSeq.distinct
+  }
+
+  test("build, delta, atomicSet and compact write every index file inside its tasks: no graft accumulator, no Spark write command") {
+    val dir = tmpDir("build-writes")
+    val cfg = BuildConfig(dir, nSegments = 4, waveSize = 4, autoCompactFraction = 0)
+    val v1 = SyntheticTranscripts.generate(spark, 42L, nConvs = 200, maxTurns = 6)
+    val v2 = v1.filter(col("conv_id") =!= "conv-000005")
+      .withColumn("text", when(col("conv_id") === "conv-000010", lit("delta written turn")).otherwise(col("text")))
+      .unionByName(SyntheticTranscripts.generate(spark, 99L, nConvs = 10, maxTurns = 4)
+        .withColumn("conv_id", concat(lit("zz-"), col("conv_id"))))
+      .as[graft.model.Turn]
+    val sets = Seq(("conv-000020", 0, "patched turn writeword")).toDF("conv_id", "turn_idx", "text")
+    for ((step, call) <- Seq[(String, () => Unit)](
+        "build" -> (() => IndexBuilder.build(spark, v1, cfg)),
+        "delta" -> (() => assert(IndexBuilder.build(spark, v2, cfg).segmentsBuilt > 0)),
+        "atomicSet" -> (() => assert(Incremental.atomicSet(spark, cfg, sets).segmentsBuilt == 1)),
+        "compact" -> (() => assert(Incremental.compact(spark, dir) > 0)))) {
+      val found = writeMechanismsOf(call())
+      assert(found.isEmpty, s"$step: $found")
+    }
+    assert(new IndexReader(spark, dir).search("writeword", 10).size == 1)
   }
 
   test("build and atomicSet jobs carry their graft label; a one-document patch runs a bounded number of jobs") {

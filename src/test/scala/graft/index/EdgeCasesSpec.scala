@@ -200,4 +200,31 @@ class MemoryCapSpec extends graft.SparkFunSuite {
       .collect().map(_.toSeq).toSet
     assert(da == db)
   }
+
+  test("a small maxBufferedPostings splits a segment's postings into several term-sorted files; results unchanged") {
+    import graft.query.IndexReader
+    import graft.store.LocalParquet
+    val turns = graft.sources.SyntheticTranscripts.generate(spark, 42L, nConvs = 150)
+    val a = tmpDir("idx-bufA"); val b = tmpDir("idx-bufB")
+    graft.index.IndexBuilder.build(spark, turns, graft.index.BuildConfig(a, nSegments = 4))
+    graft.index.IndexBuilder.build(spark, turns,
+      graft.index.BuildConfig(b, nSegments = 4, maxBufferedPostings = 256))
+    def files(dir: String) = LocalParquet.partitions(
+      java.nio.file.Paths.get(graft.index.IndexBuilder.postingsDir(dir)), "segment").map(s => LocalParquet.files(s._2))
+    assert(files(a).size == 4 && files(a).forall(_.size == 1))
+    assert(files(b).size == 4 && files(b).exists(_.size >= 2), files(b).map(_.size))
+    val without = graft.index.IndexBuilder.PostingSchema.fieldNames.toSet - "term"
+    files(b).flatten.foreach { f =>
+      val terms = LocalParquet.read(f, without = without)(_[String]("term"))
+      assert(terms.nonEmpty && terms == terms.sorted, f)
+    }
+    val ra = new IndexReader(spark, a); val rb = new IndexReader(spark, b)
+    Seq("assistant tool error", "la ma na", "user assistant system tool", "ra sa", "browser").foreach { q =>
+      assert(ra.search(q, 10).map(h => (h.doc_id, h.score)) ==
+        rb.search(q, 10).map(h => (h.doc_id, h.score)), s"query '$q'")
+    }
+    def dictionary(dir: String) = spark.read.parquet(graft.index.IndexBuilder.dictionaryDir(dir))
+      .collect().map(_.toSeq).toSet
+    assert(dictionary(a) == dictionary(b))
+  }
 }

@@ -115,9 +115,8 @@ class IncrementalSpec extends SparkFunSuite {
       assert(rows.count() == 2,
         "checkpointed rows must equal the distinct-in-corpus patch size")
       assert(perSegment.values.sum == 2)
-      val changed = org.apache.spark.sql.graft.ColumnBridge
-        .internalDF(spark, rows, IndexBuilder.StagingSchema)
-        .select("conv_id", "text").as[(String, String)].collect().toMap
+      val changed = rows.map(r => (r.getUTF8String(2).toString, r.getUTF8String(5).toString))
+        .collect().toMap
       assert(changed == Map("conv-000010" -> "opatch one",
         "conv-000011" -> "opatch two duplicate"))
     } finally rows.unpersist()
@@ -353,7 +352,7 @@ class IncrementalSpec extends SparkFunSuite {
     assert(!Files.exists(base))
     // the next staging read (build and queries route through it) must
     // finish the swap from the complete merged copy
-    assert(IndexBuilder.readStaging(spark, dir).count() == v2.count())
+    assert(IndexBuilder.readDocs(spark, dir).count() == v2.count())
     assert(Files.exists(base) && !Files.exists(old) && !Files.exists(tmp))
     assert(IndexBuilder.overlaidSegments(dir).isEmpty) // folded in
     assert(IndexBuilder.verifyIngestion(spark, dir, v2) == 0L)
@@ -365,7 +364,7 @@ class IncrementalSpec extends SparkFunSuite {
     assert(IndexBuilder.overlaidSegments(dir).nonEmpty)
     Files.createDirectories(tmp) // partial merge, no _SUCCESS
     Files.move(base, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    assert(IndexBuilder.readStaging(spark, dir).count() == v3.count())
+    assert(IndexBuilder.readDocs(spark, dir).count() == v3.count())
     assert(Files.exists(base) && !Files.exists(old) && !Files.exists(tmp))
     assert(IndexBuilder.overlaidSegments(dir).nonEmpty) // kept
     assert(IndexBuilder.verifyIngestion(spark, dir, v3) == 0L)

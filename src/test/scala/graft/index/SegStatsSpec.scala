@@ -22,7 +22,7 @@ class SegStatsSpec extends SparkFunSuite {
 
   /** Per segment, the staging view aggregated by Spark. */
   private def aggregated(dir: String): Map[Int, SegStat] =
-    IndexBuilder.readStaging(spark, dir).groupBy("segment")
+    IndexBuilder.readDocs(spark, dir).groupBy("segment")
       .agg(count(lit(1)), sum(col("dl").cast("long")), max("doc_id"), IndexBuilder.ContentHash)
       .as[(Int, Long, Long, Long, Long)].collect()
       .map { case (s, n, dl, mx, h) => s -> SegStat(n, dl, mx, h) }.toMap

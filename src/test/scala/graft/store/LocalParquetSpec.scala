@@ -3,12 +3,18 @@ package graft.store
 import graft.SparkFunSuite
 import graft.store.LocalParquet.TermFilter
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** The in-process Parquet reader against Spark's own reader: term and
   * segment filtering, dropped columns, raw UTF-8 bytes, the streaming
   * form, both codec paths, a footer cache that notices a rewritten
-  * file, and the in-process writer read back by Spark. */
+  * file, and the in-process writer: read back by Spark, byte for byte
+  * Spark's own file, and all or nothing under a failed attempt. */
 class LocalParquetSpec extends SparkFunSuite {
 
   /** One single-file, term-sorted table of `n` rows written by Spark. */
@@ -153,19 +159,75 @@ class LocalParquetSpec extends SparkFunSuite {
   test("an in-process written table reads back through Spark with the encoder's schema") {
     val s = spark
     import s.implicits._
-    val schema = org.apache.spark.sql.Encoders.product[graft.model.CorpusStats].schema
-    val dir = Paths.get(tmpDir("lp-write"))
-    Files.createDirectories(dir)
-    LocalParquet.write(dir.resolve("part-00000.snappy.parquet"), schema,
-      Seq(Seq(12L, 3.25, 7L, 3, 2, "v1")))
-    val spark1 = Seq(graft.model.CorpusStats(12L, 3.25, 7L, 3, 2, "v1")).toDS()
+    // one row of the encoder's schema, against Spark's own write
+    val stats = Seq(graft.model.CorpusStats(12L, 3.25, 7L, 3, 2, "v1")).toDS()
+    val dir = Files.createDirectories(Paths.get(tmpDir("lp-write")))
+    LocalParquet.write(LocalParquet.part(dir, 0), stats.schema, internalRows(stats.toDF()))
     val viaSpark = tmpDir("lp-write-spark")
-    spark1.coalesce(1).write.parquet(viaSpark)
+    stats.coalesce(1).write.parquet(viaSpark)
     val mine = spark.read.parquet(dir.toString)
     assert(mine.schema == spark.read.parquet(viaSpark).schema)
-    assert(mine.as[graft.model.CorpusStats].collect().toSeq == spark1.collect().toSeq)
+    assert(mine.as[graft.model.CorpusStats].collect().toSeq == stats.collect().toSeq)
     val Seq(f) = LocalParquet.files(dir)
     assert(LocalParquet.read(f)(r => (r[Long]("n_docs"), r[Double]("avgdl"), r[String]("analyzer"))) ==
       Vector((12L, 3.25, "v1")))
+
+    // every column type of the index, nulls in the optional ones, in
+    // 128 KiB row groups: the bytes Spark's writer gives the same rows,
+    // several row groups, each with its term range
+    val rng = new scala.util.Random(7)
+    val table = (0 until 6000).map { i =>
+      (f"t$i%05d", i, i * 31L, i / 7.0,
+        if (i % 11 == 0) null else Array.fill(40 + rng.nextInt(40))(rng.nextInt(256).toByte),
+        if (i % 5 == 0) null else s"note é $i")
+    }.toDF("term", "n", "id", "avg", "bytes", "note")
+    val typed = Files.createDirectories(Paths.get(tmpDir("lp-write-types")))
+    val mineF = LocalParquet.part(typed, 0)
+    assert(LocalParquet.write(mineF, table.schema, internalRows(table), 128 * 1024) == 6000)
+    val sparkDir = tmpDir("lp-write-types-spark")
+    table.coalesce(1).write.option("parquet.block.size", 128 * 1024).parquet(sparkDir)
+    val Seq(sparkF) = LocalParquet.files(Paths.get(sparkDir))
+    assert(Files.readAllBytes(mineF).sameElements(Files.readAllBytes(sparkF)))
+    val back = spark.read.parquet(typed.toString)
+    assert(back.schema == spark.read.parquet(sparkDir).schema)
+    def rowsOf(d: org.apache.spark.sql.DataFrame) =
+      d.collect().toSeq.map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v })
+    assert(rowsOf(back) == rowsOf(table))
+    val groups = LocalParquet.termRowGroups(mineF)
+    assert(groups.size >= 3 && groups.map(_._2).sum == 6000 && groups.map(_._1) == groups.map(_._1).sorted, groups)
+    assert(LocalParquet.read(mineF, Some(TermFilter.in(Set("t00011", "t04000"))))(r =>
+      (r[Int]("n"), Option(r[Array[Byte]]("bytes")).map(_.length), r[String]("note"))) ==
+      Vector((11, None, "note é 11"), (4000, Some(table.collect()(4000).getAs[Array[Byte]]("bytes").length), null)))
+
+    // an empty input: one schema-only file that Spark reads as no rows
+    val empty = Files.createDirectories(Paths.get(tmpDir("lp-write-empty")))
+    assert(LocalParquet.write(LocalParquet.part(empty, 0), table.schema, Iterator.empty) == 0)
+    val none = spark.read.parquet(empty.toString)
+    assert(none.schema == back.schema && none.count() == 0)
+    assert(LocalParquet.read(LocalParquet.part(empty, 0))(_ => ()).isEmpty)
   }
+
+  test("a write that fails midway leaves no file; a rerun leaves one complete file and no temporary file") {
+    val schema = StructType(Seq(StructField("term", StringType), StructField("n", LongType, nullable = false)))
+    def rows(failAt: Int): Iterator[InternalRow] = (0 until 5000).iterator.map { i =>
+      if (i == failAt) throw new IllegalStateException("task attempt lost")
+      InternalRow(UTF8String.fromString(f"t$i%05d"), i.toLong)
+    }
+    val dir = Files.createDirectories(Paths.get(tmpDir("lp-attempts")))
+    val f = LocalParquet.part(dir, 0)
+    def listing = { val l = Files.list(dir); try l.iterator().asScala.toVector finally l.close() }
+    intercept[IllegalStateException](LocalParquet.write(f, schema, rows(3000), 4096))
+    assert(listing.isEmpty, listing)
+    assert(LocalParquet.write(f, schema, rows(-1), 4096) == 5000)
+    assert(listing == Vector(f))
+    // a later failed attempt leaves the complete file as it was
+    intercept[IllegalStateException](LocalParquet.write(f, schema, rows(10), 4096))
+    assert(listing == Vector(f))
+    assert(LocalParquet.read(f)(_[Long]("n")) == (0 until 5000).map(_.toLong))
+    assert(spark.read.parquet(dir.toString).count() == 5000)
+  }
+
+  /** `df`'s rows as Spark's internal rows, in order. */
+  private def internalRows(df: org.apache.spark.sql.DataFrame): Iterator[InternalRow] =
+    df.queryExecution.toRdd.map(_.copy()).collect().iterator
 }
