@@ -253,8 +253,8 @@ object IndexBuilder {
 
   /** Whether an on-disk phase A manifest was built in `cfg`'s format
     * (analyzer, positions, index version) and its staging is there with
-    * its per-segment stats ([[SegStats]]; an index written before them
-    * has none and rebuilds). */
+    * its per-segment stats and key ranges ([[SegStats]]; an index
+    * written before them has none and rebuilds). */
   private[index] def compatible(cfg: BuildConfig, m: Map[String, String]): Boolean =
     m.get("status").contains(Manifest.Complete) &&
       m.get("analyzer").contains(cfg.analyzer.id) &&
@@ -508,26 +508,31 @@ object IndexBuilder {
 
   /** Staging rows ([[StagingSchema]]) of `sorted` rows in
     * [[SortedOrdinals]] order, their doc_ids counting up from `firstId`:
-    * phase A's rows and a delta's appended rows, with one dl and
-    * src_hash code. The rows are built straight from the input's
-    * UTF8String views — no Turn decode, no String re-encode — so each
-    * must be consumed (or copied) before the next is pulled; src_hash is
-    * the raw-field mirror of the SQL xxhash64 form (RowHashSpec). */
+    * phase A's rows and a delta's appended rows. The rows are built
+    * straight from the input's UTF8String views — no Turn decode, no
+    * String re-encode — so each must be consumed (or copied) before the
+    * next is pulled. */
   private[index] def stagingRows(sorted: Iterator[InternalRow], firstId: Long, segSize: Long,
                                  az: Analyzer): Iterator[InternalRow] = {
-    val v1 = az.id == Analyzer.V1.id
     var id = firstId - 1
     sorted.map { r =>
       id += 1
-      val role = if (r.isNullAt(2)) null else r.getUTF8String(2)
-      val text = if (r.isNullAt(3)) null else r.getUTF8String(3)
-      val tool = if (r.isNullAt(4)) null else r.getUTF8String(4)
-      val dl =
-        if (v1) Tokenizer.docLengthU8(text)
-        else az.docLength(if (text == null) null else text.toString)
-      new GenericInternalRow(Array[Any](id, (id / segSize).toInt, r.getUTF8String(0), r.getInt(1),
-        role, text, tool, dl, RowHash.contentHashRaw(role, text, tool)))
+      def u8(i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i)
+      stagingRow(az, id, (id / segSize).toInt, r.getUTF8String(0), r.getInt(1), u8(2), u8(3), u8(4))
     }
+  }
+
+  /** One staging row of these fields with its dl and src_hash: the one
+    * code for every staging row a build, a delta or a patch makes.
+    * src_hash is the raw-field mirror of the SQL xxhash64(role, text,
+    * tool) form (RowHashSpec). */
+  private[index] def stagingRow(az: Analyzer, docId: Long, segment: Int, conv: UTF8String, turnIdx: Int,
+                                role: UTF8String, text: UTF8String, tool: UTF8String): InternalRow = {
+    val dl =
+      if (az.id == Analyzer.V1.id) Tokenizer.docLengthU8(text)
+      else az.docLength(if (text == null) null else text.toString)
+    new GenericInternalRow(Array[Any](docId, segment, conv, turnIdx, role, text, tool, dl,
+      RowHash.contentHashRaw(role, text, tool)))
   }
 
   /** Phase A. Returns (nDocs, avgdl, segSize, effective segment count). */

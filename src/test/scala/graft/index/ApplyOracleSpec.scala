@@ -100,7 +100,7 @@ class ApplyOracleSpec extends SparkFunSuite {
       .repartitionByRange(2, col("segment"), col("doc_id")).sortWithinPartitions("segment", "doc_id")
       .write.parquet(IndexBuilder.stagingDir(ref))
     SegStats.write(Paths.get(IndexBuilder.stagingDir(ref)), aggregated(rows).map { case (s, (n, dl, mx, h)) =>
-      s -> SegStat(n, dl, mx, h) })
+      s -> SegStat(n, dl, mx, h, None) })
     Files.createDirectories(Paths.get(IndexBuilder.manifestDir(ref)))
     Files.copy(Manifest.phaseAPath(IndexBuilder.manifestDir(dir)), Manifest.phaseAPath(IndexBuilder.manifestDir(ref)))
     IndexBuilder.finishBuild(spark, cfg.copy(outDir = ref), 0L,

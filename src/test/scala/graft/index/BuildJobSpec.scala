@@ -8,6 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListe
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -16,17 +17,17 @@ import scala.jdk.CollectionConverters._
   * `IndexBuilder.build` is described `graft:build`, every job of
   * `Incremental.atomicSet` `graft:atomicSet`, the caller's description
   * survives both, and a one-document patch on an 8-segment index runs
-  * a bounded number of jobs — it resolves against staging and rewrites
-  * one segment, with no corpus hash, key diff or id assignment; a
-  * patch past the auto-compaction fraction writes one staging base and
-  * compacts nothing after it. */
+  * a bounded number of jobs — it resolves inside the task that rewrites
+  * its segment, with no corpus hash, key diff, id assignment, SQL join
+  * or Spark scan of staging; a patch past the auto-compaction fraction
+  * writes one staging base and compacts nothing after it. */
 class BuildJobSpec extends SparkFunSuite {
   import graft.SparkTestBase.spark.implicits._
 
-  /** Jobs of a patch, bounded from a measurement: 6 on `local[4]` (3 to
-    * resolve, then one each for the apply, the wave and the dictionary
-    * merge; corpus_stats is written in-process). */
-  private val PatchJobBudget = 7
+  /** Jobs of a patch: 4 on `local[4]` (one that routes the patch to its
+    * candidate segments, then one each for the apply, the wave and the
+    * dictionary merge; corpus_stats is written in-process). */
+  private val PatchJobBudget = 4
 
   /** The description of each job `call` starts in its own job group. */
   private def jobsOf(call: => Unit): Seq[String] = timedJobsOf(call).map(_._1)
@@ -54,19 +55,22 @@ class BuildJobSpec extends SparkFunSuite {
     seen.asScala.toSeq
   }
 
-  /** Shuffle records read by the tasks of the jobs `call` starts in its
-    * own job group. */
-  private def shuffleReadOf(call: => Unit): Long = {
+  /** Shuffle records read by the tasks of each job `call` starts in its
+    * own job group, by job id. */
+  private def shuffleReadOf(call: => Unit): Map[Int, Long] = {
     val sc = spark.sparkContext
     val group = s"build-shuffle-${System.nanoTime()}"
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val read = new java.util.concurrent.atomic.AtomicLong()
+    val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val read = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == group) e.stageIds.foreach(stages.add)
+        if (e.properties.getProperty("spark.jobGroup.id") == group) {
+          read.put(e.jobId, 0L)
+          e.stageIds.foreach(jobOf.put(_, e.jobId))
+        }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskMetrics != null)
-          read.addAndGet(e.taskMetrics.shuffleReadMetrics.recordsRead)
+        if (jobOf.containsKey(e.stageId) && e.taskMetrics != null)
+          read.merge(jobOf.get(e.stageId), e.taskMetrics.shuffleReadMetrics.recordsRead, _ + _)
     }
     sc.addSparkListener(l)
     try {
@@ -74,7 +78,39 @@ class BuildJobSpec extends SparkFunSuite {
       try call finally sc.clearJobGroup()
       org.apache.spark.GraftTestBus.drain(sc)
     } finally sc.removeSparkListener(l)
-    read.get
+    read.asScala.toMap
+  }
+
+  /** The joins and staging scans `call`, run in its own job group,
+    * plans: SQL plan nodes and RDD operation scopes named `*Join*`, SQL
+    * plan nodes whose metadata names `_staging`, and file-scan RDDs. */
+  private def joinsAndScansOf(call: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"build-plans-${System.nanoTime()}"
+    val found = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def planned(n: SparkPlanInfo): Seq[String] =
+      (if (n.nodeName.contains("Join") || n.metadata.values.exists(_.contains("_staging"))) Seq(n.nodeName)
+       else Nil) ++ n.children.flatMap(planned)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group)
+          e.stageInfos.flatMap(_.rddInfos).foreach { r =>
+            if (r.name == "FileScanRDD") found.add(r.name)
+            r.scope.map(_.name).filter(_.contains("Join")).foreach(found.add)
+          }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.jobGroupId.contains(group) =>
+          planned(x.sparkPlanInfo).foreach(found.add)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "caller")
+      try call finally sc.clearJobGroup()
+      org.apache.spark.GraftTestBus.drain(sc)
+    } finally sc.removeSparkListener(l)
+    found.asScala.toSeq.distinct
   }
 
   /** What `call`, run in its own job group, carries out of its tasks
@@ -175,33 +211,43 @@ class BuildJobSpec extends SparkFunSuite {
     assert(hits.size == 3)
   }
 
-  test("the apply shuffles at most its change set, and Phase B shuffles nothing") {
+  test("a patch plans no join and scans no staging through Spark") {
+    val dir = tmpDir("build-plans")
+    val cfg = BuildConfig(dir, nSegments = 4, waveSize = 4, autoCompactFraction = 0.5)
+    IndexBuilder.build(spark, SyntheticTranscripts.generate(spark, 42L, nConvs = 200, maxTurns = 6), cfg)
+    // an overlay patch, then one past the fraction that writes a new base
+    for (keys <- Seq(Seq(("conv-000020", 0)), Seq(("conv-000001", 0), ("conv-000080", 1), ("conv-000150", 0)))) {
+      val sets = keys.map { case (c, t) => (c, t, s"planned patch $c") }.toDF("conv_id", "turn_idx", "text")
+      val found = joinsAndScansOf(assert(Incremental.atomicSet(spark, cfg, sets).segmentsBuilt > 0))
+      assert(found.isEmpty, s"$keys: $found")
+    }
+  }
+
+  test("a patch shuffles only its routed rows, and Phase B shuffles nothing") {
     for (fraction <- Seq(0.0, 0.5)) {
       val dir = tmpDir(s"build-shuffle-$fraction")
       val cfg = BuildConfig(dir, nSegments = 4, waveSize = 4, autoCompactFraction = fraction)
       IndexBuilder.build(spark, SyntheticTranscripts.generate(spark, 42L, nConvs = 400, maxTurns = 8), cfg)
       // three turns in three segments: overlays without a fraction, a
-      // new staging base with one
+      // new staging base with one; a duplicate of the first, and a key
+      // past every segment's range
       val keys = IndexBuilder.readDocs(spark, dir).filter(col("segment") < 3)
         .groupBy("segment").agg(min(struct(col("doc_id"), col("conv_id"), col("turn_idx"))).as("d"))
-        .select(col("d.conv_id"), col("d.turn_idx")).as[(String, Int)].collect()
-      val sets = keys.toSeq.map { case (c, t) => (c, t, "shuffle probe text") }.toDF("conv_id", "turn_idx", "text")
-      val prior = Manifest.read(Manifest.phaseAPath(IndexBuilder.manifestDir(dir))).get
-      val (rows, perSegment) = Incremental.changeSet(spark, cfg, sets)
-      try {
-        val changed = perSegment.values.sum
-        assert(changed == 3)
-        val t0 = System.currentTimeMillis()
-        var stats: (Long, Double, Long, Int) = null
-        val applyRead = shuffleReadOf {
-          stats = Incremental.applyChanges(spark, cfg, t0, prior, perSegment.keySet, rows,
-            spark.sparkContext.emptyRDD, None, 0L)
-        }
-        assert(applyRead <= changed, s"fraction $fraction: the apply read $applyRead shuffle records")
-        assert(IndexBuilder.overlaidSegments(dir).isEmpty == (fraction > 0))
-        val waveRead = shuffleReadOf(IndexBuilder.finishBuild(spark, cfg, t0, stats))
-        assert(waveRead == 0, s"fraction $fraction: Phase B read $waveRead shuffle records")
-      } finally rows.unpersist()
+        .select(col("d.conv_id"), col("d.turn_idx")).as[(String, Int)].collect().toSeq
+      val patch = keys.map { case (c, t) => (c, t, "shuffle probe text") } ++
+        Seq((keys.head._1, keys.head._2, "shuffle probe text too"), ("zzz-absent", 0, "dropped"))
+      val router = new Incremental.KeyRouter(SegStats.view(dir).collect { case (s, SegStat(_, _, _, _, Some(r))) => s -> r })
+      val routed = patch.map { case (c, t, _) => router.segmentsOf(DocKey(UTF8String.fromString(c), t)).size }.sum
+      assert(routed == 4)
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val reads = shuffleReadOf(assert(Incremental.atomicSet(spark, cfg,
+        patch.toDF("conv_id", "turn_idx", "text")).segmentsBuilt == 3))
+      // the routing job and the apply read the routed rows; the wave and
+      // the dictionary merge read no shuffle
+      assert(reads.size <= PatchJobBudget && reads.values.count(_ > 0) == 2, s"fraction $fraction: $reads")
+      assert(reads.values.forall(_ <= routed), s"fraction $fraction: $reads")
+      assert(IndexBuilder.overlaidSegments(dir).isEmpty == (fraction > 0))
+      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(persisted).isEmpty)
       assert(new IndexReader(spark, dir).search("shuffle probe", 10).size == 3)
     }
   }

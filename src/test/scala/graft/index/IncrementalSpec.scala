@@ -98,31 +98,41 @@ class IncrementalSpec extends SparkFunSuite {
     assert(Incremental.atomicSet(spark, cfg, nullSets).segmentsBuilt == 0)
   }
 
-  test("atomicSet staging is O(patch): only the patched keys' rows are checkpointed") {
+  test("atomicSet resolves in its segment tasks: only the patched keys' rows change, a duplicate merges, an absent key drops") {
     val dir = tmpDir("atom-opatch")
     val cfg = BuildConfig(dir, nSegments = 8, waveSize = 8, autoCompactFraction = 0)
     IndexBuilder.build(spark, v1, cfg)
     val sets = Seq(
       ("conv-000010", 0, "opatch one"),
       ("conv-000011", 0, "opatch two"),
-      ("conv-000011", 0, "opatch two duplicate"), // duplicate key: deduped, not fanned out
+      ("conv-000011", 0, "opatch two duplicate"), // duplicate key: merged, not fanned out
       ("conv-does-not-exist", 0, "dropped")       // absent key: silently dropped
     ).toDF("conv_id", "turn_idx", "text")
-    val (rows, perSegment) = Incremental.changeSet(spark, cfg, sets)
-    try {
-      // the materialized (checkpointed) side is the PATCH, not the corpus
-      assert(rows.isCheckpointed)
-      assert(rows.count() == 2,
-        "checkpointed rows must equal the distinct-in-corpus patch size")
-      assert(perSegment.values.sum == 2)
-      val changed = rows.map(r => (r.getUTF8String(2).toString, r.getUTF8String(5).toString))
-        .collect().toMap
-      assert(changed == Map("conv-000010" -> "opatch one",
-        "conv-000011" -> "opatch two duplicate"))
-    } finally rows.unpersist()
-    // atomicSet releases its change set
+    def view = IndexBuilder.readDocs(spark, dir).collect().map(r =>
+      (r.getString(2), r.getInt(3)) -> ((r.getLong(0), r.getInt(1), r.getString(5)))).toMap
+    val before = view
+    val mdir = IndexBuilder.manifestDir(dir)
+    val ledgerBefore = graft.store.Manifest.segmentStates(mdir)
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
     Incremental.atomicSet(spark, cfg, sets)
+    val after = view
+    // exactly the two present keys' rows changed, in place: doc_id and
+    // segment kept, the duplicate merged to the greater text
+    val changed = after.filter { case (k, v) => !before.get(k).contains(v) }
+    assert(after.keySet == before.keySet)
+    assert(changed.map { case (k, v) => k -> v._3 } ==
+      Map(("conv-000010", 0) -> "opatch one", ("conv-000011", 0) -> "opatch two duplicate"))
+    assert(changed.forall { case (k, v) => before(k)._1 == v._1 && before(k)._2 == v._2 })
+    // the overlays are exactly the changed rows' segments, and the
+    // manifest counts them
+    val segments = changed.values.map(_._2).toSet
+    assert(IndexBuilder.overlaidSegments(dir) == segments)
+    val phaseA = graft.store.Manifest.read(graft.store.Manifest.phaseAPath(mdir)).get
+    assert(phaseA("segments_touched").toInt == segments.size)
+    // the ledger re-planned and rebuilt exactly those segments
+    val ledgerAfter = graft.store.Manifest.segmentStates(mdir)
+    assert(ledgerAfter.keySet.filter(s => !ledgerBefore.get(s).contains(ledgerAfter(s))) == segments)
+    // atomicSet persists nothing
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(persisted).isEmpty)
   }
 
@@ -347,7 +357,7 @@ class IncrementalSpec extends SparkFunSuite {
     // --- crash state A: merged copy complete (written aside by the
     // base write compact uses), base renamed away, new base not yet
     // renamed in (the exact instant between the two ATOMIC_MOVEs) ---
-    Incremental.writeBaseAside(spark, dir, SegStats.view(dir).keys.max + 1, 4, spark.sparkContext.emptyRDD)
+    Incremental.writeBaseAside(spark, dir, SegStats.view(dir).keys.max + 1, 4)
     Files.move(base, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     assert(!Files.exists(base))
     // the next staging read (build and queries route through it) must
