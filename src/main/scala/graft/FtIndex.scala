@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 object FtIndex {
 
   /** Bump to invalidate /tmp caches when the index layout changes. */
-  private val CacheVersion = 9 // v9: `_segstats` carry each segment's key range
+  private val CacheVersion = 10 // v10: postings written in small pages, paged by term
 
   private val built = scala.collection.mutable.Set[String]()
 

@@ -123,6 +123,24 @@ object IndexBuilder {
     * index, so a term lookup decodes a few row groups, not the file. */
   val TermRowGroupBytes: Long = 128 * 1024
 
+  /** About how many bytes of rows a postings page holds: each page's
+    * min/max term (the `term` column index) is a dense terms index
+    * inside the row group, so a segment task reads and decodes only the
+    * pages that can hold its terms' rows ([[graft.store.LocalParquet]]).
+    * A file's page row bound is this over its mean row size, within
+    * [[TermPageRows]]: small blocks (a small corpus, rare terms) make
+    * more rows per page, so page headers and page indexes stay a small
+    * share of the file. */
+  val TermPageBytes: Long = 12 * 1024
+
+  /** The least and greatest page row bound of a postings file. */
+  val TermPageRows: (Int, Int) = (16, 1024)
+
+  /** Parquet page row bound of the dictionary, whose rows are a few
+    * bytes each: a df lookup decodes a few pages of `term`, not the row
+    * group. */
+  val DictionaryPageRows: Int = 512
+
   /** Parquet row-group bound of the staging base: each row group's
     * min/max segment lets a segment task read its segment's row groups
     * in place ([[Staging]]), decoding about one row group more than its
@@ -631,7 +649,7 @@ object IndexBuilder {
       spark.sparkContext.runJob(spark.sparkContext.parallelize(ranges.zipWithIndex, ranges.size),
         (it: Iterator[((Option[String], Option[String]), Int)]) => it.map { case ((lo, hi), i) =>
           LocalParquet.write(LocalParquet.part(Paths.get(dir), i), DictionarySchema, mergeRange(files, lo, hi),
-            TermRowGroupBytes)
+            TermRowGroupBytes, DictionaryPageRows)
         }.sum).sum
     }
 
@@ -758,6 +776,10 @@ object IndexBuilder {
   /** Bytes a buffered block row stands for beyond its term and arrays. */
   private val BlockRowOverhead = 64
 
+  /** About the bytes a postings row takes on disk besides its term and
+    * payload: six integer fields and five length prefixes. */
+  private val RowFieldBytes = 40
+
   /** One segment's Phase B task: reads the segment's doc_id, text (raw
     * UTF-8 bytes) and dl in place, in doc_id order ([[Staging]]), and
     * streams them into [[encodeDocs]]. Tokenization and posting-list
@@ -767,8 +789,9 @@ object IndexBuilder {
     * `maxBufferedPostings` stands for (16 B a posting), sorted by
     * (term, block_id) — stable, so emission order breaks ties — and
     * written as one term-sorted file of `segment=N` under `dir` in
-    * 128 KiB row groups, whose min/max terms let a query's term filter
-    * skip whole row groups; a segment larger than the budget gets
+    * 128 KiB row groups of [[TermPageBytes]] pages, paged by `term`,
+    * whose min/max terms let a query's term filter skip whole row groups
+    * and the pages inside them; a segment larger than the budget gets
     * several such files. Returns (segment, (turns read, tokens, blocks
     * written)). */
   private def writePostings(src: SegmentSource, dir: Path, cfg: BuildConfig): (Int, (Long, Long, Long)) = {
@@ -788,18 +811,22 @@ object IndexBuilder {
     while (blocks.hasNext) {
       val buf = scala.collection.mutable.ArrayBuffer.empty[(UTF8String, PostingBlockRow)]
       var bytes = 0L
+      var payload = 0L
       while (blocks.hasNext && bytes < budget) {
         val b = blocks.next()
         buf += UTF8String.fromString(b.term) -> b
-        bytes += BlockRowOverhead + b.term.length + b.doc_deltas.length + b.tfs.length + b.dls.length +
-          b.positions.length
+        val n = b.term.length + b.doc_deltas.length + b.tfs.length + b.dls.length + b.positions.length
+        bytes += BlockRowOverhead + n
+        payload += n
       }
+      val (minRows, maxRows) = TermPageRows
+      val pageRows = (TermPageBytes * buf.size / (payload + RowFieldBytes * buf.size)).toInt.max(minRows).min(maxRows)
       val rows = buf.sortBy { case (t, b) => (t, b.block_id) }.iterator.map { case (t, b) =>
         new GenericInternalRow(Array[Any](t, b.block_id, b.n_docs, b.max_doc_id, b.block_max_tf, b.block_min_dl,
           b.doc_deltas, b.tfs, b.dls, b.positions, b.block_cf)): InternalRow
       }
       LocalParquet.write(LocalParquet.part(Files.createDirectories(dir.resolve(s"segment=$seg")), files),
-        SegmentPostingSchema, rows, TermRowGroupBytes)
+        SegmentPostingSchema, rows, TermRowGroupBytes, pageRows, pagedBy = Some("term"))
       files += 1
       written += buf.size
     }
@@ -971,7 +998,7 @@ object IndexBuilder {
         // positions: delta within each posting's run, first absolute
         // (the buffered ints are absolute; runs delimited by tfs).
         // storePositions=false buffers none → empty column
-        val posDeltas = new Array[Long](b.pn)
+        val posDeltas = new Array[Int](b.pn)
         if (b.pn > 0) {
           var o = 0
           i = 0
@@ -980,7 +1007,7 @@ object IndexBuilder {
             var prev = 0
             while (j < tfs(i)) {
               val p = b.pos(o)
-              posDeltas(o) = if (j == 0) p.toLong else (p - prev).toLong
+              posDeltas(o) = p - prev
               prev = p; o += 1; j += 1
             }
             i += 1
@@ -989,7 +1016,7 @@ object IndexBuilder {
         val row = PostingBlockRow(term, seg, b.blockId, b.n, ids(b.n - 1),
           maxTf, minDl,
           VByte.encode(VByte.deltas(ids)), VByte.encodeInts(tfs),
-          VByte.encodeInts(dls), VByte.encode(posDeltas), cf)
+          VByte.encodeInts(dls), VByte.encodeInts(posDeltas), cf)
         b.blockId += 1
         b.n = 0
         b.pn = 0

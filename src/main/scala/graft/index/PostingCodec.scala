@@ -30,7 +30,7 @@ object PostingCodec extends Serializable {
     var total = 0
     var i = 0
     while (i < positions.length) { total += positions(i).length; i += 1 }
-    val flat = new Array[Long](total)
+    val flat = new Array[Int](total)
     var o = 0
     i = 0
     while (i < positions.length) {
@@ -39,12 +39,12 @@ object PostingCodec extends Serializable {
       var j = 0
       var prev = 0
       while (j < ps.length) {
-        flat(o) = if (j == 0) ps(0).toLong else (ps(j) - prev).toLong
+        flat(o) = ps(j) - prev
         prev = ps(j); o += 1; j += 1
       }
       i += 1
     }
-    VByte.encode(flat)
+    VByte.encodeInts(flat)
   }
 
   /** Encode one term's postings (already sorted by docId ascending).
@@ -88,11 +88,14 @@ object PostingCodec extends Serializable {
     out.result()
   }
 
-  /** Decoded block: parallel arrays of absolute docIds, tfs, dls.
-    * Positions decode LAZILY (only the phrase path pays): `posFlat` is
-    * the block's absolute positions concatenated in posting order and
-    * `posOff` the per-posting offsets (length n+1) — posting i's
-    * positions are posFlat[posOff(i) until posOff(i+1)]. */
+  /** Decoded block: parallel arrays of absolute docIds, tfs, dls, each
+    * of `n_docs` values, decoded in one pass per stream. Positions
+    * decode LAZILY (only the phrase path pays): `posFlat` is the
+    * block's Σ tf absolute positions concatenated in posting order, in
+    * one pass over the stream, and `posOff` the per-posting offsets
+    * (length n+1) — posting i's positions are
+    * posFlat[posOff(i) until posOff(i+1)]. A stream that holds more or
+    * fewer values than its count throws. */
   final class DecodedBlock(val docIds: Array[Long], val tfs: Array[Int],
                            val dls: Array[Int], positionsRaw: Array[Byte]) {
     lazy val posOff: Array[Int] = {
@@ -102,23 +105,10 @@ object PostingCodec extends Serializable {
       off
     }
     /** Absolute positions (un-delta'd per posting run). */
-    lazy val posFlat: Array[Int] = {
-      val d = VByte.decode(positionsRaw)
-      require(d.length == posOff(tfs.length),
-        s"positions stream has ${d.length} entries, tf sum is ${posOff(tfs.length)}")
-      val out = new Array[Int](d.length)
-      var i = 0
-      while (i < tfs.length) {
-        var j = posOff(i)
-        var acc = 0
-        while (j < posOff(i + 1)) { acc += d(j).toInt; out(j) = acc; j += 1 }
-        i += 1
-      }
-      out
-    }
+    lazy val posFlat: Array[Int] = VByte.decodeRuns(positionsRaw, tfs, posOff(tfs.length))
   }
 
   def decodeBlock(row: PostingBlockRow): DecodedBlock =
-    new DecodedBlock(VByte.undeltas(VByte.decode(row.doc_deltas)),
-      VByte.decodeInts(row.tfs), VByte.decodeInts(row.dls), row.positions)
+    new DecodedBlock(VByte.decodeDocIds(row.doc_deltas, row.n_docs),
+      VByte.decodeInts(row.tfs, row.n_docs), VByte.decodeInts(row.dls, row.n_docs), row.positions)
 }

@@ -23,11 +23,15 @@ import org.apache.spark.sql.functions._
  *
  * What prunes the read: each postings file is term-sorted (a segment
  * has one, or several under a small encoder memory budget) and
- * written in bounded row groups, so each row group's
- * min/max term is a sparse terms index — a task reads only the row
- * groups whose range holds a query term, and decodes their other
- * columns only for the matching rows (position lists only for
- * proximity plans). The dictionary is read the same way, in-process
+ * written in bounded row groups of small pages, so each row group's
+ * min/max term is a sparse terms index and each page's (the `term`
+ * column index) a dense one — a task reads only the pages whose range
+ * holds a query term, in the row groups whose range holds one, and
+ * decodes their other columns only for the matching rows (position
+ * lists only for proximity plans). A block then decodes straight into
+ * arrays of its `n_docs` values (positions: Σ tf), one pass per stream
+ * ([[graft.index.PostingCodec.DecodedBlock]]). The dictionary is
+ * written in pages too and read the same way, in-process
  * on the driver, so neither step runs a job of its own: the df
  * lookup reads the row groups that can hold its terms, a prefix
  * expansion those whose range meets the prefix, and a fuzzy or

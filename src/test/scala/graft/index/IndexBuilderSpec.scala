@@ -308,5 +308,25 @@ class IndexBuilderSpec extends SparkFunSuite {
     } finally sc.removeSparkListener(l)
     assert(records.get > 0 && records.get < segments.map(_.sum).min,
       s"read ${records.get} posting rows; segments hold ${segments.map(_.sum)}")
+    // the term's own rows, and the pages read for them: at most one page
+    // per postings file (an absent term falls inside at most one page's
+    // range), against a whole row group of hundreds of rows before
+    // postings were paged
+    val held = spark.read.parquet(IndexBuilder.postingsDir(dir)).filter(col("term") === rare).count()
+    val postings = LocalParquet.partitions(Paths.get(IndexBuilder.postingsDir(dir)), "segment")
+      .flatMap(d => LocalParquet.files(d._2))
+    val files = postings.size
+    val pageRows = postings.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(new org.apache.parquet.io.LocalInputFile(f),
+        org.apache.parquet.ParquetReadOptions.builder(new org.apache.parquet.conf.PlainParquetConfiguration()).build())
+      try r.getRowGroups.asScala.map { b =>
+        val o = r.readOffsetIndex(b.getColumns.get(0))
+        (0 until o.getPageCount).map(p => o.getLastRowIndex(p, b.getRowCount) - o.getFirstRowIndex(p) + 1).max
+      }.max finally r.close()
+    }.max
+    // this corpus's blocks make pages of about 100 rows (TermPageBytes)
+    assert(pageRows <= 128, s"pages of up to $pageRows rows")
+    assert(held >= 1 && records.get >= held && records.get <= pageRows * files,
+      s"read ${records.get} posting rows for a term holding $held in $files files of $pageRows-row pages")
   }
 }

@@ -79,6 +79,36 @@ class PostingCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("decoded blocks equal the oracle's, positions over several hundred per block") {
+    val rng = new java.util.SplittableRandom(5)
+    samples(postingsGen, 60).foreach { case (ids, tfs0, dls) =>
+      // tf up to 50 over up to 128 postings: Σ tf in the hundreds
+      val tfs = tfs0.map(tf => 1 + (tf * 3) % 50)
+      val positions = tfs.map(tf => Array.tabulate(tf)(j => j * 3 + rng.nextInt(3)))
+      PostingCodec.encodeTerm("t", 0, ids, tfs, dls, positions).foreach { b =>
+        val d = PostingCodec.decodeBlock(b)
+        assert(d.docIds.sameElements(VByteOracle.undeltas(VByteOracle.decode(b.doc_deltas))))
+        assert(d.tfs.sameElements(VByteOracle.decodeInts(b.tfs)))
+        assert(d.dls.sameElements(VByteOracle.decodeInts(b.dls)))
+        assert(d.posFlat.sameElements(VByteOracle.positions(b.positions, d.tfs)))
+        assert(d.posOff.sameElements(d.tfs.scanLeft(0)(_ + _)))
+        assert(d.docIds.length == b.n_docs && d.posFlat.length == b.block_cf)
+      }
+    }
+    val big = PostingCodec.encodeTerm("t", 0, Array.tabulate(128)(_.toLong + 1), Array.fill(128)(5),
+      Array.fill(128)(9), Array.fill(128)(Array(0, 2, 4, 6, 8)))
+    assert(big.size == 1 && big.head.block_cf == 640)
+    assert(PostingCodec.decodeBlock(big.head).posFlat.sameElements(VByteOracle.positions(big.head.positions, Array.fill(128)(5))))
+  }
+
+  test("a block whose stream holds fewer values than n_docs or Σ tf throws") {
+    val b = PostingCodec.encodeTerm("t", 0, Array(3L, 9L, 12L), Array(2, 1, 3), Array(7, 8, 9)).head
+    intercept[IllegalArgumentException](PostingCodec.decodeBlock(b.copy(n_docs = 4)))
+    intercept[IllegalArgumentException](PostingCodec.decodeBlock(b.copy(tfs = b.tfs.dropRight(1))))
+    intercept[IllegalArgumentException](PostingCodec.decodeBlock(b.copy(positions = b.positions.dropRight(1))).posFlat)
+    intercept[IllegalArgumentException](PostingCodec.decodeBlock(b.copy(n_docs = 2)))
+  }
+
   test("(block_max_tf, block_min_dl) bound in-block contributions at any avgdl") {
     samples(postingsGen, 50).foreach { case (ids, tfs, dls) =>
       PostingCodec.encodeTerm("t", 0, ids, tfs, dls).foreach { b =>

@@ -23,14 +23,17 @@ class ServeJobSpec extends SparkFunSuite {
 
   /** (description, stage count) of each job `call` starts in its own
     * job group. */
-  private def jobsOf(call: => Unit): Seq[(String, Int)] = {
+  private def jobsOf(call: => Unit): Seq[(String, Int)] =
+    jobStarts(call)(e => e.properties.getProperty("spark.job.description") -> e.stageInfos.size)
+
+  /** `f` of each job `call` starts in its own job group. */
+  private def jobStarts[T](call: => Unit)(f: SparkListenerJobStart => T): Seq[T] = {
     val sc = spark.sparkContext
     val group = s"serve-job-${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[T]()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(e.properties.getProperty("spark.job.description") -> e.stageInfos.size)
+        if (e.properties.getProperty("spark.jobGroup.id") == group) seen.add(f(e))
     }
     sc.addSparkListener(l)
     try {
@@ -50,6 +53,22 @@ class ServeJobSpec extends SparkFunSuite {
     assert(jobsOf(reader.searchPhrase("user la", 5)) == Seq("graft:searchPhrase" -> 1))
     assert(jobsOf(reader.searchMany(Seq("a" -> "user", "b" -> "la ma"), 5)) ==
       Seq("graft:searchMany" -> 1))
+  }
+
+  test("over paged postings, search, searchPhrase and searchMany each run one stage of at most defaultParallelism tasks") {
+    val par = spark.sparkContext.defaultParallelism
+    def tasks(call: => Unit) = jobStarts(call)(_.stageInfos.map(_.numTasks))
+    for (call <- Seq[() => Unit](() => reader.search("user tool", 5), () => reader.searchPhrase("user la", 5),
+      () => reader.searchMany(Seq("a" -> "user", "b" -> "la ma"), 5))) {
+      val Seq(Seq(n)) = tasks(call())
+      assert(n >= 1 && n <= par, n)
+    }
+    // a positions-free index still refuses a phrase before any read
+    val noPos = tmpDir("idx-serve-nopos")
+    IndexBuilder.build(spark, SyntheticTranscripts.generate(spark, 42L, nConvs = 40),
+      BuildConfig(noPos, nSegments = 4, storePositions = false))
+    val err = intercept[IllegalArgumentException](new IndexReader(spark, noPos).searchPhrase("user la", 5))
+    assert(err.getMessage.contains("storePositions"))
   }
 
   test("the df lookup runs no Spark job") {

@@ -227,6 +227,127 @@ class LocalParquetSpec extends SparkFunSuite {
     assert(spark.read.parquet(dir.toString).count() == 5000)
   }
 
+  /** A term-sorted table of 3000 rows in which term `t<i>` repeats
+    * 1 to 7 times (so terms span pages and row groups), with a payload. */
+  private lazy val pagedRows: Vector[(String, Long, String)] = {
+    val rng = new scala.util.Random(11)
+    (0 until 900).flatMap(i => Seq.fill(1 + rng.nextInt(7))(f"t$i%05d"))
+      .take(3000).zipWithIndex.map { case (t, j) => (t, j.toLong, s"payload-$j" * (1 + j % 3)) }.toVector
+  }
+
+  private val pagedSchema = StructType(Seq(StructField("term", StringType), StructField("df", LongType, nullable = false),
+    StructField("positions", StringType)))
+
+  /** `pagedRows` written in 4 KiB row groups of `pageRows`-row pages,
+    * paged by `term`, or in the default layout (one page per column
+    * chunk) when `pageRows` is 0. */
+  private def pagedTable(name: String, pageRows: Int): Path = {
+    val dir = Files.createDirectories(Paths.get(tmpDir(name)))
+    val rows = pagedRows.iterator.map { case (t, n, p) =>
+      InternalRow(UTF8String.fromString(t), n, UTF8String.fromString(p)) }
+    val f = LocalParquet.part(dir, 0)
+    if (pageRows == 0) LocalParquet.write(f, pagedSchema, rows, 4096)
+    else LocalParquet.write(f, pagedSchema, rows, 4096, pageRows, pagedBy = Some("term"))
+    f
+  }
+
+  test("page-pruned reads match Spark's for in, prefix and range filters, at page and row-group boundaries") {
+    val s = spark
+    import s.implicits._
+    val f = pagedTable("lp-paged", 8)
+    val all = spark.read.parquet(f.toString).as[(String, Long, String)].collect().toVector
+    assert(all == pagedRows)
+    // the file's pages: row groups of several 8-row pages each
+    val groups = LocalParquet.termRowGroups(f).map(_._2)
+    assert(groups.size >= 3 && groups.forall(_ > 16), groups)
+    val starts = groups.scanLeft(0L)(_ + _)
+    val pageStarts = groups.indices.flatMap(g => (starts(g) until starts(g + 1) by 8).map(_.toInt)).toSet
+    val groupStarts = starts.init.map(_.toInt).toSet
+    // a term on both sides of a page boundary inside a row group, one on
+    // both sides of a row-group boundary, and an absent term that sorts
+    // between the last term of one page and the first of the next
+    def spanning(at: Set[Int]) = at.toSeq.sorted.collectFirst {
+      case i if i > 0 && i < all.size && all(i)._1 == all(i - 1)._1 => all(i)._1 }.get
+    val pageSpan = spanning(pageStarts -- groupStarts)
+    val groupSpan = spanning(groupStarts)
+    val gap = (pageStarts -- groupStarts).toSeq.sorted.collectFirst {
+      case i if i > 0 && all(i)._1 != all(i - 1)._1 => all(i - 1)._1 + "a" }.get
+    val (first, last) = (all.head._1, all.last._1)
+    def check(filter: TermFilter, want: ((String, Long, String)) => Boolean, what: String): Unit = {
+      val expected = all.filter(want)
+      assert(read(f, Some(filter)) == expected, what)
+      assert(LocalParquet.rows(f, Some(filter))(r => (r[String]("term"), r[Long]("df"), r[String]("positions")))
+        .toVector == expected, what)
+    }
+    for (t <- Seq(pageSpan, groupSpan, gap, first, last)) check(TermFilter.in(Set(t)), _._1 == t, t)
+    check(TermFilter.in(Set(pageSpan, groupSpan, gap, first, last, "zzz")), r =>
+      Set(pageSpan, groupSpan, first, last)(r._1), "several")
+    check(TermFilter.in(Set.empty), _ => false, "none")
+    for (p <- Seq(pageSpan.take(5), groupSpan.take(6), gap, first, last.take(4), "t000", ""))
+      check(TermFilter.prefixed(Set(p), _ => true), _._1.startsWith(p), s"prefix $p")
+    check(TermFilter.prefixed(Set(pageSpan.take(5)), _.endsWith("3")), r =>
+      r._1.startsWith(pageSpan.take(5)) && r._1.endsWith("3"), "prefix and test")
+    def range(lo: Option[String], hi: Option[String]): Unit =
+      check(TermFilter.range(lo, hi), r => lo.forall(r._1 >= _) && hi.forall(r._1 < _), s"range $lo $hi")
+    range(Some(pageSpan), Some(groupSpan))
+    range(Some(gap), Some(last))
+    range(None, Some(first))
+    range(Some(last), None)
+    range(Some(groupSpan), Some(groupSpan + "a"))
+    range(None, None)
+
+    // the parent layout, one page per column chunk, reads the same rows
+    val flat = pagedTable("lp-unpaged", 0)
+    for (t <- Seq(pageSpan, groupSpan, gap, first, last))
+      assert(read(flat, Some(TermFilter.in(Set(t)))) == read(f, Some(TermFilter.in(Set(t)))), t)
+    assert(read(flat, Some(TermFilter.prefixed(Set("t001"), _ => true))) ==
+      read(f, Some(TermFilter.prefixed(Set("t001"), _ => true))))
+    assert(read(flat, None) == read(f, None))
+
+    // inside a task a one-term read counts the rows of its pages: a page
+    // or two, fewer than one row group holds, where the flat file counts
+    // the whole row group
+    val mid = all(all.size / 2)._1
+    val paged = recordsRead(f)(p => LocalParquet.read(p, Some(TermFilter.in(Set(mid))))(_ => ()))
+    val unpaged = recordsRead(flat)(p => LocalParquet.read(p, Some(TermFilter.in(Set(mid))))(_ => ()))
+    assert(paged >= all.count(_._1 == mid) && paged <= 16 && paged < groups.min, (paged, groups))
+    assert(unpaged >= groups.min, unpaged)
+  }
+
+  test("a paged write is byte for byte Spark's writer given the same page settings") {
+    val s = spark
+    import s.implicits._
+    val table = pagedRows.toDF("term", "df", "positions")
+    for ((pageRows, pagedBy) <- Seq((8, Some("term")), (512, None))) {
+      val dir = Files.createDirectories(Paths.get(tmpDir(s"lp-paged-mine-$pageRows")))
+      val mine = LocalParquet.part(dir, 0)
+      LocalParquet.write(mine, table.schema, internalRows(table), 4096, pageRows, pagedBy)
+      val sparkDir = tmpDir(s"lp-paged-spark-$pageRows")
+      val w = table.coalesce(1).write.option("parquet.block.size", 4096).option("parquet.page.row.count.limit", pageRows)
+      pagedBy.fold(w)(c => w.option("parquet.column.statistics.enabled", false)
+        .option(s"parquet.column.statistics.enabled#$c", true).option(s"parquet.enable.dictionary#$c", false)
+        .option("parquet.enable.dictionary#positions", false).option("parquet.page.write-checksum.enabled", false))
+        .parquet(sparkDir)
+      val Seq(theirs) = LocalParquet.files(Paths.get(sparkDir))
+      assert(Files.readAllBytes(mine).sameElements(Files.readAllBytes(theirs)), pageRows)
+      assert(spark.read.parquet(dir.toString).as[(String, Long, String)].collect().toVector == pagedRows)
+    }
+  }
+
+  test("a file rewritten in place is read anew, not from the page index cache") {
+    val p = Files.createDirectories(Paths.get(tmpDir("lp-paged-swap")))
+    val f = p.resolve("part-0.parquet")
+    val t = pagedRows(1500)._1
+    Files.copy(pagedTable("lp-paged-a", 8), f)
+    val before = read(f, Some(TermFilter.in(Set(t))))
+    assert(before == pagedRows.filter(_._1 == t))
+    // the same rows in 16-row pages: other page offsets under one path
+    Files.copy(pagedTable("lp-paged-b", 16), f, StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 5000))
+    assert(read(f, Some(TermFilter.in(Set(t)))) == before)
+    assert(read(f, Some(TermFilter.range(Some(t), None))) == pagedRows.filter(_._1 >= t))
+  }
+
   /** `df`'s rows as Spark's internal rows, in order. */
   private def internalRows(df: org.apache.spark.sql.DataFrame): Iterator[InternalRow] =
     df.queryExecution.toRdd.map(_.copy()).collect().iterator
