@@ -8,13 +8,16 @@ import org.apache.spark.sql.SparkSession
 /**
  * spark-submit entry point (SURVEY.md §7.1):
  *
+ *   graft.Main gen <outDir> [nConvs] [seed]     write a synthetic transcript corpus as parquet
  *   graft.Main build <outDir> [nConvs] [seed]   build index over a synthetic transcript corpus
+ *   graft.Main build <outDir> corpus=<parquet>  build index over a transcript table
  *   graft.Main query <indexDir> <query...>      BM25 top-10 against a built index;
  *                                               Lucene syntax (plus, minus, quotes,
  *                                               tilde, caret, star, question) is parsed
  *   graft.Main serve <indexDir>                 serving-node REPL (LocalIndex, in-process WAND)
- *   graft.Main sim-build <embParquet> <outDir> [k] [kmeansIters]   persisted IVF index
+ *   graft.Main sim-build <embParquet> <outDir> [k] [kmeansIters] [trainLimit]   persisted IVF index
  *   graft.Main sim-query <idxDir> <embParquet> <id> [k] [nprobe]   probe it by row id
+ *   graft.Main compact <indexDir>               fold incremental staging overlays into the base
  *   graft.Main entry [sfDir]                    flagship documents-corpus query (driver smoke)
  */
 object Main {
@@ -65,26 +68,15 @@ object Main {
       // cluster gets this for free (more executors => more default
       // partitions); here the env var stands in for cluster growth
       val sortP = sys.env.get("GRAFT_SORT_PARTITIONS").map(_.toInt).getOrElse(0)
-      def cfgFor(dir: String) =
-        nSeg.fold(BuildConfig(dir, sortPartitions = sortP))(n =>
-          BuildConfig(dir, nSegments = n, waveSize = n, sortPartitions = sortP))
-      val rep = IndexBuilder.build(spark, turns, cfgFor(out))
+      val cfg = nSeg.fold(BuildConfig(out, sortPartitions = sortP))(n =>
+        BuildConfig(out, nSegments = n, waveSize = n, sortPartitions = sortP))
+      val rep = IndexBuilder.build(spark, turns, cfg)
       println(s"built: nDocs=${rep.nDocs} avgdl=${rep.avgdl} nTerms=${rep.nTerms} " +
         s"segments built=${rep.segmentsBuilt} skipped=${rep.segmentsSkipped} " +
         s"quarantined=${rep.segmentsQuarantined} wallMs=${rep.wallMs}")
       if (rep.segmentsQuarantined > 0)
         System.err.println(s"WARNING: ${rep.segmentsQuarantined} segment(s) " +
           "quarantined after repeated failures — the index is missing their documents")
-      // GRAFT_BUILD_WARM=1: rebuild into <out>_warm in the SAME app and
-      // report its wall separately — the steady-state number for a
-      // long-lived cluster (executor JVMs warm: heap pages committed,
-      // codegen JIT'd). On demand-paged sandbox VMs the cold build pays
-      // a first-touch page-fault tax proportional to executors × heap
-      // that no real long-running cluster job pays per-build.
-      if (sys.env.get("GRAFT_BUILD_WARM").contains("1")) {
-        val rep2 = IndexBuilder.build(spark, turns, cfgFor(out + "_warm"))
-        println(s"built_warm: nDocs=${rep2.nDocs} wallMs=${rep2.wallMs}")
-      }
       spark.stop()
     case "query" :: dir :: qs if qs.nonEmpty =>
       val spark = session()
@@ -171,19 +163,6 @@ object Main {
       val n = graft.index.Incremental.compact(spark, dir)
       println(s"compacted: $n overlay segment(s) folded into base staging")
       spark.stop()
-    case "time" :: name :: rest =>
-      // profile one SparkEntry query at a scale dir: warm once on a
-      // fresh plan, then time N runs (count() as the action)
-      val spark = session()
-      val dir = rest.headOption.getOrElse("/root/testdata/sf0.01")
-      val n = rest.drop(1).headOption.map(_.toInt).getOrElse(2)
-      val fn = SparkEntry.queries(name)
-      (1 to n).foreach { i =>
-        val t0 = System.nanoTime()
-        val rows = fn(spark, dir).count()
-        println(f"$name run$i: $rows rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      spark.stop()
     case "entry" :: rest =>
       val spark = session()
       val df = rest.headOption match {
@@ -193,7 +172,9 @@ object Main {
       df.show(20, truncate = false)
       spark.stop()
     case other =>
-      System.err.println(s"usage: build <outDir> [nConvs] [seed] | query <indexDir> <terms...> | serve <indexDir> | entry [sfDir]; got: $other")
+      System.err.println(s"usage: gen <outDir> [nConvs] [seed] | build <outDir> [nConvs [seed] | corpus=<parquet>] | " +
+        s"query <indexDir> <query...> | serve <indexDir> | sim-build <embParquet> <outDir> [k] [kmeansIters] [trainLimit] | " +
+        s"sim-query <idxDir> <embParquet> <id> [k] [nprobe] | compact <indexDir> | entry [sfDir]; got: $other")
       sys.exit(2)
   }
 }

@@ -169,16 +169,24 @@ object Dedup {
     // zip_with + filter twin is `DeclOracles.sigEqCountDecl`, parity spec'd) —
     // the compare runs maxBucketSize²/2 times per hot bucket, the LSH
     // stage's hottest loop
-    val pairs = flatten(transform(sequence(lit(0), size(col("m")) - 2), i =>
-      transform(sequence(i + 1, size(col("m")) - 1), j =>
-        struct(
-          col("m")(i).getField("id").as("id_a"),
-          col("m")(j).getField("id").as("id_b"),
-          (graft.functions.SigEqCountExpr(
-            col("m")(i).getField("sig"), col("m")(j).getField("sig"))
-            / lit(numHashes.toDouble)).as("est_jaccard")))))
+    bucketPairs(buckets, "est_jaccard", (a, b) =>
+      graft.functions.SigEqCountExpr(a.getField("sig"), b.getField("sig")) / lit(numHashes.toDouble))
+  }
+
+  /** Every pair of one bucket frame's member lists `m` (id-sorted
+    * structs with an `id` field), emitted in one nested
+    * `transform`-over-`sequence` per bucket: i < j ⇒ id_a < id_b, with
+    * `measure` of the two member structs as column `name`; distinct
+    * over buckets, as (id_a, id_b, name). */
+  private def bucketPairs(buckets: DataFrame, name: String,
+                          measure: (Column, Column) => Column): DataFrame = {
+    val m = col("m")
+    val pairs = flatten(transform(sequence(lit(0), size(m) - 2), i =>
+      transform(sequence(i + 1, size(m) - 1), j =>
+        struct(m(i).getField("id").as("id_a"), m(j).getField("id").as("id_b"),
+          measure(m(i), m(j)).as(name)))))
     buckets.select(explode(pairs).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.est_jaccard"))
+      .select(col("p.id_a"), col("p.id_b"), col(s"p.$name"))
       .distinct()
   }
 
@@ -243,16 +251,8 @@ object Dedup {
     val buckets = banded.groupBy("chunk", "chunk_val")
       .agg(bottomK(struct(col("id"), col("simhash")), maxBucketSize).as("m"))
       .filter(size(col("m")) >= 2)
-    val pairs = flatten(transform(sequence(lit(0), size(col("m")) - 2), i =>
-      transform(sequence(i + 1, size(col("m")) - 1), j =>
-        struct(
-          col("m")(i).getField("id").as("id_a"),
-          col("m")(j).getField("id").as("id_b"),
-          bit_count(col("m")(i).getField("simhash")
-            .bitwiseXOR(col("m")(j).getField("simhash"))).cast("long").as("hamming")))))
-    buckets.select(explode(pairs).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.hamming"))
-      .distinct()
+    bucketPairs(buckets, "hamming", (a, b) =>
+      bit_count(a.getField("simhash").bitwiseXOR(b.getField("simhash"))).cast("long"))
       .filter(col("hamming") <= maxHammingDistance)
   }
 
@@ -451,16 +451,7 @@ object Dedup {
     val buckets = withKey.groupBy("bucket")
       .agg(bottomK(struct(col("id"), col("v")), maxBucketSize).as("m"))
       .filter(size(col("m")) >= 2)
-    val pairs = flatten(transform(sequence(lit(0), size(col("m")) - 2), i =>
-      transform(sequence(i + 1, size(col("m")) - 1), j =>
-        struct(
-          col("m")(i).getField("id").as("id_a"),
-          col("m")(j).getField("id").as("id_b"),
-          Similarity.cosine(col("m")(i).getField("v"),
-            col("m")(j).getField("v")).as("cosine")))))
-    buckets.select(explode(pairs).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.cosine"))
-      .distinct()
+    bucketPairs(buckets, "cosine", (a, b) => Similarity.cosine(a.getField("v"), b.getField("v")))
       .filter(col("cosine") >= threshold)
   }
 }

@@ -9,6 +9,7 @@ import java.nio.file.Paths
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Distributed BM25 top-k retrieval over a built index (SURVEY.md
@@ -40,9 +41,11 @@ import org.apache.spark.sql.functions._
  * read postings through the same per-segment helper, one task per
  * segment group, with no postings shuffle. So every query-side read
  * of a postings or dictionary file goes through
- * [[graft.store.LocalParquet]], except the Spark `dictionary`
- * DataFrame behind [[suggest]], [[terms]], [[collate]] and
- * [[termVectors]].
+ * [[graft.store.LocalParquet]]: postings through
+ * [[IndexReader.segmentBlocks]], the dictionary through
+ * [[IndexReader.dictionary]] — the df lookup, the expansions,
+ * [[totalTokens]], [[suggest]], [[terms]], [[collate]]'s suggestions
+ * and [[termVectors]]' df all read it in place.
  *
  * == Two-level merge + θ sharing ==
  * Query tasks each own a contiguous RANGE of segments (`segment /
@@ -72,7 +75,6 @@ class IndexReader(spark: SparkSession, dir: String,
   /** Query-side chain = the chain the index was built with. */
   lazy val analyzer: Analyzer = Analyzer.parse(stats.analyzer)
 
-  private lazy val dictionary = spark.read.parquet(IndexBuilder.dictionaryDir(root))
   private lazy val dictionaryFiles = IndexReader.dictionaryFiles(root)
 
   /** Segments per query task (contiguous ranges keep docIds ascending
@@ -114,9 +116,8 @@ class IndexReader(spark: SparkSession, dir: String,
     * one in-process read of its `cf` column (no Spark job, cached per
     * reader) — exact, unlike avgdl·nDocs which reintroduces the double
     * ratio. */
-  lazy val totalTokens: Long = dictionaryFiles.map { f =>
-    LocalParquet.read(Paths.get(f), None, Set("term", "df"))(_[Long]("cf")).sum
-  }.sum
+  lazy val totalTokens: Long =
+    IndexReader.dictionary(dictionaryFiles, None, Set("cf"))(_[Long]("cf")).sum
 
   /** The lowering over this index's dictionary: df lookups, and one
     * in-process dictionary read per expansion family, pruned to the
@@ -126,8 +127,7 @@ class IndexReader(spark: SparkSession, dir: String,
     def docFreqs(terms: Seq[String]): Map[String, Long] = IndexReader.this.docFreqs(terms)
     def expand(es: Seq[Shape.Expansion]): Seq[String] = {
       val filter = TermFilter.prefixed(es.map(_.literalPrefix).toSet, t => es.exists(_.matches(t)))
-      dictionaryFiles.flatMap(f =>
-        LocalParquet.read(Paths.get(f), Some(filter), Set("df", "cf"))(_[String]("term"))).sorted
+      IndexReader.dictionary(dictionaryFiles, Some(filter), Set("term"))(_[String]("term")).toVector.sorted
     }
   }, positionsStored)
 
@@ -269,23 +269,17 @@ class IndexReader(spark: SparkSession, dir: String,
    * dictionary terms to an input, as (term, distance, df) ordered by
    * (edit distance asc, df desc, term asc) — "nearest first, then
    * most common", Solr's popularity-weighted suggestion order, fully
-   * deterministic. The same banded-Levenshtein dictionary scan as
-   * [[searchFuzzy]] (length band pushes to Parquet, distance runs on
-   * the banded slice, postings never touched); `orderBy.limit(n)`
-   * plans as a distributed TakeOrdered, so only n rows reach the
-   * driver no matter the vocabulary size.
+   * deterministic. The candidates are [[searchFuzzy]]'s: one
+   * in-process pass over the dictionary's `term` column keeps the
+   * terms within `maxEdits` ([[Shape.editDistance]]), and a bounded
+   * heap keeps the best `n` of them on the driver — no Spark job, and
+   * O(n) rows held whatever the vocabulary size. The term is
+   * lowercased, not analyzed.
    */
   def suggest(term: String, maxEdits: Int = 2, n: Int = 5): DataFrame = {
-    require(maxEdits >= 0 && maxEdits <= 2, s"maxEdits $maxEdits not in 0..2")
-    val q = term.toLowerCase(java.util.Locale.ROOT)
-    require(q.nonEmpty, "empty suggest term")
-    dictionary
-      .filter(length(col("term")).between(q.length - maxEdits, q.length + maxEdits))
-      .withColumn("distance", levenshtein(col("term"), lit(q)).cast("long"))
-      .filter(col("distance") <= maxEdits)
-      .select("term", "distance", "df")
-      .orderBy(col("distance").asc, col("df").desc, col("term").asc)
-      .limit(n)
+    require(n >= 0, s"n $n is negative")
+    val f = Shape.fuzzy(term, maxEdits, n)
+    suggestions(Seq(f), n)(f.q).toDF("term", "distance", "df")
   }
 
   /**
@@ -314,18 +308,17 @@ class IndexReader(spark: SparkSession, dir: String,
   /** Term enumeration (the Solr terms component / Lucene TermsEnum):
     * dictionary terms matching an optional prefix, with their
     * document frequencies, ordered df-desc then term-asc (Solr's
-    * `terms.sort=count`) and capped at `limit` — a pure dictionary
-    * scan (prefix pushes to Parquet; `orderBy.limit` plans as a
-    * distributed TakeOrdered), postings never touched. */
+    * `terms.sort=count`) and capped at `limit` — an in-process read of
+    * the dictionary row groups that meet the prefix (every one for an
+    * empty prefix) into a bounded heap on the driver: no Spark job,
+    * postings never touched. */
   def terms(prefix: String = "", limit: Int = 10): DataFrame = {
     require(limit > 0, "limit must be positive")
-    val base =
-      if (prefix.isEmpty) dictionary
-      else dictionary.filter(col("term").startsWith(
-        prefix.toLowerCase(java.util.Locale.ROOT)))
-    base.select(col("term"), col("df"))
-      .orderBy(col("df").desc, col("term").asc)
-      .limit(limit)
+    val top = new TopN(limit, IndexReader.TermsOrder)
+    IndexReader.dictionary(dictionaryFiles, Some(TermFilter.prefixed(
+      Set(prefix.toLowerCase(java.util.Locale.ROOT)), _ => true)), Set("term", "df"))(
+      r => (r[String]("term"), r[Long]("df"))).foreach(top.add)
+    top.result.toDF("term", "df")
   }
 
   /** Whole-query spellcheck collation (Solr `spellcheck.collate`):
@@ -335,49 +328,46 @@ class IndexReader(spark: SparkSession, dir: String,
     * distance 0, so correct terms pass through unchanged and no
     * separate presence check is needed — plus the corrected query's
     * boolean (all-terms) hit count, Solr's "collation with hits"
-    * response shape. ONE banded dictionary scan covers every distinct
-    * query term (the OR of the per-term length bands pushes to
-    * Parquet, candidates come back with df, and the per-term best pick
-    * runs driver-side
-    * under the same suggest order via the parity-pinned
-    * [[Shape.editDistance]]) plus one distributed match-set count —
-    * two Spark jobs total, where the round-5 form paid one sequential
-    * suggest job per distinct term. A term with no suggestion within
-    * `maxEdits` stays as typed; the collation then counts 0 hits,
-    * exactly Solr's response for an uncorrectable term. */
+    * response shape. The suggestions for every distinct query term
+    * come from ONE in-process dictionary pass ([[bestSuggestions]]),
+    * so the one Spark job is the distributed match-set count. A term
+    * with no suggestion within `maxEdits` stays as typed; the
+    * collation then counts 0 hits, exactly Solr's response for an
+    * uncorrectable term. */
   def collate(query: String, maxEdits: Int = 2): DataFrame = {
-    import spark.implicits._
     require(maxEdits >= 0 && maxEdits <= 2, s"maxEdits $maxEdits not in 0..2")
     val raw = analyzer.tokenize(query)
     val bestOf = bestSuggestions(raw.distinct, maxEdits)
     val corrected = raw.map(t => bestOf(t).getOrElse(t))
     val collation = corrected.mkString(" ")
-    val nHits = if (corrected.isEmpty) 0L else matchingDocs(collation).count()
+    // an RDD count is one single-stage job; the Dataset count's
+    // aggregate would add a shuffle stage, run as a job of its own
+    val nHits = if (corrected.isEmpty) 0L else matchingDocs(collation).rdd.count()
     // column named `collated`: COLLATION is a reserved word in ANSI
     // SQL engines, which would break the cross-engine oracle
     Seq((collation, nHits)).toDF("collated", "n_hits")
   }
 
-  /** Best dictionary suggestion per input term, in ONE batched
-    * banded-Levenshtein dictionary job (CollateJobSpec pins the job
-    * count): None for a term with no candidate within `maxEdits`. */
-  private[query] def bestSuggestions(ts: Seq[String],
-                                     maxEdits: Int): Map[String, Option[String]] = {
-    import spark.implicits._
-    if (ts.isEmpty) return Map.empty
-    val matched = dictionary
-      .filter(ts.map(t =>
-        length(col("term")).between(t.length - maxEdits, t.length + maxEdits) &&
-          levenshtein(col("term"), lit(t)) <= maxEdits).reduce(_ || _))
-      .select("term", "df").as[(String, Long)].collect()
-    ts.map { t =>
-      val cands = matched.iterator
-        .map { case (term, df) => (Shape.editDistance(term, t, maxEdits), -df, term) }
-        .filter(_._1 <= maxEdits).toSeq
-      t -> (if (cands.isEmpty) None else Some(cands.min._3))
-    }.toMap
-  }
+  /** Best dictionary suggestion per input term under the [[suggest]]
+    * order, from ONE in-process dictionary pass and no Spark job
+    * (`FacetSpec` pins that): None for a term with no candidate
+    * within `maxEdits`. */
+  private[query] def bestSuggestions(ts: Seq[String], maxEdits: Int): Map[String, Option[String]] =
+    suggestions(ts.distinct.map(Shape.Fuzzy(_, maxEdits, 1)), 1).map { case (t, c) => t -> c.headOption.map(_._1) }
 
+  /** The best `n` (term, distance, df) candidates of each fuzzy term
+    * under [[IndexReader.SuggestOrder]]: one in-process pass over the
+    * dictionary keeps the terms any of `fs` matches (decoding df only
+    * for them), and one bounded heap per fuzzy term keeps its best. */
+  private def suggestions(fs: Seq[Shape.Fuzzy], n: Int): Map[String, Vector[(String, Long, Long)]] = {
+    if (fs.isEmpty) return Map.empty
+    val tops = fs.map(f => f.q -> new TopN(n, IndexReader.SuggestOrder)).toMap
+    val filter = TermFilter.prefixed(Set(""), t => fs.exists(_.matches(t)))
+    val rows = IndexReader.dictionary(dictionaryFiles, Some(filter), Set("term", "df"))(r => (r[String]("term"), r[Long]("df")))
+    for ((t, df) <- rows; f <- fs; d = Shape.editDistance(t, f.q, f.maxEdits) if d <= f.maxEdits)
+      tops(f.q).add((t, d.toLong, df))
+    tops.map { case (q, top) => q -> top.result }
+  }
 
   /**
    * More-like-this (the Lucene/Solr MLT component): find documents
@@ -850,12 +840,14 @@ class IndexReader(spark: SparkSession, dir: String,
     * (term, tf, df) rows for the given doc ids — tf recomputed from
     * the STORED text under the v1 chain (Solr's own fallback when
     * vectors aren't indexed reads stored fields the same way), df
-    * joined from the index dictionary. One id-filtered doc-store
-    * scan → explode → count, one broadcast-sized dictionary join —
+    * from the index dictionary. One id-filtered doc-store scan →
+    * explode → count, then each task looks its partition's distinct
+    * terms up in the dictionary files in place
+    * ([[IndexReader.dictionaryLookup]]) and keeps the rows with a df —
     * never a postings read (our postings are term-major; walking
     * them doc-ward would scan the whole index for k docs). Like
     * [[snippets]], exact for v1-chain indexes; a stemming chain's
-    * dictionary holds stems, which won't join raw-token tfs. */
+    * dictionary holds stems, so its raw-token rows drop. */
   def termVectors(docIds: Seq[Long]): DataFrame = {
     require(docIds.nonEmpty, "termVectors needs at least one doc id")
     val toks = graft.operators.TextAnalysis.tokensCol(col("text"))
@@ -863,15 +855,16 @@ class IndexReader(spark: SparkSession, dir: String,
       .filter(col("doc_id").isInCollection(docIds))
       .select(col("doc_id"), explode(toks).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .join(dictionary.select(col("term"), col("df")), Seq("term"))
-      .select(col("doc_id"), col("term"), col("tf"), col("df"))
+      .as[(Long, String, Long)]
+      .mapPartitions(IndexReader.withDf(dictionaryFiles))
+      .toDF("doc_id", "term", "tf", "df")
   }
 
   /** Per-document significant terms (tf·idf keyword extraction — the
     * Lucene MoreLikeThis "interesting terms" / Solr tv.tf_idf shape):
     * for each given document, the top `k` stored-text terms by
     * tf · ln(N/df), built on [[termVectors]] (one id-filtered
-    * doc-store scan + a broadcast-sized dictionary join). Scores are
+    * doc-store scan + per-task dictionary lookups). Scores are
     * rounded to 4 decimals BEFORE the per-doc cut so the ranking is
     * representation-stable across engines; ties break term-ascending.
     * The window partitions by doc_id over ≤ |docIds| · vocab rows —
@@ -1215,6 +1208,14 @@ class IndexReader(spark: SparkSession, dir: String,
   }
 }
 
+/** The least `n` values added under `ord`, ascending: a bounded
+  * max-heap, so a stream of any length holds at most `n`. */
+private[query] final class TopN[T](n: Int, ord: Ordering[T]) {
+  private val heap = scala.collection.mutable.PriorityQueue.empty[T](ord)
+  def add(x: T): Unit = { heap.enqueue(x); if (heap.size > n) heap.dequeue() }
+  def result: Vector[T] = heap.toVector.sorted(ord)
+}
+
 /** Growable primitive long buffer → sorted array (the searchWhere
   * allowed-set representation: 8 B/doc, binary-search membership). */
 private[query] final class LongBuf {
@@ -1273,26 +1274,60 @@ object IndexReader {
   private[query] def dictionaryFiles(dir: String): Seq[String] =
     LocalParquet.files(Paths.get(IndexBuilder.dictionaryDir(dir))).map(_.toString)
 
+  /** The one read of the dictionary files on the query side: the rows
+    * `filter` keeps (every row when None), each mapped by `f`,
+    * streamed one row group at a time, decoding only `columns` (and
+    * the filter's `term`). */
+  private[query] def dictionary[T](files: Seq[String], filter: Option[TermFilter],
+                                   columns: Set[String])(f: LocalParquet.Row => T): Iterator[T] =
+    files.iterator.flatMap(p => LocalParquet.rows(Paths.get(p), filter, Set("term", "df", "cf") -- columns)(f))
+
   /** `field` (df or cf) of each of `terms` present in the dictionary
     * files — an in-process read of only the row groups whose term
     * range can hold one of them. */
   private[query] def dictionaryLookup(files: Seq[String], terms: Seq[String],
-                                      field: String): Map[String, Long] = {
-    val filter = Some(TermFilter.in(terms.toSet))
-    files.flatMap(f => LocalParquet.read(Paths.get(f), filter)(r => r[String]("term") -> r[Long](field))).toMap
-  }
+                                      field: String): Map[String, Long] =
+    dictionary(files, Some(TermFilter.in(terms.toSet)), Set("term", field))(
+      r => r[String]("term") -> r[Long](field)).toMap
+
+  /** [[IndexReader.termVectors]]' task: its partition's (doc, term, tf)
+    * rows with each term's df, from one lookup of the partition's
+    * distinct terms; a term the dictionary lacks drops, as in an
+    * inner join. */
+  private[query] def withDf(files: Seq[String]): Iterator[(Long, String, Long)] => Iterator[(Long, String, Long, Long)] =
+    rows => {
+      val rs = rows.toVector
+      val dfs = dictionaryLookup(files, rs.map(_._2).distinct, "df")
+      rs.iterator.collect { case (doc, t, tf) if dfs.contains(t) => (doc, t, tf, dfs(t)) }
+    }
+
+  /** Spark's string order, by UTF-8 bytes (`String.compareTo`
+    * compares UTF-16 units, which differ above U+E000). */
+  private val Utf8Order: Ordering[String] = Ordering.by(UTF8String.fromString)
+
+  /** [[IndexReader.suggest]]'s order of (term, distance, df): nearest,
+    * then most common, then term. */
+  private[query] val SuggestOrder: Ordering[(String, Long, Long)] =
+    Ordering.Tuple3(Ordering.Long, Ordering.Long.reverse, Utf8Order).on(c => (c._2, c._3, c._1))
+
+  /** [[IndexReader.terms]]' order of (term, df): most common, then term. */
+  private[query] val TermsOrder: Ordering[(String, Long)] =
+    Ordering.Tuple2(Ordering.Long.reverse, Utf8Order).on(_.swap)
 
   /** One segment's postings, read in place: the blocks of the terms
     * `filter` keeps (every term when None), by term, in file order;
-    * the columns in `without` stay null. The one read of postings
-    * files on the query side. */
+    * the columns in `without` stay null, and so do `block_id` and
+    * `block_cf` (0), which no query kernel reads: a block decode sizes
+    * its arrays from `n_docs` and the `tfs` prefix sums. The one read
+    * of postings files on the query side. */
   private[query] def segmentBlocks(seg: Int, files: Seq[String], filter: Option[TermFilter],
                                    without: Set[String]): Plan.Blocks =
-    files.iterator.flatMap(f => LocalParquet.read(Paths.get(f), filter, without)(blockRow(seg, _)))
+    files.iterator.flatMap(f => LocalParquet.read(Paths.get(f), filter, without ++ Set("block_id", "block_cf"))(blockRow(seg, _)))
       .toVector.groupBy(_.term)
 
   /** A postings row of `segment` (a partition column, so not in the
-    * file); a missing `positions` value is null. */
+    * file); a missing `positions` value is null, a missing
+    * `block_id` or `block_cf` 0. */
   private[query] def blockRow(segment: Int, r: LocalParquet.Row): PostingBlockRow =
     PostingBlockRow(r[String]("term"), segment, r[Int]("block_id"), r[Int]("n_docs"),
       r[Long]("max_doc_id"), r[Int]("block_max_tf"), r[Int]("block_min_dl"),

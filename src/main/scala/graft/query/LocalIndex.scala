@@ -2,9 +2,7 @@ package graft.query
 
 import graft.analysis.Analyzer
 import graft.model.{CorpusStats, PostingBlockRow, QueryHit}
-import graft.store.LocalParquet
 import graft.store.LocalParquet.TermFilter
-import java.nio.file.Paths
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -179,10 +177,9 @@ object LocalIndex {
     val dfs = new java.util.HashMap[String, Long]()
     val cfs = new java.util.HashMap[String, Long]()
     var totalTokens = 0L
-    IndexReader.dictionaryFiles(root).foreach { f =>
-      LocalParquet.read(Paths.get(f))(r => (r[String]("term"), r[Long]("df"), r[Long]("cf"))).foreach {
-        case (t, df, cf) => dfs.put(t, df); cfs.put(t, cf); totalTokens += cf
-      }
+    IndexReader.dictionary(IndexReader.dictionaryFiles(root), None, Set("term", "df", "cf"))(
+      r => (r[String]("term"), r[Long]("df"), r[Long]("cf"))).foreach {
+      case (t, df, cf) => dfs.put(t, df); cfs.put(t, cf); totalTokens += cf
     }
     new LocalIndex(stats, dfs, blocks(root, None),
       IndexReader.positionsStored(root), cfs, totalTokens)

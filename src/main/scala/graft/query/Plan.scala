@@ -151,12 +151,12 @@ private[query] object Shape {
     sb.append('$').toString
   }
 
-  /** Unit-cost Levenshtein distance (Wagner–Fischer, two rows). It
-    * MUST agree with Spark's and DuckDB's `levenshtein` (the fuzzy
-    * expansions use this alone, `suggest` filters with Spark's, and the
-    * gate's oracles with DuckDB's; the fuzzy specs pin the parity),
-    * hence the CODE-POINT alphabet: both
-    * engines count code points, so supplementary-plane tokens must not
+  /** Unit-cost Levenshtein distance (Wagner–Fischer, two rows): the
+    * only edit distance on the query side (the fuzzy expansions,
+    * `suggest` and `collate`). It MUST agree with DuckDB's
+    * Levenshtein function, which the gate's oracles use (the fuzzy and
+    * suggest specs pin the parity), hence the CODE-POINT alphabet:
+    * DuckDB counts code points, so supplementary-plane tokens must not
     * be split into surrogate halves here. With a `cap`, the DP stops
     * with `cap + 1` as soon as a whole row exceeds the cap: a result
     * above the cap says only that the distance is above it. */

@@ -234,14 +234,21 @@ class FacetSpec extends SparkFunSuite {
     val (rdr, corpus) = fixture("idx-terms")
     val dfs = corpus.map(t => graft.analysis.Tokenizer.termFreqs(t.text).keySet)
       .flatten.groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val want = dfs.filter(_._1.startsWith("la")).toSeq
-      .sortBy { case (t, df) => (-df, t) }.take(5)
-    assert(want.size > 1, "degenerate prefix")
-    val got = rdr.terms("la", 5).as[(String, Long)].collect().toSeq
-    assert(got == want)
+    def want(prefix: String, limit: Int) = dfs.filter(_._1.startsWith(prefix)).toSeq
+      .sorted(Ordering.Tuple2(Ordering.Long.reverse, utf8Order).on[(String, Long)](r => (r._2, r._1))).take(limit)
+    def got(prefix: String, limit: Int) = rdr.terms(prefix, limit).as[(String, Long)].collect().toSeq
+    assert(want("la", 5).size > 1, "degenerate prefix")
+    assert(got("la", 5) == want("la", 5))
     // no prefix = global top terms
-    val wantAll = dfs.toSeq.sortBy { case (t, df) => (-df, t) }.take(8)
-    assert(rdr.terms("", 8).as[(String, Long)].collect().toSeq == wantAll)
+    assert(got("", 8) == want("", 8))
+    // a limit of 1 and one beyond the matches; the prefix is lowercased
+    val prefixes = Seq("la", "u", "s", "ma", "t")
+    for (p <- prefixes; limit <- Seq(1, dfs.size + 1)) assert(got(p, limit) == want(p, limit), s"terms('$p', $limit)")
+    assert(prefixes.exists(p => want(p, dfs.size + 1).size > 5), "degenerate prefixes")
+    assert(got("", dfs.size + 1) == want("", dfs.size + 1))
+    assert(got("LA", 3) == want("la", 3))
+    // an absent prefix enumerates nothing
+    assert(got("zzqx", 5).isEmpty && got("\uD835\uDC1E", 5).isEmpty)
     intercept[IllegalArgumentException] { rdr.terms("la", 0) }
   }
 
@@ -251,20 +258,27 @@ class FacetSpec extends SparkFunSuite {
     val dfs = tokSets.flatten.groupBy(identity).view
       .mapValues(_.size.toLong).toMap
     val vocab = dfs.keys.toSeq.sorted
-    def best(t: String): String =
-      vocab.filter(v => refLev(v, t) <= 2)
-        .sortBy(v => (refLev(v, t), -dfs(v), v)).headOption.getOrElse(t)
-    for (q <- Seq("usr la", "user la", "laq mb user")) {
-      val corrected = graft.analysis.Tokenizer.tokenize(q).map(best)
+    def best(t: String, me: Int): String =
+      vocab.filter(v => refLev(v, t) <= me)
+        .sorted(suggestOrder(dfs, t)).headOption.getOrElse(t)
+    def check(q: String, me: Int): Long = {
+      val corrected = graft.analysis.Tokenizer.tokenize(q).map(best(_, me))
       val wantColl = corrected.mkString(" ")
       val wantHits = corpus.indices
         .count(i => corrected.distinct.forall(tokSets(i))).toLong
       val Array((gotColl, gotHits)) =
-        rdr.collate(q, 2).as[(String, Long)].collect()
-      assert(gotColl == wantColl, s"collation for '$q'")
-      assert(gotHits == wantHits, s"hits for '$q'")
-      assert(wantHits > 0, s"degenerate fixture for '$q'")
+        rdr.collate(q, me).as[(String, Long)].collect()
+      assert(gotColl == wantColl, s"collation for '$q'~$me")
+      assert(gotHits == wantHits, s"hits for '$q'~$me")
+      wantHits
     }
+    for (q <- Seq("usr la", "user la", "laq mb user"))
+      assert(check(q, 2) > 0, s"degenerate fixture for '$q'")
+    // fixed-seed edits of vocabulary terms, two or three to a query,
+    // at every maxEdits
+    val edited = edits(vocab, new scala.util.Random(11))
+    for (q <- edited.grouped(2).map(_.mkString(" ")) ++ edited.grouped(3).map(_.mkString(" ")); me <- 0 to 2)
+      check(q, me)
     // an in-dictionary query self-corrects to itself
     val Array((same, _)) = rdr.collate("user la", 2).as[(String, Long)].collect()
     assert(same == "user la")
@@ -274,9 +288,9 @@ class FacetSpec extends SparkFunSuite {
     assert(uc == "user zzzzqqqzz" && ucHits == 0L)
   }
 
-  test("collate's suggestion phase is ONE dictionary job for an n-term query") {
+  test("collate's suggestion phase runs no Spark job for an n-term query") {
     val (rdr, _) = fixture("idx-collate-jobs")
-    rdr.collate("user la", 2).collect() // warm the lazy dictionary read
+    rdr.collate("user la", 2).collect() // warm the lazy dictionary listing
     val group = s"collate-batch-${System.nanoTime()}"
     spark.sparkContext.setJobGroup(group, "collate suggestion batching")
     try rdr.bestSuggestions(Seq("usr", "laq", "mb", "user", "la"), 2)
@@ -285,8 +299,8 @@ class FacetSpec extends SparkFunSuite {
     // job the call started is counted
     org.apache.spark.GraftTestBus.drain(spark.sparkContext)
     val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    assert(jobs == 1,
-      s"batched suggestion phase must run exactly one dictionary job, ran $jobs")
+    assert(jobs == 0,
+      s"the suggestion phase reads the dictionary in-process and must run no job, ran $jobs")
   }
 
   test("facetQueries: named subquery counts == brute-force boolean counts") {
@@ -628,9 +642,10 @@ class FacetSpec extends SparkFunSuite {
   }
 
   /** Spec-local reference edit distance — full unbanded Wagner–Fischer
-    * matrix, an independent implementation from Shape.editDistance's
-    * two-row early-bail form. */
-  private def refLev(a: String, b: String): Int = {
+    * matrix over code points (as DuckDB counts), an independent
+    * implementation from Shape.editDistance's two-row early-bail form. */
+  private def refLev(s: String, t: String): Int = {
+    val (a, b) = (s.codePoints().toArray, t.codePoints().toArray)
     val d = Array.ofDim[Int](a.length + 1, b.length + 1)
     for (i <- 0 to a.length) d(i)(0) = i
     for (j <- 0 to b.length) d(0)(j) = j
@@ -823,17 +838,54 @@ class FacetSpec extends SparkFunSuite {
     val (rdr, corpus) = fixture("idx-suggest")
     val dfs = corpus.map(t => graft.analysis.Tokenizer.termFreqs(t.text).keySet)
       .flatMap(_.toSeq).groupBy(identity).view.mapValues(_.size.toLong).toMap
+    def want(q: String, me: Int, n: Int) = dfs.keys.toSeq.filter(refLev(_, q) <= me)
+      .sorted(suggestOrder(dfs, q)).take(n).map(t => (t, refLev(t, q).toLong, dfs(t)))
+    def got(q: String, me: Int, n: Int) = rdr.suggest(q, me, n).as[(String, Long, Long)].collect().toSeq
     Seq(("laq", 1), ("laq", 2), ("user", 2)).foreach { case (q, me) =>
-      val want = dfs.toSeq
-        .map { case (t, df) => (t, refLev(t, q).toLong, df) }
-        .filter(_._2 <= me)
-        .sortBy { case (t, d, df) => (d, -df, t) }.take(5)
-      assert(want.nonEmpty, s"degenerate suggest '$q'~$me")
-      val got = rdr.suggest(q, me, 5).as[(String, Long, Long)].collect().toSeq
-      assert(got == want, s"suggest('$q', $me)")
+      assert(want(q, me, 5).nonEmpty, s"degenerate suggest '$q'~$me")
+      assert(got(q, me, 5) == want(q, me, 5), s"suggest('$q', $me)")
     }
+    // fixed-seed edits of vocabulary terms at every maxEdits, with n of
+    // 1, 5 and beyond the candidates
+    val edited = edits(dfs.keys.toSeq.sorted, new scala.util.Random(7))
+    for (q <- edited; me <- 0 to 2; n <- Seq(1, 5, dfs.size + 1))
+      assert(got(q, me, n) == want(q, me, n), s"suggest('$q', $me, $n)")
+    assert(edited.forall(q => want(q, 1, 1).nonEmpty), "degenerate edits")
+    assert(edited.exists(q => want(q, 2, dfs.size + 1).size > 5), "degenerate edits")
     assert(rdr.suggest("zzqqxxyy", 2, 5).collect().isEmpty)
     intercept[IllegalArgumentException] { rdr.suggest("user", 3) }
+    intercept[IllegalArgumentException] { rdr.suggest("", 1) }
+    intercept[IllegalArgumentException] { rdr.suggest("user", 1, -1) }
+  }
+
+  /** Spark's string order: UTF-8 bytes, unsigned. */
+  private val utf8Order: Ordering[String] = Ordering.fromLessThan((a, b) =>
+    java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8")) < 0)
+
+  /** The suggest order of candidate terms for `q`: distance asc, df
+    * desc, term asc by UTF-8 bytes. */
+  private def suggestOrder(dfs: Map[String, Long], q: String): Ordering[String] =
+    Ordering.Tuple3(Ordering.Int, Ordering.Long.reverse, utf8Order).on(t => (refLev(t, q), dfs(t), t))
+
+  /** One edit each — insert, substitute, delete in turn — of 12
+    * vocabulary terms of 3+ BMP letters drawn by `rnd`, the first two
+    * writing a non-ASCII and a supplementary-plane code point. */
+  private def edits(vocab: Seq[String], rnd: scala.util.Random): Seq[String] = {
+    val long = vocab.filter(v => v.length >= 3 && v.forall(_.isLetter))
+    (0 until 12).map { i =>
+      val v = long(rnd.nextInt(long.size))
+      val at = rnd.nextInt(v.length)
+      val c = i match {
+        case 0 => "\u00e9"
+        case 1 => "\uD835\uDC1E"
+        case _ => ('a' + rnd.nextInt(26)).toChar.toString
+      }
+      i % 3 match {
+        case 0 => v.take(at) + c + v.drop(at)
+        case 1 => v.take(at) + c + v.drop(at + 1)
+        case _ => v.take(at) + v.drop(at + 1)
+      }
+    }
   }
 
   test("facetCounts == groupBy over the brute-force match set") {

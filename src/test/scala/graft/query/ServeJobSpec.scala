@@ -98,6 +98,15 @@ class ServeJobSpec extends SparkFunSuite {
     assert(jobsOf(reader.matchingDocs("user la").collect()).map(_._2) == Seq(1))
   }
 
+  test("suggest, terms and bestSuggestions run no Spark job, and collate one: the hit count") {
+    assert(reader.suggest("usr", 1, 5).collect().nonEmpty && reader.terms("u", 5).collect().nonEmpty)
+    assert(jobsOf(reader.suggest("usr", 2, 5).collect()).isEmpty)
+    assert(jobsOf(reader.terms("u", 5).collect()).isEmpty)
+    assert(jobsOf(reader.terms("", 5).collect()).isEmpty)
+    assert(jobsOf(reader.bestSuggestions(Seq("usr", "laq", "user"), 2)).isEmpty)
+    assert(jobsOf(reader.collate("usr la", 2).collect()).size == 1)
+  }
+
   test("a fresh reader's scoredDocsDirichlet runs the jobs of a warmed one: totalTokens reads the dictionary in-process") {
     assert(reader.scoredDocsDirichlet("user la").collect().nonEmpty)
     val warm = jobsOf(reader.scoredDocsDirichlet("user la").collect())
