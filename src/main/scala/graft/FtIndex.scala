@@ -24,9 +24,27 @@ object FtIndex {
 
   private val built = scala.collection.mutable.Set[String]()
 
-  def indexDir(sfDir: String): String = {
-    val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"/tmp/graft_ftidx_v$CacheVersion/$name"
+  /** The fixture `kind` of `sfDir` under `/tmp/graft_ft<kind>_v<CacheVersion>`,
+    * built once by `build(dir)` and memoized per JVM AND on disk: a
+    * `_ft_done` marker written after the build completes lets every
+    * later JVM skip the build entirely (no corpus re-scan), and
+    * guarantees a concurrent reader in another process never observes
+    * the cache mid-build (the sf corpora are immutable, so a marked dir
+    * is final; the marker lives under the CacheVersion'd path, so
+    * layout bumps invalidate it with the rest of the cache). A
+    * directory without its marker is cleared before the build. */
+  private def fixture(kind: String, sfDir: String)(build: String => Unit): String = synchronized {
+    val out = s"/tmp/graft_ft${kind}_v$CacheVersion/${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}"
+    if (!built.contains(out)) {
+      val marker = java.nio.file.Paths.get(out, "_ft_done")
+      if (!java.nio.file.Files.exists(marker)) {
+        graft.store.Manifest.deleteRecursively(java.nio.file.Paths.get(out))
+        build(out)
+        java.nio.file.Files.createFile(marker)
+      }
+      built += out
+    }
+    out
   }
 
   /** The documents table as a Dataset[Turn] (the engine's input shape). */
@@ -43,34 +61,10 @@ object FtIndex {
       .as[Turn]
   }
 
-  /** Memoize `build(out)` per JVM AND per cache dir: a `_ft_done`
-    * marker written after the build completes lets every later JVM
-    * skip the build entirely (no corpus re-scan), and — unlike the
-    * bare IndexBuilder resume check — guarantees a concurrent reader
-    * in another process can never observe the cache mid-build (the
-    * sf corpora are immutable, so a marked dir is final; the marker
-    * lives under the CacheVersion'd path, so layout bumps invalidate
-    * it with the rest of the cache). */
-  private def ensureMarked(memo: scala.collection.mutable.Set[String],
-                           out: String)(build: => Unit): String = {
-    if (!memo.contains(out)) {
-      val marker = java.nio.file.Paths.get(out, "_ft_done")
-      if (!java.nio.file.Files.exists(marker)) {
-        build
-        java.nio.file.Files.createFile(marker)
-      }
-      memo += out
-    }
-    out
-  }
-
-  /** Build (or resume — content-hash-checked) the index; idempotent
-    * and memoized per JVM + on disk. Returns the index directory. */
-  def ensure(spark: SparkSession, sfDir: String): String = synchronized {
-    ensureMarked(built, indexDir(sfDir)) {
-      IndexBuilder.build(spark, docsAsTurns(spark, sfDir),
-        BuildConfig(indexDir(sfDir), nSegments = 8, waveSize = 8))
-    }
+  /** The index of the documents table; idempotent and memoized per
+    * JVM + on disk. Returns the index directory. */
+  def ensure(spark: SparkSession, sfDir: String): String = fixture("idx", sfDir) { out =>
+    IndexBuilder.build(spark, docsAsTurns(spark, sfDir), BuildConfig(out, nSegments = 8, waveSize = 8))
   }
 
   def reader(spark: SparkSession, sfDir: String): IndexReader =
@@ -86,13 +80,6 @@ object FtIndex {
   // DuckDB oracle is plain BM25 SQL over the documents table — if any
   // stale posting, ghost doc, or missed append survived the delta, the
   // hash comparison fails.
-
-  private val builtInc = scala.collection.mutable.Set[String]()
-
-  def incrementalIndexDir(sfDir: String): String = {
-    val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"/tmp/graft_ftinc_v$CacheVersion/$name"
-  }
 
   /** The base (pre-update) corpus variant derived from documents. */
   private def baseTurns(spark: SparkSession, sfDir: String): Dataset[Turn] = {
@@ -111,22 +98,11 @@ object FtIndex {
     base.unionByName(extras).as[Turn]
   }
 
-  /** Build base, then delta-update to the true corpus; memoized via a
-    * marker file so reruns (and the content-hash check) are no-ops. */
-  def ensureIncremental(spark: SparkSession, sfDir: String): String = synchronized {
-    val out = incrementalIndexDir(sfDir)
-    val marker = java.nio.file.Paths.get(out, "_inc_done")
-    if (!builtInc.contains(out)) {
-      if (!java.nio.file.Files.exists(marker)) {
-        graft.store.Manifest.deleteRecursively(java.nio.file.Paths.get(out))
-        val cfg = BuildConfig(out, nSegments = 8, waveSize = 8)
-        IndexBuilder.build(spark, baseTurns(spark, sfDir), cfg)
-        IndexBuilder.build(spark, docsAsTurns(spark, sfDir), cfg) // the delta
-        java.nio.file.Files.createFile(marker)
-      }
-      builtInc += out
-    }
-    out
+  /** Build base, then delta-update to the true corpus. */
+  def ensureIncremental(spark: SparkSession, sfDir: String): String = fixture("inc", sfDir) { out =>
+    val cfg = BuildConfig(out, nSegments = 8, waveSize = 8)
+    IndexBuilder.build(spark, baseTurns(spark, sfDir), cfg)
+    IndexBuilder.build(spark, docsAsTurns(spark, sfDir), cfg) // the delta
   }
 
   // ---- non-default analyzer chain (v1+stop) gate fixture ----
@@ -136,19 +112,9 @@ object FtIndex {
   // so the query side tokenizes identically). The DuckDB oracle
   // mirrors the chain with a list_filter over the same stopword list.
 
-  private val builtStop = scala.collection.mutable.Set[String]()
-
-  def stopIndexDir(sfDir: String): String = {
-    val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"/tmp/graft_ftstop_v$CacheVersion/$name"
-  }
-
-  def ensureStop(spark: SparkSession, sfDir: String): String = synchronized {
-    ensureMarked(builtStop, stopIndexDir(sfDir)) {
-      IndexBuilder.build(spark, docsAsTurns(spark, sfDir),
-        BuildConfig(stopIndexDir(sfDir), nSegments = 8, waveSize = 8,
-          analyzer = graft.analysis.Analyzer(stop = true)))
-    }
+  def ensureStop(spark: SparkSession, sfDir: String): String = fixture("stop", sfDir) { out =>
+    IndexBuilder.build(spark, docsAsTurns(spark, sfDir), BuildConfig(out, nSegments = 8, waveSize = 8,
+      analyzer = graft.analysis.Analyzer(stop = true)))
   }
 
   // ---- full text_en-analog chain (v1+stop+stem) gate fixture ----
@@ -160,19 +126,9 @@ object FtIndex {
   // DuckDB oracle maps corpus tokens through the engine's (token →
   // stem) vocabulary map (SparkEntry.StemCaseSql).
 
-  private val builtStem = scala.collection.mutable.Set[String]()
-
-  def stemIndexDir(sfDir: String): String = {
-    val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"/tmp/graft_ftstem_v$CacheVersion/$name"
-  }
-
-  def ensureStem(spark: SparkSession, sfDir: String): String = synchronized {
-    ensureMarked(builtStem, stemIndexDir(sfDir)) {
-      IndexBuilder.build(spark, docsAsTurns(spark, sfDir),
-        BuildConfig(stemIndexDir(sfDir), nSegments = 8, waveSize = 8,
-          analyzer = graft.analysis.Analyzer.TextEn))
-    }
+  def ensureStem(spark: SparkSession, sfDir: String): String = fixture("stem", sfDir) { out =>
+    IndexBuilder.build(spark, docsAsTurns(spark, sfDir), BuildConfig(out, nSegments = 8, waveSize = 8,
+      analyzer = graft.analysis.Analyzer.TextEn))
   }
 
   // ---- compaction gate fixture ----
@@ -184,29 +140,11 @@ object FtIndex {
   // compact that dropped, duplicated, or ghosted any row
   // hash-mismatches.
 
-  private val builtCmp = scala.collection.mutable.Set[String]()
-
-  def compactedIndexDir(sfDir: String): String = {
-    val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"/tmp/graft_ftcmp_v$CacheVersion/$name"
-  }
-
-  def ensureCompacted(spark: SparkSession, sfDir: String): String = synchronized {
-    val out = compactedIndexDir(sfDir)
-    val marker = java.nio.file.Paths.get(out, "_cmp_done")
-    if (!builtCmp.contains(out)) {
-      if (!java.nio.file.Files.exists(marker)) {
-        graft.store.Manifest.deleteRecursively(java.nio.file.Paths.get(out))
-        val cfg = BuildConfig(out, nSegments = 8, waveSize = 8,
-          autoCompactFraction = 0)
-        IndexBuilder.build(spark, baseTurns(spark, sfDir), cfg)
-        IndexBuilder.build(spark, docsAsTurns(spark, sfDir), cfg)
-        graft.index.Incremental.compact(spark, out)
-        java.nio.file.Files.createFile(marker)
-      }
-      builtCmp += out
-    }
-    out
+  def ensureCompacted(spark: SparkSession, sfDir: String): String = fixture("cmp", sfDir) { out =>
+    val cfg = BuildConfig(out, nSegments = 8, waveSize = 8, autoCompactFraction = 0)
+    IndexBuilder.build(spark, baseTurns(spark, sfDir), cfg)
+    IndexBuilder.build(spark, docsAsTurns(spark, sfDir), cfg)
+    graft.index.Incremental.compact(spark, out)
   }
 
   // ---- atomic-update gate fixture ----
@@ -217,36 +155,19 @@ object FtIndex {
   // corpus, so a lost patch, a ghost of the old text, or a corrupted
   // unpatched document all hash-mismatch.
 
-  private val builtAtom = scala.collection.mutable.Set[String]()
-
-  def atomicIndexDir(sfDir: String): String = {
-    val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"/tmp/graft_ftatom_v$CacheVersion/$name"
-  }
-
-  def ensureAtomic(spark: SparkSession, sfDir: String): String = synchronized {
-    val out = atomicIndexDir(sfDir)
-    val marker = java.nio.file.Paths.get(out, "_atom_done")
-    if (!builtAtom.contains(out)) {
-      if (!java.nio.file.Files.exists(marker)) {
-        graft.store.Manifest.deleteRecursively(java.nio.file.Paths.get(out))
-        val cfg = BuildConfig(out, nSegments = 8, waveSize = 8)
-        val t = docsAsTurns(spark, sfDir)
-        IndexBuilder.build(spark, t, cfg)
-        val n = t.count()
-        val lo = n / 4
-        val cnt = math.max(1L, n / 50)
-        val sets = t.toDF()
-          .withColumn("id", origId(col("conv_id")))
-          .filter(col("id") >= lo && col("id") < lo + cnt)
-          .select(col("conv_id"), col("turn_idx"),
-            concat(col("text"), lit(" patched dup")).as("text"))
-        graft.index.Incremental.atomicSet(spark, cfg, sets)
-        java.nio.file.Files.createFile(marker)
-      }
-      builtAtom += out
-    }
-    out
+  def ensureAtomic(spark: SparkSession, sfDir: String): String = fixture("atom", sfDir) { out =>
+    val cfg = BuildConfig(out, nSegments = 8, waveSize = 8)
+    val t = docsAsTurns(spark, sfDir)
+    IndexBuilder.build(spark, t, cfg)
+    val n = t.count()
+    val lo = n / 4
+    val cnt = math.max(1L, n / 50)
+    val sets = t.toDF()
+      .withColumn("id", origId(col("conv_id")))
+      .filter(col("id") >= lo && col("id") < lo + cnt)
+      .select(col("conv_id"), col("turn_idx"),
+        concat(col("text"), lit(" patched dup")).as("text"))
+    graft.index.Incremental.atomicSet(spark, cfg, sets)
   }
 
   /** Original doc_id parsed back out of the engine conv_id

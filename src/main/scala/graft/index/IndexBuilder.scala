@@ -19,7 +19,6 @@ case class BuildConfig(outDir: String,
                        nSegments: Int = 0, // 0 → auto: max(64, nDocs/25k)
                        waveSize: Int = 0,  // 0 → auto: min(256, nSegments)
                        sortPartitions: Int = 0, // 0 → defaultParallelism
-                       resume: Boolean = true,
                        failAfterWaves: Int = -1, // test hook: simulated kill
                        poisonSegments: Set[Int] = Set.empty, // test hook: deterministic task failure
                        analyzer: Analyzer = Analyzer.V1,
@@ -104,7 +103,7 @@ class SimulatedKill(wave: Int) extends RuntimeException(s"simulated kill after w
  * Every index file is written inside the task that produces its rows
  * ([[graft.store.LocalParquet.write]]: a hidden name renamed on close),
  * with no Spark write job or commit protocol. Wave size bounds the
- * working set; killed builds resume by manifest anti-planning, and
+ * working set; a killed build reruns by manifest anti-planning, and
  * replays are idempotent (overwrite-by-partition).
  */
 object IndexBuilder {
@@ -202,7 +201,7 @@ object IndexBuilder {
 
   /** Builds the index of `turns` into `cfg.outDir`: a fresh build, a
     * delta against the index already there ([[Incremental.delta]]), or
-    * a resume of a killed build — then Phase B and finalize. Its Spark
+    * a rerun of a killed build — then Phase B and finalize. Its Spark
     * jobs are described `graft:build`. */
   def build(spark: SparkSession, turns: Dataset[Turn], cfg: BuildConfig): BuildReport =
     inBuildSession(spark, "build", turns.toDF()) { (bs, src) =>
@@ -280,7 +279,7 @@ object IndexBuilder {
       m.get("index_version").contains(IndexFormat.Version.toString) &&
       Files.exists(Paths.get(stagingDir(cfg.outDir))) && SegStats.present(cfg.outDir)
 
-  /** Routing: fresh build, delta, or resume; then [[finishBuild]]. */
+  /** Routing: fresh build, delta, or rerun; then [[finishBuild]]. */
   private def buildInner(spark: SparkSession, turns: Dataset[Turn], cfg: BuildConfig): BuildReport = {
     val t0 = System.currentTimeMillis()
     val mdir = manifestDir(cfg.outDir)
@@ -305,8 +304,8 @@ object IndexBuilder {
       }
     // analyzer/index_version checks REQUIRE the keys (not forall): a
     // pre-v2 on-disk index must trigger a clean full rebuild, never a
-    // resume into mixed-format tables
-    val canReuse = cfg.resume && prior.exists(compatible(cfg, _))
+    // reuse of mixed-format tables
+    val canReuse = prior.exists(compatible(cfg, _))
     val phaseAValid = canReuse && prior.exists(_.get("content_hash").contains(srcHash))
 
     val stats =
@@ -340,7 +339,7 @@ object IndexBuilder {
     val (nDocs, avgdl, _, nSegEff) = stats
     val mdir = manifestDir(cfg.outDir)
 
-    // ---- Phase B: postings in waves, resume-aware. A failing wave is
+    // ---- Phase B: postings in waves, rerun-aware. A failing wave is
     // isolated segment by segment; a deterministically-failing segment
     // accumulates attempts (across reruns too, via the ledger) and is
     // QUARANTINED at MaxAttempts — the build completes without it, the
@@ -434,7 +433,7 @@ object IndexBuilder {
     }
 
     // ---- finalize: dictionary + corpus_stats from the posting blocks
-    // (no extra tokenize pass; resumes for free — skipped iff nothing
+    // (no extra tokenize pass; reruns for free — skipped iff nothing
     // was rebuilt and a COMPLETE finalize manifest exists) ----
     val finPath = Manifest.finalizePath(mdir)
     val nTerms =
@@ -739,7 +738,7 @@ object IndexBuilder {
     // wave's commit point: a kill mid-publish leaves no ledger rows, so
     // the whole wave re-plans and the idempotent overwrites make the
     // replay safe. The ledger is a table (one JSONL file per wave) —
-    // resume planning reads waves-count files, never a directory of
+    // rerun planning reads waves-count files, never a directory of
     // 2^20 per-segment manifests.
     val wallMs = System.currentTimeMillis() - t0
     wave.foreach { seg =>
@@ -982,41 +981,8 @@ object IndexBuilder {
       private val ready = new java.util.ArrayDeque[PostingBlockRow]()
 
       private def encodeBlock(term: String, seg: Int, b: TermBuf): PostingBlockRow = {
-        val ids = java.util.Arrays.copyOf(b.ids, b.n)
-        val tfs = java.util.Arrays.copyOf(b.tfs, b.n)
-        val dls = java.util.Arrays.copyOf(b.dls, b.n)
-        var maxTf = 0
-        var minDl = Int.MaxValue
-        var cf = 0L
-        var i = 0
-        while (i < b.n) {
-          if (tfs(i) > maxTf) maxTf = tfs(i)
-          if (dls(i) < minDl) minDl = dls(i)
-          cf += tfs(i)
-          i += 1
-        }
-        // positions: delta within each posting's run, first absolute
-        // (the buffered ints are absolute; runs delimited by tfs).
-        // storePositions=false buffers none → empty column
-        val posDeltas = new Array[Int](b.pn)
-        if (b.pn > 0) {
-          var o = 0
-          i = 0
-          while (i < b.n) {
-            var j = 0
-            var prev = 0
-            while (j < tfs(i)) {
-              val p = b.pos(o)
-              posDeltas(o) = p - prev
-              prev = p; o += 1; j += 1
-            }
-            i += 1
-          }
-        }
-        val row = PostingBlockRow(term, seg, b.blockId, b.n, ids(b.n - 1),
-          maxTf, minDl,
-          VByte.encode(VByte.deltas(ids)), VByte.encodeInts(tfs),
-          VByte.encodeInts(dls), VByte.encodeInts(posDeltas), cf)
+        // storePositions=false buffers no positions → empty column
+        val row = PostingCodec.encodeBlock(term, seg, b.blockId, b.n, b.ids, b.tfs, b.dls, b.pos, b.pn)
         b.blockId += 1
         b.n = 0
         b.pn = 0

@@ -23,69 +23,45 @@ object PostingCodec extends Serializable {
 
   val BlockSize: Int = 128
 
-  /** Delta-encode one block's concatenated per-posting position runs
-    * (first position of each run absolute; positions within a doc are
-    * strictly ascending). `tfs` delimits the runs. */
-  def encodePositions(tfs: Array[Int], positions: Array[Array[Int]]): Array[Byte] = {
-    var total = 0
+  /** One block row from the first `n` postings of `ids`, `tfs` and
+    * `dls` (docId ascending): the skip metadata (max docId, max tf, min
+    * dl), cf and the VByte streams. `pos` holds the postings' absolute
+    * positions concatenated in posting order, `pn` of them (Σ tf, or 0
+    * for an index without positions); each posting's run is stored
+    * delta-encoded, its first position absolute. */
+  def encodeBlock(term: String, segment: Int, blockId: Int, n: Int, ids: Array[Long],
+                  tfs: Array[Int], dls: Array[Int], pos: Array[Int], pn: Int): PostingBlockRow = {
+    val bIds = java.util.Arrays.copyOf(ids, n)
+    val bTfs = java.util.Arrays.copyOf(tfs, n)
+    val bDls = java.util.Arrays.copyOf(dls, n)
+    var maxTf = 0
+    var minDl = Int.MaxValue
+    var cf = 0L
     var i = 0
-    while (i < positions.length) { total += positions(i).length; i += 1 }
-    val flat = new Array[Int](total)
-    var o = 0
-    i = 0
-    while (i < positions.length) {
-      val ps = positions(i)
-      require(ps.length == tfs(i), s"posting $i: ${ps.length} positions != tf ${tfs(i)}")
-      var j = 0
-      var prev = 0
-      while (j < ps.length) {
-        flat(o) = ps(j) - prev
-        prev = ps(j); o += 1; j += 1
-      }
+    while (i < n) {
+      if (bTfs(i) > maxTf) maxTf = bTfs(i)
+      if (bDls(i) < minDl) minDl = bDls(i)
+      cf += bTfs(i)
       i += 1
     }
-    VByte.encodeInts(flat)
-  }
-
-  /** Encode one term's postings (already sorted by docId ascending).
-    * `positions(i)` = posting i's token positions (ascending); null →
-    * position-less blocks (tests only; production always stores them). */
-  def encodeTerm(term: String, segment: Int,
-                 docIds: Array[Long], tfs: Array[Int], dls: Array[Int],
-                 positions: Array[Array[Int]] = null): Seq[PostingBlockRow] = {
-    require(docIds.length == tfs.length && tfs.length == dls.length)
-    val pos: Array[Array[Int]] =
-      if (positions != null) positions
-      // synthesized placeholder: tf positions 0..tf-1 per posting keeps
-      // the (sum tf = position count) invariant decoders rely on
-      else tfs.map(tf => Array.range(0, tf))
-    val out = Vector.newBuilder[PostingBlockRow]
-    var start = 0
-    var blockId = 0
-    while (start < docIds.length) {
-      val end = math.min(start + BlockSize, docIds.length)
-      val ids = java.util.Arrays.copyOfRange(docIds, start, end)
-      val btfs = java.util.Arrays.copyOfRange(tfs, start, end)
-      val bdls = java.util.Arrays.copyOfRange(dls, start, end)
-      val bpos = java.util.Arrays.copyOfRange(pos.asInstanceOf[Array[AnyRef]], start, end)
-        .asInstanceOf[Array[Array[Int]]]
-      var maxTf = 0
-      var minDl = Int.MaxValue
-      var cf = 0L
-      var i = 0
-      while (i < ids.length) {
-        if (btfs(i) > maxTf) maxTf = btfs(i)
-        if (bdls(i) < minDl) minDl = bdls(i)
-        cf += btfs(i)
+    val posDeltas = new Array[Int](pn)
+    if (pn > 0) {
+      var o = 0
+      i = 0
+      while (i < n) {
+        var j = 0
+        var prev = 0
+        while (j < bTfs(i)) {
+          val p = pos(o)
+          posDeltas(o) = p - prev
+          prev = p; o += 1; j += 1
+        }
         i += 1
       }
-      out += PostingBlockRow(term, segment, blockId, ids.length, ids.last,
-        maxTf, minDl, VByte.encode(VByte.deltas(ids)), VByte.encodeInts(btfs),
-        VByte.encodeInts(bdls), encodePositions(btfs, bpos), cf)
-      start = end
-      blockId += 1
     }
-    out.result()
+    PostingBlockRow(term, segment, blockId, n, bIds(n - 1), maxTf, minDl,
+      VByte.encode(VByte.deltas(bIds)), VByte.encodeInts(bTfs), VByte.encodeInts(bDls),
+      VByte.encodeInts(posDeltas), cf)
   }
 
   /** Decoded block: parallel arrays of absolute docIds, tfs, dls, each

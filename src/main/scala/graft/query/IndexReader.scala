@@ -13,14 +13,16 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Distributed BM25 top-k retrieval over a built index (SURVEY.md
- * §2.7): every top-k method builds a query [[Shape]], the shared
- * [[Lowering]] turns it into a [[Plan]] (dictionary expansions, df →
- * idf), and ONE executor runs any batch of plans in ONE Spark stage
- * with no shuffle: each task reads its own segments' postings files
- * in place ([[graft.store.LocalParquet]]) and runs each plan's
- * block-max WAND kernel into one bounded collector per query → driver
- * k-way merge per query under the total order (score desc, docId
- * asc). A single query is a batch of one.
+ * §2.7): every top-k query is a [[QuerySpec]] — the [[TopKSearch]]
+ * methods, [[searchMany]] and [[searchManyMixed]] — or, for
+ * [[moreLikeThis]], a shape of analyzed terms; the shared [[Lowering]]
+ * turns it into a [[Plan]] (dictionary expansions, df → idf), and ONE
+ * executor runs any batch of plans in ONE Spark stage
+ * with no shuffle, described `graft:<method>`: each task reads its
+ * own segments' postings files in place ([[graft.store.LocalParquet]])
+ * and runs each plan's block-max WAND kernel into one bounded
+ * collector per query → driver k-way merge per query under the total
+ * order (score desc, docId asc). A single query is a batch of one.
  *
  * What prunes the read: each postings file is term-sorted (a segment
  * has one, or several under a small encoder memory budget) and
@@ -64,7 +66,7 @@ import org.apache.spark.unsafe.types.UTF8String
  *   costs a launch and a result round-trip on the query's path)
  */
 class IndexReader(spark: SparkSession, dir: String,
-                  queryTasks: Int = 0) extends Serializable {
+                  queryTasks: Int = 0) extends TopKSearch with Serializable {
   import spark.implicits._
 
   /** `dir` as a local path: the index files are read in place. */
@@ -173,96 +175,15 @@ class IndexReader(spark: SparkSession, dir: String,
   private def serve1(method: String, shape: Shape, k: Int): Vector[QueryHit] =
     serve(method, Seq("" -> shape), k).map(r => QueryHit(r._3, r._4)).toVector
 
-  /** Top-k hits for a free-text query. Deterministic: tie-break
-    * (score desc, docId asc); summation in ascending term order. */
-  def search(query: String, k: Int = 10): Vector[QueryHit] =
-    serve1("search", lowering.free(query), k)
+  /** A [[TopKSearch]] query as one postings job, `graft:<method>`. */
+  protected[query] def topK(method: String, spec: QuerySpec, k: Int): Vector[QueryHit] =
+    serve1(method, lowering.spec(spec), k)
 
   /** The pre-driver-merge collected rows — package-visible so specs
     * can pin the O(k · tasks) collect bound. */
   private[query] def searchCollect(query: String, k: Int): Array[QueryHit] =
-    collectPlans("searchCollect", lowering.lower(Seq(lowering.free(query))).flatten.map("" -> _), k)
+    collectPlans("searchCollect", lowering.lower(Seq(lowering.spec(QuerySpec.Free(query)))).flatten.map("" -> _), k)
       .map(r => QueryHit(r._2, r._3))
-
-  /**
-   * Prefix (trailing-wildcard) top-k — Lucene PrefixQuery under its
-   * SCORING_BOOLEAN rewrite: the prefix expands against the dictionary
-   * to its matching terms (an in-process read of the dictionary row
-   * groups whose term range meets the prefix, never a postings read),
-   * and the expansion lowers to one disjunction with each expanded term
-   * keeping its own idf: one Spark job, the postings one.
-   * The prefix is lowercased but NOT analyzed (Lucene wildcard-term
-   * semantics — stemming a partial term would corrupt it); a trailing
-   * `*` is accepted and stripped. More than `maxExpansions` matching
-   * terms throws rather than silently truncating the match set —
-   * lengthen the prefix or raise the cap.
-   */
-  def searchPrefix(prefix: String, k: Int = 10,
-                   maxExpansions: Int = 1024): Vector[QueryHit] =
-    serve1("searchPrefix", Shape.Or(Seq(Shape.prefix(prefix, maxExpansions))), k)
-
-  /**
-   * Fuzzy top-k — Lucene FuzzyQuery under the same scoring-boolean
-   * rewrite as [[searchPrefix]]: the term expands against the
-   * dictionary to every vocabulary term within `maxEdits` Levenshtein
-   * edits, and the expansion lowers to one disjunction with each
-   * expanded term keeping its own idf. The expansion reads every
-   * dictionary row group in-process on the driver, decoding only the
-   * `term` column, and keeps the terms within the capped
-   * [[Shape.editDistance]] (which gives up as soon as a whole DP row
-   * exceeds `maxEdits`); it touches the DICTIONARY — the corpus
-   * vocabulary, orders of magnitude smaller than the postings — never
-   * a posting list, and runs no Spark job of its own. Lucene proper
-   * intersects a Levenshtein automaton with its term FST; this capped
-   * scan of the term column is that intersection's analog.
-   *
-   * The term is lowercased but NOT analyzed (Lucene fuzzy-term
-   * semantics — stemming a misspelling would corrupt it). More than
-   * `maxExpansions` matching terms throws rather than silently
-   * truncating the match set. `maxEdits` is capped at 2, Lucene's own
-   * bound — beyond 2 edits the expansion stops meaning "typo".
-   */
-  def searchFuzzy(term: String, maxEdits: Int = 2, k: Int = 10,
-                  maxExpansions: Int = 1024): Vector[QueryHit] =
-    serve1("searchFuzzy", Shape.Or(Seq(Shape.fuzzy(term, maxEdits, maxExpansions))), k)
-
-  /**
-   * Wildcard top-k — Lucene WildcardQuery under the same
-   * scoring-boolean rewrite as [[searchPrefix]]: the glob pattern
-   * (`*` = any run, `?` = one character) expands against the
-   * dictionary and the expansion lowers to one disjunction with each
-   * expanded term keeping its own idf. The
-   * pattern's literal prefix (the characters before the first
-   * wildcard) is a term range: the in-process dictionary read takes
-   * only the row groups that meet it — the columnar analog of Lucene
-   * seeking the term enum to the common prefix — and the full
-   * anchored regex then runs only on that slice. A leading-wildcard
-   * pattern is accepted (every row group's `term` column is read,
-   * exactly Lucene's cost caveat) but the read still touches the
-   * DICTIONARY only, never a posting list, and runs no Spark job of
-   * its own. The pattern is
-   * lowercased but NOT analyzed (Lucene wildcard-term semantics).
-   * More than `maxExpansions` matching terms throws rather than
-   * silently truncating the match set.
-   */
-  def searchWildcard(pattern: String, k: Int = 10,
-                     maxExpansions: Int = 1024): Vector[QueryHit] =
-    serve1("searchWildcard", Shape.Or(Seq(Shape.wildcard(pattern, maxExpansions))), k)
-
-  /**
-   * Query-time term boosting (Lucene's `term^boost` syntax): each
-   * term's score contribution scales by its boost, implemented by
-   * scaling the term's idf before it enters the WAND kernel — so
-   * every upper bound scales with the contribution and the pruning
-   * stays lossless (boosts must be ≥ 0; a 0 boost keeps the term
-   * matching at zero score, Lucene's behavior). A boost of 1.0 on
-   * every term reproduces [[search]] bit-exactly (×1.0 is exact in
-   * IEEE arithmetic). Each input is analyzed singly; one that
-   * analyzes to more or fewer than one token throws (boost a phrase
-   * by boosting its terms).
-   */
-  def searchBoosted(boosts: Seq[(String, Double)], k: Int = 10): Vector[QueryHit] =
-    serve1("searchBoosted", lowering.boosted(boosts), k)
 
   /**
    * Spellcheck / suggest (the Solr spellcheck component): the closest
@@ -281,29 +202,6 @@ class IndexReader(spark: SparkSession, dir: String,
     val f = Shape.fuzzy(term, maxEdits, n)
     suggestions(Seq(f), n)(f.q).toDF("term", "distance", "df")
   }
-
-  /**
-   * Query-STRING entry point: parse Lucene classic syntax
-   * ([[QueryParser]]) and lower it to one shape ([[Lowering.parsed]]).
-   * Supported shapes (the parser enforces the combinations that have
-   * exact semantics rather than silently approximating Lucene's free
-   * mixing):
-   *
-   *  - any `+term` / `-term` present → boolean query: `+` terms AND
-   *    plain terms are all required, `-` terms exclude
-   *    ([[searchBoolean]]); other clause kinds are rejected.
-   *  - a single `"phrase"` / `"phrase"~N` clause → exact phrase /
-   *    ordered proximity ([[searchNear]]).
-   *  - otherwise (plain, `^boost`, wildcard, `~fuzzy` clauses) → ONE
-   *    disjunctive query: wildcards and fuzzies expand against the
-   *    dictionary, and per-term boosts SUM across clauses — exactly
-   *    Lucene's additive clause scoring, since two SHOULD clauses on
-   *    the same term contribute (b₁+b₂)·idf·tfNorm — then everything
-   *    runs through the WAND kernel with boost-scaled idfs.
-   */
-  def searchParsed(q: String, k: Int = 10,
-                   maxExpansions: Int = 1024): Vector[QueryHit] =
-    serve1("searchParsed", lowering.parsed(q, maxExpansions), k)
 
   /** Term enumeration (the Solr terms component / Lucene TermsEnum):
     * dictionary terms matching an optional prefix, with their
@@ -414,23 +312,6 @@ class IndexReader(spark: SparkSession, dir: String,
   }
 
   /**
-   * Minimum-should-match top-k (the Solr/Lucene `mm` parameter): BM25
-   * over documents containing at least `minMatch` of the query's
-   * terms, scored over the matching terms only — the middle ground
-   * between the pure disjunction ([[search]], mm = 1) and the full
-   * conjunction ([[searchBoolean]], mm = n, whose scores it
-   * reproduces exactly). Lowers to the disjunction with the
-   * mm-extended pivot rule ([[Wand.topK]] `minMatch`).
-   *
-   * Terms absent from the corpus cannot match and do not count
-   * toward `minMatch` (Lucene semantics); if fewer than `minMatch`
-   * query terms exist in the corpus the result is empty.
-   */
-  def searchMinShouldMatch(query: String, minMatch: Int,
-                           k: Int = 10): Vector[QueryHit] =
-    serve1("searchMinShouldMatch", lowering.free(query, minMatch), k)
-
-  /**
    * Batched top-k: MANY queries against the index in ONE Spark job —
    * the serving-scale path (per-query jobs pay scheduler latency;
    * a batch amortizes the postings scan across queries). One postings
@@ -443,20 +324,19 @@ class IndexReader(spark: SparkSession, dir: String,
    * @return (query_id, rank, doc_id, score) rows, rank 1..k
    */
   def searchMany(queries: Seq[(String, String)], k: Int = 10): Seq[(String, Int, Long, Double)] =
-    serve("searchMany", queries.map { case (id, q) => id -> lowering.free(q) }, k)
+    serve("searchMany", queries.map { case (id, q) => id -> lowering.spec(QuerySpec.Free(q)) }, k)
 
   /**
-   * Mixed-shape batched serving: free-text, boolean (AND/NOT),
-   * phrase, minimum-should-match, prefix, and fuzzy queries answered
-   * together in ONE Spark job — one postings scan pruned to the union
-   * of every query's terms (prefix/fuzzy expansions included, each
-   * family resolved by ONE batch-wide dictionary scan), per-task
-   * θ-shared evaluation per query, driver merge per query. Every
-   * shape lowers exactly as its single-query method does, so results
-   * are identical to calling [[search]]/[[searchBoolean]]/
-   * [[searchPhrase]]/[[searchMinShouldMatch]]/[[searchPrefix]]/
-   * [[searchFuzzy]] per query, argument checks included (the
-   * SearchManySpec mixed test pins the parity).
+   * Mixed-shape batched serving: any [[QuerySpec]]s — free-text,
+   * boolean, phrase and proximity, minimum-should-match, boosted,
+   * prefix, wildcard, fuzzy and mixed (parsed) disjunctions — answered
+   * together in ONE Spark job: one postings scan pruned to the union of
+   * every query's terms (expansions included, each family resolved by
+   * ONE batch-wide dictionary scan), per-task θ-shared evaluation per
+   * query, driver merge per query. Every spec lowers exactly as its
+   * [[TopKSearch]] method's does, so results are identical to calling
+   * that method per query, argument checks included (SearchManySpec
+   * and LoweringPropertySpec pin the parity).
    *
    * @param queries (query_id, spec)
    * @return (query_id, rank, doc_id, score), rank 1..k
@@ -478,7 +358,7 @@ class IndexReader(spark: SparkSession, dir: String,
    */
   def searchWhere(query: String, predicate: org.apache.spark.sql.Column,
                   k: Int = 10): Vector[QueryHit] = {
-    val plan = lowering.lower(Seq(lowering.free(query))).head match {
+    val plan = lowering.lower(Seq(lowering.spec(QuerySpec.Free(query)))).head match {
       case Some(p) => p
       case None => return Vector.empty
     }
@@ -520,60 +400,6 @@ class IndexReader(spark: SparkSession, dir: String,
     best(perTask.toSeq, k).map { case (d, s) => QueryHit(d, s) }.toVector
   }
 
-  /**
-   * Boolean BM25 top-k: every `mustQuery` term required (AND), any
-   * `notQuery` term excluding (NOT) — the reference's Solr/Lucene
-   * boolean query shape, scored over the must terms only. One pruned
-   * postings scan of must ∪ not terms; per-segment leapfrog
-   * intersection ([[Wand.topKConjunctive]]); driver k-way merge.
-   */
-  def searchBoolean(mustQuery: String, notQuery: String = "",
-                    k: Int = 10): Vector[QueryHit] =
-    serve1("searchBoolean", lowering.boolean(mustQuery, notQuery), k)
-
-  /**
-   * Exact phrase top-k, INDEX-ONLY (format v3 positional postings): a
-   * single pruned postings scan of the phrase's distinct terms,
-   * per-segment conjunctive leapfrog + position-list adjacency
-   * counting ([[Wand.topKPhrase]]), driver k-way merge. No candidate
-   * cap, no re-read of document text — an all-common-terms phrase
-   * costs the conjunction, never a truncated answer. Scoring is Lucene
-   * PhraseQuery semantics: tf = phrase frequency, idf = Σ idf(term_i)
-   * over the phrase's terms in order (duplicates counted).
-   */
-  def searchPhrase(phrase: String, k: Int = 10): Vector[QueryHit] =
-    serve1("searchPhrase", lowering.near(phrase, 0), k)
-
-  /**
-   * Ordered proximity top-k (Lucene SpanNearQuery inOrder=true / the
-   * sloppy-phrase family): the phrase's terms must appear IN ORDER
-   * within a span of at most (m−1)+slop positions; `slop = 0` IS the
-   * exact phrase query ([[searchPhrase]] delegates here). Same
-   * index-only execution as the exact path — conjunctive leapfrog
-   * over the distinct terms, then greedy minimal-chain span counting
-   * over the v3 position lists ([[Wand.topKPhrase]]) with block-max
-   * early termination — and the same PhraseQuery scoring (tf = span
-   * count, idf = Σ idf(term_i) in phrase order). Each matching start
-   * position counts 1 (the span count — reproducible in plain SQL),
-   * not Lucene's 1/(1+dist) sloppyFreq weighting. A one-term phrase is
-   * the term query and needs no position lists.
-   */
-  def searchNear(phrase: String, slop: Int, k: Int = 10): Vector[QueryHit] =
-    serve1("searchNear", lowering.near(phrase, slop), k)
-
-  /**
-   * Two-term UNORDERED proximity top-k (SpanNearQuery inOrder=false):
-   * the terms must co-occur within |q − p| ≤ slop + 1 positions in
-   * EITHER order — pf counts `termA`'s qualifying occurrences
-   * ([[Wand.topKNearUnordered2]]), scored like the phrase family
-   * (tf = pf, idf = idf(A) + idf(B)). Same index-only execution as
-   * [[searchNear]]. Each term is analyzed singly and must survive as
-   * one distinct token.
-   */
-  def searchNearUnordered(termA: String, termB: String, slop: Int,
-                          k: Int = 10): Vector[QueryHit] =
-    serve1("searchNearUnordered", lowering.nearUnordered(termA, termB, slop), k)
-
   /** The relational paths' segment scan, a Dataset on the caller's
     * session: one task per [[segmentGroups]] entry reads each of its
     * segments' postings in place, pruned to `terms` (no position
@@ -603,7 +429,7 @@ class IndexReader(spark: SparkSession, dir: String,
    * rows; a match SET is unbounded and must not come home).
    */
   def matchingDocs(mustQuery: String, notQuery: String = ""): DataFrame =
-    lowering.lower(Seq(lowering.boolean(mustQuery, notQuery))).head match {
+    lowering.lower(Seq(lowering.spec(QuerySpec.Boolean(mustQuery, notQuery)))).head match {
       case Some(Plan.Conj(must, not, _)) =>
         scan(must ++ not) { byTerm =>
           val (mb, nb) = byTerm.partition { case (t, _) => must.contains(t) }
@@ -624,7 +450,7 @@ class IndexReader(spark: SparkSession, dir: String,
    * never the postings, never a driver materialization.
    */
   def scoredDocs(query: String, minMatch: Int = 1): DataFrame =
-    lowering.lower(Seq(lowering.free(query, minMatch))).head match {
+    lowering.lower(Seq(lowering.spec(QuerySpec.MinMatch(query, minMatch)))).head match {
       case Some(Plan.Disj(idfs, mm)) =>
         val avgdl = stats.avgdl
         scan(idfs.keys.toSeq.sorted)(Wand.scoredDocIds(_, idfs, avgdl, mm)).toDF("doc_id", "score")
@@ -1361,27 +1187,4 @@ private[query] object SegmentTask {
     }
     mergers.iterator.flatMap { case (id, m) => m.result.iterator.map(h => (id, h.doc_id, h.score)) }.toArray
   }
-}
-
-/** Query shapes for [[IndexReader.searchManyMixed]] — the Solr/Lucene
-  * query-type family the reference's sinks serve. Each lowers exactly
-  * as its single-query method does ([[Lowering.spec]]). */
-sealed trait QuerySpec extends Serializable
-object QuerySpec {
-  /** Free-text disjunctive BM25 (the [[IndexReader.search]] shape). */
-  case class Free(text: String) extends QuerySpec
-  /** Every must-term required, any not-term excluding. */
-  case class Boolean(must: String, not: String = "") extends QuerySpec
-  /** Ordered-adjacency phrase (Lucene PhraseQuery scoring). */
-  case class Phrase(text: String) extends QuerySpec
-  /** At least `m` of the query's terms required (Solr/Lucene `mm` —
-    * the [[IndexReader.searchMinShouldMatch]] shape). */
-  case class MinMatch(text: String, m: Int) extends QuerySpec
-  /** Trailing-wildcard prefix, dictionary-expanded (the
-    * [[IndexReader.searchPrefix]] shape). */
-  case class Prefix(prefix: String, maxExpansions: Int = 1024) extends QuerySpec
-  /** Levenshtein fuzzy term, dictionary-expanded (the
-    * [[IndexReader.searchFuzzy]] shape). */
-  case class Fuzzy(term: String, maxEdits: Int = 2,
-                   maxExpansions: Int = 1024) extends QuerySpec
 }

@@ -8,7 +8,11 @@ import org.apache.spark.sql.SparkSession
 /**
  * Serving mode: the whole index (compressed posting blocks +
  * dictionary + stats) loaded once into one process, queries answered
- * in-process with block-max WAND — no Spark job per query.
+ * in-process with block-max WAND — no Spark job per query. Its top-k
+ * methods are [[TopKSearch]]'s, bit-identical to [[IndexReader]]'s;
+ * its own are [[searchWhere]] (a docID test in place of a Column
+ * predicate) and [[searchDirichlet]]. The expansions scan the
+ * in-memory sorted vocabulary.
  *
  * This matches how the reference's sink actually serves: JesterJ
  * ships documents to Solr/OpenSearch and QUERIES are answered by a
@@ -31,7 +35,7 @@ class LocalIndex private (stats: CorpusStats,
                           positionsStored: Boolean = true,
                           cfs: java.util.HashMap[String, Long] =
                             new java.util.HashMap[String, Long](),
-                          totalTokens: Long = -1L) {
+                          totalTokens: Long = -1L) extends TopKSearch {
 
   val analyzer: Analyzer = Analyzer.parse(stats.analyzer)
   def nDocs: Long = stats.n_docs
@@ -63,8 +67,8 @@ class LocalIndex private (stats: CorpusStats,
   /** The local executor: the lowered plan over the whole-corpus
     * blocks — each term's blocks in global docId order form one
     * posting list, so the same kernel scores bit-identically. */
-  private def run(shape: Shape, k: Int, allow: Long => Boolean = null): Vector[QueryHit] =
-    lowering.lower(Seq(shape)).head match {
+  private def run(spec: QuerySpec, k: Int, allow: Long => Boolean = null): Vector[QueryHit] =
+    lowering.lower(Seq(lowering.spec(spec))).head match {
       case Some(p) =>
         val top = new Wand.TopKMerger(k)
         p.run(blocksOf(p.terms), stats.avgdl, top, allow)
@@ -72,8 +76,8 @@ class LocalIndex private (stats: CorpusStats,
       case None => Vector.empty
     }
 
-  /** In-process BM25 top-k; bit-identical to IndexReader.search. */
-  def search(query: String, k: Int = 10): Vector[QueryHit] = run(lowering.free(query), k)
+  /** A [[TopKSearch]] query in process: no Spark job. */
+  protected[query] def topK(method: String, spec: QuerySpec, k: Int): Vector[QueryHit] = run(spec, k)
 
   /** In-process metadata-filtered BM25 top-k: `allow` vetoes docIDs
     * after cursor alignment, before the collector (the [[Wand.topK]]
@@ -82,7 +86,7 @@ class LocalIndex private (stats: CorpusStats,
     * docID test (a serving node holds doc metadata in memory; the
     * cluster path resolves a Column predicate against doc_stats). */
   def searchWhere(query: String, allow: Long => Boolean,
-                  k: Int = 10): Vector[QueryHit] = run(lowering.free(query), k, allow)
+                  k: Int = 10): Vector[QueryHit] = run(QuerySpec.Free(query), k, allow)
 
   /** In-process Dirichlet-LM top-k (the second scorer): the same
     * per-term max(0, ln(1 + tf/(μ·p)) + ln(μ/(dl+μ))) arithmetic as
@@ -105,62 +109,6 @@ class LocalIndex private (stats: CorpusStats,
       .toVector.sorted(BM25.hitOrdering).take(k)
       .map { case (id, s) => QueryHit(id, s) }
   }
-
-  /** In-process prefix query; same expansion + scoring as
-    * IndexReader.searchPrefix (bit-identical hits). */
-  def searchPrefix(prefix: String, k: Int = 10,
-                   maxExpansions: Int = 1024): Vector[QueryHit] =
-    run(Shape.Or(Seq(Shape.prefix(prefix, maxExpansions))), k)
-
-  /** In-process wildcard query; same glob semantics as
-    * IndexReader.searchWildcard. */
-  def searchWildcard(pattern: String, k: Int = 10,
-                     maxExpansions: Int = 1024): Vector[QueryHit] =
-    run(Shape.Or(Seq(Shape.wildcard(pattern, maxExpansions))), k)
-
-  /** In-process fuzzy query; same Levenshtein expansion as
-    * IndexReader.searchFuzzy ([[Shape.editDistance]] is the
-    * same unit-cost distance as the engines'). */
-  def searchFuzzy(term: String, maxEdits: Int = 2, k: Int = 10,
-                  maxExpansions: Int = 1024): Vector[QueryHit] =
-    run(Shape.Or(Seq(Shape.fuzzy(term, maxEdits, maxExpansions))), k)
-
-  /** In-process query-time term boosting; same boost×idf pre-kernel
-    * scaling as IndexReader.searchBoosted. */
-  def searchBoosted(boosts: Seq[(String, Double)], k: Int = 10): Vector[QueryHit] =
-    run(lowering.boosted(boosts), k)
-
-  /** In-process query string; bit-identical to IndexReader.searchParsed. */
-  def searchParsed(q: String, k: Int = 10, maxExpansions: Int = 1024): Vector[QueryHit] =
-    run(lowering.parsed(q, maxExpansions), k)
-
-  /** In-process minimum-should-match; bit-identical to
-    * IndexReader.searchMinShouldMatch. */
-  def searchMinShouldMatch(query: String, minMatch: Int,
-                           k: Int = 10): Vector[QueryHit] =
-    run(lowering.free(query, minMatch), k)
-
-  /** In-process two-term unordered proximity; bit-identical to
-    * IndexReader.searchNearUnordered. */
-  def searchNearUnordered(termA: String, termB: String, slop: Int,
-                          k: Int = 10): Vector[QueryHit] =
-    run(lowering.nearUnordered(termA, termB, slop), k)
-
-  /** In-process boolean (AND/NOT) BM25 top-k; bit-identical to
-    * IndexReader.searchBoolean. */
-  def searchBoolean(mustQuery: String, notQuery: String = "",
-                    k: Int = 10): Vector[QueryHit] =
-    run(lowering.boolean(mustQuery, notQuery), k)
-
-  /** In-process exact phrase top-k over the v3 positional postings;
-    * bit-identical to IndexReader.searchPhrase. */
-  def searchPhrase(phrase: String, k: Int = 10): Vector[QueryHit] =
-    searchNear(phrase, 0, k)
-
-  /** In-process ordered proximity top-k (slop 0 = exact phrase);
-    * bit-identical to IndexReader.searchNear. */
-  def searchNear(phrase: String, slop: Int, k: Int = 10): Vector[QueryHit] =
-    run(lowering.near(phrase, slop), k)
 }
 
 object LocalIndex {

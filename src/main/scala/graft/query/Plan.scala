@@ -198,10 +198,12 @@ private[query] trait TermSource {
 }
 
 /**
- * The one lowering step: builds [[Shape]]s from user input with the
- * index's analyzer (each shape method holds its argument checks),
- * then lowers a batch of them to [[Plan]]s with one dictionary scan
- * per expansion family and one df lookup for the whole batch.
+ * The one lowering step: [[spec]] turns a [[QuerySpec]] into a
+ * [[Shape]] with the index's analyzer (each case holds its argument
+ * checks), then [[lower]] lowers a batch of shapes to [[Plan]]s with
+ * one dictionary scan per expansion family and one df lookup for the
+ * whole batch. A caller that already holds analyzed terms (more-like-
+ * this) builds its shape directly: re-analyzing would re-stem stems.
  */
 private[query] final class Lowering(analyzer: Analyzer, stats: CorpusStats,
                                     src: TermSource, positionsStored: Boolean) {
@@ -215,71 +217,33 @@ private[query] final class Lowering(analyzer: Analyzer, stats: CorpusStats,
     ts.head
   }
 
-  def free(text: String, minMatch: Int = 1): Shape =
-    Or(terms(text).map(Term(_)), math.max(1, minMatch))
-
-  def boolean(must: String, not: String): Shape = {
-    val m = terms(must)
-    And(m, terms(not).filterNot(m.contains))
-  }
-
-  def boosted(boosts: Seq[(String, Double)]): Shape = {
-    require(boosts.forall(_._2 >= 0), "boosts must be >= 0")
-    val ts = boosts.map { case (raw, b) => Term(one(raw, "boosted"), b) }
-    require(ts.map(_.t).distinct.length == ts.length, "duplicate boosted term")
-    Or(ts)
-  }
-
-  def near(text: String, slop: Int): Shape = {
-    require(slop >= 0, s"slop must be >= 0, got $slop")
-    Ordered(analyzer.tokenize(text), slop)
-  }
-
-  def nearUnordered(termA: String, termB: String, slop: Int): Shape = {
-    require(slop >= 0, s"slop must be >= 0, got $slop")
-    val (a, b) = (one(termA, "near"), one(termB, "near"))
-    require(a != b, "unordered near needs two distinct terms")
-    Pair(a, b, slop)
-  }
+  private def slopOf(slop: Int): Int = { require(slop >= 0, s"slop must be >= 0, got $slop"); slop }
 
   def spec(q: QuerySpec): Shape = q match {
-    case QuerySpec.Free(t) => free(t)
-    case QuerySpec.Boolean(m, n) => boolean(m, n)
-    case QuerySpec.Phrase(t) => near(t, 0)
-    case QuerySpec.MinMatch(t, m) => free(t, m)
-    case QuerySpec.Prefix(p, cap) => Or(Seq(prefix(p, cap)))
-    case QuerySpec.Fuzzy(t, me, cap) => Or(Seq(fuzzy(t, me, cap)))
+    case QuerySpec.Boolean(m, n) =>
+      val must = terms(m)
+      And(must, terms(n).filterNot(must.contains))
+    case QuerySpec.Phrase(t, slop) => Ordered(analyzer.tokenize(t), slopOf(slop))
+    case QuerySpec.MinMatch(t, m) => Or(terms(t).map(Term(_)), math.max(1, m))
+    case QuerySpec.NearUnordered(ta, tb, slop) =>
+      val (a, b) = (one(ta, "near"), one(tb, "near"))
+      require(a != b, "unordered near needs two distinct terms")
+      Pair(a, b, slopOf(slop))
+    case QuerySpec.Mixed(ms) => Or(ms.flatMap(clauses))
+    case d: QuerySpec.Disjunctive => Or(clauses(d))
   }
 
-  /** A Lucene classic query string ([[QueryParser]]) as one shape:
-    * any `+`/`-` clause makes a boolean query of the plain and `+`
-    * terms, which admits no other clause kind; a phrase clause must
-    * stand alone; otherwise every clause joins one disjunction, a
-    * term's boosts summing across clauses as in Lucene's additive
-    * SHOULD scoring. */
-  def parsed(q: String, maxExpansions: Int): Shape = {
-    import QueryParser.{Bare, Boosted, Must, Not, Phrase, Wild, Fuzzy => Fz}
-    val clauses = QueryParser.parse(q)
-    require(clauses.nonEmpty, "empty query string")
-    val musts = clauses.collect { case Must(t) => t }
-    val nots = clauses.collect { case Not(t) => t }
-    if (musts.nonEmpty || nots.nonEmpty) {
-      require(clauses.forall {
-        case _: Must | _: Not | _: Bare => true
-        case _ => false
-      }, "+/- (boolean) queries combine only with plain terms in this engine")
-      boolean((musts ++ clauses.collect { case Bare(t) => t }).mkString(" "), nots.mkString(" "))
-    } else clauses.collect { case p: Phrase => p } match {
-      case Seq() => Or(clauses.flatMap {
-        case Bare(t) => analyzer.tokenize(t).distinct.map(Term(_))
-        case Boosted(t, b) => Seq(Term(one(t, "boosted"), b))
-        case Wild(p) => Seq(wildcard(p, maxExpansions))
-        case Fz(t, me) => Seq(fuzzy(t, me, maxExpansions))
-        case _ => Nil
-      })
-      case Seq(p) if clauses.size == 1 => near(p.text, p.slop)
-      case _ => throw new IllegalArgumentException("a phrase clause must stand alone")
-    }
+  /** A disjunctive case's clauses: its terms, or its expansion. */
+  private def clauses(d: QuerySpec.Disjunctive): Seq[Clause] = d match {
+    case QuerySpec.Free(t) => terms(t).map(Term(_))
+    case QuerySpec.Boosted(bs) =>
+      require(bs.forall(_._2 >= 0), "boosts must be >= 0")
+      val ts = bs.map { case (raw, b) => Term(one(raw, "boosted"), b) }
+      require(ts.map(_.t).distinct.length == ts.length, "duplicate boosted term")
+      ts
+    case QuerySpec.Prefix(p, cap) => Seq(prefix(p, cap))
+    case QuerySpec.Wildcard(p, cap) => Seq(wildcard(p, cap))
+    case QuerySpec.Fuzzy(t, me, cap) => Seq(fuzzy(t, me, cap))
   }
 
   private def needsPositions(s: Shape): Boolean = s match {

@@ -19,7 +19,7 @@ class PostingCodecSpec extends AnyFunSuite {
 
   test("block round-trip preserves postings exactly") {
     samples(postingsGen).foreach { case (ids, tfs, dls) =>
-      val blocks = PostingCodec.encodeTerm("t", 0, ids, tfs, dls)
+      val blocks = TermBlocks.encodeTerm("t", 0, ids, tfs, dls)
       val decoded = blocks.flatMap { b =>
         val d = PostingCodec.decodeBlock(b)
         d.docIds.indices.map(i => (d.docIds(i), d.tfs(i), d.dls(i)))
@@ -33,7 +33,7 @@ class PostingCodecSpec extends AnyFunSuite {
     val ids = Array.tabulate(n)(i => (i * 3 + 1).toLong)
     val tfs = Array.fill(n)(2)
     val dls = Array.fill(n)(100)
-    val blocks = PostingCodec.encodeTerm("t", 3, ids, tfs, dls)
+    val blocks = TermBlocks.encodeTerm("t", 3, ids, tfs, dls)
     assert(blocks.length == math.ceil(n.toDouble / PostingCodec.BlockSize).toInt)
     assert(blocks.map(_.block_id) == blocks.indices)
     assert(blocks.forall(_.n_docs <= PostingCodec.BlockSize))
@@ -55,7 +55,7 @@ class PostingCodecSpec extends AnyFunSuite {
         while (i < tf) { out(i) = p; p += 1 + rng.nextInt(7); i += 1 }
         out
       }
-      val blocks = PostingCodec.encodeTerm("t", 0, ids, tfs, dls, positions)
+      val blocks = TermBlocks.encodeTerm("t", 0, ids, tfs, dls, positions)
       val decoded = blocks.flatMap { b =>
         val d = PostingCodec.decodeBlock(b)
         d.docIds.indices.map(i =>
@@ -69,7 +69,7 @@ class PostingCodecSpec extends AnyFunSuite {
     val ids = Array.tabulate(300)(i => (i * 2 + 1).toLong)
     val tfs = Array.tabulate(300)(i => 1 + i % 5)
     val dls = Array.fill(300)(50)
-    PostingCodec.encodeTerm("t", 0, ids, tfs, dls).foreach { b =>
+    TermBlocks.encodeTerm("t", 0, ids, tfs, dls).foreach { b =>
       val d = PostingCodec.decodeBlock(b)
       assert(d.posFlat.length == d.tfs.sum)
       d.docIds.indices.foreach { i =>
@@ -85,7 +85,7 @@ class PostingCodecSpec extends AnyFunSuite {
       // tf up to 50 over up to 128 postings: Σ tf in the hundreds
       val tfs = tfs0.map(tf => 1 + (tf * 3) % 50)
       val positions = tfs.map(tf => Array.tabulate(tf)(j => j * 3 + rng.nextInt(3)))
-      PostingCodec.encodeTerm("t", 0, ids, tfs, dls, positions).foreach { b =>
+      TermBlocks.encodeTerm("t", 0, ids, tfs, dls, positions).foreach { b =>
         val d = PostingCodec.decodeBlock(b)
         assert(d.docIds.sameElements(VByteOracle.undeltas(VByteOracle.decode(b.doc_deltas))))
         assert(d.tfs.sameElements(VByteOracle.decodeInts(b.tfs)))
@@ -95,14 +95,14 @@ class PostingCodecSpec extends AnyFunSuite {
         assert(d.docIds.length == b.n_docs && d.posFlat.length == b.block_cf)
       }
     }
-    val big = PostingCodec.encodeTerm("t", 0, Array.tabulate(128)(_.toLong + 1), Array.fill(128)(5),
+    val big = TermBlocks.encodeTerm("t", 0, Array.tabulate(128)(_.toLong + 1), Array.fill(128)(5),
       Array.fill(128)(9), Array.fill(128)(Array(0, 2, 4, 6, 8)))
     assert(big.size == 1 && big.head.block_cf == 640)
     assert(PostingCodec.decodeBlock(big.head).posFlat.sameElements(VByteOracle.positions(big.head.positions, Array.fill(128)(5))))
   }
 
   test("a block whose stream holds fewer values than n_docs or Σ tf throws") {
-    val b = PostingCodec.encodeTerm("t", 0, Array(3L, 9L, 12L), Array(2, 1, 3), Array(7, 8, 9)).head
+    val b = TermBlocks.encodeTerm("t", 0, Array(3L, 9L, 12L), Array(2, 1, 3), Array(7, 8, 9)).head
     intercept[IllegalArgumentException](PostingCodec.decodeBlock(b.copy(n_docs = 4)))
     intercept[IllegalArgumentException](PostingCodec.decodeBlock(b.copy(tfs = b.tfs.dropRight(1))))
     intercept[IllegalArgumentException](PostingCodec.decodeBlock(b.copy(positions = b.positions.dropRight(1))).posFlat)
@@ -111,7 +111,7 @@ class PostingCodecSpec extends AnyFunSuite {
 
   test("(block_max_tf, block_min_dl) bound in-block contributions at any avgdl") {
     samples(postingsGen, 50).foreach { case (ids, tfs, dls) =>
-      PostingCodec.encodeTerm("t", 0, ids, tfs, dls).foreach { b =>
+      TermBlocks.encodeTerm("t", 0, ids, tfs, dls).foreach { b =>
         val d = PostingCodec.decodeBlock(b)
         assert(b.block_max_tf == d.tfs.max)  // exact extrema, not approximate
         assert(b.block_min_dl == d.dls.min)

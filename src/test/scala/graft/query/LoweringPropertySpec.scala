@@ -11,9 +11,9 @@ import org.scalacheck.rng.Seed
 /** ScalaCheck property over the vocabulary of a small built index:
   * every query shape, lowered once and run by both executors, gives
   * bit-identical hits on the cluster single-query method, in one
-  * `searchManyMixed` batch (shapes QuerySpec has) and on [[LocalIndex]]
-  * — and those hits equal a brute-force scorer over the tokenized
-  * corpus, which shares no code with the lowering. */
+  * `searchManyMixed` batch of every query's [[QuerySpec]] and on
+  * [[LocalIndex]] — and those hits equal a brute-force scorer over the
+  * tokenized corpus, which shares no code with the lowering. */
 class LoweringPropertySpec extends SparkFunSuite {
 
   private val K = 7
@@ -111,11 +111,10 @@ class LoweringPropertySpec extends SparkFunSuite {
   private def expandFuzzy(q: String, e: Int) = vocab.filter(lev(_, q) <= e).map(_ -> 1.0)
 
   // ---- the generators ----
-  /** One query: its two single-query calls, its batch form if
-    * QuerySpec has the shape, and the brute-force answer. */
-  private case class Q(label: String, cluster: IndexReader => Vector[QueryHit],
-                       local: LocalIndex => Vector[QueryHit],
-                       spec: Option[QuerySpec], want: () => Vector[(Long, Double)])
+  /** One query: its single-query call (on either executor), its batch
+    * form and the brute-force answer. */
+  private case class Q(label: String, call: TopKSearch => Vector[QueryHit],
+                       spec: QuerySpec, want: () => Vector[(Long, Double)])
 
   private def term: Gen[String] = Gen.frequency(9 -> Gen.oneOf(vocab), 1 -> Gen.const("zzqx"))
   private def terms(lo: Int, hi: Int) = Gen.choose(lo, hi).flatMap(Gen.listOfN(_, term))
@@ -135,53 +134,49 @@ class LoweringPropertySpec extends SparkFunSuite {
   private def shapes: Seq[Gen[Q]] = Seq(
     terms(1, 4).map { ts =>
       val q = ts.mkString(" ")
-      Q(s"free '$q'", _.search(q, K), _.search(q, K), Some(QuerySpec.Free(q)),
-        () => disj(ts.distinct.map(_ -> 1.0)))
+      Q(s"free '$q'", _.search(q, K), QuerySpec.Free(q), () => disj(ts.distinct.map(_ -> 1.0)))
     },
     for (ms <- terms(1, 2); ns <- terms(0, 1)) yield {
       val (m, n) = (ms.mkString(" "), ns.mkString(" "))
-      Q(s"boolean +'$m' -'$n'", _.searchBoolean(m, n, K), _.searchBoolean(m, n, K),
-        Some(QuerySpec.Boolean(m, n)), () => conj(ms, ns.filterNot(ms.contains)))
+      Q(s"boolean +'$m' -'$n'", _.searchBoolean(m, n, K), QuerySpec.Boolean(m, n),
+        () => conj(ms, ns.filterNot(ms.contains)))
     },
     Gen.choose(1, 3).flatMap(window).map { ts =>
       val q = ts.mkString(" ")
-      Q(s"phrase '$q'", _.searchPhrase(q, K), _.searchPhrase(q, K), Some(QuerySpec.Phrase(q)),
-        () => near(ts, 0))
+      Q(s"phrase '$q'", _.searchPhrase(q, K), QuerySpec.Phrase(q), () => near(ts, 0))
     },
     for (ts <- terms(2, 4); m <- Gen.choose(2, 3)) yield {
       val q = ts.mkString(" ")
-      Q(s"mm '$q' $m", _.searchMinShouldMatch(q, m, K), _.searchMinShouldMatch(q, m, K),
-        Some(QuerySpec.MinMatch(q, m)), () => disj(ts.distinct.map(_ -> 1.0), m))
+      Q(s"mm '$q' $m", _.searchMinShouldMatch(q, m, K), QuerySpec.MinMatch(q, m),
+        () => disj(ts.distinct.map(_ -> 1.0), m))
     },
     for (t <- Gen.oneOf(vocab); n <- Gen.choose(1, 3)) yield {
       val p = t.take(n)
-      Q(s"prefix '$p'", _.searchPrefix(p, K), _.searchPrefix(p, K), Some(QuerySpec.Prefix(p)),
+      Q(s"prefix '$p'", _.searchPrefix(p, K), QuerySpec.Prefix(p),
         () => disj(vocab.filter(_.startsWith(p)).map(_ -> 1.0)))
     },
     for (t <- Gen.oneOf(vocab); f <- mutate(t); e <- Gen.choose(0, 2)) yield
-      Q(s"fuzzy '$f'~$e", _.searchFuzzy(f, e, K), _.searchFuzzy(f, e, K),
-        Some(QuerySpec.Fuzzy(f, e)), () => disj(expandFuzzy(f, e))),
+      Q(s"fuzzy '$f'~$e", _.searchFuzzy(f, e, K), QuerySpec.Fuzzy(f, e), () => disj(expandFuzzy(f, e))),
     Gen.choose(1, 3).flatMap(Gen.listOfN(_, Gen.zip(Gen.oneOf(vocab), boost))).map { bs0 =>
       val bs = bs0.groupBy(_._1).map(_._2.head).toSeq
-      Q(s"boosted $bs", _.searchBoosted(bs, K), _.searchBoosted(bs, K), None, () => disj(bs))
+      Q(s"boosted $bs", _.searchBoosted(bs, K), QuerySpec.Boosted(bs), () => disj(bs))
     },
     Gen.oneOf(vocab).filter(_.length >= 2).flatMap(pattern).map { p =>
-      Q(s"wildcard '$p'", _.searchWildcard(p, K), _.searchWildcard(p, K), None,
-        () => disj(expandGlob(p)))
+      Q(s"wildcard '$p'", _.searchWildcard(p, K), QuerySpec.Wildcard(p), () => disj(expandGlob(p)))
     },
     for (ts <- Gen.choose(2, 3).flatMap(window); s <- Gen.choose(0, 2)) yield {
       val q = ts.mkString(" ")
-      Q(s"near '$q'~$s", _.searchNear(q, s, K), _.searchNear(q, s, K), None, () => near(ts, s))
+      Q(s"near '$q'~$s", _.searchNear(q, s, K), QuerySpec.Phrase(q, s), () => near(ts, s))
     },
     for (ts <- window(3).filter(w => w.head != w.last); s <- Gen.choose(0, 2)) yield {
       val (a, b) = (ts.last, ts.head)
       Q(s"unordered '$a' '$b'~$s", _.searchNearUnordered(a, b, s, K),
-        _.searchNearUnordered(a, b, s, K), None, () => nearUnordered(a, b, s))
+        QuerySpec.NearUnordered(a, b, s), () => nearUnordered(a, b, s))
     },
     parsed)
 
   /** Query strings: a clause mix lowering to one disjunction, a
-    * boolean, or a sloppy phrase. */
+    * boolean, or a sloppy phrase; the batch runs the parser's spec. */
   private def parsed: Gen[Q] = {
     val clause: Gen[(String, () => Seq[(String, Double)])] = Gen.oneOf(vocab).flatMap { t =>
       Gen.oneOf(
@@ -198,7 +193,7 @@ class LoweringPropertySpec extends SparkFunSuite {
     val phrase = for (ts <- Gen.choose(2, 3).flatMap(window); s <- Gen.choose(0, 2)) yield
       ("\"" + ts.mkString(" ") + "\"~" + s, () => near(ts, s))
     Gen.oneOf(mix, bool, phrase).map { case (q, want) =>
-      Q(s"parsed '$q'", _.searchParsed(q, K), _.searchParsed(q, K), None, want)
+      Q(s"parsed '$q'", _.searchParsed(q, K), QueryParser.parse(q), want)
     }
   }
 
@@ -209,16 +204,15 @@ class LoweringPropertySpec extends SparkFunSuite {
       (0 until 5).flatMap(i => g.apply(Gen.Parameters.default, Seed(1000L * s + i)))
     }
     assert(qs.size >= 50, s"generators gave up: ${qs.size} queries")
-    val specs = qs.zipWithIndex.collect { case (q, i) if q.spec.isDefined => s"q$i" -> q.spec.get }
-    val batch = rdr.searchManyMixed(specs, K).groupBy(_._1).view
+    val batch = rdr.searchManyMixed(qs.zipWithIndex.map { case (q, i) => s"q$i" -> q.spec }, K).groupBy(_._1).view
       .mapValues(_.sortBy(_._2).map(r => (r._3, r._4)).toVector).toMap
     var nonEmpty = 0
     qs.zipWithIndex.foreach { case (q, i) =>
       val want = q.want()
       if (want.nonEmpty) nonEmpty += 1
-      assert(hits(q.cluster(rdr)) == want, s"cluster ${q.label}")
-      assert(hits(q.local(local)) == want, s"LocalIndex ${q.label}")
-      if (q.spec.isDefined) assert(batch.getOrElse(s"q$i", Vector.empty) == want, s"batch ${q.label}")
+      assert(hits(q.call(rdr)) == want, s"cluster ${q.label}")
+      assert(hits(q.call(local)) == want, s"LocalIndex ${q.label}")
+      assert(batch.getOrElse(s"q$i", Vector.empty) == want, s"batch ${q.label}")
     }
     assert(nonEmpty >= qs.size * 2 / 3, s"only $nonEmpty of ${qs.size} queries hit")
   }

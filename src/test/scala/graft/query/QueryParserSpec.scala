@@ -3,7 +3,7 @@ package graft.query
 import graft.SparkFunSuite
 import graft.index.{BuildConfig, IndexBuilder}
 import graft.sources.SyntheticTranscripts
-import graft.query.QueryParser._
+import graft.query.QuerySpec.{Boosted, Free, Fuzzy, Mixed, Phrase, Wildcard}
 
 /** The Lucene-classic query-string front door: pure parse tests, then
   * dispatch equivalences — every parsed shape must reproduce the
@@ -11,17 +11,27 @@ import graft.query.QueryParser._
   * independently brute-force-verified in their own specs). */
 class QueryParserSpec extends SparkFunSuite {
 
+  private def parse(q: String) = QueryParser.parse(q, 1024)
+
   test("parse: every clause shape") {
-    assert(parse("""+a -b c "d e"~3 f^2.5 g* h~1 i~""") == Vector(
-      Must("a"), Not("b"), Bare("c"), Phrase("d e", 3), Boosted("f", 2.5),
-      Wild("g*"), Fuzzy("h", 1), Fuzzy("i", 2)))
-    assert(parse(""""just a phrase"""") == Vector(Phrase("just a phrase", 0)))
-    assert(parse("w?ld mid*dle") == Vector(Wild("w?ld"), Wild("mid*dle")))
-    assert(parse("") == Vector.empty)
+    assert(parse("""c f^2.5 g* h~1 i~""") == Mixed(Seq(
+      Free("c"), Boosted(Seq("f" -> 2.5)), Wildcard("g*"), Fuzzy("h", 1), Fuzzy("i", 2))))
+    assert(parse("+a -b c +d -e") == QuerySpec.Boolean("a d c", "b e"))
+    assert(parse(""""d e"~3""") == Phrase("d e", 3))
+    assert(parse(""""just a phrase"""") == Phrase("just a phrase", 0))
+    assert(parse("w?ld mid*dle") == Mixed(Seq(Wildcard("w?ld"), Wildcard("mid*dle"))))
+    assert(parse("user") == Free("user") && parse("la^0.5") == Boosted(Seq("la" -> 0.5)))
+    assert(QueryParser.parse("g* h~1", 7) == Mixed(Seq(Wildcard("g*", 7), Fuzzy("h", 1, 7))))
+    intercept[IllegalArgumentException] { parse("") }
     intercept[IllegalArgumentException] { parse("term^") }
     intercept[IllegalArgumentException] { parse("term^-1") } // negative boost
     intercept[IllegalArgumentException] { parse("term~3") }  // edits out of range
     intercept[IllegalArgumentException] { parse("~2") }      // no term
+    // unsupported mixes are rejected at parse time, not approximated
+    intercept[IllegalArgumentException] { parse("+a b*") }
+    intercept[IllegalArgumentException] { parse("\"a b\" c") }
+    intercept[IllegalArgumentException] { parse("""+a -b c "d e"~3 f^2.5 g* h~1 i~""") }
+    intercept[IllegalArgumentException] { parse("++a") }
   }
 
   private lazy val fixture = {

@@ -92,6 +92,24 @@ class ServeJobSpec extends SparkFunSuite {
     assert(jobsOf(reader.searchManyMixed(mixed, 5)) == Seq("graft:searchManyMixed" -> 1))
   }
 
+  test("a searchManyMixed batch of every QuerySpec case runs one single-stage job") {
+    val every: Seq[(String, QuerySpec)] = Seq(
+      "free" -> QuerySpec.Free("user tool"),
+      "bool" -> QuerySpec.Boolean("user la", "bash"),
+      "phrase" -> QuerySpec.Phrase("user la"),
+      "near" -> QuerySpec.Phrase("user la", 2),
+      "mm" -> QuerySpec.MinMatch("user la ma", 2),
+      "prefix" -> QuerySpec.Prefix("us"),
+      "wild" -> QuerySpec.Wildcard("u?er"),
+      "fuzzy" -> QuerySpec.Fuzzy("usr", 1),
+      "boost" -> QuerySpec.Boosted(Seq("user" -> 2.0, "la" -> 0.5)),
+      "unord" -> QuerySpec.NearUnordered("la", "user", 1),
+      "mixed" -> QueryParser.parse("la^2 us* usr~1 tool"))
+    assert(every.map(_._2.getClass).distinct.size == 10)
+    assert(reader.searchManyMixed(every, 5).map(_._1).toSet.size >= every.size - 2)
+    assert(jobsOf(reader.searchManyMixed(every, 5)) == Seq("graft:searchManyMixed" -> 1))
+  }
+
   test("scoredDocs and matchingDocs each collect in one single-stage job: no postings shuffle") {
     assert(reader.scoredDocs("user la").collect().nonEmpty && reader.matchingDocs("user la").collect().nonEmpty)
     assert(jobsOf(reader.scoredDocs("user la").collect()).map(_._2) == Seq(1))

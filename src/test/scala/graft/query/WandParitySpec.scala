@@ -1,7 +1,7 @@
 package graft.query
 
 import graft.analysis.Tokenizer
-import graft.index.PostingCodec
+import graft.index.TermBlocks
 import graft.model.{PostingBlockRow, QueryHit}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,7 +50,7 @@ class WandParitySpec extends AnyFunSuite {
         }
       }
       seg -> byTerm.map { case (t, ps) =>
-        t -> PostingCodec.encodeTerm(t, seg, ps.map(_._1).toArray,
+        t -> TermBlocks.encodeTerm(t, seg, ps.map(_._1).toArray,
           ps.map(_._2).toArray, ps.map(_._3).toArray).toIndexedSeq
       }.toMap
     }
@@ -192,8 +192,8 @@ class WandParitySpec extends AnyFunSuite {
     val ids = Array.tabulate(n)(_.toLong)
     val tfs = Array.tabulate(n)(i => if (i < 20) 8 else 1)
     val dls = Array.tabulate(n)(i => 10 + i / 10)
-    val blkA = PostingCodec.encodeTerm("aa", 0, ids, tfs, dls).toIndexedSeq
-    val blkB = PostingCodec.encodeTerm("bb", 0, ids, tfs, dls).toIndexedSeq
+    val blkA = TermBlocks.encodeTerm("aa", 0, ids, tfs, dls).toIndexedSeq
+    val blkB = TermBlocks.encodeTerm("bb", 0, ids, tfs, dls).toIndexedSeq
     assert(blkA.length >= 30) // genuinely multi-block (exit has room to fire)
     val cAvgdl = dls.map(_.toDouble).sum / n
     val idfs = Map("aa" -> BM25.idf(n, n * 2L), "bb" -> BM25.idf(n, n * 2L))
@@ -209,7 +209,7 @@ class WandParitySpec extends AnyFunSuite {
     assert(got == exhaustive(_ => false))
     // with a NOT term excluding part of the head
     val notIds = ids.filter(_ % 3 == 0)
-    val blkN = PostingCodec.encodeTerm("nn", 0, notIds,
+    val blkN = TermBlocks.encodeTerm("nn", 0, notIds,
       Array.fill(notIds.length)(1), notIds.map(i => dls(i.toInt))).toIndexedSeq
     val gotNot = collect(10)(Wand.topKConjunctive(Map("aa" -> blkA, "bb" -> blkB),
       Map("nn" -> blkN), idfs, cAvgdl, _, Seq("aa", "bb"))).map(h => (h.doc_id, h.score))
@@ -227,7 +227,7 @@ class WandParitySpec extends AnyFunSuite {
     val dupTfs = dup.map { case (id, t) => (id, Tokenizer.docLength(t), Tokenizer.termFreqs(t)) }
     val ddfs = Map("alpha" -> 20L, "beta" -> 20L, "gamma" -> 20L)
     val davg = 3.0
-    val blocks = Map("alpha" -> PostingCodec.encodeTerm("alpha", 0,
+    val blocks = Map("alpha" -> TermBlocks.encodeTerm("alpha", 0,
       dup.map(_._1).toArray, Array.fill(20)(1), Array.fill(20)(3)).toIndexedSeq)
     val idfs = Map("alpha" -> BM25.idf(20, 20))
     val got = collect(5)(Wand.topK(blocks, idfs, davg, _))

@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.index.PostingCodec
+import graft.index.TermBlocks
 import graft.model.QueryHit
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * ScalaCheck properties of the [[Wand]] kernels over random corpora cut
  * into docId-contiguous segments and encoded with
- * [[PostingCodec.encodeTerm]] (frequent terms span several blocks per
+ * [[TermBlocks.encodeTerm]] (frequent terms span several blocks per
  * segment) — pure Scala, no Spark, fixed seeds. Every property is
  * checked against a brute-force scan of the token sequences, which
  * shares no code with the cursors, the leapfrog, the merge or the
@@ -50,7 +50,7 @@ class WandPropertySpec extends AnyFunSuite {
       Weighted.map(_._1).flatMap { t =>
         val ids = (lo until hi).filter(tf(_, t) > 0)
         if (ids.isEmpty) None
-        else Some(t -> PostingCodec.encodeTerm(t, seg, ids.map(_.toLong).toArray, ids.map(tf(_, t)).toArray,
+        else Some(t -> TermBlocks.encodeTerm(t, seg, ids.map(_.toLong).toArray, ids.map(tf(_, t)).toArray,
           ids.map(dl).toArray, ids.map(d => docs(d).indices.filter(docs(d)(_) == t).toArray).toArray).toIndexedSeq)
       }.toMap
     }
