@@ -22,13 +22,15 @@ import org.apache.spark.unsafe.types.UTF8String
  *    bytes, and every byte of a multi-byte character is ≥ 0x80, so byte
  *    runs are char runs.
  *
- *    V1 is NOT exactly `regexp_extract_all(lower(text), '[a-z0-9]+')`,
- *    the form the DuckDB oracles and the `lower(text)`-fed kernels
- *    compute. Spark's `lower` maps two non-ASCII code points to ASCII:
- *    U+212A (Kelvin sign) to `k` and U+0130 to `i` + U+0307. V1 folds
- *    ASCII only, so the index analyzer treats them as separators where
- *    the kernels see letters (TokenizerSpec pins this). That is why the
- *    index side never reads `lower(text)`.
+ *    On the index side V1 is NOT exactly
+ *    `regexp_extract_all(lower(text), '[a-z0-9]+')`, the form the
+ *    DuckDB oracles compute. Spark's `lower` maps two non-ASCII code
+ *    points to ASCII: U+212A (Kelvin sign) to `k` and U+0130 to `i` +
+ *    U+0307. The index analyzer folds ASCII only, so it treats them as
+ *    separators (TokenizerSpec pins this). The native text kernels
+ *    read [[foldCase]]d bytes instead, which give exactly the runs of
+ *    `lower(text)` (FoldCaseSpec checks every code point against
+ *    Spark), without calling `lower`.
  *  - Optional stages (off by default, unit-tested): English stopword
  *    removal and Porter stemming, mirroring the reference's `text_en`
  *    chain.
@@ -85,6 +87,35 @@ object Tokenizer extends Serializable {
   def docLengthU8(s: UTF8String): Int =
     if (s == null) 0 else count(new Runs(s.getBytes))
 
+  /**
+   * UTF-8 bytes case folded as the text kernels read them: on every
+   * `[a-z0-9]` run this equals Spark's `lower`. A–Z become a–z, U+212A
+   * (Kelvin sign, E2 84 AA) becomes `k`, and U+0130 (C4 B0) becomes
+   * `i` followed by its second byte, a separator, as `lower`'s `i` +
+   * U+0307 is. No other code point lowers to ASCII. Returns `bytes`
+   * itself when no byte needs folding, else a folded copy. Folding
+   * here spares every executor JVM the ICU set-up of Spark's `lower`.
+   */
+  def foldCase(bytes: Array[Byte]): Array[Byte] = {
+    val n = bytes.length
+    def kelvin(i: Int) = bytes(i) == 0xE2.toByte && i + 2 < n &&
+      bytes(i + 1) == 0x84.toByte && bytes(i + 2) == 0xAA.toByte
+    def dottedI(i: Int) = bytes(i) == 0xC4.toByte && i + 1 < n &&
+      bytes(i + 1) == 0xB0.toByte
+    var i = 0
+    while (i < n && !Runs.upper(bytes(i)) && !kelvin(i) && !dottedI(i)) i += 1
+    if (i == n) return bytes
+    val out = java.util.Arrays.copyOf(bytes, n)
+    var o = i
+    while (i < n) {
+      val k = kelvin(i)
+      out(o) = if (k) 'k' else if (dottedI(i)) 'i' else Runs.fold(bytes(i)).toByte
+      i += (if (k) 3 else 1)
+      o += 1
+    }
+    if (o == n) out else java.util.Arrays.copyOf(out, o)
+  }
+
   private def count(r: Runs): Int = {
     var n = 0
     while (r.next()) n += 1
@@ -135,10 +166,10 @@ object Tokenizer extends Serializable {
    * The V1 scanner: a zero-copy cursor over UTF-8 bytes. Each [[next]]
    * moves `[start, end)` to the next maximal run of ASCII `[A-Za-z0-9]`
    * bytes. Case folding is the caller's: [[term]] and [[hash]] fold
-   * ASCII, while the native kernels, fed `lower(text)`, read the bytes
-   * as they are. Every call site loops `while (r.next())` over this one
-   * class, so the JIT inlines it everywhere (a shared callback would go
-   * megamorphic).
+   * ASCII, while the native kernels scan [[Runs.folded]] bytes and read
+   * them as they are. Every call site loops `while (r.next())` over
+   * this one class, so the JIT inlines it everywhere (a shared callback
+   * would go megamorphic).
    */
   final class Runs(val bytes: Array[Byte]) {
     var start = 0
@@ -190,9 +221,12 @@ object Tokenizer extends Serializable {
     def apply(text: String): Runs =
       new Runs(if (text == null) Array.emptyByteArray else text.getBytes(UTF_8))
 
-    @inline private def upper(b: Byte): Boolean = b >= 'A' && b <= 'Z'
+    /** Runs of a kernel's input row, case folded by [[foldCase]]. */
+    def folded(s: UTF8String): Runs = new Runs(foldCase(s.getBytes))
+
+    @inline private[Tokenizer] def upper(b: Byte): Boolean = b >= 'A' && b <= 'Z'
     @inline private def alnum(b: Byte): Boolean =
       (b >= 'a' && b <= 'z') || upper(b) || (b >= '0' && b <= '9')
-    @inline private def fold(b: Byte): Int = if (upper(b)) b + 32 else b
+    @inline private[Tokenizer] def fold(b: Byte): Int = if (upper(b)) b + 32 else b
   }
 }

@@ -2,8 +2,7 @@ package graft.functions
 
 import graft.analysis.Tokenizer
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.ColumnBridge
@@ -13,10 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.ArrayBuffer
 
 /**
- * Native fixed-width token chunks over LOWERCASED text: tokenize (the
- * [[graft.analysis.Tokenizer.Runs]] byte runs) and emit consecutive
- * NON-overlapping `width`-token runs joined by a single space, ragged
- * tail kept, in document order (NOT deduplicated — chunk dedup elects
+ * Native fixed-width token chunks over raw text: tokenize (the
+ * [[graft.analysis.Tokenizer.Runs]] byte runs of the case-folded row,
+ * the runs of `lower(text)`) and emit consecutive NON-overlapping
+ * `width`-token runs joined by a single space, ragged tail kept, in
+ * document order (NOT deduplicated — chunk dedup elects
  * winners globally, so position identity matters). Parity-spec'd
  * against the declarative `transform(sequence(1, ceil(n/width)), i →
  * array_join(slice(toks, (i−1)·width+1, width), " "))` chain it
@@ -26,14 +26,9 @@ import scala.collection.mutable.ArrayBuffer
  * null (callers coalesce to [], the declarative `when(size > 0)`
  * fold).
  */
-case class ChunksExpr(child: Expression, width: Int) extends UnaryExpression {
+case class ChunksExpr(child: Expression, width: Int) extends TextKernel {
   require(width > 0, "width must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${other.catalogString}")
-  }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_chunks"
@@ -52,7 +47,7 @@ case class ChunksExpr(child: Expression, width: Int) extends UnaryExpression {
 object ChunksExpr {
 
   def compute(s: UTF8String, width: Int): GenericArrayData = {
-    val r = new Tokenizer.Runs(s.getBytes)
+    val r = Tokenizer.Runs.folded(s)
     val toks = new ArrayBuffer[String](16)
     while (r.next()) toks += r.term
     val nTok = toks.length
@@ -76,7 +71,7 @@ object ChunksExpr {
     new GenericArrayData(out)
   }
 
-  /** `compute(lower(text), width)` as a column. */
-  def apply(loweredText: Column, width: Int): Column =
-    ColumnBridge.column(ChunksExpr(ColumnBridge.expression(loweredText), width))
+  /** `compute(text, width)` as a column. */
+  def apply(text: Column, width: Int): Column =
+    ColumnBridge.column(ChunksExpr(ColumnBridge.expression(text), width))
 }

@@ -3,8 +3,7 @@ package graft.functions
 import graft.analysis.Tokenizer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graft.ColumnBridge
@@ -13,7 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * One-pass integer statistics for the Gopher repetition signals over
- * LOWERCASED text: `struct(n_tokens, n_distinct, max_tf, n_bigrams,
+ * raw text, tokenized as the case-folded runs of `lower(text)`:
+ * `struct(n_tokens, n_distinct, max_tf, n_bigrams,
  * n_distinct_bigrams)` — token counts via one hash map, distinct
  * bigrams via one hash set of exact adjacent-pair strings. The
  * fractions stay DECLARATIVE in
@@ -28,13 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * the zero-token row exactly like the declarative chain's null
  * propagation through `when(size > 0)`).
  */
-case class RepetitionStatsExpr(child: Expression) extends UnaryExpression {
+case class RepetitionStatsExpr(child: Expression) extends TextKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${other.catalogString}")
-  }
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
     StructField("n_distinct", LongType, nullable = false),
@@ -58,7 +53,7 @@ case class RepetitionStatsExpr(child: Expression) extends UnaryExpression {
 object RepetitionStatsExpr {
 
   def compute(s: UTF8String): InternalRow = {
-    val r = new Tokenizer.Runs(s.getBytes)
+    val r = Tokenizer.Runs.folded(s)
     val counts = new java.util.HashMap[String, Integer]()
     val bigrams = new java.util.HashSet[String]()
     var nTok = 0L
@@ -76,7 +71,7 @@ object RepetitionStatsExpr {
       if (nTok >= 2) nTok - 1 else 0L, bigrams.size.toLong))
   }
 
-  /** `compute(lower(text))` as a column. */
-  def apply(loweredText: Column): Column =
-    ColumnBridge.column(RepetitionStatsExpr(ColumnBridge.expression(loweredText)))
+  /** `compute(text)` as a column. */
+  def apply(text: Column): Column =
+    ColumnBridge.column(RepetitionStatsExpr(ColumnBridge.expression(text)))
 }

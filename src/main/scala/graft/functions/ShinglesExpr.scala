@@ -2,8 +2,7 @@ package graft.functions
 
 import graft.analysis.Tokenizer
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.ColumnBridge
@@ -13,10 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.ArrayBuffer
 
 /**
- * Native distinct word-k-shingle array over LOWERCASED text: tokenize
- * (the [[graft.analysis.Tokenizer.Runs]] byte runs, the V1 analyzer's
- * scanner) and emit each k-token window joined by a single space,
- * first-occurrence-deduplicated, in ONE pass per row.
+ * Native distinct word-k-shingle array over raw text: tokenize (the
+ * [[graft.analysis.Tokenizer.Runs]] byte runs of the case-folded row,
+ * the runs of `lower(text)`) and emit each k-token window joined by a
+ * single space, first-occurrence-deduplicated, in ONE pass per row.
  *
  * Semantically identical (ShinglesSpec pins the parity) to the
  * declarative `DeclOracles.shinglesDecl` chain
@@ -30,14 +29,9 @@ import scala.collection.mutable.ArrayBuffer
  * fewer than k tokens → one partial shingle (the declarative slice()
  * tail behavior).
  */
-case class ShinglesExpr(child: Expression, k: Int) extends UnaryExpression {
+case class ShinglesExpr(child: Expression, k: Int) extends TextKernel {
   require(k > 0, "k must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${other.catalogString}")
-  }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_shingles"
@@ -58,7 +52,7 @@ object ShinglesExpr {
   /** One scan: tokenize byte runs → k-window join → first-occurrence
     * dedup. Returns an empty array (never null) for token-less text. */
   def compute(s: UTF8String, k: Int): GenericArrayData = {
-    val r = new Tokenizer.Runs(s.getBytes)
+    val r = Tokenizer.Runs.folded(s)
     val toks = new ArrayBuffer[String](16)
     while (r.next()) toks += r.term
     val nTok = toks.length
@@ -86,7 +80,7 @@ object ShinglesExpr {
     new GenericArrayData(out)
   }
 
-  /** `compute(lower(text), k)` as a column. */
-  def apply(loweredText: Column, k: Int): Column =
-    ColumnBridge.column(ShinglesExpr(ColumnBridge.expression(loweredText), k))
+  /** `compute(text, k)` as a column. */
+  def apply(text: Column, k: Int): Column =
+    ColumnBridge.column(ShinglesExpr(ColumnBridge.expression(text), k))
 }

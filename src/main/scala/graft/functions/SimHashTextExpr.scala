@@ -2,18 +2,18 @@ package graft.functions
 
 import graft.analysis.Tokenizer
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Fully fused SimHash over an ALREADY-LOWERCASED string: tokenize
- * ([[graft.analysis.Tokenizer.Runs]], the V1 analyzer's scanner),
- * dedupe tokens, hash each distinct token, and advance every bit's
- * vote counter, all in ONE scan with no intermediate token array.
+ * Fully fused SimHash over raw text: tokenize (the
+ * [[graft.analysis.Tokenizer.Runs]] runs of the case-folded row, the
+ * runs of `lower(text)`), dedupe tokens, hash each distinct token,
+ * and advance every bit's vote counter, all in ONE scan with no
+ * intermediate token array.
  *
  * Equals `simHashBits(transform(array_distinct(tokens(text)), hash),
  * bits)` bit-for-bit (spec-pinned): dedupe is by token STRING (as
@@ -33,15 +33,10 @@ import org.apache.spark.unsafe.types.UTF8String
  * [[graft.operators.Dedup.simHash]] does).
  */
 case class SimHashTextExpr(child: Expression, bits: Int, poly: Boolean)
-  extends UnaryExpression {
+  extends TextKernel {
 
   require(bits >= 1 && bits <= 64, s"bits must be in [1, 64], got $bits")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${other.catalogString}")
-  }
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash_text"
 
@@ -61,7 +56,7 @@ object SimHashTextExpr {
 
   /** One scan: tokenize → string-dedupe → hash → vote. */
   def fingerprint(s: UTF8String, bits: Int, poly: Boolean): Long = {
-    val r = new Tokenizer.Runs(s.getBytes)
+    val r = Tokenizer.Runs.folded(s)
     val votes = new Array[Int](bits)
     val seen = new java.util.HashSet[String]()
     while (r.next()) {
@@ -91,8 +86,8 @@ object SimHashTextExpr {
     acc
   }
 
-  /** `fingerprint(lower(text), bits, poly)` as a column. */
-  def apply(loweredText: Column, bits: Int, poly: Boolean): Column =
+  /** `fingerprint(text, bits, poly)` as a column. */
+  def apply(text: Column, bits: Int, poly: Boolean): Column =
     ColumnBridge.column(SimHashTextExpr(
-      ColumnBridge.expression(loweredText), bits, poly))
+      ColumnBridge.expression(text), bits, poly))
 }

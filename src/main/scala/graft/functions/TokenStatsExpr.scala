@@ -3,8 +3,7 @@ package graft.functions
 import graft.analysis.Tokenizer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.ColumnBridge
@@ -12,9 +11,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native one-pass token statistics over an ALREADY-LOWERCASED string:
+ * Native one-pass token statistics over raw text:
  * `struct(n_tokens, len_sum, hits)` where tokens are the
- * [[graft.analysis.Tokenizer.Runs]] runs (the engine V1 analyzer),
+ * [[graft.analysis.Tokenizer.Runs]] runs of the case-folded row,
  * `len_sum` is the summed token length, and `hits(i)` counts tokens
  * contained in the i-th stopword list (shipped as plan data).
  *
@@ -26,21 +25,15 @@ import org.apache.spark.unsafe.types.UTF8String
  * [[SrpBucketExpr]]/[[SimHashExpr]] plan-data pattern again.
  *
  * Contract (bit-parity with the declarative forms, spec-pinned): the
- * caller passes `lower(text)` — Spark's own lowercasing — so Unicode
- * case-mapping corners live in `lower`, not here; on the lowered
- * string, `[a-z0-9]` runs over UTF-8 BYTES equal the regex semantics
- * (multi-byte code points never contain ASCII alphanumerics). Null
- * input → null struct (the declarative chain also null-propagates
- * under ANSI).
+ * caller passes the raw text, and `Tokenizer.foldCase` folds it to the
+ * `[a-z0-9]` runs of Spark's `lower(text)` — the two non-ASCII code
+ * points `lower` maps to ASCII included (FoldCaseSpec) — so on the
+ * folded bytes the runs equal the regex semantics (multi-byte code
+ * points never contain ASCII alphanumerics). Null input → null struct
+ * (the declarative chain also null-propagates under ANSI).
  */
 case class TokenStatsExpr(child: Expression, stopwordLists: Seq[Seq[String]])
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${other.catalogString}")
-  }
+  extends TextKernel {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", IntegerType, nullable = false),
@@ -75,11 +68,11 @@ case class TokenStatsExpr(child: Expression, stopwordLists: Seq[Seq[String]])
 
 object TokenStatsExpr {
 
-  /** One pass over the lowered string's UTF-8 bytes. Token strings are
+  /** One pass over the folded string's UTF-8 bytes. Token strings are
     * materialized only for runs short enough to be stopwords. */
   def stats(s: UTF8String, sets: Array[java.util.HashSet[String]],
             maxStop: Int): InternalRow = {
-    val r = new Tokenizer.Runs(s.getBytes)
+    val r = Tokenizer.Runs.folded(s)
     val hits = new Array[Int](sets.length)
     var nTok = 0
     var lenSum = 0L
@@ -99,8 +92,8 @@ object TokenStatsExpr {
       Array[Any](nTok, lenSum, new GenericArrayData(hits)))
   }
 
-  /** `stats(lower(text), lists)` as a struct column. */
-  def apply(loweredText: Column, stopwordLists: Seq[Seq[String]]): Column =
+  /** `stats(text, lists)` as a struct column. */
+  def apply(text: Column, stopwordLists: Seq[Seq[String]]): Column =
     ColumnBridge.column(TokenStatsExpr(
-      ColumnBridge.expression(loweredText), stopwordLists))
+      ColumnBridge.expression(text), stopwordLists))
 }

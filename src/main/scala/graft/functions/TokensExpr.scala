@@ -2,8 +2,7 @@ package graft.functions
 
 import graft.analysis.Tokenizer
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.ColumnBridge
@@ -13,8 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.ArrayBuffer
 
 /**
- * Native V1 token array over LOWERCASED text: the
- * [[graft.analysis.Tokenizer.Runs]] byte runs, in order, NOT
+ * Native V1 token array over raw text: the
+ * [[graft.analysis.Tokenizer.Runs]] byte runs of the case-folded row
+ * (`Runs.folded`, the runs of `lower(text)`), in order, NOT
  * deduplicated — the engine-analyzer token stream as one fused scan.
  * Replaces the declarative `filter(split(regexp_replace(lower(text),
  * "[^a-z0-9]+", " "), " "), len > 0)` chain (regexp + split are
@@ -22,17 +22,11 @@ import scala.collection.mutable.ArrayBuffer
  * interpreted and copies the array per row). Parity-spec'd against
  * the declarative twin (`DeclOracles.tokensDecl`); null text → null
  * (the declarative chain's null propagation), token-less text → empty
- * array. Token substrings are zero-copy views into the input's bytes
- * (`UTF8String.fromBytes` aliases the backing array, which is
- * immutable for the duration of the row).
+ * array. Token substrings are zero-copy views into the folded bytes
+ * (`UTF8String.fromBytes` aliases the array, which no one mutates).
  */
-case class TokensExpr(child: Expression) extends UnaryExpression {
+case class TokensExpr(child: Expression) extends TextKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${other.catalogString}")
-  }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_tokens"
@@ -51,13 +45,13 @@ case class TokensExpr(child: Expression) extends UnaryExpression {
 object TokensExpr {
 
   def compute(s: UTF8String): GenericArrayData = {
-    val r = new Tokenizer.Runs(s.getBytes)
+    val r = Tokenizer.Runs.folded(s)
     val out = new ArrayBuffer[Any](8)
     while (r.next()) out += UTF8String.fromBytes(r.bytes, r.start, r.length)
     new GenericArrayData(out.toArray)
   }
 
-  /** `compute(lower(text))` as a column. */
-  def apply(loweredText: Column): Column =
-    ColumnBridge.column(TokensExpr(ColumnBridge.expression(loweredText)))
+  /** `compute(text)` as a column. */
+  def apply(text: Column): Column =
+    ColumnBridge.column(TokensExpr(ColumnBridge.expression(text)))
 }

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Deduplication operators for large-scale training-data pipelines.
@@ -58,7 +62,7 @@ object Dedup {
     * twin `DeclOracles.tokensDecl` is kept as the spec'd parity reference: its
     * trailing `filter` HOF was interpreted per row). */
   def tokens(textCol: Column): Column =
-    graft.functions.TokensExpr(lower(textCol))
+    graft.functions.TokensExpr(textCol)
 
   /** Word k-shingles as a distinct array (engine-analyzer tokens, so
     * dedup and the fulltext index agree on what a "word" is).
@@ -71,7 +75,7 @@ object Dedup {
     * transform/slice/array_join/array_distinct chain dominated the
     * decontamination and n-gram-Jaccard profiles. */
   def shingles(textCol: Column, k: Int): Column =
-    coalesce(graft.functions.ShinglesExpr(lower(textCol), k),
+    coalesce(graft.functions.ShinglesExpr(textCol, k),
       array().cast("array<string>"))
 
   /**
@@ -105,7 +109,7 @@ object Dedup {
     * vote in one scan ([[graft.functions.SimHashTextExpr]]); null
     * text degrades to fingerprint 0 like the declarative chain. */
   def simHashText(textCol: Column, bits: Int, poly: Boolean): Column =
-    coalesce(graft.functions.SimHashTextExpr(lower(textCol), bits, poly), lit(0L))
+    coalesce(graft.functions.SimHashTextExpr(textCol, bits, poly), lit(0L))
 
   /** Oracle-checkable SimHash over `bits` low bits of the polynomial
     * token hash (production [[simHash]] uses 64-bit xxhash64). */
@@ -303,78 +307,67 @@ object Dedup {
     * document per component, drop the rest): iterative minimum-label
     * propagation to the smallest reachable id (the plain-MapReduce CC
     * construction — Afrati & Ullman / the "hash-to-min" family).
-    * Returns (id, component) for every VERTEX of the pair graph;
-    * singletons never appear in pair lists, so compose with a
-    * left_anti + own-id default for the full-corpus view.
+    * Returns (id, component) for every non-null VERTEX of the pair
+    * graph; singletons never appear in pair lists, so compose with a
+    * left_anti + own-id default for the full-corpus view. A pair with
+    * one null id keeps its other id as a vertex and adds no edge.
     *
-    * Scale shape: each round is one edge⨝label shuffle, one
-    * map-side-combinable min-aggregate, and one POINTER-JUMP relabel
+    * Scale shape: RDD rounds over one `HashPartitioner` (sized by
+    * `spark.sql.shuffle.partitions`). The adjacency lists are
+    * partitioned once and kept; the labels keep the same partitioner,
+    * so the label⨝adjacency propagate is narrow. Each round is a
+    * map-side-combined min-reduce and a POINTER-JUMP relabel
     * (component := label(component) — every label is itself a vertex
-    * id, so the self-join always resolves), which squares the hop
-    * distance per round: convergence in O(log diameter) rounds, not
-    * O(diameter) — long near-dup CHAINS (A~B~C~…, each hop under the
-    * LSH threshold) otherwise force one round per hop, measured 20+
-    * rounds on banded simhash graphs. `maxIter` bounds pathology.
-    * Every round TRUNCATES LINEAGE with an eager localCheckpoint —
-    * persist alone is not enough for iterative plans: cached data is
-    * matched only after the WHOLE logical tree is re-analyzed, and
-    * each round's tree embeds two copies of the previous round's
-    * (the self-join), so Catalyst analysis grows 2^rounds × the pair-
-    * source plan (measured 17 s/round on a 200-vertex graph before
-    * the change, sub-second after). localCheckpoint trades replay-
-    * ability on executor loss for flat plans; a real cluster swaps in
-    * reliable `checkpoint` for fault tolerance. The convergence check
-    * is an exact changed-row count. Deterministic at any parallelism
-    * (min is order-free; the jump preserves the min-reachable
-    * invariant). */
+    * id), which lets a label skip along long near-dup CHAINS (A~B~C~…,
+    * each hop under the LSH threshold): a label run toward the chain's
+    * least id halves its distance per round instead of moving one hop.
+    * Two local minima on one chain still meet one hop per round, so
+    * `maxIter` can bind on a long chain. A round is ONE Spark job: its
+    * changed-label count also materializes the round's
+    * localCheckpoint, which truncates the lineage (a real cluster swaps
+    * in reliable `checkpoint` for fault tolerance). Deterministic at
+    * any parallelism (min is order-free; the jump preserves the
+    * min-reachable invariant). */
   def nearDupComponents(pairs: DataFrame, idA: String = "id_a",
                         idB: String = "id_b", maxIter: Int = 25): DataFrame = {
     require(maxIter > 0, "maxIter must be positive")
-    val e0 = pairs.select(col(idA).cast("long").as("a"), col(idB).cast("long").as("b"))
-    // eager localCheckpoints: the pair-source plan is evaluated ONCE
-    // and every later round plans against a flat checkpointed scan
-    val edges = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint(true)
-    var ckpt = edges.select(col("a").as("id")).distinct()
-      .withColumn("component", col("id")).localCheckpoint(true)
-    var labels = ckpt
+    val spark = pairs.sparkSession
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    // vertex → its distinct neighbours, itself included, so a vertex's
+    // own label is one of the messages it receives
+    val adj = pairs.select(col(idA).cast("long"), col(idB).cast("long")).rdd
+      .flatMap { r =>
+        val ids = (0 to 1).filterNot(r.isNullAt).map(r.getLong)
+        ids.flatMap(v => ids.map(v -> _))
+      }
+      .groupByKey(part).mapValues(_.toArray.distinct)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // (vertex, (label, label before the round))
+    var labels: RDD[(Long, (Long, Long))] =
+      adj.mapPartitions(_.map { case (v, _) => (v, (v, v)) }, preservesPartitioning = true)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val prop = edges.join(
-          labels.select(col("id").as("b"), col("component").as("nl")), Seq("b"))
-        .select(col("a").as("id"), col("nl").as("component"))
-      // alias both union branches to FRESH attribute ids: `labels`'
-      // checkpointed attributes appear inside `prop`'s plan too, and a
-      // union whose branches share attribute ids trips Catalyst's
-      // constraint rewrite (NoSuchElementException in rewriteConstraints)
-      val own = labels.select(col("id").as("id"), col("component").as("component"))
-      val stepped = own
-        .union(prop.select(col("id").as("id"), col("component").as("component")))
-        .groupBy("id").agg(min(col("component")).as("component"))
-      // pointer jump (follow the label one more hop through itself) and
-      // the changed-vs-previous flag ride ONE materialization: the
-      // convergence check is then a checkpoint-partition scan, not the
-      // second shuffle-join job per round it used to be
-      val next = stepped.as("x")
-        .join(stepped.select(col("id").as("cid"), col("component").as("cc")).as("y"),
-          col("x.component") === col("y.cid"), "left")
-        .join(labels.select(col("id").as("id"), col("component").as("old")), Seq("id"))
-        .select(col("id"),
-          coalesce(col("cc"), col("x.component")).as("component"),
-          (coalesce(col("cc"), col("x.component")) < col("old")).as("chg"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("chg")).count()
-      ckpt.unpersist()
-      ckpt = next
-      labels = next.select("id", "component")
-      converged = changed == 0
+      val stepped = adj.join(labels, part)
+        .flatMap { case (_, (ns, (l, _))) => ns.iterator.map(_ -> l) }
+        .reduceByKey(part, (a, b) => math.min(a, b))
+      // pointer jump: each vertex asks its label's owner for that
+      // owner's label; the join with `labels` sends the answer back to
+      // the vertex's partition
+      val jumped = stepped.map(_.swap).join(stepped, part)
+        .map { case (_, (v, l)) => (v, l) }
+      val next = jumped.join(labels, part)
+        .mapValues { case (l, (old, _)) => (l, old) }.localCheckpoint()
+      converged = next.filter { case (_, (l, old)) => l < old }.count() == 0
+      labels.unpersist()
+      labels = next
       iter += 1
     }
-    edges.unpersist()
+    adj.unpersist()
     require(converged, s"nearDupComponents did not converge in $maxIter rounds " +
       "(graph diameter exceeds the bound — raise maxIter)")
-    labels
+    spark.createDataFrame(labels.map { case (v, (l, _)) => Row(v, l) }, StructType(Seq(
+      StructField("id", LongType), StructField("component", LongType))))
   }
 
   /** Paragraph-level exact dedup (the CCNet / MassiveText stage that
@@ -411,7 +404,7 @@ object Dedup {
     // dominated this operator's noop-isolated compute)
     val withChunks = df
       .select(col(idCol).cast("long").as("doc_id"),
-        coalesce(graft.functions.ChunksExpr(lower(col(textCol)), chunkTokens),
+        coalesce(graft.functions.ChunksExpr(col(textCol), chunkTokens),
           array().cast("array<string>")).as("chunks"))
     val ex = withChunks
       .select(col("doc_id"), posexplode(col("chunks")))

@@ -17,7 +17,7 @@ object TextAnalysis {
     * native fused scan ([[graft.functions.TokensExpr]]; parity with
     * the declarative chain pinned via `DeclOracles.tokensDecl`). */
   def tokensCol(text: Column): Column =
-    graft.functions.TokensExpr(lower(text))
+    graft.functions.TokensExpr(text)
 
   private val StopwordLists: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "a", "and", "of", "to", "in", "is", "that", "it", "for"),
@@ -41,7 +41,7 @@ object TextAnalysis {
     * hits[lang in sorted order]). Materialized into a column so the
     * scan runs once per row however many signals read it. */
   private def tokenStats(text: Column): Column =
-    graft.functions.TokenStatsExpr(lower(text), Langs.map(StopwordLists(_)))
+    graft.functions.TokenStatsExpr(text, Langs.map(StopwordLists(_)))
 
   /** N-gram-heuristic language ID: the language whose stopword list
     * hits most tokens wins; ties broken by language code order;
@@ -135,7 +135,7 @@ object TextAnalysis {
       (nb - st.getField("n_distinct_bigrams")).cast("double") / nb)
       .otherwise(lit(0.0))
     df.withColumn(tmp, coalesce(
-        graft.functions.RepetitionStatsExpr(lower(col(textCol))),
+        graft.functions.RepetitionStatsExpr(col(textCol)),
         struct(lit(0L).as("n_tokens"), lit(0L).as("n_distinct"),
           lit(0L).as("max_tf"), lit(0L).as("n_bigrams"),
           lit(0L).as("n_distinct_bigrams"))))

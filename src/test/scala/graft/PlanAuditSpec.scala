@@ -136,6 +136,30 @@ class PlanAuditSpec extends SparkFunSuite {
       .contains("graft_dot"))
   }
 
+  test("text kernels fold case themselves: no curate plan calls lower()") {
+    val docs = spark.range(0, 4).select(col("id").as("doc_id"),
+      concat(lit("The Quick fox LA "), col("id").cast("string")).as("text"))
+    val bench = docs.filter(col("doc_id") < 2)
+    import graft.operators.{Dedup, TextAnalysis}
+    // Spark's lower() costs every executor JVM a one-off ICU set-up
+    // of over a second; the kernels' own fold gives the same runs
+    Seq(
+      "minHashNearDups" -> Dedup.minHashNearDups(docs, "doc_id", "text"),
+      "simHashNearDups" -> Dedup.simHashNearDups(docs, "doc_id", "text"),
+      "decontaminate" -> Dedup.decontaminate(docs, bench, "doc_id", "text"),
+      "chunkDedup" -> Dedup.chunkDedup(docs, "doc_id", "text"),
+      "repetitionSignals" -> TextAnalysis.repetitionSignals(docs, "text"),
+      "qualityScore" -> TextAnalysis.qualityScore(docs, "text"),
+      "languageId" -> TextAnalysis.languageId(docs, "text"),
+      "lmScores" -> TextAnalysis.lmScores(docs, "doc_id", "text"),
+      "tokenEntropy" -> TextAnalysis.tokenEntropy(docs, "doc_id", "text")
+    ).foreach { case (name, df) =>
+      val plan = planOf(df)
+      assert(plan.contains("graft_"), s"$name has no native kernel")
+      assert(!plan.contains("lower("), s"$name calls lower():\n${plan.take(3000)}")
+    }
+  }
+
   test("constant-zero rank-window key survives the optimizer (warning suppression intact)") {
     // non-nullable input (spark.range id) — exactly the case where
     // Spark 4 simplifies `x · 0` to a foldable 0 and

@@ -11,9 +11,10 @@ import org.scalacheck.rng.Seed
 
 /** ScalaCheck properties of the V1 scanner ([[Tokenizer.Runs]]) over
   * arbitrary Unicode: the index-side functions against an independent
-  * regex reference, and every kernel built on the scanner against its
-  * declarative oracle. Generators run with fixed seeds, as in the
-  * codec specs. */
+  * regex reference, and every kernel built on the scanner, fed the raw
+  * text it folds itself, against its declarative oracle over
+  * `lower(text)`. Generators run with fixed seeds, as in the codec
+  * specs. */
 class TokenizerPropertySpec extends SparkFunSuite {
   import graft.SparkTestBase.spark.implicits._
 
@@ -81,7 +82,7 @@ class TokenizerPropertySpec extends SparkFunSuite {
     for (k <- Seq(1, 3)) assertSameColumn(Dedup.shingles($"text", k),
       DeclOracles.shinglesDecl($"text", k))
     assertSameColumn(
-      coalesce(graft.functions.ChunksExpr(lower($"text"), 2), array().cast("array<string>")),
+      coalesce(graft.functions.ChunksExpr($"text", 2), array().cast("array<string>")),
       DeclOracles.chunksDecl($"text", 2))
   }
 
@@ -98,7 +99,7 @@ class TokenizerPropertySpec extends SparkFunSuite {
   test("TokenStatsExpr and RepetitionStatsExpr equal their declarative oracles") {
     val lists = Seq(Seq("the", "a", "k", "i"), Seq("de", "la", "x1"))
     val toks = DeclOracles.tokensDecl($"text")
-    assertSameColumn(TokenStatsExpr(lower($"text"), lists),
+    assertSameColumn(TokenStatsExpr($"text", lists),
       when($"text".isNotNull, struct(size(toks).as("n_tokens"),
         aggregate(toks, lit(0L), (acc, t) => acc + length(t)).as("len_sum"),
         array(lists.map(l => size(filter(toks, t => t.isInCollection(l)))): _*).as("hits"))))

@@ -60,13 +60,27 @@ object DeclOracles {
     bitCols.reduce((a: Column, b: Column) => a.bitwiseOR(b))
   }
 
+  /** Declarative (pure functions._) twin of the native MinHash
+    * signature ([[graft.functions.MinHashSigExpr]]): the token array's
+    * k-shingles (the ragged-tail slice form, empty shingles dropped),
+    * hashed, then the n-position running min; null when the row has
+    * no shingle. */
+  def minHashSigDecl(toks: Column, k: Int, n: Int, crossEngine: Boolean): Column = {
+    val sh = filter(transform(sequence(lit(0), greatest(size(toks) - k, lit(0))),
+        i => array_join(slice(toks, i + lit(1), lit(k)), " ")),
+      s => length(s) > lit(0))
+    val hash: Column => Column =
+      if (crossEngine) polyHashDecl else s => pmod(xxhash64(s), lit(P))
+    when(size(sh) > 0, Hashing.minHashSig(transform(sh, hash), n))
+  }
+
   /** Declarative (pure functions._) twin of the native band hash
     * ([[graft.functions.BandHashExpr]]), kept only as the spec'd
     * parity reference. */
   def bandHashDecl(sig: Column, bands: Int, rowsPerBand: Int,
                    crossEngine: Boolean): Column = {
     val bandHash: Column => Column =
-      if (crossEngine) Hashing.polyHash else xxhash64(_)
+      if (crossEngine) polyHashDecl else xxhash64(_)
     transform(sequence(lit(0), lit(bands - 1)),
       b => bandHash(array_join(
         slice(sig, b * lit(rowsPerBand) + lit(1), lit(rowsPerBand)), ",")))
